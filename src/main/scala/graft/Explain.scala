@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: dump formatted physical plans for selected queries.
   * Usage: runMain graft.Explain <sfDir> [queryName...]
   */
@@ -9,15 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q1_agg")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      // internal flat-column names collide under case-insensitive
-      // resolution (aliased `friend_Friend` vs nested `friend_friend`)
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"===== $n =====")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Timing inspector (builder-side tooling, like Explain): run named
   * queries N times each and print per-iteration wall times, separating
   * first-touch materialization (derived parquet, checkpoints) from
@@ -13,19 +11,7 @@ object Time {
     val reps = if (args.length > 1) args(1).toInt else 3
     val names = if (args.length > 2) args.drop(2).toSeq
       else Seq("q1_agg")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // internal flat-column names collide under case-insensitive
-      // resolution (aliased `friend_Friend` vs nested `friend_friend`)
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.maxFields",
-        sys.env.getOrElse("SPARK_GRAFT_MAXFIELDS", "100"))
-      // size-based AQE coalescing (see Bench): tiny shuffles → 1 task
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val times = (1 to reps).map { _ =>

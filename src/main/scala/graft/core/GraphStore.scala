@@ -114,14 +114,19 @@ trait GraphStore {
     */
   def backupTriples(only: Set[String]): Option[DataFrame] = None
 
-  /** Session-lifetime cache of MATERIALIZED derived frames, keyed by a
-    * caller-chosen signature. Used for inputs that several queries share
-    * (e.g. the weighted edge union of shortest blocks) — built and
-    * checkpointed once, reused as a plain scan afterwards.
+  /** Session-lifetime artifact cache, keyed by a caller-chosen key: the
+    * one place build-once state lives (the shortest-path cone, ANN
+    * quantizers and index dirs, dedup signature frames, backup series,
+    * GraphQL engines). Each caller materializes its own artifact inside
+    * `build` (checkpoint, written directory, collected centroids).
+    * Builds may nest — an artifact's build may ask for another key —
+    * which is why this is TrieMap.getOrElseUpdate (look up, build, then
+    * insert) and not ConcurrentHashMap.computeIfAbsent, which throws on
+    * a recursive update.
     */
-  private val derivedCache = TrieMap.empty[String, DataFrame]
-  def derived(key: String)(build: => DataFrame): DataFrame =
-    derivedCache.getOrElseUpdate(key, build.localCheckpoint())
+  private val derivedCache = TrieMap.empty[Any, Any]
+  def derived[V](key: Any)(build: => V): V =
+    derivedCache.getOrElseUpdate(key, build).asInstanceOf[V]
 }
 
 object GraphStore {

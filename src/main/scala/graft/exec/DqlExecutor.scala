@@ -949,7 +949,7 @@ final class DqlExecutor(ts: GraphStore) {
     // be greater than numHops", shortest.go:594)
     val cone0 = ts.derived(s"$sig|cone:$saFrom:${sa.depth}") {
       graft.operators.ShortestPath.forwardCone(
-        ts.spark, edges0, saFrom, math.max(0, sa.depth - 1))
+        ts.spark, edges0, saFrom, math.max(0, sa.depth - 1)).localCheckpoint()
     }
     val cone =
       if (sa.ignoreReflex) cone0.filter(col("src") =!= col("dst")) else cone0
@@ -4154,6 +4154,22 @@ final class DqlExecutor(ts: GraphStore) {
       if (gbSels.isEmpty && countSels.isEmpty) b
       else b.copy(selections = b.selections.filterNot(s =>
         gbSels.exists(_ eq s) || countSels.exists(_ eq s)))
+    // whole-block aggregation (`stats(func: uid(v)) { n: count(uid)
+    // tot: sum(val(v)) }`, routed to aggregateBlock exactly as in
+    // flatBlock): the flat surface is ONE row of aggregates with no uid
+    // column, so each selection renders as its own object in query
+    // order — the root count objects' and the empty block's shape
+    if (gbSels.isEmpty && b.selections.exists(s =>
+        s.aggOp.isDefined && !s.valRef.exists(bindsVar(b.selections, _)))) {
+      val objs = b.selections.map { s =>
+        val key = if (s.isCount) s.alias.getOrElse("count") else jsonKey(s)
+        to_json(struct(col(s.outName).as(key)),
+          Map("ignoreNullFields" -> "false"))
+      }
+      return flatBlock(b)
+        .select(posexplode(array(objs: _*)).as(Seq("__i", "json")))
+        .select((lit(Long.MinValue) + col("__i")).as("uid"), col("json"))
+    }
     keepChildRank = true
     val flatDf0 = try flatBlock(b2) finally { keepChildRank = false }
     // Materialize the flat frame ONCE before assembly: every childFrame /

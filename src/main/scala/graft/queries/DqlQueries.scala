@@ -26,19 +26,27 @@ object DqlQueries {
   private def dqlJson(q: String): QFn = (s, d) =>
     new DqlExecutor(TripleStore(s, d)).jsonAll(q)
 
+  /** The shortest block of the three scored shortest gates and of
+    * [[warmShortestCone]]: customer 1 over the purchase graph, has_line
+    * weighted by the quantity facet. `args` follows `from`. One
+    * definition, so the warm step cannot drift to a different cone.
+    */
+  private def shortestFromCustomer1(args: String,
+      directives: String = ""): String =
+    s"""{ shortest(from: 3000000000001, $args)$directives {
+       |    placed  has_line @facets(quantity)  by_supplier
+       |    located_in  in_region } }""".stripMargin
+
   /** Bench warm hook: discover ONLY the session-cached shortest-path
     * forward cone. TripleStore.derived keys the cone on (edge spec,
     * source, depth) — `to` is NOT part of the key — so an unreachable
     * `to` warms the exact cone the three scored shortest gates share
-    * (same preds/facets/from, default depth 50) plus the Pregel/GraphX
-    * machinery, while each gate's own k-path search stays in its
-    * published cold column.
+    * (default depth 50) plus the Pregel/GraphX machinery, while each
+    * gate's own k-path search stays in its published cold column.
     */
   def warmShortestCone(s: org.apache.spark.sql.SparkSession,
       d: String): Unit = {
-    dql("""{ shortest(from: 3000000000001, to: 99) {
-          |    placed  has_line @facets(quantity)  by_supplier
-          |    located_in  in_region } }""".stripMargin)(s, d).count()
+    dql(shortestFromCustomer1("to: 99"))(s, d).count()
     ()
   }
 
@@ -257,17 +265,13 @@ object DqlQueries {
     // purchase graph, has_line weighted by the quantity facet
     // (reference query/shortest.go:457; facet weights :105)
     "dql_shortest" -> ((s, d) =>
-      dql("""{ shortest(from: 3000000000001, to: 1000000000000) {
-            |    placed  has_line @facets(quantity)  by_supplier
-            |    located_in  in_region } }""".stripMargin)(s, d)
+      dql(shortestFromCustomer1("to: 1000000000000"))(s, d)
         .orderBy(col("rank"))),
 
     // numpaths: 3 — true k-path enumeration (distinct routes, not just
     // distinct costs; reference runKShortestPaths)
     "dql_shortest_k" -> ((s, d) =>
-      dql("""{ shortest(from: 3000000000001, to: 1000000000000, numpaths: 3) {
-            |    placed  has_line @facets(quantity)  by_supplier
-            |    located_in  in_region } }""".stripMargin)(s, d)
+      dql(shortestFromCustomer1("to: 1000000000000, numpaths: 3"))(s, d)
         .orderBy(col("rank"))),
 
     // minweight/maxweight bounds (reference query/shortest.go:457 args):
@@ -275,10 +279,9 @@ object DqlQueries {
     // minweight, forcing the order→lineitem→supplier detour whose cost
     // is 4 + quantity — only mid-range quantities land in [15, 50]
     "dql_shortest_bounded" -> ((s, d) =>
-      dql("""{ shortest(from: 3000000000001, to: 1000000000000, numpaths: 3,
-            |           minweight: 15, maxweight: 50) @ignorereflex {
-            |    placed  has_line @facets(quantity)  by_supplier
-            |    located_in  in_region } }""".stripMargin)(s, d)
+      dql(shortestFromCustomer1(
+          "to: 1000000000000, numpaths: 3, minweight: 15, maxweight: 50",
+          " @ignorereflex"))(s, d)
         .orderBy(col("rank"))),
 
     // @groupby with multiple keys + value aggregations (reference

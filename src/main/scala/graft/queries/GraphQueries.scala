@@ -38,7 +38,7 @@ object GraphQueries {
       val b = t(s, d, "nation").select(col("n_nationkey").cast("long").as("dst"))
       a.join(b, b("dst") > a("src") && (b("dst") - a("src")) <= 3)
         .select(col("src"), col("dst"),
-          (((col("src") + col("dst")) % 5) + 1).as("w"))
+          (((col("src") + col("dst")) % 5) + 1).as("w")).localCheckpoint()
     }
 
   /** Undirected neighbor graph over nations: i↔j if 0 < |i-j| <= 2. */
@@ -48,7 +48,7 @@ object GraphQueries {
       val b = t(s, d, "nation").select(col("n_nationkey").cast("long").as("object"))
       a.join(b, a("subject") =!= b("object") &&
           abs(a("subject") - b("object")) <= 2)
-        .select(col("subject"), col("object"))
+        .select(col("subject"), col("object")).localCheckpoint()
     }
 
   val queries: Map[String, QFn] = Map(
@@ -208,7 +208,7 @@ object GraphQueries {
       // instead of re-scanning two tablets
       val edges = ts.derived("recurse_located_in_region") {
         ts.edge("located_in").unionByName(ts.edge("in_region"))
-          .select(col("subject"), col("object"))
+          .select(col("subject"), col("object")).localCheckpoint()
       }
       Recurse.expand(seeds, edges, maxDepth = 3)
         .orderBy(col("start"), col("depth"), col("node"))

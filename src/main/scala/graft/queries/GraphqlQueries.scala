@@ -27,14 +27,13 @@ object GraphqlQueries {
   // keyed by resolvers TOO: a schema reached first with empty resolvers
   // must not freeze a resolver-less engine in for the lambda gates (and
   // vice versa) — both maps are stable vals, so identity keys are exact
-  private val engineCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, AnyRef, AnyRef), GraphQLEngine]
   private def engine(s: SparkSession, d: String,
       schema: graft.graphql.GqlSchema = graft.graphql.SdlParser.tpch,
       resolvers: Map[String, org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.Column] = Map.empty): GraphQLEngine =
-    engineCache.getOrElseUpdate((s, d, schema, resolvers),
-      new GraphQLEngine(TripleStore(s, d), schema, resolvers))
+    TripleStore(s, d).derived(("graphql_engine", schema, resolvers)) {
+      new GraphQLEngine(TripleStore(s, d), schema, resolvers)
+    }
 
   private def gql(q: String): QFn = (s, d) =>
     engine(s, d).flat(q)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.TripleStore
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.operators.{Dedup, Similarity}
@@ -31,59 +32,13 @@ object LlmQueries {
       .unionByName(doc.select((col("doc_id") + 2000000L).as("id"), col("text")))
   }
 
-  /** documents ∪ last-3-words-dropped variants (id+1e6): near-dup corpus. */
-  private val candCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  // One LOGICAL distinct-shingle-set definition backs minhash signatures,
-  // LSH candidates and the exact Jaccard verification — and ONE
-  // materialization of it backs all three: the signature build re-run
-  // from raw text (tokenize → shingle → distinct → explode → md5) costs
-  // 5+ s at sf0.1 while the same build from the checkpointed set frame
-  // costs ~2 s, so streaming the signature path "for free" actually paid
-  // the whole shingle pipeline twice per session. Whichever dedup query
-  // runs first pays checkpoint + signatures once; every later family
-  // member reads the materialized artifacts.
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val centCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Seq[Long]]]
-  // ivfpq trains on the PQ vector set (different corpus from centCache)
-  private val ivfpqCentCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Seq[Long]]]
-  // persisted-HNSW shard layout per (session, corpus): built ONCE, every
-  // later search loads the adjacency rows instead of re-running graph
-  // construction (the build-once/search-many contract the IVF index has)
-  private val hnswDirCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  // uid-keyed HNSW shards for the DQL similar_to dispatch gate (ids are
-  // uids = vec_id + 1, so a separate layout from hnswDirCache)
-  private val hnswDqlDirCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  // a separate uid-keyed layout carrying a LIVE mutation delta — the
-  // similar_to_after_mutation gate must not pollute the clean dispatch
-  // layout above
-  private val hnswMutDirCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private val ivfMutDirCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private val pqBookCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Seq[Seq[Long]]]]
-  private val pqEncCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  // ---- session artifacts ----
+  // Every build-once input below lives in TripleStore(s, d).derived and
+  // is defined ONCE here: gates, Bench's warm steps and perfbench all
+  // call these functions, so what a session caches never depends on
+  // which caller runs first. A gate's own read/band/join/search surface
+  // stays outside them.
 
-  /** Bench warm hook: populate ONLY ivfpq's shared build-once inputs
-    * (coarse centroids + PQ codebooks) — NOT a full gate invocation, so
-    * the gate's published cold column keeps its own index write + read
-    * + ADC-search first-touch like every other gate.
-    */
-  def warmIvfPqQuantizer(s: SparkSession, d: String): Unit = {
-    val base = pqVectors(s, d)
-    ivfpqCentCache.getOrElseUpdate((s, d),
-      Similarity.trainIvfCentroids(base, nCells = 4, iters = 1))
-    pqBookCache.getOrElseUpdate((s, d),
-      Similarity.pqCodebooksExact(base, m = 4))
-    ()
-  }
   // Equivalent to Dedup.shingleSets(corpusNear) but tokenizes each base
   // document ONCE: the variant drops the last 3 words, so its shingle
   // array is exactly the first size-3 shingles of the base array — a
@@ -106,8 +61,33 @@ object LlmQueries {
     sets.withColumn("hs", transform(col("sh"),
       x => conv(substring(md5(x), 1, 7), 16, 10).cast("long")))
   }
+  // One LOGICAL distinct-shingle-set definition backs minhash signatures,
+  // LSH candidates and the exact Jaccard verification — and ONE
+  // materialization of it backs all three: the signature build re-run
+  // from raw text (tokenize → shingle → distinct → explode → md5) costs
+  // 5+ s at sf0.1 while the same build from the checkpointed set frame
+  // costs ~2 s, so streaming the signature path "for free" actually paid
+  // the whole shingle pipeline twice per session.
   private def nearSetsMat(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate((s, d), Q.artifactCheckpoint(nearSets(s, d)))
+    TripleStore(s, d).derived("near_shingle_sets") {
+      Q.artifactCheckpoint(nearSets(s, d))
+    }
+  /** MinHash-LSH candidate pairs over the shingle sets (dedup_minhash,
+    * dedup_ngram_jaccard, dedup_clusters, stream_minhash_dedup). */
+  def minhashCands(s: SparkSession, d: String): DataFrame =
+    TripleStore(s, d).derived("minhash_candidates") {
+      Q.artifactCheckpoint(Dedup.candidatesFromSets(nearSetsMat(s, d)))
+    }
+  // The CC labeling over the candidate pairs is the same build-once
+  // session state as the candidate index itself (an engine maintains
+  // its dedup clusters, it doesn't re-run Pregel per query): shared by
+  // dedup_clusters and dedup_cluster_rep, each GraphX run is ~2-3 s of
+  // per-run RDD jobs on a pair set that never changes within a session.
+  def clustersMat(s: SparkSession, d: String): DataFrame =
+    TripleStore(s, d).derived("dedup_clusters") {
+      Q.artifactCheckpoint(
+        Dedup.clusters(minhashCands(s, d).select(col("a"), col("b"))))
+    }
   // One SimHash signature frame per (session, corpus), BOTH widths
   // assembled in the same job: the 16-bit fingerprint gate reads the
   // top 16 counters of the 60-bit build (md5-prefix hashes nest:
@@ -115,135 +95,98 @@ object LlmQueries {
   // corpus-wide explode + md5 + packed-sum aggregate runs once per
   // session, not once per signature width — and the checkpoint is
   // 3 columns, not the 21-column counter frame.
-  private val simhashSigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def simhashSigs(s: SparkSession, d: String): DataFrame =
-    simhashSigCache.getOrElseUpdate((s, d),
+    TripleStore(s, d).derived("simhash_signatures") {
       Q.artifactCheckpoint(
         Dedup.simhashBitSums(corpusNear(s, d), col("id"), col("text"), 60)
           .select(col("id"),
             Dedup.simhashSignature(16, 44).as("sim16"),
-            Dedup.simhashSignature(60, 0).as("sim60"))))
-  private val simhashWideSigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def simhashWideSigs(s: SparkSession, d: String): DataFrame =
-    simhashWideSigCache.getOrElseUpdate((s, d),
-      Q.artifactCheckpoint(Dedup.simhashWideFromSums(
-        Dedup.simhashBitSumsWide(corpusNear(s, d), col("id"), col("text")))))
-  /** Bench warm hook: build ONLY the shared two-lane signature frame —
-    * not the wide pair gate, whose cold column keeps its own banding
-    * first-touch (same rule as [[warmIvfPqQuantizer]]).
-    */
-  def warmSimhashWideSigs(s: SparkSession, d: String): Unit = {
-    simhashWideSigs(s, d).count()
-    ()
-  }
-  private def minhashCands(s: SparkSession, d: String): DataFrame =
-    candCache.getOrElseUpdate((s, d),
-      Q.artifactCheckpoint(Dedup.candidatesFromSets(nearSetsMat(s, d))))
-  /** Bench warm hooks (same artifact-only rule as [[warmIvfPqQuantizer]]):
-    * materialize the build-once session frames shared across the dedup
-    * family — the shingle-set frame + LSH candidate index (read by
-    * dedup_minhash, dedup_ngram_jaccard, dedup_clusters,
-    * stream_minhash_dedup), the two-width SimHash signature frame (read
-    * by dedup_simhash and dedup_simhash_pairs), and the CC cluster
-    * labels (read by dedup_clusters and dedup_cluster_rep). No scored
-    * gate runs here: each gate's own read/band/join/sort surface stays
-    * in its published cold column.
-    */
-  def warmDedupCandidates(s: SparkSession, d: String): Unit = {
-    minhashCands(s, d); ()
-  }
+            Dedup.simhashSignature(60, 0).as("sim60")))
+    }
+  /** Warm step: the two-width SimHash signature frame (dedup_simhash,
+    * dedup_simhash_pairs). */
   def warmSimhashSigs(s: SparkSession, d: String): Unit = {
     simhashSigs(s, d); ()
   }
-  def warmDedupClusters(s: SparkSession, d: String): Unit = {
-    clustersMat(s, d); ()
-  }
-  /** Bench warm hook: the IVF coarse quantizer (deterministic k-means
-    * centroids) shared by embed_ann_ivf_store and
-    * embed_ivf_after_mutation — index writes/searches stay scored.
-    */
-  def warmIvfCentroids(s: SparkSession, d: String): Unit = {
-    centCache.getOrElseUpdate((s, d),
+  /** The 120-bit two-lane SimHash signature frame (dedup_simhash_wide). */
+  def simhashWideSigs(s: SparkSession, d: String): DataFrame =
+    TripleStore(s, d).derived("simhash_wide_signatures") {
+      Q.artifactCheckpoint(Dedup.simhashWideFromSums(
+        Dedup.simhashBitSumsWide(corpusNear(s, d), col("id"), col("text"))))
+    }
+
+  /** IVF coarse quantizer (deterministic k-means centroids) over the
+    * quantized embeddings: embed_ann_ivf_store and the mutation-delta
+    * IVF layout. The reference trains an index once, not per search. */
+  def ivfCentroids(s: SparkSession, d: String): Seq[Seq[Long]] =
+    TripleStore(s, d).derived("ivf_centroids") {
       Similarity.trainIvfCentroids(
-        embQ(s, d).select(col("id"), col("qe")), nCells = 8))
-    ()
-  }
-  /** Bench warm hook: PQ codebooks (shared by embed_ann_pq/_store/ivfpq)
-    * plus the session-encoded corpus embed_ann_pq reads — the reference
-    * trains and encodes an index once, not per search; the ADC search
-    * itself stays scored.
-    */
+        embQ(s, d).select(col("id"), col("qe")), nCells = 8)
+    }
+  /** PQ codebooks over [[pqVectors]] (embed_ann_pq, _pq_store, _ivfpq). */
+  def pqBooks(s: SparkSession, d: String): Seq[Seq[Seq[Long]]] =
+    TripleStore(s, d).derived("pq_codebooks") {
+      Similarity.pqCodebooksExact(pqVectors(s, d), m = 4)
+    }
+  // the encoded corpus embed_ann_pq searches: re-encoding per
+  // invocation re-ran the ksub-way argmin over every corpus row
+  private def pqCodes(s: SparkSession, d: String): DataFrame =
+    TripleStore(s, d).derived("pq_codes") {
+      Q.artifactCheckpoint(Similarity.pqEncode(pqVectors(s, d), pqBooks(s, d))
+        .select(col("id"), col("codes")))
+    }
+  /** Coarse centroids of the IVF-PQ index, trained on the PQ vector set
+    * (a different corpus from [[ivfCentroids]]). */
+  def ivfPqCentroids(s: SparkSession, d: String): Seq[Seq[Long]] =
+    TripleStore(s, d).derived("ivfpq_centroids") {
+      Similarity.trainIvfCentroids(pqVectors(s, d), nCells = 4, iters = 1)
+    }
+  /** PQ codebooks plus the session-encoded corpus embed_ann_pq reads;
+    * the ADC search itself stays in the gate. */
   def warmPqIndex(s: SparkSession, d: String): Unit = {
-    val base = pqVectors(s, d)
-    val books = pqBookCache.getOrElseUpdate((s, d),
-      Similarity.pqCodebooksExact(base, m = 4))
-    pqEncCache.getOrElseUpdate((s, d),
-      Q.artifactCheckpoint(Similarity.pqEncode(base, books)
-        .select(col("id"), col("codes"))))
-    ()
+    pqCodes(s, d); ()
   }
-  /** Bench warm hook: the two mutation-delta ANN layouts (base segments
-    * + live delta + tombstones; built once per session, reference
-    * AddMutationWithIndex maintains the index at write time) — the
-    * delta-aware searches over them stay scored.
-    */
-  def warmAnnMutationLayouts(s: SparkSession, d: String): Unit = {
-    hnswMutDir(s, d); ivfMutDir(s, d); ()
+
+  private def annDir(s: SparkSession, d: String, kind: String): String =
+    new java.io.File(s"target/graft-${kind}_${new java.io.File(d).getName}" +
+      s"_${graft.core.Scratch.tag(s)}_${Q.freshRun()}").getAbsolutePath
+  // the live mutation applied to both mutation-delta layouts: an upsert
+  // of subject 3, an insert of a new subject, a delete of the anchor row
+  private def annDelta(q: DataFrame): (DataFrame, DataFrame) = {
+    val anchor = q.filter(col("id") === 1)
+    (anchor.select(lit(3L).as("id"),
+        transform(col("qe"), x => x * 3).as("qe"))
+      .unionByName(anchor.select(lit(1000001L).as("id"),
+        transform(col("qe"), x => x * 2 + 1).as("qe"))),
+      anchor.select(col("id")))
   }
   /** Session HNSW layout carrying the live mutation delta (see
-    * similar_to_after_mutation): base shards + an upsert of subject 3,
-    * an insert of a new subject, and a delete of the anchor row.
-    */
-  private def hnswMutDir(s: SparkSession, d: String): String =
-    hnswMutDirCache.getOrElseUpdate((s, d), {
+    * similar_to_after_mutation): base shards + [[annDelta]], separate
+    * from similar_to_stored's clean dispatch layout. The
+    * reference maintains the index at write time (AddMutationWithIndex);
+    * the delta-aware searches over it stay in the gates. */
+  def hnswMutDir(s: SparkSession, d: String): String =
+    TripleStore(s, d).derived("hnsw_mutation_dir") {
       val q = embQ(s, d).select((col("id") + 1).as("id"), col("qe"))
-      val p = new java.io.File(
-        s"target/graft-hnswmut_${new java.io.File(d).getName}" +
-          s"_${graft.core.Scratch.tag(s)}_${Q.freshRun()}").getAbsolutePath
+      val p = annDir(s, d, "hnswmut")
       Similarity.hnswWrite(q, p, nPartitions = 4)
-      val anchor = q.filter(col("id") === 1)
-      Similarity.hnswUpsert(s, p,
-        anchor.select(lit(3L).as("id"),
-            transform(col("qe"), x => x * 3).as("qe"))
-          .unionByName(anchor.select(lit(1000001L).as("id"),
-            transform(col("qe"), x => x * 2 + 1).as("qe"))))
-      Similarity.hnswDelete(s, p, anchor.select(col("id")))
+      val (upserts, deletes) = annDelta(q)
+      Similarity.hnswUpsert(s, p, upserts)
+      Similarity.hnswDelete(s, p, deletes)
       p
-    })
+    }
   /** The IVF face of the same mutation-delta layout (identical mutation
     * set; see embed_ivf_after_mutation). */
-  private def ivfMutDir(s: SparkSession, d: String): String =
-    ivfMutDirCache.getOrElseUpdate((s, d), {
+  def ivfMutDir(s: SparkSession, d: String): String =
+    TripleStore(s, d).derived("ivf_mutation_dir") {
       val q = embQ(s, d).select((col("id") + 1).as("id"), col("qe"))
-      val p = new java.io.File(
-        s"target/graft-ivfmut_${new java.io.File(d).getName}" +
-          s"_${graft.core.Scratch.tag(s)}_${Q.freshRun()}").getAbsolutePath
-      val trained = centCache.getOrElseUpdate((s, d),
-        Similarity.trainIvfCentroids(
-          embQ(s, d).select(col("id"), col("qe")), nCells = 8))
-      Similarity.ivfWriteTrained(q, p, trained)
-      val anchor = q.filter(col("id") === 1)
-      Similarity.ivfUpsert(s, p,
-        anchor.select(lit(3L).as("id"),
-            transform(col("qe"), x => x * 3).as("qe"))
-          .unionByName(anchor.select(lit(1000001L).as("id"),
-            transform(col("qe"), x => x * 2 + 1).as("qe"))))
-      Similarity.ivfDelete(s, p, anchor.select(col("id")))
+      val p = annDir(s, d, "ivfmut")
+      Similarity.ivfWriteTrained(q, p, ivfCentroids(s, d))
+      val (upserts, deletes) = annDelta(q)
+      Similarity.ivfUpsert(s, p, upserts)
+      Similarity.ivfDelete(s, p, deletes)
       p
-    })
-  // The CC labeling over the candidate pairs is the same build-once
-  // session state as the candidate index itself (an engine maintains
-  // its dedup clusters, it doesn't re-run Pregel per query): shared by
-  // dedup_clusters and dedup_cluster_rep, each GraphX run is ~2-3 s of
-  // per-run RDD jobs on a pair set that never changes within a session.
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def clustersMat(s: SparkSession, d: String): DataFrame =
-    clusterCache.getOrElseUpdate((s, d),
-      Q.artifactCheckpoint(
-        Dedup.clusters(minhashCands(s, d).select(col("a"), col("b")))))
+    }
 
   // Synthesized media blobs are test scaffolding, not the operator under
   // measurement: a real engine ingests media bytes once and decodes them
@@ -254,11 +197,9 @@ object LlmQueries {
   // ImageIO GIF encode over the whole documents table on every call —
   // 15 s/invocation on a contended host before the decode under test
   // even started.)
-  private val blobCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
   private def cachedBlobs(s: SparkSession, d: String, kind: String)(
       build: => DataFrame): DataFrame =
-    blobCache.getOrElseUpdate((s, d, kind), Q.artifactCheckpoint(build))
+    TripleStore(s, d).derived(s"media_blobs:$kind")(Q.artifactCheckpoint(build))
 
   /** PNGs with doc_id-derived dimensions (multimodal_image_decode). */
   private def pngDimsBlobs(s: SparkSession, d: String): DataFrame =
@@ -325,6 +266,7 @@ object LlmQueries {
     ()
   }
 
+  /** documents ∪ last-3-words-dropped variants (id+1e6): near-dup corpus. */
   private def corpusNear(s: SparkSession, d: String): DataFrame = {
     val doc = t(s, d, "documents")
     val ws = split(col("text"), " ")
@@ -604,19 +546,17 @@ object LlmQueries {
     // adjacency-row dump per shard, partitioned by shard), then search
     // the STORED layout — rebuild-from-adjacency is a linear pass, no
     // construction beam searches. The write runs once per (session,
-    // corpus) via hnswDirCache, so a second search of a session pays no
-    // build at all. Exact mode (ef >= shard) so the oracle is plain
+    // corpus) in TripleStore.derived, so a second search of a session
+    // pays no build at all. Exact mode (ef >= shard) so the oracle is plain
     // brute force — the hash-match gates write→read→walk→merge plumbing;
     // graph QUALITY stays with the recall suite in SimilaritySpec.
     "embed_ann_hnsw_store" -> ((s, d) => {
       val q = embQ(s, d).select(col("id"), col("qe"))
-      val dir = hnswDirCache.getOrElseUpdate((s, d), {
-        val p = new java.io.File(
-          s"target/graft-hnsw_${new java.io.File(d).getName}" +
-            s"_${graft.core.Scratch.tag(s)}_${Q.freshRun()}").getAbsolutePath
+      val dir = TripleStore(s, d).derived("hnsw_dir") {
+        val p = annDir(s, d, "hnsw")
         Similarity.hnswWrite(q, p, nPartitions = 4)
         p
-      })
+      }
       // fixed-size query set, same rationale as embed_ann_hnsw
       Similarity.hnswSearchStored(
           q.filter(col("id") % 50 === 0 && col("id") < 2000), s, dir,
@@ -631,15 +571,11 @@ object LlmQueries {
     // in SimilaritySpec
     "embed_ann_ivf_store" -> ((s, d) => {
       val q = embQ(s, d).select(col("id"), col("qe"))
-      val dir = new java.io.File(
-        s"target/graft-ivf_${new java.io.File(d).getName}" +
-          s"_${graft.core.Scratch.tag(s)}_${Q.freshRun()}").getAbsolutePath
-      // train once per (session, corpus) — deterministic k-means, so a
-      // re-build of the index reuses the quantizer instead of paying
-      // 3 × (assignment pass + centroid collect) per invocation
-      val trained = centCache.getOrElseUpdate((s, d),
-        Similarity.trainIvfCentroids(q, nCells = 8))
-      Similarity.ivfWriteTrained(q, dir, trained)
+      val dir = annDir(s, d, "ivf")
+      // the quantizer is trained once per (session, corpus) — a re-build
+      // of the index reuses it instead of paying 3 × (assignment pass +
+      // centroid collect) per invocation
+      Similarity.ivfWriteTrained(q, dir, ivfCentroids(s, d))
       val (stored, cents) = Similarity.ivfRead(s, dir)
       Similarity.ivfSearchStored(
           q.filter(col("id") % 50 === 0 && col("id") < 2000), stored,
@@ -658,16 +594,10 @@ object LlmQueries {
       val base = pqVectors(s, d)
       // codebooks AND the encoded corpus once per (session, corpus):
       // the reference trains and encodes an index once, not per search
-      // (tok/hnsw/persistent_hnsw.go build-once) — re-encoding per
-      // invocation re-ran the ksub-way argmin over every corpus row
-      val books = pqBookCache.getOrElseUpdate((s, d),
-        Similarity.pqCodebooksExact(base, m = 4))
-      val enc = pqEncCache.getOrElseUpdate((s, d),
-        Q.artifactCheckpoint(Similarity.pqEncode(base, books)
-          .select(col("id"), col("codes"))))
+      // (tok/hnsw/persistent_hnsw.go build-once)
       Similarity.pqSearchTopK(
-          base.filter(col("id") % 200 === 0 && col("id") < 2000), enc, k = 3,
-          books, metric = "dotproduct")
+          base.filter(col("id") % 200 === 0 && col("id") < 2000),
+          pqCodes(s, d), k = 3, pqBooks(s, d), metric = "dotproduct")
         .orderBy(col("qid"), col("rank"))
     }),
 
@@ -676,12 +606,8 @@ object LlmQueries {
     // at 100 TB), reload and ADC-search it
     "embed_ann_pq_store" -> ((s, d) => {
       val base = pqVectors(s, d)
-      val dir = new java.io.File(
-        s"target/graft-pq_${new java.io.File(d).getName}" +
-          s"_${graft.core.Scratch.tag(s)}_${Q.freshRun()}").getAbsolutePath
-      val books = pqBookCache.getOrElseUpdate((s, d),
-        Similarity.pqCodebooksExact(base, m = 4))
-      Similarity.pqWrite(base, dir, books)
+      val dir = annDir(s, d, "pq")
+      Similarity.pqWrite(base, dir, pqBooks(s, d))
       val (codes, loaded) = Similarity.pqRead(s, dir)
       Similarity.pqSearchTopK(
           base.filter(col("id") % 200 === 0 && col("id") < 2000), codes, k = 3,
@@ -695,17 +621,11 @@ object LlmQueries {
     // integer dot; partial-probe recall lives in SimilaritySpec.
     "embed_ann_ivfpq" -> ((s, d) => {
       val base = pqVectors(s, d)
-      val dir = new java.io.File(
-        s"target/graft-ivfpq_${new java.io.File(d).getName}" +
-          s"_${graft.core.Scratch.tag(s)}_${Q.freshRun()}").getAbsolutePath
+      val dir = annDir(s, d, "ivfpq")
       // quantizer training is build-once session state (same contract as
       // the IVF/PQ gates — the reference trains an index once, not per
       // search); the index WRITE + read + ADC search stay scored
-      val cents = ivfpqCentCache.getOrElseUpdate((s, d),
-        Similarity.trainIvfCentroids(base, nCells = 4, iters = 1))
-      val books = pqBookCache.getOrElseUpdate((s, d),
-        Similarity.pqCodebooksExact(base, m = 4))
-      Similarity.ivfPqWrite(base, dir, cents, books)
+      Similarity.ivfPqWrite(base, dir, ivfPqCentroids(s, d), pqBooks(s, d))
       val (stored, lc, lb) = Similarity.ivfPqRead(s, dir)
       Similarity.ivfPqSearchStored(
           base.filter(col("id") % 200 === 0 && col("id") < 2000), stored,
@@ -731,13 +651,13 @@ object LlmQueries {
     // plain quantized-cosine brute force.
     "similar_to_stored" -> ((s, d) => {
       val q = embQ(s, d).select((col("id") + 1).as("id"), col("qe"))
-      val dir = hnswDqlDirCache.getOrElseUpdate((s, d), {
-        val p = new java.io.File(
-          s"target/graft-hnswdql_${new java.io.File(d).getName}" +
-            s"_${graft.core.Scratch.tag(s)}_${Q.freshRun()}").getAbsolutePath
+      // uid-keyed shards (ids are vec_id + 1): a separate session layout
+      // from embed_ann_hnsw_store's
+      val dir = TripleStore(s, d).derived("hnsw_dql_dir") {
+        val p = annDir(s, d, "hnswdql")
         Similarity.hnswWrite(q, p, nPartitions = 4)
         p
-      })
+      }
       val emb = t(s, d, "embeddings")
       val triples = emb.select(
         (col("vec_id") + 1).cast("long").as("subject"),

@@ -77,15 +77,13 @@ object Q {
     * invocation via [[scratchDir]]; the gates keep measuring drain +
     * state + commit.
     */
-  private val inDirCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), String]
   def cachedInputDir(kind: String, s: org.apache.spark.sql.SparkSession,
       d: String)(write: String => Unit): String =
-    inDirCache.getOrElseUpdate((s, d, kind), {
+    graft.core.TripleStore(s, d).derived(s"input_dir:$kind") {
       val base = scratchDir(s"graft-$kind", s, d)
       write(base)
       base
-    })
+    }
 
   /** Sweep STALE scratch state from earlier JVMs: every per-session dir
     * (`target/graft-*`, bucketed `spark-warehouse/g_*` tables) is keyed
@@ -105,11 +103,7 @@ object Q {
     // SESSION-LIVED layouts (graft-derived children) are read for the
     // whole session — they get a much longer 12 h tier so a long-lived
     // server/shell sharing the repo isn't pulled out from under.
-    // GRAFT_SCRATCH_SWEEP_MS overrides the short tier; <0 disables.
-    val shortMs = sys.env.get("GRAFT_SCRATCH_SWEEP_MS")
-      .map(_.toLong).getOrElse(maxAgeMs)
-    if (shortMs < 0) return
-    val sessionMs = math.max(shortMs, 12 * 60 * 60 * 1000L)
+    val sessionMs = math.max(maxAgeMs, 12 * 60 * 60 * 1000L)
     def rm(x: java.io.File): Unit = {
       Option(x.listFiles).foreach(_.foreach(rm))
       x.delete(); ()
@@ -129,13 +123,13 @@ object Q {
     // graft-derived is a long-lived PARENT of per-session layouts —
     // sweep its children on the session tier, never the parent itself
     sweep(new java.io.File("target/graft-derived"), "", sessionMs)
-    val shortCutoff = System.currentTimeMillis() - shortMs
+    val shortCutoff = System.currentTimeMillis() - maxAgeMs
     Option(new java.io.File("target").listFiles).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("graft-")
         && f.getName != "graft-derived" && f.lastModified < shortCutoff
         && !graft.core.Scratch.ownerAlive(f.getName))
       .foreach(rm)
-    sweep(new java.io.File("spark-warehouse"), "g_", shortMs)
+    sweep(new java.io.File("spark-warehouse"), "g_", maxAgeMs)
   }
 
   /** Deterministic average: exact decimal sum divided as double/double. */

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.TripleStore
 import graft.functions.TextFunctions._
 import Q._
 
@@ -38,14 +39,12 @@ object QualityQueries {
   // corpus snapshot, not once per query. Cached per (session, corpus,
   // n); the queries over it — the broadcast probe join, the df>=2
   // semi-join, the per-doc aggregates — stay the measured surface.
-  private val shingleFrameCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int),
-      org.apache.spark.sql.DataFrame]
   def corpusShingles(s: org.apache.spark.sql.SparkSession, d: String,
       n: Int): org.apache.spark.sql.DataFrame =
-    shingleFrameCache.getOrElseUpdate((s, d, n),
+    TripleStore(s, d).derived(s"corpus_shingles:$n") {
       Q.artifactCheckpoint(docs(s, d).select(col("doc_id"),
-        explode(array_distinct(shingles(words(col("text")), n))).as("sh"))))
+        explode(array_distinct(shingles(words(col("text")), n))).as("sh")))
+    }
 
   // The contamination probe (docs 0-4 standing in for an eval suite) is
   // build-once session state: a real contamination scanner REGISTERS its
@@ -53,16 +52,14 @@ object QualityQueries {
   // the per-query cost is the corpus scan, not re-deriving the suite's
   // shingles. Cached per (session, corpus) like the dedup family's
   // signature frames.
-  private val probeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
   def contaminationProbe(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    probeCache.getOrElseUpdate((s, d),
+    TripleStore(s, d).derived("contamination_probe") {
       docs(s, d).filter(col("doc_id") < 5)
         .select(explode(array_distinct(shingles(words(col("text")), 3)))
           .as("s"))
-        .distinct().localCheckpoint())
+        .distinct().localCheckpoint()
+    }
 
   val queries: Map[String, QFn] = Map(
 

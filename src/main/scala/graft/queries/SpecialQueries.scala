@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Uids
+import graft.core.{TripleStore, Uids}
 import graft.functions.GeoFunctions._
 import graft.functions.PasswordFunctions._
 import Q._
@@ -19,24 +19,23 @@ import Q._
 object SpecialQueries {
 
   // Backup series are build-once session artifacts (like the ANN
-  // stores and CC clusters): written the first time a gate asks,
-  // restored on every invocation.
-  private val backupDirCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
-
-  private def fullBackupDir(s: SparkSession, d: String): String =
-    backupDirCache.getOrElseUpdate((s, d, "full"), {
-      val ts = graft.core.TripleStore(s, d)
+  // stores and CC clusters): a backup is written once and restored many
+  // times (reference worker/backup.go vs online_restore.go), so the
+  // series is written the first time a gate or warm step asks and the
+  // backup gates measure restore + re-query.
+  def fullBackupDir(s: SparkSession, d: String): String =
+    TripleStore(s, d).derived("backup_full_dir") {
+      val ts = TripleStore(s, d)
       val dir = new java.io.File(
         s"target/graft-backup_${new java.io.File(d).getName}" +
           s"_${graft.core.Scratch.tag(s)}_${Q.freshRun()}").getAbsolutePath
       graft.operators.Backup.full(ts, dir)
       dir
-    })
+    }
 
-  private def incBackupDir(s: SparkSession, d: String): String =
-    backupDirCache.getOrElseUpdate((s, d, "inc"), {
-      val ts = graft.core.TripleStore(s, d)
+  def incBackupDir(s: SparkSession, d: String): String =
+    TripleStore(s, d).derived("backup_inc_dir") {
+      val ts = TripleStore(s, d)
       val dir = new java.io.File(
         s"target/graft-backupinc_${new java.io.File(d).getName}" +
           s"_${graft.core.Scratch.tag(s)}_${Q.freshRun()}").getAbsolutePath
@@ -48,17 +47,7 @@ object SpecialQueries {
           "CONSTRUCTION").otherwise(col("value")))
       graft.operators.Backup.incremental(dir, 1, prev, cur)
       dir
-    })
-
-  /** Bench warm hook: write ONLY the build-once backup series dirs
-    * (full + incremental) — a backup is written once and restored many
-    * times (reference worker/backup.go vs online_restore.go). The
-    * restore + re-query surface the backup gates exist to measure stays
-    * in their published cold columns.
-    */
-  def warmBackupSeries(s: SparkSession, d: String): Unit = {
-    fullBackupDir(s, d); incBackupDir(s, d); ()
-  }
+    }
 
   // integer grid coords: cx in [0,7200), cy in [0,3400)
   private def cx(k: Column): Column = (k * 7919) % 7200
@@ -131,10 +120,6 @@ object SpecialQueries {
   private def dqlQ(q: String): QFn = (s, d) =>
     new graft.exec.DqlExecutor(graft.core.TripleStore(s, d)).flat(q)
 
-  // build-once ingest store for the bigfloat gate (see root_bigfloat)
-  private val bigfloatStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.core.TripleFrameStore]
-
   val queries: Map[String, QFn] = Map(
 
     // bigfloat predicate type (reference types/scalar_types.go:63 —
@@ -146,7 +131,7 @@ object SpecialQueries {
       // build it once per (session, corpus) like the ANN quantizers;
       // materialize=true checkpoints the cast pass so every invocation
       // scans the compact decimal frame, not orders
-      val st = bigfloatStoreCache.getOrElseUpdate((s, d), {
+      val st = TripleStore(s, d).derived("bigfloat_store") {
         val o = Q.t(s, d, "orders")
         val triples = o.select(
           (lit(Uids.Order) + col("o_orderkey").cast("long")).as("subject"),
@@ -161,7 +146,7 @@ object SpecialQueries {
           new graft.core.SchemaRegistry(preds.map(p => p.name -> p).toMap,
             types.map(t => t.name -> t).toMap), triples, Map.empty,
           materialize = true)
-      })
+      }
       // The decimal range scan stays DECIMAL(38,24) internally; the gate
       // SURFACE is projected to DOUBLE because the driver's two readers
       // hash high-scale DECIMAL renderings differently (r9/r10 verdicts

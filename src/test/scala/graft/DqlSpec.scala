@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{TripleStore, Uids}
@@ -224,6 +225,30 @@ class DqlSpec extends AnyFunSuite {
     assert(rows.count(_.getString(0) == "a") == 4)
     assert(rows.filter(_.getString(0) == "b").head.getString(2)
       .contains(""""name":"NATION_3""""))
+  }
+
+  test("jsonAll renders a var-fed block aggregation with the flat gate's values") {
+    // the dql_var_agg gate, through the nested-JSON path: one object per
+    // aggregate, in query order, each value equal to the flat row's
+    val q = """{ var(func: eq(mktsegment, "BUILDING")) { bal as acctbal }
+              |  stats(func: uid(bal)) {
+              |    n: count(uid) tot: sum(val(bal)) mn: min(val(bal))
+              |    mx: max(val(bal)) av: avg(val(bal)) } }""".stripMargin
+    val flat = exec.flat(q).collect()
+    assert(flat.length == 1)
+    val want = flat.head
+    val rows = exec.jsonAll(q).orderBy(col("uid")).collect()
+    assert(rows.map(_.getString(0)).toSet == Set("stats"))
+    val m = new com.fasterxml.jackson.databind.ObjectMapper
+    val objs = rows.map(r => m.readTree(r.getString(2)))
+    val keys = Seq("n", "tot", "mn", "mx", "av")
+    assert(objs.map(_.fieldNames.next).toSeq == keys)
+    assert(objs.forall(_.size == 1))
+    assert(want.getAs[Long]("n") > 0)
+    assert(objs(0).get("n").asLong == want.getAs[Long]("n"))
+    keys.tail.zip(objs.tail).foreach { case (k, o) =>
+      assert(o.get(k).asDouble == want.getAs[Number](k).doubleValue, k)
+    }
   }
 
   test("reverse traversal ~located_in finds nation inhabitants") {

@@ -5,16 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // internal flat-column names collide under case-insensitive
-      // resolution (aliased `friend_Friend` vs nested `friend_friend`)
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -138,4 +138,23 @@ final class StoreInvariantSpec extends AnyFunSuite {
         "round-trip decimal(18,2) — the gates' cast chain would lose them")
     }
   }
+
+  test("derived: one build per key, separate builds per key, nested builds") {
+    // a private store, so these keys never meet the session's artifacts
+    val store = new TripleStore(spark, sf)
+    var builds = 0
+    def a: Int = store.derived("a") { builds += 1; 1 }
+    assert(a == 1 && a == 1 && builds == 1)
+    assert(store.derived(("b", 2)) { builds += 1; "two" } == "two")
+    assert(builds == 2)
+    // a build that asks for another key (clusters → LSH candidates →
+    // shingle sets) gets it, and both keys are cached afterwards
+    val outer = store.derived("outer") {
+      builds += 1
+      store.derived("inner") { builds += 1; 10 } + 1
+    }
+    assert(outer == 11 && builds == 4)
+    assert(store.derived("inner")(-1) == 10)
+    assert(store.derived("outer")(-1) == 11 && builds == 4)
+  }
 }

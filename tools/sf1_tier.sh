@@ -7,7 +7,9 @@
 #
 # Usage: tools/sf1_tier.sh [gate ...]
 #   SRC  source tier          (default /root/testdata/sf0.1)
-#   DST  generated sf1 dir    (default /tmp/graft_sf1; kept across runs)
+#   DST  generated sf1 dir    (default /tmp/graft_sf1; kept across runs,
+#        and only ever created whole: GenScale writes to $DST.partial,
+#        which is moved into place once it exits 0)
 #   REPS graft.Time reps/gate (default 4 — report the min, the host is noisy)
 set -euo pipefail
 SRC=${SRC:-/root/testdata/sf0.1}
@@ -20,7 +22,9 @@ GATES=${*:-sort_first_per_parent stream_dedup stream_minhash_dedup \
   bulk_load_bucketed stream_ingest_nquads recurse_chain}
 cd "$(dirname "$0")/.."
 export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
-if [ ! -d "$DST/lineitem.parquet" ]; then
-  sbt -batch "runMain graft.tools.GenScale $SRC $DST 10"
+if [ ! -d "$DST" ]; then
+  rm -rf "$DST.partial"
+  sbt -batch "runMain graft.tools.GenScale $SRC $DST.partial 10"
+  mv "$DST.partial" "$DST"
 fi
 sbt -batch "runMain graft.Time $DST $REPS $GATES"
