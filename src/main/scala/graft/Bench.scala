@@ -136,37 +136,16 @@ object Bench {
         .flat("""{ q(func: eq(name, "Customer#000000001")) { name } }""")
         .count()
     }
-    // the nested-JSON renderer is its own codegen family (jsonAllAst →
-    // struct-assembly expressions the FLAT probe above never compiles);
-    // left cold it lands on dql_json_deep/nested (measured 6.2 s cold /
-    // 2.3 s steady on a quiet host)
-    warm("DQL json renderer probe") {
-      // mirror the features of the scored json gates (facets, edge
-      // counts, lang chains, second block) so their codegen families
-      // compile here, not inside dql_json_nested's cold column
-      new graft.exec.DqlExecutor(graft.core.TripleStore(spark, sfDir))
-        .jsonAll("""{ q(func: eq(name, "Customer#000000001")) {
-                |    name  nc: count(placed)
-                |    placed (orderdesc: totalprice, first: 1)
-                |      @facets(totalprice) { orderstatus } }
-                |  d(func: uid(0x2)) { text@en:. } }""".stripMargin)
-        .count()
-    }
     // the GraphQL engine stacks its own first-touch on top of the DQL
-    // pool: SDL parse + schema build, the query rewriter, and the
-    // GraphQL-shaped json assembly (a distinct codegen family from the
-    // DQL renderer). Left cold it lands on whichever graphql_* gate
-    // runs first alphabetically (measured: graphql_json 5.5 s cold /
-    // 2.1 s steady, the engine build being most of the gap).
+    // pool: SDL parse + schema build and the query rewriter. Left cold
+    // it lands on whichever graphql_* gate runs first alphabetically
+    // (measured: graphql_json 5.5 s cold / 2.1 s steady, the engine
+    // build being most of the gap). JSON reads need no probe of their
+    // own: they run the flat plans probed here and render on the driver.
     warm("GraphQL engine probe") {
-      val eng = new graft.graphql.GraphQLEngine(
-        graft.core.TripleStore(spark, sfDir))
-      eng.flat(
+      new graft.graphql.GraphQLEngine(graft.core.TripleStore(spark, sfDir)).flat(
         """query { queryCustomer(filter: { name: { eq: "Customer#000000001" } }) {
           |    name located_in { name } } }""".stripMargin).count()
-      eng.json(
-        """query { queryCustomer(filter: { name: { eq: "Customer#000000001" } }) {
-          |    name placed(first: 1) { orderstatus } } }""".stripMargin).count()
     }
     warm("custom tokenizer probe") {
       new graft.exec.DqlExecutor(graft.core.TripleStore(spark, sfDir))
@@ -383,6 +362,14 @@ object Bench {
       if (errors.isEmpty) ""
       else errors.map { case (k, m) => s""""$k":"${jsEsc(m)}"""" }
         .mkString(""","errors":{""", ",", "}")
+    // the session's footprint after every gate: heap in use and the
+    // metaspace the generated classes live in
+    val heapMb = java.lang.management.ManagementFactory.getMemoryMXBean
+      .getHeapMemoryUsage.getUsed / 1e6
+    val metaMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+      .toArray(Array.empty[java.lang.management.MemoryPoolMXBean])
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed / 1e6).sum
+    System.err.println(f"[bench] heap used $heapMb%.0f MB, metaspace $metaMb%.0f MB")
     val line =
       s"""{"metric":"total","n_queries":${results.size},"value":${r3(total)},"unit":"sec","queries":$qs$errJson,"sf":"$sfDir"}"""
     spark.stop()

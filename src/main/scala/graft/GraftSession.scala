@@ -22,6 +22,12 @@ object GraftSession {
       // coalescing collapses tiny shuffles to one task; the big gates
       // still fan out (their partitions hit the advisory size).
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      // the compiled-class cache (static, JVM-wide; Spark's default 100
+      // entries) must hold the working set of a repeated read: the four
+      // JSON read gates need about 300 classes, and at 100 or 256
+      // entries their second run recompiles ~45-80 classes per read,
+      // at 512 only the few whose code differs per run
+      .config("spark.sql.codegen.cache.maxEntries", "512")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 }

@@ -1,8 +1,17 @@
 package graft.exec
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  Descending, InterpretedOrdering, NullsFirst, NullsLast, SortOrder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.GraphStore
 import graft.dql._
@@ -1795,10 +1804,51 @@ final class DqlExecutor(ts: GraphStore) {
   private def orderAndPage(df: DataFrame, uidCol: String,
       order: Seq[Ordering], page: Pagination,
       keepValRiders: Boolean = false): DataFrame = {
-    var cur = df
-    page.after.foreach(a => cur = cur.filter(qcol(uidCol) > a))
+    val after = page.after.fold(df)(a => df.filter(qcol(uidCol) > a))
     val needSort = order.nonEmpty || page.first.isDefined || page.offset.isDefined
-    if (!needSort) return cur
+    if (!needSort) return after
+    val (keyed, keyCols) = withSortKeys(after, uidCol, order)
+    val ordCols = keyCols(false).map(_.col)
+    var cur = keyed.orderBy(ordCols: _*)
+    // a negative offset clamps to 0 (reference issue #8441 fix,
+    // TestNegativeOffset)
+    page.offset.filter(_ > 0).foreach(o => cur = cur.offset(o))
+    page.first.foreach { f =>
+      if (f >= 0) cur = cur.limit(f)
+      else {
+        // negative first = LAST |f| of the ordered result (reference
+        // query/query.go:989 calculatePaginationParams): top-|f| in the
+        // REVERSED order — a distributed TakeOrdered, no global window —
+        // then re-sorted into the requested presentation order
+        cur = cur.orderBy(keyCols(true).map(_.col): _*).limit(-f).orderBy(ordCols: _*)
+      }
+    }
+    // keepValRiders (the block's main frontier only): a `val:` sort key
+    // already paid the var-map join — keep its value as a __seedval_
+    // rider so a later `val(x)` selection of the SAME var reads it in
+    // place instead of re-joining the map (project's seedval branch)
+    val keep: Map[Int, String] =
+      if (!keepValRiders) Map.empty
+      else order.zipWithIndex.collect {
+        case (o, i) if o.pred.startsWith("val:") &&
+            !cur.columns.contains(s"__seedval_${o.pred.drop(4)}") =>
+          i -> s"__seedval_${o.pred.drop(4)}"
+      }.toMap
+    order.indices.foreach { i =>
+      cur = keep.get(i) match {
+        case Some(n) => cur.withColumnRenamed(s"__ov$i", n)
+        case None => cur.drop(s"__ov$i")
+      }
+    }
+    cur
+  }
+
+  /** `df` with each order key joined as `__ov<i>`, and the sort columns
+    * over them (`rev` = the reversed order).
+    */
+  private def withSortKeys(df: DataFrame, uidCol: String,
+      order: Seq[Ordering]): (DataFrame, Boolean => Seq[SortKey]) = {
+    var cur = df
     // val() keys are single-sort only (reference
     // TestMultiplesSortingOrderWithVarAndPredicate: "Val() is not
     // allowed in multiple sorting")
@@ -1829,56 +1879,33 @@ final class DqlExecutor(ts: GraphStore) {
     // reference appends them in plain uid order, every direction
     // (TestSortWithNulls desc keeps F..J uid-ascending), so their later
     // keys are masked out.
-    def keyCols(rev: Boolean): Seq[Column] = {
+    def keyCols(rev: Boolean): Seq[SortKey] = {
       val primaryNull = col("__ov0").isNull
       order.zipWithIndex.flatMap { case (o, i) =>
         val ov = if (i == 0) col(s"__ov$i")
           else when(primaryNull, lit(null)).otherwise(col(s"__ov$i"))
-        val v = (o.desc, rev) match {
-          case (true, false) => ov.desc_nulls_last
-          case (false, false) => ov.asc_nulls_last
-          case (true, true) => ov.asc_nulls_first
-          case (false, true) => ov.desc_nulls_first
-        }
         val flip = o.desc && i > 0
         val uexpr = when(ov.isNull,
           if (flip) -qcol(uidCol) else qcol(uidCol))
-        Seq(v, if (rev) uexpr.desc else uexpr.asc)
-      } :+ (if (rev) qcol(uidCol).desc else qcol(uidCol).asc)
+        Seq(SortKey(ov, o.desc != rev, nullsFirst = rev), SortKey(uexpr, rev))
+      } :+ SortKey(qcol(uidCol), rev)
     }
-    val ordCols = keyCols(rev = false)
-    cur = cur.orderBy(ordCols: _*)
-    // a negative offset clamps to 0 (reference issue #8441 fix,
-    // TestNegativeOffset)
-    page.offset.filter(_ > 0).foreach(o => cur = cur.offset(o))
-    page.first.foreach { f =>
-      if (f >= 0) cur = cur.limit(f)
-      else {
-        // negative first = LAST |f| of the ordered result (reference
-        // query/query.go:989 calculatePaginationParams): top-|f| in the
-        // REVERSED order — a distributed TakeOrdered, no global window —
-        // then re-sorted into the requested presentation order
-        cur = cur.orderBy(keyCols(rev = true): _*).limit(-f).orderBy(ordCols: _*)
-      }
+    (cur, keyCols)
+  }
+
+  /** One sort column: a value, its direction and where its nulls go
+    * (Spark's default: first ascending, last descending).
+    */
+  private case class SortKey(value: Column, desc: Boolean, nullsFirst: Boolean) {
+    def col: Column = (desc, nullsFirst) match {
+      case (true, true) => value.desc_nulls_first
+      case (true, false) => value.desc_nulls_last
+      case (false, true) => value.asc_nulls_first
+      case (false, false) => value.asc_nulls_last
     }
-    // keepValRiders (the block's main frontier only): a `val:` sort key
-    // already paid the var-map join — keep its value as a __seedval_
-    // rider so a later `val(x)` selection of the SAME var reads it in
-    // place instead of re-joining the map (project's seedval branch)
-    val keep: Map[Int, String] =
-      if (!keepValRiders) Map.empty
-      else order.zipWithIndex.collect {
-        case (o, i) if o.pred.startsWith("val:") &&
-            !cur.columns.contains(s"__seedval_${o.pred.drop(4)}") =>
-          i -> s"__seedval_${o.pred.drop(4)}"
-      }.toMap
-    order.indices.foreach { i =>
-      cur = keep.get(i) match {
-        case Some(n) => cur.withColumnRenamed(s"__ov$i", n)
-        case None => cur.drop(s"__ov$i")
-      }
-    }
-    cur
+  }
+  private object SortKey {
+    def apply(value: Column, desc: Boolean): SortKey = SortKey(value, desc, !desc)
   }
 
   // ---- selection projection (one join per selection) ----
@@ -3379,6 +3406,40 @@ final class DqlExecutor(ts: GraphStore) {
   private def hexUid(c: Column): Column =
     concat(lit("0x"), lower(conv(c.cast("string"), 10, 16)))
 
+  /** hexUid of a collected uid. */
+  private def hexS(u: Long): String = "0x" + java.lang.Long.toHexString(u)
+
+  /** A JSON string literal, escaped as to_json's generator escapes it. */
+  private def quote(s: String): String =
+    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
+
+  /** A JSON object of rendered values in the given key order; null values
+    * are omitted, as to_json omits null fields.
+    */
+  private def jsonObj(fields: Seq[(String, String)]): String =
+    fields.collect { case (k, v) if v != null => quote(k) + ":" + v }
+      .mkString("{", ",", "}")
+
+  /** `c` rendered as to_json renders it as an object field under
+    * `jsonOpts`: the value text of `{"v":…}`, null for null.
+    */
+  private def jsonValue(c: Column): Column = {
+    val j = to_json(struct(c.as("v")), jsonOpts)
+    when(j =!= "{}", j.substr(lit(6), length(j) - 6))
+  }
+
+  /** A small (uid, json) frame's rows, in its order. */
+  private def collectJson(df: DataFrame): Seq[(Long, String)] =
+    df.select(col("uid"), col("json")).collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1)))
+
+  /** `xs` grouped by `key`, groups in first-seen order. */
+  private def grouped[A, K](xs: Seq[A])(key: A => K): Seq[(K, Seq[A])] = {
+    val m = scala.collection.mutable.LinkedHashMap.empty[K, ArrayBuffer[A]]
+    xs.foreach(x => m.getOrElseUpdate(key(x), ArrayBuffer.empty[A]) += x)
+    m.toSeq.map { case (k, v) => (k, v.toSeq) }
+  }
+
   /** Un-escape marker-wrapped geo values in a rendered JSON string:
     * `"\u0001{\"type\":...}\u0002"` → the raw GeoJSON object embedded in
     * place (reference outputnode.go writes geo postings as JSON objects,
@@ -3405,39 +3466,36 @@ final class DqlExecutor(ts: GraphStore) {
     * render ONE "friend" array, groupby object first). Token-stream
     * read because a tree parse would silently drop the duplicates.
     */
-  private val mergeDupKeys = udf((s: String) => {
-    if (s == null) null
-    else {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val p = m.getFactory.createParser(s)
-      import com.fasterxml.jackson.core.JsonToken
-      val order = scala.collection.mutable.ArrayBuffer.empty[String]
-      val vals = scala.collection.mutable.LinkedHashMap
-        .empty[String, List[com.fasterxml.jackson.databind.JsonNode]]
-      if (p.nextToken() == JsonToken.START_OBJECT) {
-        while (p.nextToken() == JsonToken.FIELD_NAME) {
-          val k = p.currentName()
-          p.nextToken()
-          val v = m.readTree[com.fasterxml.jackson.databind.JsonNode](p)
-          if (!vals.contains(k)) order += k
-          vals(k) = vals.getOrElse(k, Nil) :+ v
-        }
+  private def mergeDupKeys(s: String): String = {
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    val p = m.getFactory.createParser(s)
+    import com.fasterxml.jackson.core.JsonToken
+    val order = scala.collection.mutable.ArrayBuffer.empty[String]
+    val vals = scala.collection.mutable.LinkedHashMap
+      .empty[String, List[com.fasterxml.jackson.databind.JsonNode]]
+    if (p.nextToken() == JsonToken.START_OBJECT) {
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val k = p.currentName()
+        p.nextToken()
+        val v = m.readTree[com.fasterxml.jackson.databind.JsonNode](p)
+        if (!vals.contains(k)) order += k
+        vals(k) = vals.getOrElse(k, Nil) :+ v
       }
-      val out = m.createObjectNode()
-      order.foreach { k =>
-        vals(k) match {
-          case one :: Nil => out.set[com.fasterxml.jackson.databind.node.ObjectNode](k, one)
-          case many if many.forall(_.isArray) =>
-            val arr = m.createArrayNode()
-            many.foreach(a => a.forEach(x => arr.add(x)))
-            out.set[com.fasterxml.jackson.databind.node.ObjectNode](k, arr)
-          case many =>
-            out.set[com.fasterxml.jackson.databind.node.ObjectNode](k, many.last)
-        }
-      }
-      m.writeValueAsString(out)
     }
-  })
+    val out = m.createObjectNode()
+    order.foreach { k =>
+      vals(k) match {
+        case one :: Nil => out.set[com.fasterxml.jackson.databind.node.ObjectNode](k, one)
+        case many if many.forall(_.isArray) =>
+          val arr = m.createArrayNode()
+          many.foreach(a => a.forEach(x => arr.add(x)))
+          out.set[com.fasterxml.jackson.databind.node.ObjectNode](k, arr)
+        case many =>
+          out.set[com.fasterxml.jackson.databind.node.ObjectNode](k, many.last)
+      }
+    }
+    m.writeValueAsString(out)
+  }
 
   /** JSON key for a selection, following the reference's output naming
     * (outputnode.go): alias wins; count → `count(pred)`; lang chains keep
@@ -3457,17 +3515,9 @@ final class DqlExecutor(ts: GraphStore) {
       else if (s.reverse) s"~${s.pred}"
       else s.outName)
 
-  /** Render one block as (uid, json): one JSON object string per root,
-    * fields in query order, child objects as arrays ordered by the
-    * requested child order (default uid asc), uids as "0x…" hex, lang
-    * chains as `pred@en:.` keys, facets as `pred|facet` keys, null
-    * fields and empty child arrays omitted — the reference's ToJson
-    * shape (outputnode.go:1346 preTraverse; goldens
-    * query/query0_test.go:27-46). Assembly is leaves-up
-    * collect_list(struct(...)), never row-by-row.
-    */
+  /** The first block of `query` rendered as (uid, json) rows. */
   def jsonRows(query: String): DataFrame =
-    jsonBlock(Parser.parse(query).blocks.head)
+    jsonBlock(Parser.parse(query).blocks.head).toDF("uid", "json")
 
   /** Render every non-var block: (block, uid, json). Var blocks execute
     * for their bindings but emit no output (reference multi-block JSON,
@@ -3721,17 +3771,13 @@ final class DqlExecutor(ts: GraphStore) {
     }
   }
 
-  /** AST entry for jsonAll. `includeUid = false` renders GraphQL-shaped
-    * objects (no implicit uid key — the GraphQL layer only emits
-    * requested fields, reference graphql/resolve/resolver.go completion).
-    */
   /** schema(pred:)/schema(type:) introspection (reference
     * worker/schema.go): rendered straight from the registry — metadata
     * scale, never a data pass. An empty field selection means ALL
     * fields; boolean fields appear only when true, mirroring the
     * reference goldens (query1_test.go TestSchemaBlock2-5).
     */
-  private def schemaJson(b: QueryBlock): DataFrame = {
+  private def schemaJson(b: QueryBlock): Seq[(Long, String)] = {
     val fields = b.selections.map(_.pred)
     def want(f: String) = fields.isEmpty || fields.contains(f)
     def js(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
@@ -3762,35 +3808,40 @@ final class DqlExecutor(ts: GraphStore) {
           val fs = t.predicates.map(p => s"""{"name":${js(p)}}""").mkString(",")
           s"""{"fields":[$fs],"name":${js(t.name)}}"""
         }
-    rows.zipWithIndex.map { case (j, i) => (i.toLong, j) }.toDF("uid", "json")
+    rows.zipWithIndex.map { case (j, i) => (i.toLong, j) }
   }
 
+  /** AST entry for jsonAll: every non-var block is executed and rendered
+    * here, block by block, and the result is one local (block, uid, json)
+    * frame — the caller's plan and collect start no Spark job.
+    * `includeUid = false` renders GraphQL-shaped objects (no implicit
+    * uid key — the GraphQL layer only emits requested fields, reference
+    * graphql/resolve/resolver.go completion).
+    */
   def jsonAllAst(query: DqlQuery, includeUid: Boolean = true): DataFrame = {
-    val outs = query.blocks.flatMap { b =>
-      if (b.func.name == "schema")
-        Some(schemaJson(b)
-          .select(lit(b.name).as("block"), col("uid"), col("json")))
+    val blocks = query.blocks.flatMap { b =>
+      if (b.func.name == "schema") Some(b.name -> schemaJson(b))
       else if (b.name == "var") { flatBlock(b); None }
-      else {
-        // the reference names every shortest block's output `_path_`
-        val bn = if (b.shortest.isDefined) "_path_" else b.name
-        Some(jsonBlock(b, includeUid)
-          .select(lit(bn).as("block"), col("uid"), col("json")))
-      }
+      // the reference names every shortest block's output `_path_`
+      else Some((if (b.shortest.isDefined) "_path_" else b.name) ->
+        jsonBlock(b, includeUid))
     }
-    require(outs.nonEmpty, "query has no result block")
-    outs.reduce(_ unionByName _)
+    require(blocks.nonEmpty, "query has no result block")
+    val rows = for ((bn, objs) <- blocks; (u, j) <- objs) yield Row(bn, u, j)
+    session.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("block", StringType), StructField("uid", LongType),
+      StructField("json", StringType))))
   }
 
   /** Nested JSON for @recurse blocks: the reference re-applies the child
     * template per level and renders the reached TREE (query/recurse.go:19
     * expandRecurse + outputnode.go preTraverse) — each node object
     * carries its scalar leaves and, under each edge predicate's key, its
-    * children at the next depth. Assembly is leaves-up: one
-    * string-aggregation per depth, every join keyed on uids — no
-    * row-by-row work, depth many shuffles.
+    * children at the next depth. One collect fetches every occurrence of
+    * the tree (the roots at depth 0) with its leaves and edge facets
+    * already rendered by to_json; the driver folds it deepest level first.
     */
-  private def recurseJson(b: QueryBlock, includeUid0: Boolean): DataFrame = {
+  private def recurseJson(b: QueryBlock, includeUid0: Boolean): Seq[(Long, String)] = {
     val r = b.recurse.get
     // an explicit `uid` selection turns uid keys on even in
     // GraphQL-shaped output (reference TestRecurseQueryLimitDepth2 —
@@ -3831,180 +3882,149 @@ final class DqlExecutor(ts: GraphStore) {
     }.reduce(_ unionByName _)
     val tree = graft.operators.Recurse.expandTree(
       frontier.select(col("uid").as("start")), edges, recurseHops(r), r.loop)
-    // scalar leaves for every reached node, roots included
-    val nodes = frontier.select(col("uid").as("node"))
-      .unionByName(tree.select(col("node"))).distinct()
-    val leaves = scalars.foldLeft(nodes) { (acc, s) =>
-      acc.join(attrLeaf(s)
+    // every occurrence: the roots at depth 0 (no parent edge), then the
+    // tree, each with the scalar leaves of its node
+    var occ = frontier.select(col("uid").as("start"),
+        lit(null).cast("long").as("parent"), lit(null).cast("string").as("pred"),
+        col("uid").as("node"), lit(0).as("depth"))
+      .unionByName(tree.select(col("start"), col("parent"), col("pred"),
+        col("node"), col("depth")))
+    scalars.foreach { s =>
+      occ = occ.join(attrLeaf(s)
           .select(col("subject").as("__ls"), col("value").as(jsonKey(s))),
         col("node") === col("__ls"), "left").drop("__ls")
     }
     val isList = preds.map(s =>
       jsonKey(s) -> (schema.predicates.get(s.pred).forall(_.isList) || s.reverse))
       .toMap
-    // node object = the pre-rendered `__obj_base` (uid + leaves via
-    // to_json), child segments spliced in before the closing brace in
-    // query order; a null child segment contributes nothing
-    def objCol(kidCol: String => Option[Column]): Column = {
-      val segs = preds.flatMap { s =>
-        val k = jsonKey(s)
-        kidCol(k).map { c =>
-          val rendered =
-            if (isList(k)) concat(lit("["), c, lit("]")) else c
-          when(c.isNotNull, concat(lit(s""","$k":"""), rendered))
-            .otherwise(lit(""))
-        }
-      }
-      if (segs.isEmpty) col("__obj_base")
-      else {
-        // child segments each start with "," — when the scalar part is
-        // empty ("{}") the first comma must go
-        val body0 = concat(segs: _*)
-        val body = when(col("__obj_base") === "{}",
-          substring(body0, 2, Int.MaxValue)).otherwise(body0)
-        concat(expr("substring(__obj_base, 1, length(__obj_base) - 1)"),
-          body, lit("}"))
-      }
-    }
-    // the node object's scalar part: uid (when requested) + leaves
-    val baseFields =
-      (if (includeUid) Seq(hexUid(col("node")).as("uid")) else Nil) ++
-        scalars.map(s => col(jsonKey(s)).as(jsonKey(s)))
-    val baseJson =
-      if (baseFields.isEmpty) lit("{}")
-      else to_json(struct(baseFields: _*), jsonOpts)
-    // value-less elision (reference omits nodes whose requested values
-    // are ALL absent — TestRecurseQuery drops the nameless friend):
-    // without a uid key an occurrence renders only if a leaf or a child
-    // segment survives
-    def keep(kidCols: Seq[Column]): Column = {
-      if (includeUid) lit(true)
-      else (scalars.map(s => col(jsonKey(s)).isNotNull) ++
-        kidCols.map(_.isNotNull))
-        .foldLeft(lit(false))(_ || _)
-    }
     // @facets on a recurse edge (reference TestRecurseFacetOrder):
     // fetched keys render inside each child OCCURRENCE's object as
     // `pred|key`, and `@facets(orderasc/desc: k)` orders every level's
-    // array by the edge facet — both are per-edge, joined back onto the
-    // tree occurrence by (parent, node, pred)
+    // array by the edge facet — both are per-edge, joined onto the tree
+    // occurrence by (parent, node, pred); roots have no edge
     val facetPreds = preds.filter(s =>
       s.facetFetch || s.facetKeys.nonEmpty || s.facetOrder.nonEmpty)
     def facetKeysOf(s: Selection) =
       ts.facetKeys.getOrElse(s.pred, Nil).filter(kv =>
         s.facetFetch || s.facetKeys.contains(kv._1) ||
           s.facetOrder.exists(_.pred == kv._1))
-    val facetJsonFields = facetPreds.flatMap { s =>
-      facetKeysOf(s).map { case (k, _) =>
-        qcol(s"__ff_${jsonKey(s)}_$k")
-          .as(s.facetAliases.getOrElse(k, s"${s.outName}|$k")) }
+    facetPreds.foreach { s =>
+      val e0 = if (s.reverse) ts.reverseEdge(s.pred) else ts.edge(s.pred)
+      val ordCol = s.facetOrder.headOption
+        .filter(o => facetType(s.pred, o.pred) != "boolean")
+        .map(o => col(s"_ft_${o.pred}").cast("double")
+          .as(s"__fo_${jsonKey(s)}")).toSeq
+      val eF = e0.select(
+        Seq(col("subject").as("__ffs"), col("object").as("__ffo")) ++
+          facetKeysOf(s).map { case (k, _) =>
+            facetRender(s.pred, k, element_at(col("facets"), k))
+              .as(s"__ff_${jsonKey(s)}_$k") } ++ ordCol: _*)
+      occ = occ.join(eF,
+        col("parent") === col("__ffs") && col("node") === col("__ffo") &&
+          col("pred") === lit(jsonKey(s)), "left")
+        .drop("__ffs", "__ffo")
     }
-    // deepest level first: fold (start, parent) → one rendered child
-    // segment column per predicate key
-    val maxD = tree.agg(max(col("depth"))).collect().headOption
-      .flatMap(r0 => Option(r0.get(0))).map(_.asInstanceOf[Int]).getOrElse(0)
-    var kids: DataFrame = null // (__ks, __kp, __k_<key> ...)
-    val predKeys = preds.map(jsonKey)
-    for (d <- maxD to 1 by -1) {
-      var lvl = tree.filter(col("depth") === d).join(leaves, Seq("node"), "left")
-      if (kids != null)
-        lvl = lvl.join(kids,
-          lvl("start") === kids("__ks") && lvl("node") === kids("__kp"),
-          "left").drop("__ks", "__kp")
-      facetPreds.foreach { s =>
-        val e0 = if (s.reverse) ts.reverseEdge(s.pred) else ts.edge(s.pred)
-        val ordCol = s.facetOrder.headOption
-          .filter(o => facetType(s.pred, o.pred) != "boolean")
-          .map(o => col(s"_ft_${o.pred}").cast("double")
-            .as(s"__fo_${jsonKey(s)}")).toSeq
-        val eF = e0.select(
-          Seq(col("subject").as("__ffs"), col("object").as("__ffo")) ++
-            facetKeysOf(s).map { case (k, _) =>
-              facetRender(s.pred, k, element_at(col("facets"), k))
-                .as(s"__ff_${jsonKey(s)}_$k") } ++ ordCol: _*)
-        lvl = lvl.join(eF,
-          col("parent") === col("__ffs") && col("node") === col("__ffo") &&
-            col("pred") === lit(jsonKey(s)), "left")
-          .drop("__ffs", "__ffo")
-      }
-      val kidCol = (k: String) =>
-        if (kids != null && lvl.columns.contains(s"__k_$k"))
-          Some(qcol(s"__k_$k")) else None
-      val lvlBase =
-        if (facetJsonFields.isEmpty) baseJson
-        else to_json(struct(baseFields ++ facetJsonFields: _*), jsonOpts)
-      var withObj = lvl
-        .filter(keep(predKeys.flatMap(kidCol)))
-        .withColumn("__obj_base", lvlBase)
-        .withColumn("__obj", objCol(kidCol))
-      // per-level child ordering: `friend(orderdesc: dob)` sorts each
-      // parent's array by the order predicate's value (reference
-      // TestRecurseQueryOrder re-applies the ordering every level);
-      // desc negates the numeric/epoch cast, uid breaks ties
-      val orderedSels = preds.filter(s =>
-        s.order.nonEmpty && !s.order.head.pred.startsWith("val:"))
-      orderedSels.foreach { s =>
-        withObj = withObj.join(
-          ts.attr(s.order.head.pred)
-            .select(col("subject").as("__oks"),
-              col("value").cast("double").as(s"__ok_${jsonKey(s)}")),
-          col("node") === col("__oks"), "left").drop("__oks")
-      }
-      val sortKey0 = orderedSels.foldLeft(lit(null).cast("double")) { (acc, s) =>
-        val v = qcol(s"__ok_${jsonKey(s)}")
+    // per-level child ordering: `friend(orderdesc: dob)` sorts each
+    // parent's array by the order predicate's value (reference
+    // TestRecurseQueryOrder re-applies the ordering every level);
+    // desc negates the numeric/epoch cast, uid breaks ties
+    val orderedSels = preds.filter(s =>
+      s.order.nonEmpty && !s.order.head.pred.startsWith("val:"))
+    orderedSels.foreach { s =>
+      occ = occ.join(
+        ts.attr(s.order.head.pred)
+          .select(col("subject").as("__oks"),
+            col("value").cast("double").as(s"__ok_${jsonKey(s)}")),
+        col("node") === col("__oks") && col("depth") > 0, "left").drop("__oks")
+    }
+    val sortKey0 = orderedSels.foldLeft(lit(null).cast("double")) { (acc, s) =>
+      val v = qcol(s"__ok_${jsonKey(s)}")
+      when(col("pred") === jsonKey(s),
+        if (s.order.head.desc) -v else v).otherwise(acc)
+    }
+    // `@facets(orderdesc: since)` orders by the edge facet, re-applied
+    // at every level (reference TestRecurseFacetOrder)
+    val sortKey = facetPreds.filter(s => s.facetOrder.nonEmpty &&
+        facetType(s.pred, s.facetOrder.head.pred) != "boolean")
+      .foldLeft(sortKey0) { (acc, s) =>
+        val v = qcol(s"__fo_${jsonKey(s)}")
         when(col("pred") === jsonKey(s),
-          if (s.order.head.desc) -v else v).otherwise(acc)
+          if (s.facetOrder.head.desc) -v else v).otherwise(acc)
       }
-      // `@facets(orderdesc: since)` orders by the edge facet, re-applied
-      // at every level (reference TestRecurseFacetOrder)
-      val sortKey = facetPreds.filter(s => s.facetOrder.nonEmpty &&
-          facetType(s.pred, s.facetOrder.head.pred) != "boolean")
-        .foldLeft(sortKey0) { (acc, s) =>
-          val v = qcol(s"__fo_${jsonKey(s)}")
-          when(col("pred") === jsonKey(s),
-            if (s.facetOrder.head.desc) -v else v).otherwise(acc)
+    // the node object's scalar part: uid (when requested), leaves and
+    // the reaching edge's facets
+    val baseFields =
+      (if (includeUid) Seq(hexUid(col("node")).as("uid")) else Nil) ++
+        scalars.map(s => qcol(jsonKey(s)).as(jsonKey(s))) ++
+        facetPreds.flatMap { s =>
+          facetKeysOf(s).map { case (k, _) =>
+            qcol(s"__ff_${jsonKey(s)}_$k")
+              .as(s.facetAliases.getOrElse(k, s"${s.outName}|$k")) }
         }
-      val perPred = withObj
-        .groupBy(col("start"), col("parent"), col("pred"))
-        .agg(array_join(transform(
-          sort_array(collect_list(struct(sortKey.as("k"),
-            col("node").as("o"), col("__obj").as("p")))),
-          x => x.getField("p")), ",").as("__arr"))
-      kids = perPred.groupBy(col("start").as("__ks"), col("parent").as("__kp"))
-        .agg(predKeys.map(k =>
-            max(when(col("pred") === k, col("__arr"))).as(s"__k_$k")).head,
-          predKeys.map(k =>
-            max(when(col("pred") === k, col("__arr"))).as(s"__k_$k")).tail: _*)
+    val base =
+      if (baseFields.isEmpty) lit("{}")
+      else to_json(struct(baseFields: _*), jsonOpts)
+    val hasLeaf = scalars.map(s => qcol(jsonKey(s)).isNotNull)
+      .foldLeft(lit(false))(_ || _)
+    val rows = occ.select(col("start"), col("parent"), col("pred"),
+      col("node"), col("depth"), base, hasLeaf, sortKey).collect()
+    val predKeys = preds.map(jsonKey)
+    // node object = the rendered base with each present child segment
+    // spliced in before the closing brace, in query order
+    def obj(base: String, kids: Map[String, String]): String = {
+      val body = predKeys.flatMap(k => kids.get(k).map(c =>
+        s""","$k":""" + (if (isList(k)) s"[$c]" else c))).mkString
+      if (body.isEmpty) base
+      else base.dropRight(1) + (if (base == "{}") body.drop(1) else body) + "}"
     }
-    var root = frontier.select(col("uid"))
-      .join(leaves, col("uid") === leaves("node"), "left")
-      .drop("node").withColumn("node", col("uid"))
-    if (kids != null)
-      root = root.join(kids,
-        root("uid") === kids("__ks") && root("uid") === kids("__kp"), "left")
-        .drop("__ks", "__kp")
-    val rootKid = (k: String) =>
-      if (kids != null && root.columns.contains(s"__k_$k"))
-        Some(qcol(s"__k_$k")) else None
-    val rendered = root
-      .filter(keep(predKeys.flatMap(rootKid)))
-      .withColumn("__obj_base", baseJson)
-      .select(col("uid"), objCol(rootKid).as("json"))
-      .orderBy(col("uid"))
-    if (!b.normalize) rendered
-    else {
-      // @recurse @normalize: one flat object per root-to-leaf path of
-      // the rendered tree, aliased scalars as ARRAYS in path order
-      // (reference TestNormalizeDirectiveWithRecurseDirective). The
-      // flatten is a per-root row-local transform over the already
-      // rendered tree — distributed, no extra shuffle.
-      val edgeKeys = predKeys
-      val flat = udf((j: String) =>
-        DqlExecutor.flattenRecursePaths(j, edgeKeys))
-      rendered
-        .select(col("uid"), posexplode(flat(col("json"))).as(Seq("__p", "json")))
-        .orderBy(col("uid"), col("__p")).drop("__p")
+    // value-less elision (reference omits nodes whose requested values
+    // are ALL absent — TestRecurseQuery drops the nameless friend):
+    // without a uid key an occurrence renders only if a leaf or a child
+    // segment survives
+    def render(row: Row, kids: Map[String, String]): Option[String] =
+      if (includeUid || row.getBoolean(6) || kids.nonEmpty)
+        Some(obj(row.getString(5), kids))
+      else None
+    // array order within one parent's key: sort key (nulls first), then
+    // node uid, then the object text — Spark's sort_array order
+    val siblingOrder = new scala.math.Ordering[(Row, String)] {
+      def compare(x: (Row, String), y: (Row, String)): Int = {
+        val (p, q) = (x._1, y._1)
+        val byKey =
+          if (p.isNullAt(7) || q.isNullAt(7))
+            java.lang.Boolean.compare(!p.isNullAt(7), !q.isNullAt(7))
+          // + 0.0 folds -0.0 into 0.0, as Spark's double ordering does
+          else java.lang.Double.compare(p.getDouble(7) + 0.0, q.getDouble(7) + 0.0)
+        if (byKey != 0) byKey
+        else if (p.getLong(3) != q.getLong(3)) java.lang.Long.compare(p.getLong(3), q.getLong(3))
+        else UTF8String.fromString(x._2).compareTo(UTF8String.fromString(y._2))
+      }
     }
+    val byDepth = rows.toSeq.groupBy(_.getInt(4))
+    // deepest level first: (start, parent) → predicate key → the joined
+    // child objects of that parent's array
+    var kids = Map.empty[(Long, Long), Map[String, String]]
+    for (d <- byDepth.keys.maxOption.getOrElse(0) to 1 by -1) {
+      val objs = byDepth.getOrElse(d, Nil).flatMap { row =>
+        render(row, kids.getOrElse((row.getLong(0), row.getLong(3)), Map.empty))
+          .map(row -> _)
+      }
+      kids = objs.groupBy { case (row, _) => (row.getLong(0), row.getLong(1)) }
+        .map { case (sp, xs) =>
+          sp -> xs.groupBy(_._1.getString(2)).map { case (p, ys) =>
+            p -> ys.sorted(siblingOrder).map(_._2).mkString(",") }
+        }
+    }
+    val roots = byDepth.getOrElse(0, Nil).sortBy(_.getLong(3)).flatMap { row =>
+      val u = row.getLong(3)
+      render(row, kids.getOrElse((u, u), Map.empty)).map(u -> _)
+    }
+    // @recurse @normalize: one flat object per root-to-leaf path of the
+    // rendered tree, aliased scalars as ARRAYS in path order (reference
+    // TestNormalizeDirectiveWithRecurseDirective)
+    if (!b.normalize) roots
+    else roots.flatMap { case (u, j) =>
+      DqlExecutor.flattenRecursePaths(j, predKeys).map(u -> _) }
   }
 
   /** `_path_` JSON for shortest blocks (reference query/shortest.go
@@ -4015,9 +4035,7 @@ final class DqlExecutor(ts: GraphStore) {
     * list); the only distributed work is one pruned lookup resolving
     * each hop's predicate.
     */
-  private def shortestJson(b: QueryBlock): DataFrame = {
-    val session = ts.spark
-    import session.implicits._
+  private def shortestJson(b: QueryBlock): Seq[(Long, String)] = {
     val paths = flatBlock(b) // (rank, dist, path) — also binds the path var
     val rows = paths.orderBy(col("rank"))
       .select(col("rank"), col("dist"), col("path")).collect()
@@ -4025,8 +4043,7 @@ final class DqlExecutor(ts: GraphStore) {
       val ns = r.getString(2).split("->").map(_.toLong)
       ns.zip(ns.drop(1))
     }.distinct
-    if (rows.isEmpty)
-      return Seq.empty[(Long, String)].toDF("uid", "json")
+    if (rows.isEmpty) return Nil
     // resolve each hop's (predicate key, weight): pruned edge lookup,
     // min pred on parallel edges (deterministic)
     val hopDf = hops.toDF("src", "dst")
@@ -4042,7 +4059,6 @@ final class DqlExecutor(ts: GraphStore) {
     // `pred|key` (reference TestKShortestPathWeighted golden)
     val facetOf: Map[String, Option[String]] =
       shortestSels(b).map(s => jsonKey(s) -> s.facetKeys.headOption).toMap
-    def hexS(u: Long) = "0x" + java.lang.Long.toHexString(u)
     // integral weights print bare (1, not 1.0) like the reference's
     // integer-weight goldens; fractional sums keep full double repr
     def jsonNum(d: Double): String =
@@ -4063,11 +4079,10 @@ final class DqlExecutor(ts: GraphStore) {
       }
       s"{$uidF$wF$facF$kidF}"
     }
-    val objs = rows.toSeq.map { r =>
+    rows.toSeq.map { r =>
       val ns = r.getString(2).split("->").map(_.toLong).toList
       (ns.head, obj(ns.head, None, ns.tail, Some(r.getDouble(1))))
     }
-    objs.toDF("uid", "json")
   }
 
   /** Root-level `me(func: ...) @groupby(keys) { aggs }`: the whole
@@ -4106,7 +4121,17 @@ final class DqlExecutor(ts: GraphStore) {
     }
   }
 
-  private def jsonBlock(b0: QueryBlock, includeUid: Boolean = true): DataFrame = {
+  /** Render one block as (uid, json) rows in output order: one JSON
+    * object string per root, fields in query order, child objects as
+    * arrays ordered by the requested child order (default uid asc), uids
+    * as "0x…" hex, lang chains as `pred@en:.` keys, facets as
+    * `pred|facet` keys, null fields and empty child arrays omitted — the
+    * reference's ToJson shape (outputnode.go:1346 preTraverse; goldens
+    * query/query0_test.go:27-46). The block's flat frame is collected
+    * once with every value already rendered by to_json; the driver only
+    * nests, orders and concatenates.
+    */
+  private def jsonBlock(b0: QueryBlock, includeUid: Boolean = true): Seq[(Long, String)] = {
     // count(uid) may appear once per sub-query (reference
     // TestCountUIDWithMultipleCount: "uidcount not allowed multiple
     // times in same sub-query")
@@ -4120,14 +4145,11 @@ final class DqlExecutor(ts: GraphStore) {
     checkDupCount(b0.selections)
     if (b0.func.name == "empty") {
       validateSels(b0.selections)
-      val session = ts.spark
-      import session.implicits._
-      return emptyBlockObjs(b0).zipWithIndex
-        .map { case (j, i) => (i.toLong, j) }.toDF("uid", "json")
+      return emptyBlockObjs(b0).zipWithIndex.map { case (j, i) => (i.toLong, j) }
     }
     if (b0.shortest.isDefined) return shortestJson(b0)
     if (b0.recurse.isDefined) return recurseJson(b0, includeUid)
-    if (b0.groupby.nonEmpty) return rootGroupbyJson(b0)
+    if (b0.groupby.nonEmpty) return collectJson(rootGroupbyJson(b0))
     // expand()/pred@* rewrite to concrete per-pred/per-tag selections so
     // the render keys line up with the expanded columns (same rewrites
     // as flatBlock — idempotent)
@@ -4143,8 +4165,7 @@ final class DqlExecutor(ts: GraphStore) {
     // an EMPTY selection set renders as an empty array even when uids
     // match (reference TestMultiEmptyBlocks: `you(func: uid(1)) {}` →
     // "you": [])
-    if (b.selections.isEmpty)
-      return flatBlock(b).select(col("uid"), lit("").as("json")).limit(0)
+    if (b.selections.isEmpty) { flatBlock(b); return Nil }
     // @groupby child selections render through the group machinery, not
     // the generic traversal, and root count(uid) renders as an extra
     // {"count": n} object — carve both out of the flat projection
@@ -4166,41 +4187,15 @@ final class DqlExecutor(ts: GraphStore) {
         to_json(struct(col(s.outName).as(key)),
           Map("ignoreNullFields" -> "false"))
       }
-      return flatBlock(b)
+      return collectJson(flatBlock(b)
         .select(posexplode(array(objs: _*)).as(Seq("__i", "json")))
-        .select((lit(Long.MinValue) + col("__i")).as("uid"), col("json"))
+        .select((lit(Long.MinValue) + col("__i")).as("uid"), col("json")))
     }
     keepChildRank = true
     val flatDf0 = try flatBlock(b2) finally { keepChildRank = false }
-    // Materialize the flat frame ONCE before assembly: every childFrame /
-    // root agg / count below re-references it, and without lineage
-    // truncation each reference replays the entire traversal sub-plan
-    // (measured on a 3-child block: 149 parquet scans, 63 exchanges,
-    // 51 joins — analysis + scheduling dominated the query). The frame
-    // is RESULT-scale (root pagination already applied), so the
-    // checkpoint is bounded by output size, and the assembly joins
-    // become scans of a small materialized table.
-    // (r17 probed pre-hashing this frame by root uid so the per-level
-    // groupBys/joins subset-elide their exchanges — job count stayed
-    // 17/26/20 and tasks ROSE by the repartition's own 8: the family's
-    // cost is the per-job scheduling floor of the level-by-level
-    // assembly, not exchange volume. Reverted.)
-    // (Second probe, also reverted: 14 of dql_json_deep's 17 jobs are
-    // the AQE query stages of THIS materialization, so r17 tried
-    // static planning — a scoped spark.sql.adaptive.enabled=false
-    // around this one action — for declared-bounded roots.
-    // Jobs fell 17→12 / 26→17 / 22→18 across the family, but quiet-
-    // host steady cpu went 2.3→9.3 s and tasks 59→339 on dql_json_deep
-    // and wall time ROSE ~0.3 s: the per-stage jobs are where AQE
-    // converts the frontier⋈tablet sort-merge joins to broadcasts and
-    // coalesces 32-partition exchanges to 1–2 tasks, and static
-    // parquet-stat planning cannot see the intermediate frame sizes to
-    // do either. The family's sequential-stage latency IS the price of
-    // those runtime conversions — the plan floor, not a defect.)
-    val flatDf1 = flatDf0.localCheckpoint()
     // datetime-instant riders never render
-    val flatDf = flatDf1.drop(
-      flatDf1.columns.filter(_.endsWith("__dtv")).toSeq: _*)
+    val flatDf = flatDf0.drop(
+      flatDf0.columns.filter(_.endsWith("__dtv")).toSeq: _*)
     // counts are scalar leaves even when they count a (reverse) uid pred
     def isChild(s: Selection) =
       !s.isCount && (schema.isUidPredicate(s.pred) || s.reverse)
@@ -4210,385 +4205,276 @@ final class DqlExecutor(ts: GraphStore) {
     // never renders, even with facet clauses (TestFacetsAlias2's me2
     // renders []; TestUseVarsMultiCascade1's inner `B as friend`)
     def renders(s: Selection) = s.children.nonEmpty
+    // the uid chain below `sels`: each traversed edge's column, parents
+    // before children
+    def edgeCols(sels: Seq[Selection], pfx: String): Seq[String] =
+      sels.filter(isChild).flatMap { c =>
+        val ec = pfx + c.outName
+        (if (flatDf.columns.contains(ec)) Seq(ec) else Nil) ++
+          edgeCols(c.children, ec + "_")
+      }
+    // (flat column, key) of every ALIASED leaf below `sels` — what a
+    // @normalize object carries
+    def aliasedCols(sels: Seq[Selection], pfx: String): Seq[(String, String)] =
+      sels.flatMap { s =>
+        val own =
+          if (s.alias.isDefined && !isChild(s) &&
+              flatDf.columns.contains(pfx + s.outName))
+            Seq((pfx + s.outName, s.outName))
+          else Nil
+        own ++ aliasedCols(s.children, pfx + s.outName + "_")
+      }
+    def countObjs(n: Long): Seq[(Long, String)] =
+      countSels.map(c => (Long.MinValue, jsonObj(Seq(c.alias.getOrElse("count") -> n.toString))))
+    // root order: the block's requested order, else the route order a
+    // shortest-path variable carries (TestShortestPathRev), else uid.
+    // The sort keys are orderAndPage's own (same joins, null rules and
+    // collations), evaluated in the collected projection and compared
+    // on the driver with Spark's ordering
+    val (sortable, sortKeys) =
+      if (b.normalize) (flatDf, Nil)
+      else if (b.order.nonEmpty) {
+        val (df, keyCols) = withSortKeys(flatDf, "uid", b.order)
+        (df, keyCols(false))
+      } else if (b.func.name == "uid" && b.func.args.size == 1)
+        vars.get(b.func.args.head).filter(_.columns.contains("__ord"))
+          .map(v => (flatDf.join(v.select(col("uid"), col("__ord")), Seq("uid"), "left"),
+            Seq(SortKey(col("__ord"), false), SortKey(col("uid"), false))))
+          .getOrElse((flatDf, Nil))
+      else (flatDf, Nil)
+    // a block whose every selection is count(uid) renders the counts
+    // alone (TestCountAtRoot)
+    if (!b.normalize && b2.selections.isEmpty && gbSels.isEmpty)
+      return countObjs(flatDf.agg(countDistinct(col("uid"))).head().getLong(0))
+    // The one Spark action of the block: collect the flat frame, which is
+    // RESULT-scale (root pagination already applied), with uid-chain and
+    // rank columns as longs and every other column as its rendered JSON
+    // value; nesting happens on the driver. The frame's AQE query stages
+    // are its jobs: they convert the frontier⋈tablet joins to broadcasts
+    // and coalesce the exchanges, and static planning of the same frame
+    // measured slower (r17: fewer jobs, wall time up ~0.3 s on
+    // dql_json_deep).
+    val keyCols = ("uid" +: edgeCols(b.selections, "")).toSet ++
+      flatDf.columns.filter(_.endsWith("__rn"))
+    val collected = sortable.select(flatDf.columns.toSeq.map { c =>
+        if (keyCols(c)) qcol(c).cast("long").as(c) else jsonValue(qcol(c)).as(c)
+      } ++ sortKeys.zipWithIndex.map { case (k, i) => k.value.as(s"__o$i") }: _*)
+    val rows = collected.collect().toSeq
+    val ix = collected.columns.zipWithIndex.toMap
+    def has(c: String) = ix.contains(c)
+    def uidOf(r: Row, c: String): Option[Long] =
+      ix.get(c).filterNot(r.isNullAt).map(r.getLong)
+    def valOf(r: Row, c: String): String = ix.get(c).map(r.getString).orNull
+    def firstVal(rs: Seq[Row], c: String): String =
+      rs.iterator.map(valOf(_, c)).find(_ != null).orNull
+    // VALUE-facet riders of scalar selections (`name @facets`: flat
+    // `<pfx>name__fv_origin` → field "name|origin"; @facets(o: origin)
+    // renders the bare alias, TestFacetsAlias)
+    def fvCols(sels: Seq[Selection], pfx: String): Seq[(String, String)] =
+      sels.filterNot(isChild).flatMap { s =>
+        collected.columns.toSeq.filter(_.startsWith(s"$pfx${s.outName}__fv_")).map { cn =>
+          val k = cn.stripPrefix(s"$pfx${s.outName}__fv_")
+          cn -> s.facetAliases.getOrElse(k, s"${jsonKey(s)}|$k")
+        }
+      }
+    // edge facets of child selection `s` (flat `<pfx>f_since`, pfx
+    // ending in the edge's column) → field "<outName>|since" or its alias
+    def edgeFacetCols(s: Selection, pfx: String): Seq[(String, String)] =
+      collected.columns.toSeq.filter(_.startsWith(s"${pfx}f_")).map { cn =>
+        val k = cn.stripPrefix(s"${pfx}f_")
+        cn -> s.facetAliases.getOrElse(k, s"${s.outName}|$k")
+      }
+    // @normalize: a path whose traversed edge has aliased leaves below
+    // it but none of them valued is elided BEFORE flattening
+    // (TestNormalizeDirective: the nameless friend generates no result
+    // paths)
+    def pathKept(r: Row, sels: Seq[Selection], pfx: String): Boolean =
+      sels.filter(isChild).forall { c =>
+        val ec = pfx + c.outName
+        val sub = aliasedCols(c.children, ec + "_")
+        (!has(ec) || sub.isEmpty || uidOf(r, ec).isEmpty ||
+          sub.exists(a => valOf(r, a._1) != null)) &&
+          pathKept(r, c.children, ec + "_")
+      }
+    // paths in uid-chain order, level by level; `missing` stands in for
+    // an untraversed edge
+    def byChain(rs: Seq[Row], chain: Seq[String], missing: Long): Seq[Row] =
+      rs.sortBy(r => chain.map(uidOf(r, _).getOrElse(missing)))(
+        scala.math.Ordering.Implicits.seqOrdering[Seq, Long])
 
     // @normalize: ONE flat object per result path carrying only ALIASED
     // leaves (reference normalize semantics, outputnode.go:921
-    // normalizeResult) — no nesting, no implicit keys
+    // normalizeResult) — no nesting, no implicit keys. Facet columns
+    // flatten alongside: edge facets under `<outName>|key`
+    // (alias-prefixed — "from|company", TestFacetUIDPredicateWithNormalize),
+    // value-facet riders under `<jsonKey>|key` ("friend_name|dummy").
+    // Paths keep the traversal's uid-chain order, level by level
+    // (reference normalize flattening iterates the subgraph in uid order
+    // — TestFacetUIDListPredicateWithNormalize)
     if (b.normalize) {
-      def aliased(sels: Seq[Selection], pfx: String): Seq[(String, String)] =
-        sels.flatMap { s =>
-          val own =
-            if (s.alias.isDefined && !isChild(s) &&
-                flatDf.columns.contains(pfx + s.outName))
-              Seq((pfx + s.outName, s.outName))
-            else Nil
-          own ++ aliased(s.children, pfx + s.outName + "_")
-        }
-      // facet columns flatten alongside the aliased leaves: edge facets
-      // under `<outName>|key` (alias-prefixed — "from|company",
-      // TestFacetUIDPredicateWithNormalize), value-facet riders under
-      // `<jsonKey>|key` ("friend_name|dummy"), aliased keys bare
       def facetFlat(sels: Seq[Selection], pfx: String): Seq[(String, String)] =
         sels.flatMap { s =>
           val own =
-            if (isChild(s))
-              flatDf.columns.filter(_.startsWith(s"$pfx${s.outName}_f_")).toSeq
-                .map { cn =>
-                  val k = cn.stripPrefix(s"$pfx${s.outName}_f_")
-                  (cn, s.facetAliases.getOrElse(k, s"${s.outName}|$k"))
-                }
-            else
-              flatDf.columns.filter(_.startsWith(s"$pfx${s.outName}__fv_")).toSeq
-                .map { cn =>
-                  val k = cn.stripPrefix(s"$pfx${s.outName}__fv_")
-                  (cn, s.facetAliases.getOrElse(k, s"${jsonKey(s)}|$k"))
-                }
+            if (isChild(s)) edgeFacetCols(s, pfx + s.outName + "_")
+            else fvCols(Seq(s), pfx)
           own ++ facetFlat(s.children, pfx + s.outName + "_")
         }
-      val fields = (aliased(b.selections, "") ++ facetFlat(b.selections, ""))
-        .map { case (c, k) => qcol(c).as(k) }
-      // value-less child objects are elided BEFORE flattening
-      // (TestNormalizeDirective: the nameless friend generates no result
-      // paths): a row whose traversed child is present but whose subtree
-      // produced no aliased values vanishes
-      var out = flatDf
-      def prune(sels: Seq[Selection], pfx: String): Unit =
-        sels.filter(isChild).foreach { c =>
-          val edgeCol = pfx + c.outName
-          val subCols = aliased(c.children, pfx + c.outName + "_").map(_._1)
-          if (out.columns.contains(edgeCol) && subCols.nonEmpty)
-            out = out.filter(qcol(edgeCol).isNull ||
-              subCols.map(qcol(_).isNotNull).reduce(_ || _))
-          prune(c.children, pfx + c.outName + "_")
-        }
-      prune(b.selections, "")
-      // result paths keep the traversal's uid-chain order, level by
-      // level (reference normalize flattening iterates the subgraph in
-      // uid order — TestFacetUIDListPredicateWithNormalize)
-      def uidChain(sels: Seq[Selection], pfx: String): Seq[String] =
-        sels.filter(isChild).flatMap { c =>
-          val edgeCol = pfx + c.outName
-          (if (out.columns.contains(edgeCol)) Seq(edgeCol) else Nil) ++
-            uidChain(c.children, pfx + c.outName + "_")
-        }
-      val chainCols = uidChain(b.selections, "")
-      return out
-        .select(Seq(col("uid"), to_json(struct(fields: _*), jsonOpts)
-          .as("json")) ++ chainCols.map(qcol): _*)
-        .orderBy(col("uid") +:
-          chainCols.map(c => qcol(c).asc_nulls_first): _*)
-        .select(col("uid"), col("json"))
+      val fields = aliasedCols(b.selections, "") ++ facetFlat(b.selections, "")
+      return byChain(rows.filter(pathKept(_, b.selections, "")),
+          "uid" +: edgeCols(b.selections, ""), Long.MinValue)
+        .map(r => (r.getLong(ix("uid")), jsonObj(fields.map { case (c, k) => k -> valOf(r, c) })))
     }
 
-    /** Selection-level `@normalize`: the subtree below this edge
-      * flattens — one FLAT object per result path carrying only the
-      * subtree's ALIASED leaves from every depth, value-less paths
-      * elided, array in uid-chain order (reference
-      * TestNormalizeDirectiveSubQueryLevel1/2, ListAndNonListChild*;
-      * inner @normalize markers inside an already-normalized subtree
-      * add nothing — the whole subtree is one flat namespace).
-      */
-    def normalizedChildFrame(keys: Seq[String], s: Selection,
-        colName: String, outCol: String): DataFrame = {
-      def aliasedIn(sels: Seq[Selection], pfx: String): Seq[(String, String)] =
-        sels.flatMap { c =>
-          val own =
-            if (c.alias.isDefined && !isChild(c) &&
-                flatDf.columns.contains(pfx + c.outName))
-              Seq((pfx + c.outName, c.outName))
-            else Nil
-          own ++ aliasedIn(c.children, pfx + c.outName + "_")
-        }
-      def chainIn(sels: Seq[Selection], pfx: String): Seq[String] =
-        sels.filter(isChild).flatMap { c =>
-          val ec = pfx + c.outName
-          (if (flatDf.columns.contains(ec)) Seq(ec) else Nil) ++
-            chainIn(c.children, pfx + c.outName + "_")
-        }
-      val pfx = colName + "_"
-      val myKeys = keys :+ colName
-      val aliased = aliasedIn(s.children, pfx)
-      val chain = chainIn(s.children, pfx)
-      if (aliased.isEmpty)
-        return flatDf.select(keys.map(qcol): _*).limit(0)
-          .withColumn(outCol, lit(null).cast("string"))
-      var rows = flatDf
-        .select((myKeys ++ chain ++ aliased.map(_._1)).distinct.map(qcol): _*)
-        .filter(qcol(colName).isNotNull)
-        .dropDuplicates(myKeys ++ chain)
-        // a path whose subtree produced no aliased values vanishes
-        .filter(aliased.map(a => qcol(a._1).isNotNull).reduce(_ || _))
-      // per-edge prune, same as block normalize: a traversed nested edge
-      // whose OWN subtree has no aliased values kills the path (the
-      // nameless 0x65 grandchild contributes no flat row)
-      def pruneIn(sels: Seq[Selection], pfx2: String): Unit =
-        sels.filter(isChild).foreach { c =>
-          val ec = pfx2 + c.outName
-          val sub = aliasedIn(c.children, pfx2 + c.outName + "_").map(_._1)
-          if (rows.columns.contains(ec) && sub.nonEmpty)
-            rows = rows.filter(qcol(ec).isNull ||
-              sub.map(qcol(_).isNotNull).reduce(_ || _))
-          pruneIn(c.children, pfx2 + c.outName + "_")
-        }
-      pruneIn(s.children, pfx)
-      val payload = struct(aliased.map { case (c, a) => qcol(c).as(a) }: _*)
-      val ordKey = struct((colName +: chain).map(c =>
-        coalesce(qcol(c).cast("long"), lit(Long.MaxValue))): _*)
-      rows.groupBy(keys.map(qcol): _*)
-        .agg(transform(
-          sort_array(collect_list(struct(ordKey.as("o"), payload.as("p")))),
-          x => x.getField("p")).as(outCol))
-    }
-
-    /** One row per `keys` (uid chain from the root) with column `outCol`
-      * holding selection `s`'s rendered child value: an ordered array of
-      * structs for list predicates, a single struct otherwise.
-      * Grandchildren recurse on the extended key chain, so the nesting
+    /** Selection `s`'s rendered child value under the rows of one parent
+      * (one uid chain from the root): an array of objects for list
+      * predicates, a single object otherwise, null when nothing renders.
+      * Grandchildren recurse on the child's own rows, so the nesting
       * depth of the query is the nesting depth of the JSON (reference
-      * preTraverse recursion). Sibling-cartesian duplicate rows collapse
-      * via dropDuplicates on the uid chain — uids key edges uniquely.
+      * preTraverse recursion); sibling-cartesian duplicate rows collapse
+      * by child uid — uids key edges uniquely.
       */
-    def childFrame(keys: Seq[String], s: Selection, colName: String,
-        outCol: String): DataFrame = {
-      if (s.normalize)
-        return normalizedChildFrame(keys, s, colName, outCol)
+    def childJson(rs: Seq[Row], s: Selection, colName: String): String = {
       val pfx = colName + "_"
-      val rankCol = s"${colName}__rn"
-      val myKeys = keys :+ colName
-      val scalarCols = s.children.filter(c => !isChild(c))
-        .map(c => pfx + c.outName).filter(flatDf.columns.contains)
-      // VALUE-facet riders of scalar children (`name @facets` under a
-      // child: flat `friend_name__fv_origin` → field "name|origin")
-      val scalarFvCols = s.children.filter(c => !isChild(c)).flatMap { c =>
-        flatDf.columns.filter(_.startsWith(s"$pfx${c.outName}__fv_"))
-          .map { cn =>
-            val k = cn.stripPrefix(s"$pfx${c.outName}__fv_")
-            // @facets(o: origin) renders the bare alias (TestFacetsAlias)
-            cn -> c.facetAliases.getOrElse(k, s"${jsonKey(c)}|$k")
-          }
+      val kids = grouped(rs.filter(uidOf(_, colName).isDefined))(uidOf(_, colName).get)
+      if (s.normalize) {
+        // selection-level @normalize: the subtree below this edge
+        // flattens — one FLAT object per result path carrying the
+        // subtree's ALIASED leaves from every depth, value-less paths
+        // elided, array in uid-chain order (reference
+        // TestNormalizeDirectiveSubQueryLevel1/2, ListAndNonListChild*;
+        // inner @normalize markers add nothing)
+        val aliased = aliasedCols(s.children, pfx)
+        val chain = colName +: edgeCols(s.children, pfx)
+        val paths = grouped(kids.flatMap(_._2))(r => chain.map(uidOf(r, _)))
+          .map { case (_, ps) => ps.head }
+          .filter(r => aliased.exists(a => valOf(r, a._1) != null) &&
+            pathKept(r, s.children, pfx))
+        return if (aliased.isEmpty || paths.isEmpty) null
+          else byChain(paths, chain, Long.MaxValue)
+            .map(r => jsonObj(aliased.map { case (c, a) => a -> valOf(r, c) }))
+            .mkString("[", ",", "]")
       }
-      val facetCols = flatDf.columns.filter(_.startsWith(s"${pfx}f_")).toSeq
-      val rankCols = if (flatDf.columns.contains(rankCol)) Seq(rankCol) else Nil
-      var rows = flatDf
-        .select((myKeys ++ scalarCols ++ scalarFvCols.map(_._1) ++
-          facetCols ++ rankCols).map(qcol): _*)
-        .filter(qcol(colName).isNotNull)
-        .dropDuplicates(myKeys)
-      // count(uid) inside a child template: an extra {"count": n} object
-      // appended LAST to the child array (reference TestCountAtRoot3 —
-      // Michonne's 5 friends render 4 named objects plus {"count":5});
-      // counted BEFORE value-less children drop, so nameless nodes count
+      val scalarKids = s.children.filterNot(isChild)
+      val facetCols = edgeFacetCols(s, pfx) ++ fvCols(s.children, pfx)
+      val grand = s.children.filter(c => isChild(c) && renders(c))
       val countKids = s.children.filter(c => c.isCount && c.pred == "uid")
-      val countCols = countKids.map(c => s"__cnt_${c.outName}")
-      if (countKids.nonEmpty) {
-        var cnt = rows.groupBy(keys.map(qcol): _*)
-          .agg(countDistinct(qcol(colName)).as("__cnt"))
-        countCols.foreach { cc => cnt = cnt.withColumn(cc, col("__cnt")) }
-        rows = rows.unionByName(cnt.drop("__cnt"), allowMissingColumns = true)
-      }
-      val grandSpecs = s.children.filter(c => isChild(c) && renders(c))
-        .zipWithIndex.map { case (gc, i) =>
-          val gcol = s"__g${myKeys.size}_$i"
-          rows = rows.join(childFrame(myKeys, gc, pfx + gc.outName, gcol),
-            myKeys, "left")
-          (gc, gcol)
-        }
-      val kidFields = s.children.flatMap { c =>
-        if (c.isCount && c.pred == "uid")
-          Some(qcol(s"__cnt_${c.outName}").as(c.alias.getOrElse("count")))
-        else if (isChild(c))
-          grandSpecs.collectFirst { case (gc, gcol) if gc eq c =>
-            col(gcol).as(jsonKey(c)) }
-        else if (flatDf.columns.contains(pfx + c.outName))
-          Some(qcol(pfx + c.outName).as(jsonKey(c)))
-        else None
-      }
-      val facetFields = facetCols.map { c =>
-        val k = c.stripPrefix(s"${pfx}f_")
-        col(c).as(s.facetAliases.getOrElse(k, s"${s.outName}|$k"))
-      } ++ scalarFvCols.map { case (cn, field) => qcol(cn).as(field) }
+      val hasValues = scalarKids.exists(c => has(pfx + c.outName)) ||
+        grand.nonEmpty || countKids.nonEmpty
       // uid renders when implicit uids are on, when the query asks for it
       // explicitly (`friend { uid name }` — reference emits uid only on
-      // request), or when nothing else would remain in the object
-      val uidField =
-        if (includeUid || s.children.exists(c => c.pred == "uid" && !c.isCount) ||
-            (kidFields.isEmpty && facetFields.isEmpty))
-          // an aliased `uid: uid` / `id: uid` renames the key
-          // (reference TestUidAlias)
-          Seq(hexUid(qcol(colName)).as(
-            s.children.find(c => c.pred == "uid" && !c.isCount)
-              .flatMap(_.alias).getOrElse("uid")))
-        else Nil
-      // without an EXPLICITLY requested uid key, a child whose requested
-      // values are ALL null renders nothing — the reference omits
-      // value-less nodes even in debug mode (TestDebugUid drops the
-      // nameless 0x65; TestGetUIDInDebugMode keeps it only because the
-      // query asks for `uid`); synthetic count rows survive via their
-      // count column
-      val explicitUid = s.children.exists(c => c.pred == "uid" && !c.isCount)
-      val valueCols = scalarCols ++ grandSpecs.map(_._2) ++ countCols
-      if (!explicitUid && valueCols.nonEmpty)
-        rows = rows.filter(valueCols.map(qcol(_).isNotNull).reduce(_ || _))
-      val payload = struct((uidField ++ kidFields ++ facetFields): _*)
-      // synthetic count rows carry no child uid/rank: Long.MaxValue
-      // sorts them LAST in the array (reference appends the count object)
-      val sortKey = coalesce(
-        rankCols.headOption.map(c => qcol(c).cast("long"))
-          .getOrElse(qcol(colName)), lit(Long.MaxValue))
-      // array_sort with a comparator on the (unique-per-array) key only:
-      // sort_array compares the WHOLE struct, which VARIANT facet fields
-      // ("auto"-typed) don't support ordering on
-      val arr = transform(
-        array_sort(collect_list(struct(sortKey.as("o"), payload.as("p"))),
-          (l, r) => when(l.getField("o") < r.getField("o"), -1)
-            .when(l.getField("o") > r.getField("o"), 1).otherwise(0)),
-        x => x.getField("p"))
+      // request; an aliased `id: uid` renames the key, TestUidAlias), or
+      // when nothing else would remain in the object
+      val explicitUid = s.children.find(c => c.pred == "uid" && !c.isCount)
+      val uidKey =
+        if (includeUid || explicitUid.isDefined || (!hasValues && facetCols.isEmpty))
+          Some(explicitUid.flatMap(_.alias).getOrElse("uid"))
+        else None
+      val rankCol = s"${colName}__rn"
+      val objs = kids.flatMap { case (u, g) =>
+        val values = s.children.flatMap { c =>
+          if (c.isCount && c.pred == "uid" || isChild(c) && !renders(c)) Nil
+          else if (isChild(c)) Seq(jsonKey(c) -> childJson(g, c, pfx + c.outName))
+          else if (has(pfx + c.outName)) Seq(jsonKey(c) -> firstVal(g, pfx + c.outName))
+          else Nil
+        }
+        // without an EXPLICITLY requested uid key, a child whose requested
+        // values are ALL null renders nothing — the reference omits
+        // value-less nodes even in debug mode (TestDebugUid drops the
+        // nameless 0x65; TestGetUIDInDebugMode keeps it only because the
+        // query asks for `uid`)
+        if (explicitUid.isEmpty && hasValues && values.forall(_._2 == null)) None
+        else {
+          val order = if (has(rankCol)) uidOf(g.head, rankCol).getOrElse(Long.MaxValue) else u
+          Some(order -> jsonObj(uidKey.map(_ -> quote(hexS(u))).toSeq ++ values ++
+            facetCols.map { case (c, k) => k -> firstVal(g, c) }))
+        }
+      }.sortBy(_._1).map(_._2) ++
+        // count(uid) inside a child template: an extra {"count": n}
+        // object appended LAST to the child array (reference
+        // TestCountAtRoot3 — Michonne's 5 friends render 4 named objects
+        // plus {"count":5}); nameless nodes count
+        (if (countKids.isEmpty || kids.isEmpty) Nil
+         else Seq(jsonObj(countKids.map(c =>
+           c.alias.getOrElse("count") -> kids.size.toString))))
       // list-vs-scalar collapse (reference outputnode.go: non-list uid
       // predicates render a single object, list predicates an array)
-      val isListPred = schema.predicates.get(s.pred).forall(_.isList) || s.reverse
-      val rendered =
-        if (isListPred) when(size(arr) > 0, arr) else element_at(arr, 1)
-      rows.groupBy(keys.map(qcol): _*).agg(rendered.as(outCol))
+      if (objs.isEmpty) null
+      else if (schema.predicates.get(s.pred).forall(_.isList) || s.reverse)
+        objs.mkString("[", ",", "]")
+      else objs.head
     }
 
-    val rootSels = b2.selections.filter(_.pred != "uid")
-    val rootScalars = rootSels.filter(s => !isChild(s))
-    // VALUE-facet riders of root scalars (`name @facets` at root:
-    // flat `name__fv_origin` → field "name|origin",
-    // reference TestRetrieveFacetsSimple)
-    val rootFvCols = rootScalars.flatMap { s =>
-      flatDf.columns.filter(_.startsWith(s"${s.outName}__fv_"))
-        .map { cn =>
-          val k = cn.stripPrefix(s"${s.outName}__fv_")
-          cn -> s.facetAliases.getOrElse(k, s"${jsonKey(s)}|$k")
-        }
-    }
-    var root =
-      if (rootScalars.nonEmpty) {
-        val aggs = rootScalars.zipWithIndex.map { case (s, i) =>
-          first(qcol(s.outName), ignoreNulls = true).as(s"__r$i") } ++
-          rootFvCols.map { case (cn, _) =>
-            first(qcol(cn), ignoreNulls = true).as(cn) }
-        flatDf.groupBy(col("uid")).agg(aggs.head, aggs.tail: _*)
-      } else flatDf.select(col("uid")).distinct()
-    val childCols = rootSels.filter(s => isChild(s) && renders(s))
-      .zipWithIndex.map { case (s, i) =>
-        val ccol = s"__c$i"
-        root = root.join(childFrame(Seq("uid"), s, s.outName, ccol), Seq("uid"), "left")
-        (s, ccol)
-      }
-    // per-parent @groupby arrays: traverse the edge, group the targets,
-    // join the rendered array back on the parent (a parent with no
-    // groups keeps a null → the key is omitted, reference
+    val roots = grouped(rows)(_.getLong(ix("uid")))
+    // per-parent @groupby arrays: traverse the edge from the block's
+    // roots, group the targets, render one array per parent (a parent
+    // with no groups renders no key, reference
     // TestGroupByFriendsMultipleParents' Andrea)
-    val gbCols = gbSels.zipWithIndex.flatMap { case (s, i) =>
+    val gbJson = gbSels.flatMap { s =>
       val src = if (s.reverse) ts.reverseEdge(s.pred) else ts.edge(s.pred)
-      val targets = root.select(col("uid"))
-        .join(src.select(col("subject").as("uid"), col("object").as("__t")),
-          Seq("uid"))
+      val targets = roots.map(_._1).toDF("uid")
+        .join(src.select(col("subject").as("uid"), col("object").as("__t")), Seq("uid"))
       groupbyGroups(targets, s.groupby, s.children).map { g =>
-        val ccol = s"__gb$i"
-        root = root.join(
-          groupbyArray(g, s.groupby, s.children, Seq("uid"))
-            .withColumnRenamed("__gb", ccol), Seq("uid"), "left")
-        (s, ccol)
+        s -> groupbyArray(g, s.groupby, s.children, Seq("uid"))
+          .select(col("uid"), jsonValue(col("__gb"))).collect()
+          .map(r => r.getLong(0) -> r.getString(1)).toMap
       }
     }
-    val scalarCol = rootScalars.zipWithIndex
-      .map { case (s, i) => (s, s"__r$i") }.toMap[Selection, String]
-    val rootUid = includeUid ||
-      b.selections.exists(s => s.pred == "uid" && !s.isCount)
-    // @groupby fields keep their DECLARATION position so a repeated
-    // edge key merges with the groupby array ahead of the plain
-    // children (reference TestGroupBy_RepeatAttr: the "friend" array is
-    // [@groupby obj, ...friend objs])
     // each rendered field in DECLARATION order; a @groupby array on an
     // edge key goes immediately BEFORE that key's plain children so a
     // repeated edge merges as [@groupby obj, ...children] (reference
     // TestGroupBy_RepeatAttr). b2's rewrite may either keep the groupby
     // selection or fold it into the plain one — emit each gb array once,
     // on the first selection sharing its key.
-    val baseFields: Seq[(String, Column)] = rootSels.flatMap { s =>
-      val k = jsonKey(s)
-      if (s.groupby.nonEmpty) Nil
-      else if (isChild(s))
-        childCols.collectFirst { case (cs, ccol) if cs eq s =>
-          k -> col(ccol).as(k) }.toSeq
-      else Seq(k -> col(scalarCol(s)).as(k))
+    val rootSels = b2.selections.filter(_.pred != "uid")
+    var fields: Seq[(String, (Long, Seq[Row]) => String)] = rootSels.flatMap { s =>
+      if (s.groupby.nonEmpty || (isChild(s) && !renders(s))) Nil
+      else if (isChild(s)) Seq(jsonKey(s) -> ((_: Long, g: Seq[Row]) => childJson(g, s, s.outName)))
+      else Seq(jsonKey(s) -> ((_: Long, g: Seq[Row]) => firstVal(g, s.outName)))
     }
-    var fieldPairs = baseFields
-    gbCols.foreach { case (gs, ccol) =>
-      val k = jsonKey(gs)
-      val pair = k -> col(ccol).as(k)
-      val idx = fieldPairs.indexWhere(_._1 == k)
-      // a groupby array on a REPEATED edge key slots in right before the
-      // plain children of the same key, so the post-render merge yields
-      // [@groupby obj, ...children] (reference TestGroupBy_RepeatAttr)
-      fieldPairs =
-        if (idx >= 0) (fieldPairs.take(idx) :+ pair) ++ fieldPairs.drop(idx)
-        else fieldPairs :+ pair
+    gbJson.foreach { case (gs, byUid) =>
+      val f = jsonKey(gs) -> ((u: Long, _: Seq[Row]) => byUid.get(u).orNull)
+      val idx = fields.indexWhere(_._1 == f._1)
+      fields = if (idx >= 0) (fields.take(idx) :+ f) ++ fields.drop(idx) else fields :+ f
     }
-    val valueFields = fieldPairs.map(_._2)
-    val valueFieldNames = fieldPairs.map(_._1)
-    val fields =
-      (if (rootUid) Seq(hexUid(col("uid")).as(
-        b.selections.find(s => s.pred == "uid" && !s.isCount)
-          .flatMap(_.alias).getOrElse("uid"))) else Nil) ++
-        valueFields ++
-        rootFvCols.map { case (cn, field) => qcol(cn).as(field) }
-    // without a uid key, a root whose requested values are ALL absent
-    // renders nothing — the reference omits value-less objects at the
-    // root too (TestRecurseVariable: the nameless friend disappears
-    // from the uid-var block)
-    val kept =
-      if (rootUid) root
-      // a block whose selections render NOTHING (braceless uid leaves
-      // that only bind vars) is an empty array, not bare objects
-      // (reference TestFacetsAlias2's me2)
-      else if (valueFields.isEmpty && rootFvCols.isEmpty)
-        root.filter(lit(false))
-      else root.filter(valueFields.map(_.isNotNull).reduce(_ || _))
     // duplicate field names (a repeated edge: @groupby + plain children
     // under one key) merge into ONE array after rendering
-    val jsonCol0 = to_json(struct(fields: _*), jsonOpts)
-    val jsonCol =
-      if (valueFieldNames.distinct.size != valueFieldNames.size)
-        mergeDupKeys(jsonCol0)
-      else jsonCol0
-    val assembled = kept
-      .select(col("uid"), jsonCol.as("json"))
-    // the result array keeps the block's requested root order (reference
-    // applies sort before encoding); uid order is only the default —
-    // EXCEPT a block seeded from a shortest-path variable, whose array
-    // keeps the route order the variable carries (TestShortestPathRev)
-    val ordered = if (b.order.isEmpty) {
-      val routeOrdered =
-        if (b.func.name == "uid" && b.func.args.size == 1)
-          vars.get(b.func.args.head)
-            .filter(_.columns.contains("__ord"))
-            .map(v => assembled
-              .join(v.select(col("uid"), col("__ord")), Seq("uid"), "left")
-              .orderBy(col("__ord"), col("uid")).drop("__ord"))
-        else None
-      routeOrdered.getOrElse(assembled.orderBy(col("uid")))
-    } else orderAndPage(assembled, "uid", b.order, Pagination())
-    if (countSels.isEmpty) ordered
-    else {
-      // count(uid) at root: one {"count": n} object PER count entry
-      // (alias honored), FIRST in the block array (reference
-      // TestCountAtRoot3 — count objects precede the per-uid objects;
-      // TestCountUIDWithMultipleCountAndAlias — each aliased count is
-      // its own object); n is the filtered frontier size. A block whose
-      // every selection is count(uid) renders the counts alone
-      // (TestCountAtRoot).
-      val cntRow = flatDf.agg(countDistinct(col("uid")).as("__c"))
-        .select(lit(Long.MinValue).as("uid"),
-          explode(array(countSels.map(c =>
-            to_json(struct(col("__c").as(c.alias.getOrElse("count"))))): _*))
-            .as("json"))
-      val pureCount = b2.selections.isEmpty && gbSels.isEmpty
-      if (pureCount) cntRow else cntRow.unionByName(ordered)
+    val dupKeys = fields.map(_._1).distinct.size != fields.size
+    val rootFv = fvCols(rootSels, "")
+    val explicitUid = b.selections.find(s => s.pred == "uid" && !s.isCount)
+    val uidKey =
+      if (includeUid || explicitUid.isDefined) Some(explicitUid.flatMap(_.alias).getOrElse("uid"))
+      else None
+    val objs = roots.flatMap { case (u, g) =>
+      val values = fields.map { case (k, f) => k -> f(u, g) }
+      // without a uid key, a root whose requested values are ALL absent
+      // renders nothing — the reference omits value-less objects at the
+      // root too (TestRecurseVariable: the nameless friend disappears
+      // from the uid-var block; TestFacetsAlias2's me2 renders [])
+      if (uidKey.isEmpty && values.forall(_._2 == null)) None
+      else {
+        val j = jsonObj(uidKey.map(_ -> quote(hexS(u))).toSeq ++ values ++
+          rootFv.map { case (c, k) => k -> firstVal(g, c) })
+        Some((u, g.head, if (dupKeys) mergeDupKeys(j) else j))
+      }
     }
+    val ordered =
+      if (sortKeys.isEmpty) objs.sortBy(_._1)
+      else {
+        val keyFields = sortKeys.indices.map(i => collected.schema(s"__o$i"))
+        val toKey = CatalystTypeConverters.createToCatalystConverter(StructType(keyFields))
+        val ord = new InterpretedOrdering(sortKeys.zipWithIndex.map { case (k, i) =>
+          SortOrder(BoundReference(i, keyFields(i).dataType, nullable = true),
+            if (k.desc) Descending else Ascending,
+            if (k.nullsFirst) NullsFirst else NullsLast, Seq.empty) })
+        objs.map(o => o -> toKey(Row.fromSeq(sortKeys.indices.map(i =>
+            o._2.get(ix(s"__o$i"))))).asInstanceOf[InternalRow])
+          .sortBy(_._2)(ord).map(_._1)
+      }
+    // count(uid) at root: one {"count": n} object PER count entry (alias
+    // honored), FIRST in the block array (reference TestCountAtRoot3;
+    // TestCountUIDWithMultipleCountAndAlias — each aliased count is its
+    // own object); n is the filtered frontier size
+    countObjs(roots.size) ++ ordered.map(o => (o._1, o._3))
   }
 
   /** RFC3339 timestamps ("1910-01-01T00:00:00Z"), matching the
@@ -4603,8 +4489,7 @@ object DqlExecutor {
   /** Root-to-leaf flattening of a rendered recurse tree (reference
     * normalize-over-recurse, query/outputnode.go normalize walk):
     * `edgeKeys` are the tree's uid-predicate keys; every other key is a
-    * scalar that accumulates into a path-ordered array. Runs inside a
-    * UDF — must stay a pure function of its arguments.
+    * scalar that accumulates into a path-ordered array.
     */
   private[exec] def flattenRecursePaths(json: String,
       edgeKeys: Seq[String]): Seq[String] = {

@@ -47,4 +47,18 @@ object TokenizerRegistry {
     def tokens(v: Column): Column = TextFunctions.ftStems(v)
     def tokensLit(q: String): Seq[String] = TextFunctions.ftStemsLit(q)
   })
+
+  // A PLUGIN-shaped tokenizer — the reference's custom-tokenizer path
+  // (tok/tok.go:56 registerTokenizer; the systest plugin example has the
+  // same shape): 4-char lowercase word prefixes. Registered with the
+  // built-ins so it resolves before any query that indexes with it runs.
+  register(new Tokenizer {
+    val name = "prefix4"
+    def tokens(v: Column): Column =
+      array_distinct(transform(
+        filter(split(lower(v), "\\s+"), w => w =!= ""),
+        w => substring(w, 1, 4)))
+    def tokensLit(q: String): Seq[String] =
+      q.toLowerCase.split("\\s+").filter(_.nonEmpty).map(_.take(4)).distinct.toSeq
+  })
 }

@@ -103,20 +103,6 @@ object SpecialQueries {
   private def charNgrams(s: String, n: Int = 3): Seq[String] =
     s.sliding(n).toSeq.distinct
 
-  // A PLUGIN tokenizer registered through the public registry — the
-  // reference's custom-tokenizer path (tok/tok.go:56 registerTokenizer;
-  // systest plugin example uses the same shape): 4-char lowercase word
-  // prefixes.
-  graft.functions.TokenizerRegistry.register(new graft.functions.Tokenizer {
-    val name = "prefix4"
-    def tokens(v: Column): Column =
-      array_distinct(transform(
-        filter(split(lower(v), "\\s+"), w => w =!= ""),
-        w => substring(w, 1, 4)))
-    def tokensLit(q: String): Seq[String] =
-      q.toLowerCase.split("\\s+").filter(_.nonEmpty).map(_.take(4)).distinct.toSeq
-  })
-
   private def dqlQ(q: String): QFn = (s, d) =>
     new graft.exec.DqlExecutor(graft.core.TripleStore(s, d)).flat(q)
 

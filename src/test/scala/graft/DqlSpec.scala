@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{TripleStore, Uids}
 import graft.dql._
 import graft.exec.DqlExecutor
+import graft.graphql.GraphQLEngine
 
 /** Parser + executor specs, in the spirit of the reference's parser unit
   * corpus (dql/parser_test.go) and golden JSON tests (query/query0_test.go).
@@ -542,5 +543,72 @@ class DqlSpec extends AnyFunSuite {
     assert(accepted.isEmpty,
       s"parser ACCEPTED ${accepted.size} reference error cases: " +
         accepted.mkString(", "))
+  }
+
+  // JSON reads are rendered before jsonAllAst returns: the caller's plan
+  // and collect — what GraphQLEngine.json and the HTTP /query handler do
+  // with the frame — start no Spark job, and the frame keeps block order
+  // and each block's row order.
+  private val CB = Uids.Customer
+  private lazy val store = TripleStore(spark, sf)
+
+  private def dql(q: String): DataFrame =
+    new DqlExecutor(store).jsonAllAst(Parser.parse(q))
+
+  /** The caller's side of a read, with the jobs it starts. */
+  private def callerCollect(df: DataFrame): (Seq[Row], Explain.Cost) =
+    Explain.measure(spark) {
+      df.queryExecution.executedPlan
+      df.collect().toSeq
+    }
+
+  test("a nested read's collect starts no Spark job") {
+    val (rows, cost) = callerCollect(dql(
+      s"""{ q(func: uid(${CB + 1}, ${CB + 2}, ${CB + 4})) {
+         |    name
+         |    placed (orderdesc: totalprice, first: 2) {
+         |      orderstatus
+         |      has_line (first: 2) { returnflag } } } }""".stripMargin))
+    assert(cost.jobs == 0, cost)
+    assert(rows.map(_.getLong(1)) == Seq(CB + 1, CB + 2, CB + 4))
+    rows.foreach { r =>
+      assert(r.getString(2).startsWith(s"""{"uid":"0x${r.getLong(1).toHexString}","name":"""))
+      assert(r.getString(2).contains(""""placed":[{"uid":"0x"""))
+    }
+  }
+
+  test("a @recurse read's collect starts no Spark job") {
+    val (rows, cost) = callerCollect(dql(
+      """{ q(func: le(acctbal, -800)) @recurse(depth: 3) {
+        |    name located_in in_region } }""".stripMargin))
+    assert(cost.jobs == 0, cost)
+    assert(rows.nonEmpty)
+    assert(rows.map(_.getLong(1)) == rows.map(_.getLong(1)).sorted)
+    assert(rows.forall(_.getString(2).contains(""""located_in":{""")))
+  }
+
+  test("a GraphQL read's collect starts no Spark job") {
+    val (rows, cost) = callerCollect(new GraphQLEngine(store).json(
+      """query {
+        |  queryCustomer(filter: { mktsegment: { eq: "BUILDING" } },
+        |                order: { asc: name }, first: 10) {
+        |    name
+        |    located_in { name }
+        |    placed(order: { desc: orderdate }, first: 2) { orderstatus }
+        |  } }""".stripMargin))
+    assert(cost.jobs == 0, cost)
+    assert(rows.nonEmpty && rows.forall(_.getString(0) == "queryCustomer"))
+    val name = """"name":"([^"]*)"""".r
+    val names = rows.map(r => name.findFirstMatchIn(r.getString(2)).get.group(1))
+    assert(names == names.sorted)
+  }
+
+  test("block order and in-block row order survive a two-block read") {
+    val (rows, cost) = callerCollect(dql(
+      s"""{ b(func: uid(${CB + 1}, ${CB + 3}, ${CB + 2}), orderdesc: name) { name }
+         |  a(func: uid(${CB + 5}, ${CB + 4})) { name } }""".stripMargin))
+    assert(cost.jobs == 0, cost)
+    assert(rows.map(r => (r.getString(0), r.getLong(1))) == Seq(
+      ("b", CB + 3), ("b", CB + 2), ("b", CB + 1), ("a", CB + 4), ("a", CB + 5)))
   }
 }
