@@ -1,9 +1,11 @@
 package graft
 
-/** Timing inspector (builder-side tooling, like Explain): run named
-  * queries N times each and print per-iteration wall times, separating
-  * first-touch materialization (derived parquet, checkpoints) from
-  * steady-state cost. Usage: runMain graft.Time <sfDir> <reps> [names...]
+/** Timing inspector (like Explain): run named queries N times each and
+  * print per-iteration wall times, separating first-touch
+  * materialization (derived parquet, checkpoints) from steady-state
+  * cost. Each rep produces the query's FULL result through a `noop`
+  * write, so Catalyst cannot prune projections or sorts the way a
+  * `count()` lets it. Usage: runMain graft.Time <sfDir> <reps> [names...]
   */
 object Time {
   def main(args: Array[String]): Unit = {
@@ -16,7 +18,8 @@ object Time {
     names.foreach { n =>
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir).count()
+        SparkEntry.queries(n)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
       println(f"[time] $n%-28s ${times.map(t => f"$t%.3f").mkString("  ")}")

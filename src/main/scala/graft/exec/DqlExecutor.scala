@@ -50,84 +50,60 @@ final class DqlExecutor(ts: GraphStore) {
       case t if t.predicates.contains(pred) => t.name
     }.toSet
 
-  /** Variable registry (reference per-request var map,
+  /** One bound variable (reference per-request var map,
     * query/query.go:1806 fillVars): uid vars are DF("uid"), value vars
-    * DF("uid", "value"). Blocks execute in written order; a var bound in
-    * an earlier block is visible to later ones.
+    * DF("uid", "value"). Every bind makes a new Binding stating both of
+    * its facts, so a rebind replaces them all at once.
+    *
+    * `uniqueUid`: the frame is PROVABLY unique per uid (an explicit
+    * distinct/dropDuplicates/groupBy output, or a frame derived from a
+    * unique seed by row-preserving ops). uid(v) over exactly one such var
+    * skips its merge dedup — the distinct exists for multi-source unions
+    * (guide §2.4: a distinct on already-unique data is an identity).
+    *
+    * `materialized`: `build` already yields a checkpoint-backed frame (a
+    * select over the shared-rebind snapshot). Reading one must NOT stack
+    * its own localCheckpoint — a lazy checkpoint of an AQE plan is its
+    * own SQL execution, so the stack turned every var read of a
+    * multi-var block into an extra driver job on top of the one snapshot
+    * materialization (measured: dql_level_agg ran 5 such executions per
+    * invocation for maps that are plain selects over cached partitions).
+    *
+    * Any other binding CHECKPOINTS ON FIRST READ: `build` runs, and is
+    * lazily checkpointed, only when the var is consumed. Checkpointing
+    * at BIND time was not lazy in practice: Dataset.localCheckpoint(
+    * eager = false) on an AQE plan still executes every intermediate
+    * query stage to produce the RDD, so each bound-but-never-read var ran
+    * its full plan as its own SQL execution (measured: dql_level_agg
+    * spent 5 of its 7 executions on binds whose initial frames were
+    * replaced by the shared rebind before any read).
     */
-  // Variable registry with CHECKPOINT-ON-FIRST-READ semantics. Binding
-  // stores the raw plan (or a thunk); the lazy localCheckpoint happens
-  // only when a var is actually consumed. Checkpointing at BIND time —
-  // the previous shape — was not lazy in practice: Dataset.
-  // localCheckpoint(eager = false) on an AQE plan still executes every
-  // intermediate query stage to produce the RDD, so each bound-but-
-  // never-read var ran its full plan as its own SQL execution (measured:
-  // dql_level_agg spent 5 of its 7 executions on binds whose initial
-  // frames were replaced by the shared rebind before any read).
-  private val varsRaw =
-    scala.collection.mutable.LinkedHashMap.empty[String, () => DataFrame]
-  private val varsCk =
-    scala.collection.mutable.HashMap.empty[String, DataFrame]
-  // vars whose thunk already yields a checkpoint-backed frame (a select
-  // over the shared-rebind snapshot): reading one must NOT stack its
-  // own localCheckpoint — a lazy checkpoint of an AQE plan is its own
-  // SQL execution, so the stack turned every var read of a multi-var
-  // block into an extra driver job on top of the one snapshot
-  // materialization (measured: dql_level_agg ran 5 such executions per
-  // invocation for maps that are plain selects over cached partitions).
-  private val varsPre = scala.collection.mutable.HashSet.empty[String]
-  // vars PROVABLY unique per uid at their bind site (an explicit
-  // distinct/dropDuplicates/groupBy output, or a frame derived from a
-  // unique seed by row-preserving ops). uid(v) over exactly one such var
-  // skips its merge dedup — the distinct exists for multi-source unions
-  // (guide §2.4: a distinct on already-unique data is an identity).
-  // Any rebind clears the mark unless the binder re-asserts it.
-  private val varsUniqueUid = scala.collection.mutable.HashSet.empty[String]
-  private object vars {
-    def apply(n: String): DataFrame =
-      varsCk.getOrElseUpdate(n,
-        if (varsPre(n)) varsRaw(n)()
-        else varsRaw(n)().localCheckpoint(eager = false))
-    def get(n: String): Option[DataFrame] =
-      if (varsRaw.contains(n)) Some(apply(n)) else None
-    def getOrElse(n: String, default: => DataFrame): DataFrame =
-      if (varsRaw.contains(n)) apply(n) else default
-    def contains(n: String): Boolean = varsRaw.contains(n)
-    def keys: Iterable[String] = varsRaw.keys
-    def update(n: String, df: DataFrame): Unit = {
-      varsRaw(n) = () => df; varsCk.remove(n); varsPre -= n
-      varsUniqueUid -= n; ()
-    }
-    /** Bind a thunk evaluated (then checkpointed) on first read;
-      * `preCheckpointed` marks thunks whose result is already backed by
-      * a materialized/checkpointed parent and skips the extra wrap;
-      * `uniqueUid` re-asserts per-uid uniqueness for the new binding.
-      */
-    def updateThunk(n: String, f: () => DataFrame,
-        preCheckpointed: Boolean = false,
-        uniqueUid: Boolean = false): Unit = {
-      varsRaw(n) = f; varsCk.remove(n)
-      if (preCheckpointed) varsPre += n else varsPre -= n
-      if (uniqueUid) varsUniqueUid += n else varsUniqueUid -= n
-      ()
-    }
+  private final class Binding(build: => DataFrame, val uniqueUid: Boolean,
+      materialized: Boolean) {
+    lazy val frame: DataFrame =
+      if (materialized) build else build.localCheckpoint(eager = false)
   }
 
-  /** For vars bound while projecting the CURRENT block: the flat column
-    * holding the value and the uid column of the level that bound it.
-    * Level-based aggregation (reference query/query.go:1042
-    * evalLevelAgg) reads these to aggregate a child var per parent.
+  /** Blocks execute in written order; a var bound in an earlier block is
+    * visible to later ones.
     */
-  private val varCols =
-    scala.collection.mutable.Map.empty[String, (String, String)]
+  private val vars =
+    scala.collection.mutable.LinkedHashMap.empty[String, Binding]
 
-  /** Vars whose flat column is LIVE in the current block's frame —
-    * includes parent-level binds visible inside child projections (the
-    * column rides the flat join). Cleared per block; distinguishes a
-    * genuinely live column from a stale same-named one left in varCols
-    * by an earlier block.
+  /** A var's flat column in the block frame that bound it: the column
+    * holding the value, the uid column of the level that bound it,
+    * whether the column is a PER-UID CONSTANT of that frame, and the
+    * block (a [[flatBlock]] sequence number) it was bound in. The column
+    * is LIVE while `block` is the current block — parent-level binds
+    * stay visible inside child projections (the column rides the flat
+    * join); an entry left by an earlier block is stale. Level-based
+    * aggregation (reference query/query.go:1042 evalLevelAgg) and
+    * in-place math reads use these.
     */
-  private val liveVars = scala.collection.mutable.Set.empty[String]
+  private case class VarCol(column: String, uidCol: String,
+      uidConst: Boolean, block: Int)
+  private val varCols = scala.collection.mutable.Map.empty[String, VarCol]
+  private var blockSeq = 0
 
   /** @ignorereflex ancestor chain: when Some, each traversal level
     * filters child uids against every ancestor uid column of the row —
@@ -255,7 +231,7 @@ final class DqlExecutor(ts: GraphStore) {
       if (sel.aggOp.isDefined && sel.valRef.isDefined) {
         val vf = vars.getOrElse(sel.valRef.get,
           throw new IllegalArgumentException(
-            s"Variable: [${sel.valRef.get}] used before definition."))
+            s"Variable: [${sel.valRef.get}] used before definition.")).frame
         val src =
           if (vf.columns.contains("uid")) vf.dropDuplicates("uid") else vf
         if (src.schema("value").dataType
@@ -280,7 +256,7 @@ final class DqlExecutor(ts: GraphStore) {
           // (graphql/resolve/query_rewriter.go:637)
           sel.varName.foreach { v =>
             scalars(v) = None
-            bindVar(v, Seq(parts.toSeq).toDF("value"))
+            bindVar(v, Seq(parts.toSeq).toDF("value"), uniqueUid = false)
           }
           s"""{"${jsonKey(sel)}":${parts.map(fmt).mkString("[", ",", "]")}}"""
         } else {
@@ -319,7 +295,8 @@ final class DqlExecutor(ts: GraphStore) {
             else row.get(0) match {
               case n: java.lang.Number => Seq(n.doubleValue).toDF("value")
               case o => Seq(o.toString).toDF("value")
-            })
+            },
+            uniqueUid = false)
         }
         s"""{"${jsonKey(sel)}":$jsonV}"""
         }
@@ -331,7 +308,8 @@ final class DqlExecutor(ts: GraphStore) {
           scalars(vn) = if (v.isNaN) None else Some(v)
           bindVar(vn,
             if (v.isNaN) Seq.empty[Double].toDF("value")
-            else Seq(v).toDF("value"))
+            else Seq(v).toDF("value"),
+            uniqueUid = false)
         }
         val jsonV = if (v.isNaN) "null" else fmt(v)
         s"""{"${jsonKey(sel)}":$jsonV}"""
@@ -347,19 +325,15 @@ final class DqlExecutor(ts: GraphStore) {
     Seq.empty[Long].toDF("uid")
   }
 
-  /** Register a variable. The registry checkpoints ON FIRST READ (see
-    * the `vars` doc above): a consumed var's references all scan one
-    * materialized (uid, value) set — mirroring the reference computing
-    * a var's uid/value map once per request (query/query.go:1806
-    * fillVars) — while a var that is bound and then never read (or
-    * replaced by the shared rebind) costs nothing.
+  /** Bind a variable to a plan that is checkpointed ON FIRST READ (see
+    * [[Binding]]): a consumed var's references all scan one materialized
+    * (uid, value) set — mirroring the reference computing a var's
+    * uid/value map once per request (query/query.go:1806 fillVars) —
+    * while a var that is bound and then never read (or replaced by the
+    * shared rebind) costs nothing.
     */
-  private def bindVar(name: String, df: DataFrame,
-      uniqueUid: Boolean = false): Unit = {
-    vars(name) = df
-    if (uniqueUid) varsUniqueUid += name
-    ()
-  }
+  private def bindVar(name: String, df: DataFrame, uniqueUid: Boolean): Unit =
+    vars(name) = new Binding(df, uniqueUid, materialized = false)
 
   /** Execute all blocks in order; return the last non-`var` block. */
   def flat(query: String): DataFrame = flatAst(Parser.parse(query))
@@ -389,11 +363,7 @@ final class DqlExecutor(ts: GraphStore) {
     * DF("uid","value")) — consumed by the upsert executor's @if/len and
     * template expansion (graft.operators.Upsert).
     */
-  def variable(name: String): Option[DataFrame] = vars.get(name)
-
-  /** Execute every block; returns (blockName → flattened DataFrame). */
-  def flatAll(query: String): Map[String, DataFrame] =
-    Parser.parse(query).blocks.map(b => b.name -> flatBlock(b)).toMap
+  def variable(name: String): Option[DataFrame] = vars.get(name).map(_.frame)
 
   // ---- root pipeline ----
 
@@ -420,14 +390,8 @@ final class DqlExecutor(ts: GraphStore) {
     * rounds, each a metadata-sized collect), matching the reference's
     * per-level recomputation on heterogeneous graphs.
     */
-  /** Depth bound for the expand(_all_) cone walk — set by the recurse
-    * executors before template expansion (default covers bare @recurse,
-    * whose seen-set terminates the walk).
-    */
-  private var recurseDepthHint: Int = 50
-
-  private def expandRecurseSels(frontier: DataFrame,
-      sels: Seq[Selection]): Seq[Selection] =
+  private def expandRecurseSels(frontier: DataFrame, sels: Seq[Selection],
+      hops: Int): Seq[Selection] =
     sels.flatMap { s =>
       if (!s.pred.startsWith("expand(")) Seq(s)
       else {
@@ -452,7 +416,7 @@ final class DqlExecutor(ts: GraphStore) {
                   .reduce(_ unionByName _)
                 val tree = graft.operators.Recurse.expandTree(
                   frontier.select(col("uid").as("start")), edges,
-                  recurseDepthHint, loop = false)
+                  math.min(hops, 50), loop = false)
                 val nt = typesOf(tree.select(col("node").as("uid")).distinct())
                 if ((nt.toSet -- types.toSet).isEmpty) done = true
                 else types = (types ++ nt).distinct.sorted
@@ -510,7 +474,7 @@ final class DqlExecutor(ts: GraphStore) {
         // to expand (reference TestExpandVal) — metadata-sized collect
         val predNames =
           if (arg.startsWith("val:"))
-            Some(vars(arg.drop(4)).select(col("value")).distinct()
+            Some(vars(arg.drop(4)).frame.select(col("value")).distinct()
               .collect().map(_.get(0).toString).sorted.toSeq)
           else None
         val typeNames =
@@ -618,24 +582,31 @@ final class DqlExecutor(ts: GraphStore) {
       } else Seq(s)
     }
 
-  private def flatBlock(b0x: QueryBlock): DataFrame = {
-    validateSels(b0x.selections)
-    reflexChain = if (b0x.ignoreReflex) Some(Nil) else None
-    if (b0x.func.name == "empty") return emptyBlock(b0x)
+  /** `expand(...)` and `pred@*` rewritten to concrete per-predicate and
+    * per-tag selections, so the flat columns and the render keys line
+    * up (idempotent). A @recurse template expands per level instead.
+    */
+  private def rewriteBlock(b: QueryBlock): QueryBlock = {
     val b0 =
-      if (b0x.recurse.isEmpty && hasExpand(b0x.selections))
-        b0x.copy(selections = rewriteExpands({
-          var f = seedUids(b0x.func)
-          b0x.filter.foreach { fl => f = applyFilter(f, "uid", fl) }
+      if (b.recurse.isEmpty && hasExpand(b.selections))
+        b.copy(selections = rewriteExpands({
+          var f = seedUids(b.func)
+          b.filter.foreach { fl => f = applyFilter(f, "uid", fl) }
           f
-        }, b0x.selections))
-      else b0x
-    val b =
-      if (b0.selections.exists(sx => sx.langChain == Seq("*") ||
-          sx.children.nonEmpty))
-        b0.copy(selections = expandStarSels(b0.selections))
-      else b0
-    liveVars.clear()
+        }, b.selections))
+      else b
+    if (b0.selections.exists(sx => sx.langChain == Seq("*") ||
+        sx.children.nonEmpty))
+      b0.copy(selections = expandStarSels(b0.selections))
+    else b0
+  }
+
+  private def flatBlock(b0: QueryBlock): DataFrame = {
+    validateSels(b0.selections)
+    reflexChain = if (b0.ignoreReflex) Some(Nil) else None
+    if (b0.func.name == "empty") return emptyBlock(b0)
+    val b = rewriteBlock(b0)
+    blockSeq += 1
     b.shortest.foreach { sa => return shortestBlock(b, sa) }
     // val-seeded val-ordered root (`func: ge(val(v), x), orderdesc:
     // val(v)`): the seed scan of the var map already carries the sort
@@ -680,9 +651,8 @@ final class DqlExecutor(ts: GraphStore) {
         // the full child template each level, query/recurse.go:19
         // expandRecurse — `{ name friend }` under @recurse returns names
         // at every depth, not bare uids). Unknown predicates are ignored.
-        recurseDepthHint = math.min(recurseHops(r), 50)
-        val known = expandRecurseSels(frontier, b.selections).filter(s =>
-          schema.predicates.contains(s.pred) || s.pred == "uid")
+        val known = expandRecurseSels(frontier, b.selections, recurseHops(r))
+          .filter(s => schema.predicates.contains(s.pred) || s.pred == "uid")
         val (preds, rest) =
           known.partition(s => schema.isUidPredicate(s.pred))
         val scalars = rest.filter(_.pred != "uid")
@@ -720,7 +690,8 @@ final class DqlExecutor(ts: GraphStore) {
             else bindVar(v, ts.attr(s.pred)
               .join(allNodes.select(col("uid").as("subject")),
                 Seq("subject"), "left_semi")
-              .select(col("subject").as("uid"), col("value")))
+              .select(col("subject").as("uid"), col("value")),
+              uniqueUid = false)
           }
         }
         // the flat contract: one row per (start, node) at its first-reach
@@ -852,16 +823,6 @@ final class DqlExecutor(ts: GraphStore) {
     }
   }
 
-  /** `shortest(from, to, numpaths)` block: the selections name the edge
-    * predicates to walk; `@facets(w)` on a selection makes facet `w` the
-    * edge weight (reference query/shortest.go:105), default weight 1.
-    * Output is (rank, dist, path); a `sp as shortest(...)` binding makes
-    * `sp` the uid set of the BEST path's nodes for later `uid(sp)` blocks
-    * (the reference exposes the same via the path variable).
-    */
-  /** The shortest block's lazy weighted edge union, tagged with each
-    * edge's predicate key (for `_path_` rendering).
-    */
   /** The shortest template's edge selections: non-uid predicates are
     * legal and contribute no edges (reference walks only uid preds —
     * TestShortestPathWithUidVariable selects `password` too).
@@ -869,6 +830,9 @@ final class DqlExecutor(ts: GraphStore) {
   private def shortestSels(b: QueryBlock): Seq[Selection] =
     b.selections.filter(s => s.reverse || schema.isUidPredicate(s.pred))
 
+  /** The shortest block's lazy weighted edge union, tagged with each
+    * edge's predicate key (for `_path_` rendering).
+    */
   private def shortestEdges(b: QueryBlock): DataFrame =
     shortestSels(b).map { s =>
       val e0 = if (s.reverse) ts.reverseEdge(s.pred) else ts.edge(s.pred)
@@ -892,6 +856,13 @@ final class DqlExecutor(ts: GraphStore) {
       if (s.facetKeys.nonEmpty) base.filter(col("w").isNotNull) else base
     }.reduce(_ unionByName _)
 
+  /** `shortest(from, to, numpaths)` block: the selections name the edge
+    * predicates to walk; `@facets(w)` on a selection makes facet `w` the
+    * edge weight (reference query/shortest.go:105), default weight 1.
+    * Output is (rank, dist, path); a `sp as shortest(...)` binding makes
+    * `sp` the uid set of the BEST path's nodes for later `uid(sp)` blocks
+    * (the reference exposes the same via the path variable).
+    */
   private def shortestBlock(b: QueryBlock, sa: ShortestArgs): DataFrame = {
     // expand() has no meaning inside shortest — the walk needs a fixed
     // edge set (reference TestShortestPath_ExpandError)
@@ -913,7 +884,7 @@ final class DqlExecutor(ts: GraphStore) {
         case None => Some(lit0)
         case Some(n) =>
           val v = vars.getOrElse(n, throw new IllegalArgumentException(
-            s"shortest $side: uid variable '$n' is not bound"))
+            s"shortest $side: uid variable '$n' is not bound")).frame
           val us = v.select(col("uid")).distinct().limit(2).collect()
           require(us.length <= 1,
             s"shortest $side: uid($n) must hold at most one uid, found ${us.length}")
@@ -930,7 +901,7 @@ final class DqlExecutor(ts: GraphStore) {
         val session = ts.spark
         import session.implicits._
         b.blockVar.foreach(v => bindVar(v,
-          Seq.empty[Long].toDF("uid")))
+          Seq.empty[Long].toDF("uid"), uniqueUid = false))
         return Seq.empty[(Int, Double, String)].toDF("rank", "dist", "path")
     }
     // the weighted union stays LAZY — cone discovery streams broadcast
@@ -982,7 +953,7 @@ final class DqlExecutor(ts: GraphStore) {
     * rides along so a val-ordered root can reuse it as its sort key.
     */
   private def valSeedRows(fn: FuncCall): DataFrame = {
-    val v = vars(fn.pred.drop(4))
+    val v = vars(fn.pred.drop(4)).frame
     val litC = lit(fn.args.head).cast(v.schema("value").dataType)
     val cmp: Column = fn.name match {
       case "eq" => col("value") === litC
@@ -1055,7 +1026,7 @@ final class DqlExecutor(ts: GraphStore) {
             s"(bound: ${vars.keys.mkString(", ")})")
       }
       val dfs = varRefs.map { v =>
-        val vf = vars(v)
+        val vf = vars(v).frame
         if (vf.columns.contains("uid")) vf.select(col("uid"))
         else
           // a SCALAR var (`f as count(uid)`) lives under the sentinel
@@ -1070,8 +1041,8 @@ final class DqlExecutor(ts: GraphStore) {
       // uid(v) over exactly one var marked unique at its bind site needs
       // no merge dedup — the distinct exists for multi-source unions
       if (varRefs.size == 1 && lits.isEmpty &&
-          varsUniqueUid(varRefs.head) &&
-          vars(varRefs.head).columns.contains("uid")) u
+          vars(varRefs.head).uniqueUid &&
+          vars(varRefs.head).frame.columns.contains("uid")) u
       else u.distinct()
     case n if fn.pred.startsWith("val:") =>
       // compare against a value variable (applyIneqFunc, query/query.go:1931)
@@ -1124,7 +1095,7 @@ final class DqlExecutor(ts: GraphStore) {
       val session = ts.spark
       import session.implicits._
       val sets = varArgs.map(a =>
-          vars(a.stripPrefix("\u0000uid:")).select(col("uid"))) ++
+          vars(a.stripPrefix("\u0000uid:")).frame.select(col("uid"))) ++
         (if (litArgs.nonEmpty) Seq(litArgs.map(parseUid).toDF("uid")) else Nil)
       val targets = sets.reduce(_ unionByName _).withColumnRenamed("uid", "__t")
       src.join(targets, col("object") === col("__t"), "left_semi")
@@ -1138,7 +1109,7 @@ final class DqlExecutor(ts: GraphStore) {
       val base = langSplit(fn.pred)._1
       val rows = attrRows(fn.pred, untaggedDefault = true)
       val valSet = valArgs.map(a =>
-          vars(a.stripPrefix("\u0000val:")).select(col("value")))
+          vars(a.stripPrefix("\u0000val:")).frame.select(col("value")))
         .reduce(_ unionByName _).distinct()
       val byVar = rows.join(valSet.select(col("value").as("__vv")),
           col("value") === col("__vv"), "left_semi")
@@ -1164,7 +1135,7 @@ final class DqlExecutor(ts: GraphStore) {
       val vname = fn.args.find(_.startsWith("\u0000val:")).get
         .stripPrefix("\u0000val:")
       val rows = attrRows(fn.pred, untaggedDefault = true)
-      val vf = vars(vname)
+      val vf = vars(vname).frame
       if (!vf.columns.contains("uid"))
         rows.crossJoin(broadcast(vf.select(col("value").as("__vv"))))
           .filter(op(col("value"), col("__vv")))
@@ -1382,7 +1353,7 @@ final class DqlExecutor(ts: GraphStore) {
           if (positional(1).startsWith("\u0000val:")) {
             val vn = positional(1).stripPrefix("\u0000val:")
             val vf = vars.getOrElse(vn, throw new IllegalArgumentException(
-              s"similar_to: variable $vn is not bound"))
+              s"similar_to: variable $vn is not bound")).frame
             val rows = vf.select(col("value")).limit(2).collect()
             // a MISSING anchor (get-by-nonexistent-id) binds an empty
             // var: return the empty uid set, like a GraphQL get miss,
@@ -1690,7 +1661,7 @@ final class DqlExecutor(ts: GraphStore) {
         // reference's materialized uid-list length.
         val v = fn.pred.stripPrefix("len:")
         val n = vars.get(v) match {
-          case Some(vf) => vf.count()
+          case Some(vf) => vf.frame.count()
           case None => throw new IllegalArgumentException(
             s"len($v): no variable '$v' is bound")
         }
@@ -1757,7 +1728,7 @@ final class DqlExecutor(ts: GraphStore) {
   /** Ordering source: an attribute tablet or a bound value variable. */
   private def orderAttr(pred: String): DataFrame =
     if (pred.startsWith("val:"))
-      vars(pred.drop(4)).select(col("uid").as("subject"), col("value"))
+      vars(pred.drop(4)).frame.select(col("uid").as("subject"), col("value"))
     else {
       // `orderasc: name_lang@de` sorts by that variant; a bare order on
       // a @lang predicate sorts by the UNTAGGED value (nodes without it
@@ -1944,10 +1915,6 @@ final class DqlExecutor(ts: GraphStore) {
     // level is born fanned — its uid column repeats once per parent path
     // (TestLevelBasedFacetVarSum's 1003 reached via two parents)
     var fanned = prefix.nonEmpty
-    // vars bound at THIS level of THIS block — the only ones whose flat
-    // column is guaranteed live in `cur` (varCols itself outlives the
-    // block for the level-agg path)
-    val boundHere = scala.collection.mutable.Set.empty[String]
     // vars bound from live COLUMNS of this frame: when one block pass
     // binds several (a multi-var math block), each per-var lazy
     // checkpoint re-runs the whole block plan on first use — measured
@@ -1964,17 +1931,6 @@ final class DqlExecutor(ts: GraphStore) {
     // never rewritten.
     val sharedRebinds =
       scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame => DataFrame)]
-    // vars whose live column is a PER-UID CONSTANT of this frame (every
-    // sharedRebind site binds one: attr joins keyed on this level's uid,
-    // per-parent aggregates joined back on the parent uid, math over
-    // per-uid maps). A same-level math read of such a var is safe in
-    // place even on a FANNED frame — every surviving row of a uid
-    // carries the same value — which keeps the read exchange-free
-    // instead of forcing the var's own checkpoint execution mid-pass.
-    // Tracked independently of sharedRebinds: a row-dropping branch
-    // clears the rebinds (membership would shrink) but never rewrites a
-    // computed column, so per-uid constancy survives dropsRows().
-    val uidConstCols = scala.collection.mutable.Set.empty[String]
     var sharedRebindOk = !cascade
     // INVARIANT (shared-rebind safety): every closure in sharedRebinds is
     // replayed against the FINAL `cur` frame of this pass, so any branch
@@ -1987,6 +1943,27 @@ final class DqlExecutor(ts: GraphStore) {
     // it only costs the one-materialization optimization, never
     // correctness.
     def dropsRows(): Unit = { sharedRebindOk = false; sharedRebinds.clear() }
+    // value var `v` from live column `c` of this level. Every caller's
+    // column is a PER-UID CONSTANT of the frame (attr joins keyed on this
+    // level's uid, per-parent aggregates joined back on the parent uid,
+    // math over per-uid maps), so the var joins the shared rebind, and a
+    // same-level math read of it is safe in place even on a FANNED frame
+    // — every surviving row of a uid carries the same value — which
+    // keeps the read exchange-free instead of forcing the var's own
+    // checkpoint execution mid-pass. The constancy outlives dropsRows():
+    // a row-dropping branch clears the rebinds (membership would shrink)
+    // but never rewrites a computed column.
+    def bindColumn(v: String, c: String, dedup: Boolean,
+        dropNulls: Boolean): Unit = {
+      val mk = (f: DataFrame) => {
+        val m = f.select(qcol(uidCol).as("uid"), qcol(c).as("value"))
+        if (dropNulls) m.filter(col("value").isNotNull) else m
+      }
+      bindVar(v, if (dedup) mk(cur).dropDuplicates("uid") else mk(cur),
+        uniqueUid = true)
+      sharedRebinds += (v -> mk)
+      varCols(v) = VarCol(c, uidCol, uidConst = true, blockSeq)
+    }
     // tablet-group fetch: sibling plain-scalar selections whose
     // predicates co-locate in one source table join ONCE through the
     // store's wide frame instead of once per predicate
@@ -2038,15 +2015,7 @@ final class DqlExecutor(ts: GraphStore) {
         ensureWideJoined()
         cur = cur.withColumn(name, qcol(s"__ma_${sel.pred}"))
         if (cascade) cur = cur.filter(qcol(name).isNotNull)
-        sel.varName.foreach { v =>
-          val mk = (f: DataFrame) =>
-            f.select(qcol(uidCol).as("uid"), qcol(name).as("value"))
-              .filter(col("value").isNotNull)
-          bindVar(v, if (fanned) mk(cur).dropDuplicates("uid") else mk(cur),
-            uniqueUid = true)
-          sharedRebinds += (v -> mk); uidConstCols += v
-          varCols(v) = (name, uidCol); boundHere += v; liveVars += v
-        }
+        sel.varName.foreach(bindColumn(_, name, dedup = fanned, dropNulls = true))
       } else if (sel.pred == "math" && sel.mathExpr.isDefined) {
         // x as math(...): arithmetic over previously bound value vars
         // (reference query/math.go evaluation over per-uid value maps)
@@ -2067,24 +2036,24 @@ final class DqlExecutor(ts: GraphStore) {
           // (uid, value) map back on: a 3-var chain over lineitem then
           // runs as ONE projection pass, no self-joins (each skipped
           // join was a full shuffle of the block's rows)
-          varCols.get(r) match {
+          varCols.get(r).filter(_.block == blockSeq) match {
             // a same-level read on a FANNED frame must go through the
             // var's dedup'd (uid, value) snapshot UNLESS the column is a
-            // registered per-uid constant (uidConstCols — every
-            // sharedRebind-site bind): then every surviving row of a uid
-            // carries the same value and the in-place read computes the
-            // identical result without forcing the var's own checkpoint
-            // execution mid-pass (measured: dql_level_agg ran its
-            // mid-block plan once per fanned math ref).
-            case Some((cname, ucol)) if (boundHere(r) || liveVars(r)) &&
+            // per-uid constant (uidConst — every bindColumn bind): then
+            // every surviving row of a uid carries the same value and the
+            // in-place read computes the identical result without forcing
+            // the var's own checkpoint execution mid-pass (measured:
+            // dql_level_agg ran its mid-block plan once per fanned math
+            // ref).
+            case Some(VarCol(cname, ucol, uidConst, _)) if
                 base.columns.contains(cname) && ucol == uidCol &&
-                (!fanned || uidConstCols(r)) &&
+                (!fanned || uidConst) &&
                 !cname.startsWith("__fvv_") =>
               // (facet-var columns are per-EDGE values; their same-level
               // MAP is the in-edge sum, so they always join the map)
               base = base.withColumn(s"__m_$r", qcol(cname))
               uidKeyed += s"__m_$r"
-            case Some((cname, ucol)) if (boundHere(r) || liveVars(r)) &&
+            case Some(VarCol(cname, ucol, _, _)) if
                 base.columns.contains(cname) && ucol != uidCol =>
               // cross-level read: transform the var to THIS level's uid
               // space by summing along distinct tree paths from the
@@ -2112,14 +2081,14 @@ final class DqlExecutor(ts: GraphStore) {
               base = base.join(tm, qcol(uidCol) === col("__tu"), joinType)
                 .drop("__tu")
               uidKeyed += s"__m_$r"
-            case _ if !vars(r).columns.contains("uid") =>
+            case _ if !vars(r).frame.columns.contains("uid") =>
               // SCALAR var (f as count(uid)): one row, no uid map —
               // broadcast it to every row (reference TestCountUidToVar)
               base = base.crossJoin(
-                broadcast(vars(r).select(col("value").as(s"__m_$r"))))
+                broadcast(vars(r).frame.select(col("value").as(s"__m_$r"))))
             case _ =>
               base = base.join(
-                vars(r).select(col("uid").as("__ms"), col("value").as(s"__m_$r")),
+                vars(r).frame.select(col("uid").as("__ms"), col("value").as(s"__m_$r")),
                 qcol(uidCol) === col("__ms"), joinType).drop("__ms")
               uidKeyed += s"__m_$r"
           }
@@ -2145,18 +2114,10 @@ final class DqlExecutor(ts: GraphStore) {
         base = base.withColumn(name,
           when(col("__m_member"), mathCol(sel.mathExpr.get, intRefs)))
         cur = base.drop("__m_member").drop(refs.map(r => s"__m_$r"): _*)
-        sel.varName.foreach { v =>
-          // scalar values are unique per subject UNLESS a traversal
-          // fanned the rows out — then dedup per uid (cross-level refs
-          // are already per-uid maps after the transform above)
-          val mk = (f: DataFrame) =>
-            f.select(qcol(uidCol).as("uid"), qcol(name).as("value"))
-              .filter(col("value").isNotNull)
-          bindVar(v, if (fanned) mk(cur).dropDuplicates("uid") else mk(cur),
-            uniqueUid = true)
-          sharedRebinds += (v -> mk); uidConstCols += v
-          varCols(v) = (name, uidCol); boundHere += v; liveVars += v
-        }
+        // scalar values are unique per subject UNLESS a traversal fanned
+        // the rows out — then dedup per uid (cross-level refs are already
+        // per-uid maps after the transform above)
+        sel.varName.foreach(bindColumn(_, name, dedup = fanned, dropNulls = true))
       } else if (sel.aggOp.isDefined && sel.valRef.exists(varCols.contains)) {
         // level-based aggregation: `n as min(val(x))` where x was bound
         // by a traversal of THIS block — aggregate x per PARENT uid
@@ -2164,7 +2125,7 @@ final class DqlExecutor(ts: GraphStore) {
         // (parent, child) pair first so sibling-cartesian row
         // duplication cannot inflate sums.
         import org.apache.spark.sql.types.DecimalType
-        val (srcCol, childKey) = varCols(sel.valRef.get)
+        val VarCol(srcCol, childKey, _, _) = varCols(sel.valRef.get)
         // aggregating a var bound by a SIBLING at this same level is an
         // error — the aggregate must sit one level above the binding
         // (reference TestMultiLevelAgg1Error)
@@ -2208,21 +2169,14 @@ final class DqlExecutor(ts: GraphStore) {
         }
         val agg = pairs.groupBy(col("__pu")).agg(aggC.as(name))
         cur = cur.join(agg, qcol(uidCol) === col("__pu"), joinType).drop("__pu")
-        sel.varName.foreach { v =>
-          val mk = (f: DataFrame) =>
-            f.select(qcol(uidCol).as("uid"), col(name).as("value"))
-              .filter(col("value").isNotNull)
-          bindVar(v, mk(cur).dropDuplicates("uid"), uniqueUid = true)
-          sharedRebinds += (v -> mk); uidConstCols += v
-          varCols(v) = (name, uidCol); boundHere += v; liveVars += v
-        }
+        sel.varName.foreach(bindColumn(_, name, dedup = true, dropNulls = true))
       } else if (sel.pred == "val" && sel.valRef.isDefined &&
           cur.columns.contains(s"__seedval_${sel.valRef.get}")) {
         // the root seed already carried this var's value per uid
         // (val-seeded ordered root) — read it in place, no join
         cur = cur.withColumn(name, col(s"__seedval_${sel.valRef.get}"))
       } else if (sel.pred == "val" && sel.valRef.isDefined) {
-        val vf = vars(sel.valRef.get)
+        val vf = vars(sel.valRef.get).frame
         if (!vf.columns.contains("uid"))
           // val(s) of a SCALAR var (s as count(uid)) has no per-uid map —
           // the reference renders nothing on ordinary uids
@@ -2291,7 +2245,8 @@ final class DqlExecutor(ts: GraphStore) {
         // eq(val(pwd), 1) (reference query_rewriter.go passwordQuery)
         sel.varName.foreach { v =>
           bindVar(v, cur.select(qcol(uidCol).as("uid"),
-            qcol(name).cast("long").as("value")).dropDuplicates("uid"))
+            qcol(name).cast("long").as("value")).dropDuplicates("uid"),
+            uniqueUid = false)
         }
       } else if (schema.predicates.get(sel.pred)
           .exists(_.dgraphType == "password") && !sel.isCount) {
@@ -2305,7 +2260,7 @@ final class DqlExecutor(ts: GraphStore) {
         // (value)-only frame; the math var-join path broadcasts it.
         sel.varName.foreach { v =>
           bindVar(v, cur.select(qcol(uidCol)).distinct()
-            .agg(count(lit(1)).cast("long").as("value")))
+            .agg(count(lit(1)).cast("long").as("value")), uniqueUid = false)
         }
       } else if (sel.isCount &&
           !schema.predicates.contains(sel.pred) && !sel.reverse) {
@@ -2316,8 +2271,9 @@ final class DqlExecutor(ts: GraphStore) {
         // so later val(cnt) reads filter everything instead of erroring
         // (reference TestDefaultValueVar1)
         sel.varName.foreach { v =>
-          bindVar(v, cur.select(qcol(uidCol).as("uid"), qcol(name).as("value")))
-          varCols(v) = (name, uidCol); boundHere += v; liveVars += v
+          bindVar(v, cur.select(qcol(uidCol).as("uid"), qcol(name).as("value")),
+            uniqueUid = false)
+          varCols(v) = VarCol(name, uidCol, uidConst = false, blockSeq)
         }
         // the frame just went empty: earlier live-column binds must NOT
         // be rebound from it
@@ -2371,13 +2327,7 @@ final class DqlExecutor(ts: GraphStore) {
         if (!cascade) cur = cur.withColumn(name, coalesce(qcol(name), lit(0L)))
         // `s as count(friend)`: per-uid edge-count value var (reference
         // TestVarInIneqScore — absent edges bind 0)
-        sel.varName.foreach { v =>
-          val mk = (f: DataFrame) =>
-            f.select(qcol(uidCol).as("uid"), qcol(name).as("value"))
-          bindVar(v, mk(cur).dropDuplicates("uid"), uniqueUid = true)
-          sharedRebinds += (v -> mk); uidConstCols += v
-          varCols(v) = (name, uidCol); boundHere += v; liveVars += v
-        }
+        sel.varName.foreach(bindColumn(_, name, dedup = true, dropNulls = false))
       } else if (schema.isUidPredicate(sel.pred) || sel.reverse) {
         // a VAR block renders nothing, so sibling traversal subtrees
         // whose vars no later selection at this level reads can run
@@ -2396,7 +2346,7 @@ final class DqlExecutor(ts: GraphStore) {
         // column AND the ancestor uid columns the path-sum transform
         // dedups on (reference transformTo sums per tree path)
         val readsOuter = mathRefsIn(sel.children).exists(r =>
-          !subVars.contains(r) && (liveVars(r) || varCols.contains(r)))
+          !subVars.contains(r) && varCols.contains(r))
         if (detached && !cascade && sel.groupby.isEmpty && !neededHere &&
             !readsOuter) {
           val sub = traverse(cur.select(qcol(uidCol)).distinct(), uidCol,
@@ -2427,7 +2377,7 @@ final class DqlExecutor(ts: GraphStore) {
         // random_nonexistent { f as uid } → uid(f) is an empty set)
         (sel.varName.toSet ++ boundIn(sel.children)).foreach { v =>
           bindVar(v, cur.select(qcol(uidCol).as("uid"),
-            lit(null).cast("double").as("value")).limit(0))
+            lit(null).cast("double").as("value")).limit(0), uniqueUid = false)
         }
       } else if (sel.pred == "dgraph.type") {
         // dgraph.type as a selection renders the node's type LIST
@@ -2584,19 +2534,11 @@ final class DqlExecutor(ts: GraphStore) {
         sel.varName.foreach { v =>
           // scalar attr values are unique per (subject, predicate) in the
           // store — dedup only if a traversal already fanned the rows out.
-          // datetime vars bind the INSTANT rider, not the display string
+          // datetime vars bind the INSTANT rider, not the display string:
+          // in-place reads (level aggs, math) must see the instant too
           val vcn = if (cur.columns.contains(s"${name}__dtv"))
             s"${name}__dtv" else name
-          val mk = (f: DataFrame) =>
-            f.select(qcol(uidCol).as("uid"), qcol(vcn).as("value"))
-              .filter(col("value").isNotNull)
-          bindVar(v, if (fanned) mk(cur).dropDuplicates("uid") else mk(cur),
-            uniqueUid = true)
-          sharedRebinds += (v -> mk); uidConstCols += v
-          // in-place reads (level aggs, math) must see the INSTANT, not
-          // the display string — register the rider column for datetime
-          varCols(v) = (vcn, uidCol)
-          boundHere += v; liveVars += v
+          bindColumn(v, vcn, dedup = fanned, dropNulls = true)
         }
       }
     }
@@ -2622,8 +2564,7 @@ final class DqlExecutor(ts: GraphStore) {
       lazy val snap = (if (fanned) cur.dropDuplicates(Seq(uidCol)) else cur)
         .localCheckpoint(eager = false)
       sharedRebinds.foreach { case (v, mk) =>
-        vars.updateThunk(v, () => mk(snap), preCheckpointed = true,
-          uniqueUid = true)
+        vars(v) = new Binding(mk(snap), uniqueUid = true, materialized = true)
       }
       // the block's own uid var is the frontier, and the non-dropping
       // pass preserved every frontier row — so its uid set is exactly
@@ -2632,8 +2573,8 @@ final class DqlExecutor(ts: GraphStore) {
       // plan: a `f as var(...)` block consumed via uid(f) + val(x) then
       // materializes ONCE instead of twice.
       blockUidVar.foreach { v =>
-        vars.updateThunk(v, () => snap.select(qcol(uidCol).as("uid")),
-          preCheckpointed = true, uniqueUid = true)
+        vars(v) = new Binding(snap.select(qcol(uidCol).as("uid")),
+          uniqueUid = true, materialized = true)
       }
       // a top-level result block shares the materialization with its
       // own render (detached marks a var block, whose frame is
@@ -2826,8 +2767,9 @@ final class DqlExecutor(ts: GraphStore) {
         if (numeric)
           src.dropDuplicates("__fp", "uid", "value")
             .groupBy(col("uid")).agg(sum(col("value")).as("value"))
-        else src.select(col("uid"), col("value")).dropDuplicates("uid"))
-      varCols(v) = (keep, name); liveVars += v
+        else src.select(col("uid"), col("value")).dropDuplicates("uid"),
+        uniqueUid = false)
+      varCols(v) = VarCol(keep, name, uidConst = false, blockSeq)
     }
     cur = cur.drop(needFt.map(k => s"__ft_$k"): _*)
     // bind the target frontier EARLY so a deeper selection of THIS
@@ -3263,7 +3205,7 @@ final class DqlExecutor(ts: GraphStore) {
             case Some(have) => cur = cur.withColumn(ac, col(have))
             case None =>
               val vsrc = src
-                .map(v => vars(v).select(col("uid").as("__t"), col("value")))
+                .map(v => vars(v).frame.select(col("uid").as("__t"), col("value")))
                 .getOrElse(ts.attr(c.pred)
                   .select(col("subject").as("__t"), col("value")))
               cur = cur.join(vsrc.withColumnRenamed("value", ac),
@@ -3340,7 +3282,7 @@ final class DqlExecutor(ts: GraphStore) {
     val refs = b.selections.flatMap(_.valRef).distinct
     refs.foreach { v =>
       joined = joined.join(
-        vars(v).select(col("uid"), col("value").as(s"__v_$v")), Seq("uid"), "left")
+        vars(v).frame.select(col("uid"), col("value").as(s"__v_$v")), Seq("uid"), "left")
     }
     // min/max/sum/avg(pred) directly over an attribute tablet. Sibling
     // predicates co-located in one source table ride ONE wide left join
@@ -3388,7 +3330,7 @@ final class DqlExecutor(ts: GraphStore) {
     b.selections.filter(s => s.isCount && s.pred == "uid" &&
         s.varName.isDefined).foreach { s =>
       bindVar(s.varName.get,
-        out.select(col(s.outName).cast("long").as("value")))
+        out.select(col(s.outName).cast("long").as("value")), uniqueUid = false)
     }
     out
   }
@@ -3663,8 +3605,7 @@ final class DqlExecutor(ts: GraphStore) {
           "recurse queries require that all predicates are specified in one level")
     }
     val cap = math.min(hops, 50)
-    recurseDepthHint = cap
-    val sels = expandRecurseSels(roots, sels0)
+    val sels = expandRecurseSels(roots, sels0, hops)
     // `uid` emits no triple (TestRDFIgnoreUid); unknown preds emit
     // nothing; counts render per level like any other leaf group
     val known = sels.filter(s =>
@@ -3860,8 +3801,7 @@ final class DqlExecutor(ts: GraphStore) {
     b.filter.foreach { f => frontier = applyFilter(frontier, "uid", f) }
     // unknown predicates in the template are legal and ignored
     // (reference TestRecurseQuery selects nonexistent_pred)
-    recurseDepthHint = math.min(recurseHops(r), 50)
-    val allSels = expandRecurseSels(frontier, b.selections)
+    val allSels = expandRecurseSels(frontier, b.selections, recurseHops(r))
     // a predicate both explicit and produced by expand() is a repeated
     // subgraph (reference TestRecurseExpandRepeatedPredError)
     if (b.selections.exists(_.pred.startsWith("expand("))) {
@@ -4107,7 +4047,7 @@ final class DqlExecutor(ts: GraphStore) {
             b.selections.filter(_.varName.isDefined).foreach { s =>
               bindVar(s.varName.get,
                 g.select(qcol(s"__k_${k.outName}").as("uid"),
-                  qcol(s"__a_${s.outName}").as("value")))
+                  qcol(s"__a_${s.outName}").as("value")), uniqueUid = false)
             }
           }
         // an empty frontier groups to ZERO groups — the block is
@@ -4150,18 +4090,7 @@ final class DqlExecutor(ts: GraphStore) {
     if (b0.shortest.isDefined) return shortestJson(b0)
     if (b0.recurse.isDefined) return recurseJson(b0, includeUid)
     if (b0.groupby.nonEmpty) return collectJson(rootGroupbyJson(b0))
-    // expand()/pred@* rewrite to concrete per-pred/per-tag selections so
-    // the render keys line up with the expanded columns (same rewrites
-    // as flatBlock — idempotent)
-    val bE =
-      if (hasExpand(b0.selections))
-        b0.copy(selections = rewriteExpands({
-          var f = seedUids(b0.func)
-          b0.filter.foreach { fl => f = applyFilter(f, "uid", fl) }
-          f
-        }, b0.selections))
-      else b0
-    val b = bE.copy(selections = expandStarSels(bE.selections))
+    val b = rewriteBlock(b0)
     // an EMPTY selection set renders as an empty array even when uids
     // match (reference TestMultiEmptyBlocks: `you(func: uid(1)) {}` →
     // "you": [])
@@ -4237,7 +4166,7 @@ final class DqlExecutor(ts: GraphStore) {
         val (df, keyCols) = withSortKeys(flatDf, "uid", b.order)
         (df, keyCols(false))
       } else if (b.func.name == "uid" && b.func.args.size == 1)
-        vars.get(b.func.args.head).filter(_.columns.contains("__ord"))
+        vars.get(b.func.args.head).map(_.frame).filter(_.columns.contains("__ord"))
           .map(v => (flatDf.join(v.select(col("uid"), col("__ord")), Seq("uid"), "left"),
             Seq(SortKey(col("__ord"), false), SortKey(col("uid"), false))))
           .getOrElse((flatDf, Nil))

@@ -4,6 +4,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.dql.Parser
+import graft.exec.DqlExecutor
 import graft.operators.{Recurse, ShortestPath}
 
 /** Property tests against in-memory reference implementations
@@ -40,6 +42,112 @@ class PropertySpec extends AnyFunSuite {
         .as[(Long, Long, Int)].collect()
         .map { case (_, n, dep) => n -> dep }.toMap
       assert(got == expected, s"edges=$edges")
+    }
+  }
+
+  private val predGraphGen: Gen[Seq[(Long, Long, String)]] =
+    Gen.listOfN(16, for {
+      a <- Gen.choose(0L, 6L); b <- Gen.choose(0L, 6L)
+      p <- Gen.oneOf("p", "q")
+    } yield (a, b, p)).map(_.filter(e => e._1 != e._2).distinct)
+
+  test("Recurse.expandTree equals a per-start BFS of edge occurrences (loop off and on)") {
+    val seeds = Seq(0L, 3L)
+    for (loop <- Seq(false, true); edges <- samples(predGraphGen, 6)
+        if edges.nonEmpty) {
+      val expected = seeds.flatMap { s =>
+        var frontier = Set(s); var visited = Set(s)
+        val out = Seq.newBuilder[(Long, Long, String, Long, Int)]
+        var d = 1
+        while (d <= 3 && frontier.nonEmpty) {
+          val raw = for (n <- frontier.toSeq; (a, b, p) <- edges if a == n)
+            yield (s, n, p, b, d)
+          out ++= raw
+          val next = raw.map(_._4).toSet -- (if (loop) Set.empty else visited)
+          visited ++= next; frontier = next; d += 1
+        }
+        out.result()
+      }.sorted
+      val got = Recurse.expandTree(seeds.toDF("start"),
+          edges.toDF("subject", "object", "pred"), maxDepth = 3, loop = loop)
+        .select("start", "parent", "pred", "node", "depth")
+        .as[(Long, Long, String, Long, Int)].collect().toSeq.sorted
+      assert(got == expected, s"loop=$loop edges=$edges")
+    }
+  }
+
+  test("Recurse.expandGlobal equals a merged-frontier BFS with one global edge seen set (loop off and on)") {
+    val seeds = Seq(0L, 3L)
+    for (loop <- Seq(false, true); edges <- samples(predGraphGen, 6)
+        if edges.nonEmpty) {
+      var frontier = seeds.toSet
+      var seen = Set.empty[(Long, String, Long)]
+      val out = Seq.newBuilder[(Long, String, Long, Int)]
+      var d = 1
+      var more = true
+      while (d <= 3 && more) {
+        val lvl = (for (n <- frontier.toSeq; (a, b, p) <- edges if a == n)
+          yield (n, p, b)).filterNot(e => !loop && seen(e))
+        if (lvl.isEmpty) more = false
+        else {
+          out ++= lvl.map { case (a, p, b) => (a, p, b, d) }
+          seen ++= lvl; frontier = lvl.map(_._3).toSet; d += 1
+        }
+      }
+      val got = Recurse.expandGlobal(seeds.toDF("node"),
+          edges.toDF("subject", "object", "pred"), maxDepth = 3, loop = loop)
+        .select("parent", "pred", "node", "depth")
+        .as[(Long, String, Long, Int)].collect().toSeq.sorted
+      assert(got == out.result().sorted, s"loop=$loop edges=$edges")
+    }
+  }
+
+  /** Blocks that each (re)bind `v` through one of the executor's bind
+    * paths, over the reference friend-graph fixture (`name` is @lang,
+    * and 0xdae/0xdaf carry several name variants).
+    */
+  private val vBinds = Seq(
+    // block var, unpaged and paged
+    """v as var(func: has(age)) @filter(ge(age, 20)) { uid }""",
+    """v as var(func: has(name), orderasc: name, first: 6) { uid }""",
+    // block var re-bound to its @cascade survivors
+    """v as var(func: has(age)) @cascade { alive }""",
+    // traversal targets, one and two hops (0x18 is reached twice)
+    """var(func: uid(0x1, 0x1f)) { v as friend }""",
+    """var(func: uid(0x1, 0x17)) { friend { v as friend } }""",
+    // several live-column vars rebound from one shared snapshot: a value
+    // var, the block's own uid var, and a fanned nested level
+    """var(func: has(age)) { v as age  d as dob }""",
+    """v as var(func: has(age)) { a as age  s as survival_rate }""",
+    """var(func: uid(0x1, 0x1f)) { friend { v as age  d as dob } }""",
+    // math, level aggregate and count value vars
+    """var(func: has(age)) { a as age  v as math(a * 2) }""",
+    """var(func: uid(0x1, 0x1f, 0x17)) { friend { a as age } v as sum(val(a)) }""",
+    """var(func: has(age)) { v as count(friend) }""",
+    // binds NOT unique per uid: a @recurse value var over @lang `name`
+    // and an edge-facet var
+    """var(func: uid(0xdae, 0xdaf, 0x1)) @recurse(depth: 2) { friend v as name }""",
+    """var(func: uid(0x1)) { path @facets(v as weight) }""",
+    // @recurse uid var
+    """var(func: uid(0x1)) @recurse(depth: 3) { v as friend }""")
+
+  test("uid(v) after a random rebind sequence: no duplicate uid, same as the last bind alone") {
+    val store = GoldenFixture.store
+    def uidsOf(binds: Seq[String]): Seq[Long] = {
+      val q = binds.mkString("{ ", "\n  ", "\n  q(func: uid(v)) { uid } }")
+      new DqlExecutor(store)
+        .flatAst(Parser.parseWithVars(q, Map.empty, checkUnusedVars = false))
+        .select("uid").as[Long].collect().toSeq.sorted
+    }
+    // every bind path ends one sequence, after 1-3 random earlier binds
+    vBinds.zipWithIndex.foreach { case (last, i) =>
+      val prefix = Gen.choose(1, 3).flatMap(Gen.listOfN(_, Gen.oneOf(vBinds)))
+        .apply(Gen.Parameters.default, Seed(7L + i)).get
+      val seq = prefix :+ last
+      val got = uidsOf(seq)
+      assert(got.distinct == got, s"duplicate uid after:\n${seq.mkString("\n")}")
+      assert(got.nonEmpty && got == uidsOf(Seq(last)),
+        s"rebind sequence differs from its last bind:\n${seq.mkString("\n")}")
     }
   }
 

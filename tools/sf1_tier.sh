@@ -1,9 +1,8 @@
 #!/usr/bin/env bash
-# sf1 scale tier (builder-side tooling): tile sf0.1 10x with
-# graft.tools.GenScale, then time a focused gate list with graft.Time.
-# Scale claims in OPTIMIZATION_r*.md reproduce with this runner instead
-# of an ad-hoc session — r17's best evidence (dql_groupby_agg 10 -> 5.1 s
-# at sf1) came from exactly this flow, un-committed.
+# sf1 scale tier: tile sf0.1 10x with graft.tools.GenScale, then time a
+# focused gate list with graft.Time, which times each gate's full result
+# (a noop write, not count()). The OPTIMIZATION_r*.md figures were taken
+# with count() timing, so they are not comparable with this runner's.
 #
 # Usage: tools/sf1_tier.sh [gate ...]
 #   SRC  source tier          (default /root/testdata/sf0.1)
