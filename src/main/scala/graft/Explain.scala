@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * what building the frame and collecting its full result cost — Spark
   * jobs, Janino compiles (Spark's CodegenMetrics) and wall time — so a
   * read bound by job scheduling or code generation shows without a probe
-  * program.
+  * program. A first line says whether the store is small enough for DQL
+  * JSON reads to run interpreted (see [[graft.exec.DqlExecutor.ReadMode]]).
   * Usage: runMain graft.Explain <sfDir> [queryName...]
   */
 object Explain {
@@ -61,6 +62,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q1_agg")
     val spark = GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
+    println(s"read mode: ${graft.exec.DqlExecutor.ReadMode(graft.core.TripleStore(spark, sfDir))}")
     names.foreach { n =>
       println(s"===== $n =====")
       val (df, build) = measure(spark)(SparkEntry.queries(n)(spark, sfDir))

@@ -26,7 +26,9 @@ object GraftSession {
       // entries) must hold the working set of a repeated read: the four
       // JSON read gates need about 300 classes, and at 100 or 256
       // entries their second run recompiles ~45-80 classes per read,
-      // at 512 only the few whose code differs per run
+      // at 512 only the few whose code differs per run. That holds over
+      // stores above DqlExecutor.InterpretedMaxBytes; JSON reads over
+      // smaller stores compile nothing (DqlExecutor.ReadMode)
       .config("spark.sql.codegen.cache.maxEntries", "512")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

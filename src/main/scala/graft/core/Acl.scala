@@ -334,6 +334,7 @@ final class AclStore(inner: GraphStore, readable: String => Boolean)
   def schema: SchemaRegistry = inner.schema
   def nodeTypes: DataFrame = inner.nodeTypes
   def facetKeys: Map[String, Seq[(String, String)]] = inner.facetKeys
+  override def estimatedBytes: Option[Long] = inner.estimatedBytes
   def edges: DataFrame = {
     val ok = inner.schema.predicates.keys.filter(readable).toSeq
     if (ok.isEmpty) inner.edges.limit(0)

@@ -88,6 +88,13 @@ trait GraphStore {
     */
   def attrSubjectUnique(predicate: String): Boolean = false
 
+  /** Estimated bytes of the store's input, when known — what decides
+    * whether a read is small enough to run without generated code
+    * ([[graft.exec.DqlExecutor.ReadMode]]). Computing it must not
+    * force any lazily written layout. Default: unknown.
+    */
+  def estimatedBytes: Option[Long] = None
+
   /** Edge view for one predicate — "tablet" access path. */
   def edge(predicate: String): DataFrame =
     edges.filter(col("predicate") === predicate)

@@ -38,6 +38,14 @@ object Tables {
     } else df
   }
 
+  /** Bytes of a table's files, from Spark's relation statistics. The
+    * declared one-column schema skips schema inference (reading parquet
+    * footers); the statistics come from the file listing alone.
+    */
+  def sizeInBytes(spark: SparkSession, sfDir: String, name: String): Long =
+    spark.read.schema("size_probe LONG").parquet(s"$sfDir/$name.parquet")
+      .queryExecution.analyzed.stats.sizeInBytes.toLong
+
   /** Register all tables as temp views (idempotent) and return the session.
     * Used by SQL-shaped entry points; view name == parquet file stem, which
     * is also what the driver's DuckDB oracle uses.

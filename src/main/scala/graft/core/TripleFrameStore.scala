@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,6 +41,17 @@ final class TripleFrameStore(
   // materialize = false and tablet views push predicate filters down
   // to the partitioned scan
   private val base = if (materialize) triples.localCheckpoint() else triples
+
+  /** The triples frame's plan statistics, when Spark has them: a frame
+    * Spark cannot size (an RDD it never planned) reports the session's
+    * default size, which reads as unknown here.
+    */
+  override lazy val estimatedBytes: Option[Long] = {
+    val size = base.queryExecution.optimizedPlan.stats.sizeInBytes
+    val unsized = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.defaultSizeInBytes"))
+    if (size < unsized) Some(size.toLong)
+    else None
+  }
 
   // per-predicate persisted ANN index registry (the analogue of the
   // reference's index metadata in the schema state) — written by

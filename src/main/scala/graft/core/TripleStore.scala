@@ -57,6 +57,14 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
     spark.read.parquet(dir)
   }
 
+  /** The source tables' bytes. Reads only file listings, so the lazy
+    * layouts (`line`, `edgesStored`, `attrStringStored`) are still
+    * written by the first read that needs them. A table that cannot be
+    * listed makes the size unknown.
+    */
+  override lazy val estimatedBytes: Option[Long] =
+    scala.util.Try(Tables.names.map(Tables.sizeInBytes(spark, sfDir, _)).sum).toOption
+
   // ---- edge table: subject, predicate, object, facets ----
 
   /** All uid→uid edges. Facet values are strings formatted identically to

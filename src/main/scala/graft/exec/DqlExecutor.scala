@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.GraphStore
+import graft.core.{GraphStore, SessionConf}
 import graft.dql._
 import graft.operators.Recurse
 
@@ -3758,20 +3758,29 @@ final class DqlExecutor(ts: GraphStore) {
     * `includeUid = false` renders GraphQL-shaped objects (no implicit
     * uid key — the GraphQL layer only emits requested fields, reference
     * graphql/resolve/resolver.go completion).
+    *
+    * Over a small store ([[DqlExecutor.ReadMode]]) the whole read —
+    * build-time jobs included — runs interpreted: a read over kilobytes
+    * costs less to evaluate than to compile.
     */
   def jsonAllAst(query: DqlQuery, includeUid: Boolean = true): DataFrame = {
-    val blocks = query.blocks.flatMap { b =>
-      if (b.func.name == "schema") Some(b.name -> schemaJson(b))
-      else if (b.name == "var") { flatBlock(b); None }
-      // the reference names every shortest block's output `_path_`
-      else Some((if (b.shortest.isDefined) "_path_" else b.name) ->
-        jsonBlock(b, includeUid))
+    def run(): DataFrame = {
+      val blocks = query.blocks.flatMap { b =>
+        if (b.func.name == "schema") Some(b.name -> schemaJson(b))
+        else if (b.name == "var") { flatBlock(b); None }
+        // the reference names every shortest block's output `_path_`
+        else Some((if (b.shortest.isDefined) "_path_" else b.name) ->
+          jsonBlock(b, includeUid))
+      }
+      require(blocks.nonEmpty, "query has no result block")
+      val rows = for ((bn, objs) <- blocks; (u, j) <- objs) yield Row(bn, u, j)
+      session.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("block", StringType), StructField("uid", LongType),
+        StructField("json", StringType))))
     }
-    require(blocks.nonEmpty, "query has no result block")
-    val rows = for ((bn, objs) <- blocks; (u, j) <- objs) yield Row(bn, u, j)
-    session.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("block", StringType), StructField("uid", LongType),
-      StructField("json", StringType))))
+    if (DqlExecutor.ReadMode(ts).interpreted)
+      SessionConf.scoped(session, DqlExecutor.Interpreted: _*)(run())
+    else run()
   }
 
   /** Nested JSON for @recurse blocks: the reference re-applies the child
@@ -4414,6 +4423,44 @@ final class DqlExecutor(ts: GraphStore) {
 }
 
 object DqlExecutor {
+
+  /** Session settings that evaluate a query without generated code:
+    * no whole-stage codegen, and interpreted projections, predicates
+    * and orderings in place of Janino-compiled ones. Spark implements
+    * every expression both ways, so results do not change.
+    */
+  val Interpreted: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** Largest store whose JSON reads run interpreted. Measured with
+    * `graft.Time` on the four JSON read gates, interpreted against
+    * compiled in alternated runs (4 cores, GraftSession's 512-entry
+    * class cache): interpreted saves most of the first run's Janino
+    * compiles at every size, and from the second run on it is faster
+    * over a 1.9 MB store, even over 3.2 MB, and slower over 8 MB
+    * (+4%) and 17.5 MB. The cutoff lies between the largest even size
+    * and the smallest slower one.
+    */
+  val InterpretedMaxBytes: Long = 4L << 20
+
+  /** How JSON reads over a store of `storeBytes` run: interpreted up to
+    * [[InterpretedMaxBytes]], since compiling and JIT-warming a plan
+    * costs more than evaluating it over that little data (adaptive
+    * execution, Kohn, Leis & Neumann, ICDE 2018); compiled above it or
+    * when the size is unknown.
+    */
+  final case class ReadMode(storeBytes: Option[Long]) {
+    def interpreted: Boolean = storeBytes.exists(_ <= InterpretedMaxBytes)
+    override def toString: String =
+      s"store ${storeBytes.fold("unknown")(b => s"$b bytes")}, " +
+        s"interpreted up to $InterpretedMaxBytes bytes: DQL JSON reads run " +
+        (if (interpreted) "interpreted" else "compiled")
+  }
+
+  object ReadMode {
+    def apply(store: GraphStore): ReadMode = ReadMode(store.estimatedBytes)
+  }
 
   /** Root-to-leaf flattening of a rendered recurse tree (reference
     * normalize-over-recurse, query/outputnode.go normalize walk):

@@ -149,9 +149,7 @@ object Backup {
       "spark.sql.maxConcurrentOutputFileWriters" -> "32",
       "spark.sql.files.maxPartitionBytes" -> "8m",
       "spark.sql.files.openCostInBytes" -> "1m")
-    val prev = tuned.map { case (k, _) => k -> spark.conf.getOption(k) }
-    tuned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.core.SessionConf.scoped(spark, tuned: _*) {
       // Bound the per-writer parquet row-group buffer: with ~10
       // concurrent partition writers per task × 32 tasks the DEFAULT
       // 128 MB block size asks for ~40 GB of buffer — parquet's
@@ -171,11 +169,6 @@ object Backup {
           .foldLeft(w0) { case (acc, (k, v)) => acc.option(k, v) }
       }
       w.partitionBy("predicate").parquet(s"$dir/triples")
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
     val manifest = formatSchema(store.schema).getBytes("UTF-8")
     encKey match {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.SessionConf
+
 /** `@recurse(depth: N, loop: bool)` — iterative frontier expansion
   * re-applying the same edge template per level, deduping seen uids
   * unless loop=true (reference query/recurse.go:19 expandRecurse).
@@ -32,20 +34,13 @@ object Recurse {
     */
   private val AqeFrontierThreshold = 1000000L
 
-  /** Run `f` with AQE toggled for the calling session, restoring the
-    * previous setting after — scoped to the level's one materializing
-    * action, so concurrent queries see at most a transient change.
+  /** Run `f` with AQE toggled for the calling session — scoped to the
+    * level's one materializing action, so concurrent queries see at
+    * most a transient change, and overlapping levels that want
+    * different settings still leave the session's own value behind.
     */
-  private def withAqe[T](df: DataFrame, on: Boolean)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val conf = df.sparkSession.conf
-    val prev = conf.get(key, "true")
-    if (prev == on.toString) f
-    else {
-      conf.set(key, on.toString)
-      try f finally conf.set(key, prev)
-    }
-  }
+  private def withAqe[T](df: DataFrame, on: Boolean)(f: => T): T =
+    SessionConf.scoped(df.sparkSession, "spark.sql.adaptive.enabled" -> on.toString)(f)
 
   /** Expand `seeds` (column `start`) over `edges` (columns subject,object)
     * up to maxDepth. Returns (start, node, depth) with depth = first level

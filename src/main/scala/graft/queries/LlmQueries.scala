@@ -482,9 +482,7 @@ object LlmQueries {
       // same state-store sizing rationale as stream_dedup: delta-file
       // fsyncs scale with partitions × batches, and the band-key state
       // (4 booleans per doc) is small
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      graft.core.SessionConf.scoped(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = graft.streaming.EventStream
           .streamingBandDedup(in.as[(String, Long)])
           .toDF("id", "dup")
@@ -495,7 +493,7 @@ object LlmQueries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.read.parquet(s"$base/out")
         .groupBy(col("id"))
         .agg((max(col("dup").cast("int")) === 0).as("is_new"))

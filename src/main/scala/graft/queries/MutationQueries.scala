@@ -307,9 +307,7 @@ object MutationQueries {
       // stream_dedup, 22 s → 2.5 s).
       val parsedBatches =
         scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      graft.core.SessionConf.scoped(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = in.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             parsedBatches += graft.sources.RdfSource.parse(
@@ -320,7 +318,7 @@ object MutationQueries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       parsedBatches.reduce(Mutations.applySet)
         .select(col("subject"), col("value")).orderBy(col("subject"))
     }),
@@ -358,9 +356,7 @@ object MutationQueries {
       // this gate is exposed to when the host's disk is busy. At real
       // scale the state-store partition count is sized to key volume,
       // not inherited from the batch shuffle default.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      graft.core.SessionConf.scoped(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = EventStream.streamingDedup(in.as[(String, Long)])
           .toDF("key", "first_id")
           .writeStream.format("parquet")
@@ -370,7 +366,7 @@ object MutationQueries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.read.parquet(s"$base/out").orderBy(col("key"))
     })
   )

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{TripleStore, Uids}
+import graft.core.{SessionConf, TripleFrameStore, TripleStore, Uids}
 import graft.dql._
 import graft.exec.DqlExecutor
 import graft.graphql.GraphQLEngine
+import graft.sources.RdfSource
 
 /** Parser + executor specs, in the spirit of the reference's parser unit
   * corpus (dql/parser_test.go) and golden JSON tests (query/query0_test.go).
@@ -610,5 +611,107 @@ class DqlSpec extends AnyFunSuite {
     assert(cost.jobs == 0, cost)
     assert(rows.map(r => (r.getString(0), r.getLong(1))) == Seq(
       ("b", CB + 3), ("b", CB + 2), ("b", CB + 1), ("a", CB + 4), ("a", CB + 5)))
+  }
+
+  // Small stores read interpreted (DqlExecutor.ReadMode): the whole
+  // jsonAllAst runs with whole-stage codegen off and the codegen factory
+  // at NO_CODEGEN, and the session reads as before once it returns.
+  private def codegenSettings: Seq[Option[String]] =
+    DqlExecutor.Interpreted.map { case (k, _) => spark.conf.getOption(k) }
+
+  test("a small-store JSON read compiles nothing on its second run and restores the settings") {
+    assert(DqlExecutor.ReadMode(store).interpreted)
+    val before = codegenSettings
+    val deep = s"""{ q(func: uid(${CB + 1}, ${CB + 2}, ${CB + 4})) {
+                  |    name
+                  |    placed (orderdesc: totalprice, first: 2) {
+                  |      orderstatus
+                  |      has_line (first: 2) { returnflag } } } }""".stripMargin
+    val first = dql(deep).collect().toSeq
+    val (second, cost) = Explain.measure(spark)(dql(deep).collect().toSeq)
+    assert(cost.compiles == 0, cost)
+    assert(second == first && second.nonEmpty)
+    assert(codegenSettings == before)
+  }
+
+  test("a JSON read that throws still restores the codegen settings") {
+    assert(DqlExecutor.ReadMode(store).interpreted)
+    val before = codegenSettings
+    // parses, then fails inside the read ("query has no result block"),
+    // after the interpreted settings are in place
+    val onlyVar = Parser.parseWithVars("{ v as var(func: uid(0x1)) { name } }",
+      Map.empty, checkUnusedVars = false)
+    intercept[IllegalArgumentException](new DqlExecutor(store).jsonAllAst(onlyVar))
+    assert(codegenSettings == before)
+  }
+
+  test("read mode: compiled over a store of unknown size or over the cutoff") {
+    import spark.implicits._
+    // a frame rebuilt from an RDD carries no plan statistics
+    val parsed = RdfSource.parse(Seq("""<0x1> <name> "x" .""").toDF("line"))
+    val unsized = new TripleFrameStore(spark, store.schema,
+      spark.createDataFrame(parsed.rdd, parsed.schema), materialize = false)
+    assert(unsized.estimatedBytes.isEmpty)
+    assert(!DqlExecutor.ReadMode(unsized).interpreted)
+    assert(DqlExecutor.ReadMode(Some(DqlExecutor.InterpretedMaxBytes)).interpreted)
+    assert(!DqlExecutor.ReadMode(Some(DqlExecutor.InterpretedMaxBytes + 1)).interpreted)
+    // the cutoff is its own; tuning broadcast joins does not move it
+    SessionConf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(DqlExecutor.ReadMode(store).interpreted)
+    }
+  }
+
+  test("the interpreted settings take effect: a fresh plan compiles only outside them") {
+    // the literal is new on every run, so no compiled class can be cached
+    def fresh() = spark.range(4).select((col("id") * System.nanoTime()).as("x")).collect()
+    val (_, compiled) = Explain.measure(spark)(fresh())
+    assert(compiled.compiles > 0, compiled)
+    // factoryMode is an internal Spark setting: if an upgrade drops it,
+    // the projection compiles here and this fails
+    val (_, interpreted) = Explain.measure(spark) {
+      SessionConf.scoped(spark, DqlExecutor.Interpreted: _*)(fresh())
+    }
+    assert(interpreted.compiles == 0, interpreted)
+  }
+
+  // the interactive read gates, interpreted (this small store) and
+  // compiled; InterpretedParitySpec holds the golden-fixture cases
+  test("interpreted == compiled: dql_json_deep") {
+    InterpretedParity.dql(store,
+      s"""{ q(func: uid(${CB + 1}, ${CB + 2}, ${CB + 4})) {
+         |    name
+         |    placed (orderdesc: totalprice, first: 2) {
+         |      orderstatus
+         |      has_line (first: 2) { returnflag } } } }""".stripMargin,
+      includeUid = true)
+  }
+
+  test("interpreted == compiled: dql_json_nested (@facets, lang fallback)") {
+    InterpretedParity.dql(store,
+      """{ cust(func: eq(mktsegment, "BUILDING"), orderasc: name, first: 20) {
+        |    name
+        |    nc: count(placed)
+        |    placed (orderdesc: totalprice, first: 2) @facets(totalprice) {
+        |      orderstatus } }
+        |  docs(func: type(Document), first: 15) { text@en:.  source } }""".stripMargin,
+      includeUid = true)
+  }
+
+  test("interpreted == compiled: dql_recurse_json") {
+    InterpretedParity.dql(store,
+      """{ q(func: le(acctbal, -800)) @recurse(depth: 3) {
+        |    name located_in in_region } }""".stripMargin,
+      includeUid = true)
+  }
+
+  test("interpreted == compiled: GraphQL graphql_json") {
+    InterpretedParity.both(store)(s => new GraphQLEngine(s).json(
+      """query {
+        |  queryCustomer(filter: { mktsegment: { eq: "BUILDING" } },
+        |                order: { asc: name }, first: 10) {
+        |    name
+        |    located_in { name }
+        |    placed(order: { desc: orderdate }, first: 2) { orderstatus }
+        |  } }""".stripMargin))
   }
 }
