@@ -431,6 +431,107 @@ final class DqlExecutor(ts: GraphStore) {
       }
     }
 
+  /** A `@recurse` template selection that walks an edge; every other
+    * known selection is a per-level leaf.
+    */
+  private def recurseEdge(s: Selection): Boolean =
+    !s.isCount && (schema.isUidPredicate(s.pred) || s.reverse)
+
+  /** A resolved `@recurse` template: its known selections in query
+    * order (`uid` and unknown predicates dropped) and the walk over its
+    * edges — None when nothing is walked (no uid predicate, or 0 hops).
+    */
+  private final class RecurseTemplate(val sels: Seq[Selection],
+      val tree: Option[DataFrame]) {
+    def edges: Seq[Selection] = sels.filter(recurseEdge)
+    /** The scalar leaves of the flat and JSON outputs (count leaves
+      * render in RDF only).
+      */
+    def leaves: Seq[Selection] = sels.filterNot(s => recurseEdge(s) || s.isCount)
+  }
+
+  /** The `@recurse` template builder of the flat, JSON and RDF outputs:
+    * the reference re-applies a one-level child template per level
+    * (query/recurse.go:19 expandRecurse). Checks the template, expands
+    * `expand()`, unions the uid predicates' edges — each tagged
+    * `tag(selection, index in sels)` in column `pred` — walks them from
+    * `starts` (a per-root [[Recurse.expandTree]] unless `walk` says
+    * otherwise), and binds the template's vars over `roots` (column
+    * `uid`) and the walk.
+    */
+  private def recurseTemplate(roots: DataFrame, template: Seq[Selection],
+      r: RecurseArgs, starts: => DataFrame,
+      tag: (Selection, Int) => String = (s, _) => jsonKey(s))(
+      walk: (DataFrame, DataFrame) => DataFrame =
+        Recurse.expandTree(_, _, recurseHops(r), r.loop)): RecurseTemplate = {
+    val hops = recurseHops(r)
+    // the template is ONE level — nested braces are rejected (reference
+    // query/recurse.go: "recurse queries require that all predicates are
+    // specified in one level", TestRecurseNestedError1/2)
+    if (template.exists(_.children.nonEmpty))
+      throw new IllegalArgumentException(
+        "recurse queries require that all predicates are specified in one level")
+    val all = expandRecurseSels(roots, template, hops)
+    // a predicate both explicit and produced by expand() is a repeated
+    // subgraph (reference TestRecurseExpandRepeatedPredError)
+    if (template.exists(_.pred.startsWith("expand("))) {
+      val dups = all.groupBy(_.pred).collect {
+        case (p, ss) if ss.size > 1 => p }.toSeq.sorted
+      if (dups.nonEmpty)
+        throw new IllegalArgumentException(
+          s"Repeated subgraph: [${dups.head}] while using expand()")
+    }
+    // unknown predicates are legal and ignored (reference
+    // TestRecurseQuery selects nonexistent_pred); `uid` renders no leaf
+    val sels = all.filter(s => s.pred != "uid" &&
+      (s.isCount || schema.predicates.contains(s.pred)))
+    val tagged = sels.zipWithIndex.collect {
+      case (s, i) if recurseEdge(s) => s -> tag(s, i) }
+    val tree =
+      if (tagged.isEmpty || hops == 0) None
+      else {
+        val edges = tagged.map { case (s, t) =>
+          val e0 = if (s.reverse) ts.reverseEdge(s.pred) else ts.edge(s.pred)
+          // `friend @filter(...)`: the re-applied child template keeps its
+          // filter — targets failing it are neither returned nor expanded
+          val e = s.filter.map(f => applyFilter(e0, "object", f)).getOrElse(e0)
+          e.select(col("subject"), col("object"), lit(t).as("pred"))
+        }.reduce(_ unionByName _)
+        // a filtered edge template embeds semi-joins that would otherwise
+        // re-execute on EVERY level's job; materialize the filtered frame
+        // once (lazy checkpoint — level 1's action pays for it)
+        Some(walk(starts,
+          if (tagged.exists(_._1.filter.isDefined)) edges.localCheckpoint(false)
+          else edges))
+      }
+    // template vars (reference TestRecurseVariable*): `a as friend` =
+    // that predicate's targets across every level; `a as uid` = root
+    // plus everything reached; `a as name` = the per-uid value map over
+    // the same node set
+    if (all.exists(_.varName.isDefined)) {
+      val allNodes = tree.foldLeft(roots.select(col("uid"))) { (u, t) =>
+        u.unionByName(t.select(col("node").as("uid"))) }.distinct()
+      all.foreach { s =>
+        s.varName.foreach { v =>
+          val i = sels.indexOf(s)
+          if (s.pred == "uid") bindVar(v, allNodes, uniqueUid = true)
+          else if (i >= 0 && recurseEdge(s))
+            bindVar(v, tree.fold(allNodes.limit(0)) { t =>
+                t.filter(col("pred") === tag(s, i))
+                  .select(col("node").as("uid")).distinct() },
+              uniqueUid = true)
+          else if (i >= 0 && !s.isCount)
+            bindVar(v, ts.attr(s.pred)
+                .join(allNodes.select(col("uid").as("subject")),
+                  Seq("subject"), "left_semi")
+                .select(col("subject").as("uid"), col("value")),
+              uniqueUid = false)
+        }
+      }
+    }
+    new RecurseTemplate(sels, tree)
+  }
+
   /** Attr rows for recurse/flat scalar leaves with the scalar read's
     * lang rule: an unchained read of a @lang predicate takes the
     * UNTAGGED value only (reference TestQueryEmptyDefaultNames — a
@@ -650,73 +751,31 @@ final class DqlExecutor(ts: GraphStore) {
         // EVERY reached node including the root (the reference re-applies
         // the full child template each level, query/recurse.go:19
         // expandRecurse — `{ name friend }` under @recurse returns names
-        // at every depth, not bare uids). Unknown predicates are ignored.
-        val known = expandRecurseSels(frontier, b.selections, recurseHops(r))
-          .filter(s => schema.predicates.contains(s.pred) || s.pred == "uid")
-        val (preds, rest) =
-          known.partition(s => schema.isUidPredicate(s.pred))
-        val scalars = rest.filter(_.pred != "uid")
-        val edges0 = preds.map { s =>
-          val e0 = if (s.reverse) ts.reverseEdge(s.pred) else ts.edge(s.pred)
-          // `friend @filter(...)` under @recurse: the re-applied child
-          // template keeps its filter — targets failing it are neither
-          // returned nor expanded (reference expandRecurse re-runs the
-          // full child sg each level, filters included)
-          val e = s.filter.map(f => applyFilter(e0, "object", f)).getOrElse(e0)
-          e.select(col("subject"), col("object"), lit(jsonKey(s)).as("pred"))
-        }.reduce(_ unionByName _)
-        // a filtered edge template embeds semi-joins that would otherwise
-        // re-execute on EVERY recurse level's job; materialize the filtered
-        // frame once (lazy checkpoint — level 1's action pays for it) so
-        // each level joins against the stored result instead
-        val edges =
-          if (preds.exists(_.filter.isDefined)) edges0.localCheckpoint(false)
-          else edges0
-        val seeds = frontier.select(col("uid").as("start"))
-        val tree = Recurse.expandTree(seeds, edges, recurseHops(r), r.loop)
-        // variables in the template (reference TestRecurseVariable*):
-        // `a as friend` = that predicate's targets across every level;
-        // `a as uid` = root plus everything reached; `a as name` = the
-        // per-uid value map over the same node set
-        if (known.exists(_.varName.isDefined)) {
-          val allNodes = frontier.select(col("uid"))
-            .unionByName(tree.select(col("node").as("uid"))).distinct()
-          known.filter(_.varName.isDefined).foreach { s =>
-            val v = s.varName.get
-            if (s.pred == "uid") bindVar(v, allNodes, uniqueUid = true)
-            else if (schema.isUidPredicate(s.pred))
-              bindVar(v, tree.filter(col("pred") === jsonKey(s))
-                .select(col("node").as("uid")).distinct(), uniqueUid = true)
-            else bindVar(v, ts.attr(s.pred)
-              .join(allNodes.select(col("uid").as("subject")),
-                Seq("subject"), "left_semi")
-              .select(col("subject").as("uid"), col("value")),
-              uniqueUid = false)
-          }
-        }
+        // at every depth, not bare uids).
+        lazy val seeds = frontier.select(col("uid").as("start"))
+        val t = recurseTemplate(frontier, b.selections, r, seeds)()
+        // depth 0 = the template applied to the root itself
+        lazy val roots = frontier.select(col("uid").as("start"),
+          col("uid").as("node"), lit(0).as("depth"))
         // the flat contract: one row per (start, node) at its first-reach
         // depth, seeds excluded (re-rendered occurrences of seen nodes
         // collapse; with loop every level's occurrence stays)
-        val reached =
+        val reached = t.tree.fold(roots.limit(0)) { tree =>
           if (r.loop)
             tree.select(col("start"), col("node"), col("depth")).distinct()
           else tree.groupBy(col("start"), col("node"))
             .agg(min(col("depth")).as("depth"))
             .join(seeds.select(col("start"), col("start").as("node")),
               Seq("start", "node"), "left_anti")
+        }
+        val scalars = t.leaves
         if (scalars.isEmpty) reached
-        else {
-          // depth 0 = the template applied to the root itself
-          val withRoot = frontier.select(col("uid").as("start"),
-              col("uid").as("node"), lit(0).as("depth"))
-            .unionByName(reached)
-          scalars.foldLeft(withRoot) { (acc, s) =>
+        else scalars.foldLeft(roots.unionByName(reached)) { (acc, s) =>
             val leaf = attrLeaf(s).select(col("subject").as("node"),
               col("value").as(s.alias.getOrElse(s.pred)))
             acc.join(leaf, Seq("node"), "left")
           }.select(Seq(col("start"), col("node"), col("depth")) ++
             scalars.map(s => col(s.alias.getOrElse(s.pred))): _*)
-        }
       case None if b.groupby.nonEmpty =>
         // root-level @groupby, flat surface: group the frontier itself
         groupbyGroups(frontier.select(col("uid").as("__t")), b.groupby,
@@ -3523,7 +3582,7 @@ final class DqlExecutor(ts: GraphStore) {
           else ordered0.withColumn("__r", monotonically_increasing_id())
         b.recurse match {
           case Some(r) =>
-            rdfRecurse(sb, ordered, b.selections, recurseHops(r), r.loop)
+            rdfRecurse(sb, ordered, b.selections, r)
           case None => rdfWalk(sb, ordered, b.selections)
         }
       }
@@ -3598,42 +3657,24 @@ final class DqlExecutor(ts: GraphStore) {
     * roots and predicates ([[graft.operators.Recurse.expandGlobal]]).
     */
   private def rdfRecurse(sb: StringBuilder, roots: DataFrame,
-      sels0: Seq[Selection], hops: Int, loop: Boolean): Unit = {
-    sels0.foreach { s =>
-      if (s.children.nonEmpty)
-        throw new IllegalArgumentException(
-          "recurse queries require that all predicates are specified in one level")
-    }
-    val cap = math.min(hops, 50)
-    val sels = expandRecurseSels(roots, sels0, hops)
+      sels0: Seq[Selection], r: RecurseArgs): Unit = {
+    val cap = math.min(recurseHops(r), 50)
     // `uid` emits no triple (TestRDFIgnoreUid); unknown preds emit
-    // nothing; counts render per level like any other leaf group
-    val known = sels.filter(s =>
-      s.pred != "uid" && (s.isCount || schema.predicates.contains(s.pred)))
-    def isUidSel(s: Selection): Boolean =
-      !s.isCount && (schema.isUidPredicate(s.pred) || s.reverse)
-    val tagged = known.zipWithIndex
-    val tree =
-      if (!known.exists(isUidSel) || cap == 0) None
-      else {
-        val edges = tagged.collect { case (s, i) if isUidSel(s) =>
-          val e0 = if (s.reverse) ts.reverseEdge(s.pred) else ts.edge(s.pred)
-          val e = s.filter.map(f => applyFilter(e0, "object", f)).getOrElse(e0)
-          e.select(col("subject"), col("object"), lit(i.toString).as("pred"))
-        }.reduce(_ unionByName _)
-        Some(graft.operators.Recurse.expandGlobal(
-          roots.select(col("uid").as("node")), edges, cap, loop)
-          .localCheckpoint())
-      }
-    def visit(frontier: DataFrame, lvl: Int): Unit = tagged.foreach {
-      case (s, _) if !isUidSel(s) =>
+    // nothing; counts render per level like any other leaf group. Edges
+    // are tagged by template position: one selection, one branch.
+    val t = recurseTemplate(roots, sels0, r, roots.select(col("uid").as("node")),
+        (_, i) => i.toString) { (starts, edges) =>
+      Recurse.expandGlobal(starts, edges, cap, r.loop).localCheckpoint()
+    }
+    def visit(frontier: DataFrame, lvl: Int): Unit = t.sels.zipWithIndex.foreach {
+      case (s, _) if !recurseEdge(s) =>
         rdfEmit(sb,
           if (s.isCount) rdfCountRows(frontier, s)
           else rdfScalarRows(frontier, s))
-      case (s, i) if tree.isDefined && lvl < cap =>
+      case (s, i) if t.tree.isDefined && lvl < cap =>
         // this branch's edges: the merged tree's rows at the next
         // level, restricted to parents in THIS frontier and this pred
-        val br = tree.get
+        val br = t.tree.get
           .filter(col("depth") === lvl + 1 && col("pred") === i.toString)
           .join(frontier.select(col("uid").as("__p")),
             col("parent") === col("__p"))
@@ -3798,46 +3839,19 @@ final class DqlExecutor(ts: GraphStore) {
     // the nameless friend then renders as a bare {"uid": ...})
     val includeUid = includeUid0 ||
       b.selections.exists(s => s.pred == "uid" && !s.isCount)
-    // the template is ONE level — nested braces are rejected (reference
-    // query/recurse.go: "recurse queries require that all predicates are
-    // specified in one level", TestRecurseNestedError1/2)
-    b.selections.foreach { s =>
-      if (s.children.nonEmpty)
-        throw new IllegalArgumentException(
-          "recurse queries require that all predicates are specified in one level")
-    }
     var frontier = seedUids(b.func)
     b.filter.foreach { f => frontier = applyFilter(frontier, "uid", f) }
-    // unknown predicates in the template are legal and ignored
-    // (reference TestRecurseQuery selects nonexistent_pred)
-    val allSels = expandRecurseSels(frontier, b.selections, recurseHops(r))
-    // a predicate both explicit and produced by expand() is a repeated
-    // subgraph (reference TestRecurseExpandRepeatedPredError)
-    if (b.selections.exists(_.pred.startsWith("expand("))) {
-      val dups = allSels.groupBy(_.pred).collect {
-        case (p, ss) if ss.size > 1 => p }.toSeq.sorted
-      if (dups.nonEmpty)
-        throw new IllegalArgumentException(
-          s"Repeated subgraph: [${dups.head}] while using expand()")
-    }
-    val (preds, scalars) =
-      allSels
-        .filter(s => schema.predicates.contains(s.pred))
-        .partition(s => schema.isUidPredicate(s.pred))
-    val edges = preds.map { s =>
-      val e0 = if (s.reverse) ts.reverseEdge(s.pred) else ts.edge(s.pred)
-      val e = s.filter.map(f => applyFilter(e0, "object", f)).getOrElse(e0)
-      e.select(col("subject"), col("object"), lit(jsonKey(s)).as("pred"))
-    }.reduce(_ unionByName _)
-    val tree = graft.operators.Recurse.expandTree(
-      frontier.select(col("uid").as("start")), edges, recurseHops(r), r.loop)
+    val t = recurseTemplate(frontier, b.selections, r,
+      frontier.select(col("uid").as("start")))()
+    val (preds, scalars) = (t.edges, t.leaves)
     // every occurrence: the roots at depth 0 (no parent edge), then the
     // tree, each with the scalar leaves of its node
-    var occ = frontier.select(col("uid").as("start"),
+    var occ = t.tree.foldLeft(frontier.select(col("uid").as("start"),
         lit(null).cast("long").as("parent"), lit(null).cast("string").as("pred"),
-        col("uid").as("node"), lit(0).as("depth"))
-      .unionByName(tree.select(col("start"), col("parent"), col("pred"),
+        col("uid").as("node"), lit(0).as("depth"))) { (roots, tree) =>
+      roots.unionByName(tree.select(col("start"), col("parent"), col("pred"),
         col("node"), col("depth")))
+    }
     scalars.foreach { s =>
       occ = occ.join(attrLeaf(s)
           .select(col("subject").as("__ls"), col("value").as(jsonKey(s))),

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.IntegerType
 
 import graft.core.SessionConf
 
@@ -10,16 +10,20 @@ import graft.core.SessionConf
   * re-applying the same edge template per level, deduping seen uids
   * unless loop=true (reference query/recurse.go:19 expandRecurse).
   *
-  * Driver-side loop over DataFrames: each round is one distributed
-  * equi-join frontier⋈edges. Scale notes:
-  *  - the frontier is usually tiny relative to the edge table, so each
-  *    round is a broadcast-hash join of frontier against the (bucketed,
-  *    predicate-pruned) edge scan — no full-table shuffle per level;
-  *  - `localCheckpoint` every round truncates the lineage so plans don't
-  *    grow exponentially with depth (on a cluster: checkpoint to HDFS or
-  *    persist+count);
-  *  - dedup against `visited` is a left_anti join on (start, node), the
-  *    reference's seen-uid map.
+  * Every expansion runs one driver-side level loop ([[levels]]) and
+  * supplies only its step: the join of the frontier against the edges
+  * and its dedup rule. The loop owns the rest:
+  *  - each step's frames are lazy `localCheckpoint`s, so the plan is
+  *    truncated every level and plans don't grow with depth (on a
+  *    cluster: checkpoint to HDFS or persist+count);
+  *  - ONE `count()` per level both materializes the level and tells
+  *    whether it is empty; AQE stays off for it below
+  *    [[AqeFrontierThreshold]], where the join is a broadcast of a small
+  *    frontier against the pruned edge scan;
+  *  - the seen set (the reference's seen map) is the union of the
+  *    levels, re-truncated every 4 levels;
+  *  - the output is the union of the levels with their `depth`, or an
+  *    empty frame of the level's columns.
   */
 object Recurse {
 
@@ -42,6 +46,69 @@ object Recurse {
   private def withAqe[T](df: DataFrame, on: Boolean)(f: => T): T =
     SessionConf.scoped(df.sparkSession, "spark.sql.adaptive.enabled" -> on.toString)(f)
 
+  /** One level of a walk. `rows` are its output rows. `next` is counted
+    * (the one count materializes both lazily checkpointed frames), is
+    * the next step's input and joins the seen set. They differ only
+    * where a level renders more than it expands ([[expandTree]]).
+    */
+  private final case class Level(rows: DataFrame, next: DataFrame)
+
+  /** The level loop: `step(input, seen)` builds level `depth` from the
+    * previous level's `next` (`first` at depth 1) and the seen set
+    * (`seen` at depth 1; None without dedup). The walk stops at
+    * `maxDepth` or at the first level that renders nothing; a level
+    * that renders rows but expands nothing is the last one kept.
+    */
+  private def levels(first: DataFrame, seen: Option[DataFrame],
+      maxDepth: Int, dedup: Boolean)(
+      step: (DataFrame, Option[DataFrame]) => Level): DataFrame = {
+    var input = first
+    var seenSet = if (dedup) seen else None
+    var out: DataFrame = null
+    var last: Level = null
+    var depth = 1
+    var done = false
+    var frontierSize = 0L
+    while (depth <= maxDepth && !done) {
+      val lvl = step(input, seenSet)
+      last = lvl
+      frontierSize = withAqe(lvl.next, frontierSize >= AqeFrontierThreshold) {
+        lvl.next.count()
+      }
+      // an empty `next` ends the walk; a level whose rows are not `next`
+      // is probed (a limit-1 scan of its checkpoint) only then
+      if (frontierSize == 0 && ((lvl.rows eq lvl.next) || lvl.rows.isEmpty))
+        done = true
+      else {
+        val rows = lvl.rows.withColumn("depth", lit(depth))
+        out = if (out == null) rows else out.unionByName(rows)
+        if (dedup) {
+          // a union of checkpointed LogicalRDDs: plan growth is linear
+          // in depth, so re-truncate only every 4 levels (lazily: the
+          // next count() materializes it for free)
+          seenSet = Some(seenSet.fold(lvl.next)(_.unionByName(lvl.next)))
+          if (depth % 4 == 0) seenSet = seenSet.map(_.localCheckpoint(false))
+        }
+        input = lvl.next
+        depth += 1
+        done = frontierSize == 0
+      }
+    }
+    if (out != null) out
+    else {
+      // with maxDepth < 1 no level ran: build (not run) one for its columns
+      val rows = Option(last).getOrElse(step(input, seenSet)).rows
+      val s = rows.sparkSession
+      s.createDataFrame(s.sparkContext.emptyRDD[Row],
+        rows.schema.add("depth", IntegerType))
+    }
+  }
+
+  /** The seeds as a lazily checkpointed (start, node = start) frontier. */
+  private def startFrontier(seeds: DataFrame): DataFrame =
+    seeds.select(col("start"), col("start").as("node")).distinct()
+      .localCheckpoint(false)
+
   /** Expand `seeds` (column `start`) over `edges` (columns subject,object)
     * up to maxDepth. Returns (start, node, depth) with depth = first level
     * at which `node` was reached from `start` (1-based); loop=false prunes
@@ -50,49 +117,14 @@ object Recurse {
   def expand(seeds: DataFrame, edges: DataFrame, maxDepth: Int,
       loop: Boolean = false): DataFrame = {
     val e = edges.select(col("subject"), col("object"))
-    // lazy checkpoint: the plan is truncated to a LogicalRDD immediately;
-    // materialization rides the count() below — ONE job per level, not a
-    // separate eager-checkpoint job plus an isEmpty probe (driver-action
-    // count is what gets amplified under host contention).
-    var frontier = seeds.select(col("start"), col("start").as("node"))
-      .distinct().localCheckpoint(false)
-    var visited = frontier
-    var out: DataFrame = null
-    var depth = 1
-    var done = false
-    var frontierSize = 0L
-    while (depth <= maxDepth && !done) {
-      var next = frontier.join(e, frontier("node") === e("subject"))
+    val start = startFrontier(seeds)
+    levels(start, Some(start), maxDepth, dedup = !loop) { (frontier, seen) =>
+      val reached = frontier.join(e, frontier("node") === e("subject"))
         .select(frontier("start"), e("object").as("node")).distinct()
-      if (!loop)
-        next = next.join(visited, Seq("start", "node"), "left_anti")
-      next = next.localCheckpoint(false)
-      frontierSize = withAqe(next, frontierSize >= AqeFrontierThreshold) {
-        next.count()
-      }
-      if (frontierSize == 0) { done = true }
-      else {
-        val lvl = next.withColumn("depth", lit(depth))
-        out = if (out == null) lvl else out.unionByName(lvl)
-        // visited is a union of already-checkpointed LogicalRDDs — plan
-        // growth is linear in depth, so re-truncate only every 4 levels
-        // (lazily: the next count() materializes it for free).
-        if (!loop) {
-          visited = visited.unionByName(next)
-          if (depth % 4 == 0) visited = visited.localCheckpoint(false)
-        }
-        frontier = next
-        depth += 1
-      }
+      val next = seen.fold(reached)(reached.join(_, Seq("start", "node"), "left_anti"))
+        .localCheckpoint(false)
+      Level(next, next)
     }
-    if (out == null)
-      seeds.sparkSession.createDataFrame(
-        seeds.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("start", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("node", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("depth", org.apache.spark.sql.types.IntegerType))))
-    else out
   }
 
   /** Tree-shaped expansion for NESTED recurse output: tracks which parent
@@ -111,54 +143,19 @@ object Recurse {
   def expandTree(seeds: DataFrame, edges: DataFrame, maxDepth: Int,
       loop: Boolean = false): DataFrame = {
     val e = edges.select(col("subject"), col("object"), col("pred"))
-    var frontier = seeds.select(col("start"), col("start").as("node"))
-      .distinct().localCheckpoint(false)
-    var visited = frontier
-    var out: DataFrame = null
-    var depth = 1
-    var done = false
-    var frontierSize = 0L
-    while (depth <= maxDepth && !done) {
-      // single action per level: the lazy checkpoint of `next` (which
-      // subsumes `raw` via lineage) is materialized by one count() that
-      // doubles as the emptiness probe. Under driver contention each extra
-      // Spark job pays scheduler latency, so per-level job count is the
-      // scale knob here, not per-job work.
+    val start = startFrontier(seeds)
+    levels(start, Some(start), maxDepth, dedup = !loop) { (frontier, seen) =>
+      // every edge renders; only the unseen targets expand. The count of
+      // `next` materializes `raw` too (it subsumes it via lineage).
       val raw = frontier.join(e, frontier("node") === e("subject"))
         .select(frontier("start"), frontier("node").as("parent"),
           e("pred"), e("object").as("node"))
         .localCheckpoint(false)
-      var next = raw.select(col("start"), col("node")).distinct()
-      if (!loop)
-        next = next.join(visited, Seq("start", "node"), "left_anti")
-      next = next.localCheckpoint(false)
-      val n = withAqe(next, frontierSize >= AqeFrontierThreshold) {
-        next.count() // materializes raw + next in one job
-      }
-      frontierSize = n
-      // n > 0 implies raw non-empty; probe raw only on the last level
-      // (already checkpointed: a limit-1 scan, no recompute)
-      if (n == 0 && raw.isEmpty) { done = true }
-      else {
-        out = if (out == null) raw.withColumn("depth", lit(depth))
-          else out.unionByName(raw.withColumn("depth", lit(depth)))
-        if (!loop) {
-          visited = visited.unionByName(next)
-          if (depth % 4 == 0) visited = visited.localCheckpoint(false)
-        }
-        frontier = next
-        depth += 1
-        if (n == 0) done = true
-      }
+      val targets = raw.select(col("start"), col("node")).distinct()
+      val next = seen.fold(targets)(targets.join(_, Seq("start", "node"), "left_anti"))
+        .localCheckpoint(false)
+      Level(raw, next)
     }
-    if (out == null) {
-      val s = seeds.sparkSession
-      import org.apache.spark.sql.types._
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("start", LongType),
-          StructField("parent", LongType), StructField("pred", StringType),
-          StructField("node", LongType), StructField("depth", IntegerType))))
-    } else out
   }
 
   /** Merged-frontier expansion with the reference's GLOBAL edge-level
@@ -176,41 +173,15 @@ object Recurse {
   def expandGlobal(seeds: DataFrame, edges: DataFrame, maxDepth: Int,
       loop: Boolean = false): DataFrame = {
     val e = edges.select(col("subject"), col("object"), col("pred"))
-    var frontier = seeds.select(col("node")).distinct().localCheckpoint(false)
-    var seen: DataFrame = null
-    var out: DataFrame = null
-    var depth = 1
-    var more = true
-    var frontierSize = 0L
-    while (depth <= maxDepth && more) {
-      var nxt = frontier.join(e, frontier("node") === e("subject"))
-        .select(frontier("node").as("parent"), e("pred"),
-          e("object").as("node"))
-      if (!loop && seen != null)
-        nxt = nxt.join(seen, Seq("parent", "pred", "node"), "left_anti")
-      val lvl = nxt.localCheckpoint(false)
-      val n = withAqe(lvl, frontierSize >= AqeFrontierThreshold) { lvl.count() }
-      frontierSize = n
-      if (n == 0) more = false
-      else {
-        out = if (out == null) lvl.withColumn("depth", lit(depth))
-          else out.unionByName(lvl.withColumn("depth", lit(depth)))
-        if (!loop) {
-          seen = if (seen == null) lvl else seen.unionByName(lvl)
-          if (depth % 4 == 0) seen = seen.localCheckpoint(false)
-        }
-        frontier = lvl.select(col("node")).distinct().localCheckpoint(false)
-        depth += 1
-      }
+    // the seen set holds edges, not nodes: it starts empty
+    levels(seeds, None, maxDepth, dedup = !loop) { (prev, seen) =>
+      val frontier = prev.select(col("node")).distinct().localCheckpoint(false)
+      val taken = frontier.join(e, frontier("node") === e("subject"))
+        .select(frontier("node").as("parent"), e("pred"), e("object").as("node"))
+      val lvl = seen.fold(taken)(taken.join(_, Seq("parent", "pred", "node"), "left_anti"))
+        .localCheckpoint(false)
+      Level(lvl, lvl)
     }
-    if (out == null) {
-      val s = seeds.sparkSession
-      import org.apache.spark.sql.types._
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("parent", LongType),
-          StructField("pred", StringType), StructField("node", LongType),
-          StructField("depth", IntegerType))))
-    } else out
   }
 
   /** Path-tracking expansion with `@ignorereflex` semantics: never revisit
@@ -220,31 +191,15 @@ object Recurse {
     */
   def expandPaths(seeds: DataFrame, edges: DataFrame, maxDepth: Int): DataFrame = {
     val e = edges.select(col("subject"), col("object"))
-    var frontier = seeds.select(col("start"), col("start").as("node"),
+    val start = seeds.select(col("start"), col("start").as("node"),
       array(col("start")).as("path")).localCheckpoint(false)
-    var out: DataFrame = null
-    var depth = 1
-    var frontierSize = frontier.count()
-    var more = frontierSize > 0
-    while (depth <= maxDepth && more) {
-      // one job per level: lazy checkpoint materialized by the count that
-      // is also the loop-termination probe
+    levels(start, None, maxDepth, dedup = false) { (frontier, _) =>
       val next = frontier.join(e, frontier("node") === e("subject"))
         .filter(!array_contains(frontier("path"), e("object")))
         .select(frontier("start"), e("object").as("node"),
           array_append(frontier("path"), e("object")).as("path"))
         .localCheckpoint(false)
-      frontierSize = withAqe(next, frontierSize >= AqeFrontierThreshold) {
-        next.count()
-      }
-      more = frontierSize > 0
-      if (more || out == null) {
-        val lvl = next.withColumn("depth", lit(depth))
-        out = if (out == null) lvl else out.unionByName(lvl)
-      }
-      frontier = next
-      depth += 1
+      Level(next, next)
     }
-    out
   }
 }

@@ -307,6 +307,37 @@ class GoldenFixtureSpec extends AnyFunSuite {
       """{"data":{"me":[{"name":"Michonne"},{"name":"Rick Grimes"},{"name":"Glenn Rhee"},{"name":"Daryl Dixon"},{"name":"Andrea"},{"name":"School A"},{"name":"School B"}]}}""")
   }
 
+  /** The `me` block of a JSON read, as rendered objects. */
+  private def meBlock(query: String): Seq[String] =
+    new DqlExecutor(store).jsonAllAst(Parser.parse(query), includeUid = false)
+      .collect().filter(_.getString(0) == "me").map(_.getString(2)).toSeq
+
+  test("a named @recurse block binds its template vars like a var block") {
+    Seq("a as friend name", "friend a as uid", "friend a as name").foreach { tpl =>
+      val me = "me(func: uid(a)) { name }"
+      val named = meBlock(s"{ r(func: uid(0x01)) @recurse(depth: 2) { $tpl } $me }")
+      val asVar = meBlock(s"{ var(func: uid(0x01)) @recurse(depth: 2) { $tpl } $me }")
+      assert(named.nonEmpty && named == asVar, tpl)
+    }
+  }
+
+  test("a var @recurse block rejects a nested template and a repeated expand() predicate") {
+    def err(query: String): String = {
+      val json = intercept[IllegalArgumentException](
+        new DqlExecutor(store).jsonAllAst(Parser.parse(query)).collect())
+      val flat = intercept[IllegalArgumentException](
+        new DqlExecutor(store).flat(query).collect())
+      assert(json.getMessage == flat.getMessage)
+      json.getMessage
+    }
+    assert(err("""{ var(func: uid(0x01)) @recurse { friend { name } }
+                 |  me(func: uid(0x01)) { name } }""".stripMargin) ==
+      "recurse queries require that all predicates are specified in one level")
+    assert(err("""{ var(func: uid(32)) @recurse { name expand(_all_) }
+                 |  me(func: uid(32)) { name } }""".stripMargin)
+      .startsWith("Repeated subgraph"))
+  }
+
   test("golden: TestRecurseExpand (query3_test.go:90)") {
     // expand(_all_) under @recurse: the SchoolInfo type's uid preds
     // drive the walk, its scalars render per level

@@ -96,20 +96,31 @@ class OperatorSpec extends AnyFunSuite {
     // ~one Spark job (lazy checkpoint materialized by the emptiness
     // count), not the eager-checkpoint + isEmpty + visited-checkpoint
     // triple that made the scored bench 30x amplifiable under host load
-    val edges = (1L to 6L).sliding(2).map(p => (p(0), p(1))).toSeq
-      .toDF("subject", "object")
+    val chain = (1L to 6L).sliding(2).map(p => (p(0), p(1))).toSeq
+    val edges = chain.toDF("subject", "object")
+    val tagged = chain.map { case (a, b) => (a, b, "f") }
+      .toDF("subject", "object", "pred")
     val seeds = Seq(1L).toDF("start")
     val tracker = spark.sparkContext.statusTracker
-    val before = tracker.getJobIdsForGroup(null).length
-    val out = Recurse.expand(seeds, edges, maxDepth = 5)
-    val n = out.count()
-    val jobs = tracker.getJobIdsForGroup(null).length - before
-    assert(n == 5)
+    def jobs(out: => org.apache.spark.sql.DataFrame): Int = {
+      val before = tracker.getJobIdsForGroup(null).length
+      assert(out.count() == 5)
+      tracker.getJobIdsForGroup(null).length - before
+    }
+    val expand = jobs(Recurse.expand(seeds, edges, maxDepth = 5))
     // measured: 23 jobs total = seed + ~2.5/level inside the loop (AQE
     // scoped off below the frontier threshold) + the final AQE count
     // over the union; the r9 implementation spent 34. The budget guards
     // against regressing to eager-checkpoint/isEmpty/per-level-AQE.
-    assert(jobs <= 26, s"Recurse.expand spent $jobs jobs for 5 levels")
+    assert(expand <= 26, s"Recurse.expand spent $expand jobs for 5 levels")
+    // the other walks' bounds are what each spent with its own level
+    // loop, before all four shared one
+    val tree = jobs(Recurse.expandTree(seeds, tagged, maxDepth = 5))
+    assert(tree <= 24, s"Recurse.expandTree spent $tree jobs for 5 levels")
+    val global = jobs(Recurse.expandGlobal(Seq(1L).toDF("node"), tagged, maxDepth = 5))
+    assert(global <= 24, s"Recurse.expandGlobal spent $global jobs for 5 levels")
+    val paths = jobs(Recurse.expandPaths(seeds, edges, maxDepth = 5))
+    assert(paths <= 14, s"Recurse.expandPaths spent $paths jobs for 5 levels")
   }
 
   test("kShortestPaths minweight/maxweight bound the returned paths") {

@@ -102,6 +102,25 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("Recurse.expandPaths equals a DFS of the paths that revisit no ancestor (12 random graphs)") {
+    val seeds = Seq(0L, 3L)
+    samples(graphGen, 12).filter(_.nonEmpty).foreach { edges =>
+      // every path of 1-3 edges whose nodes are all distinct
+      def paths(path: Vector[Long]): Seq[Vector[Long]] =
+        if (path.size > 3) Nil
+        else edges.collect { case (a, b) if a == path.last && !path.contains(b) =>
+          path :+ b }.flatMap(p => p +: paths(p))
+      def key(r: (Long, Long, Int, Seq[Long])) = (r._1, r._2, r._3, r._4.mkString(","))
+      val expected = seeds.flatMap(s => paths(Vector(s)))
+        .map(p => (p.head, p.last, p.size - 1, p: Seq[Long])).sortBy(key)
+      val got = Recurse.expandPaths(seeds.toDF("start"),
+          edges.toDF("subject", "object"), maxDepth = 3)
+        .select("start", "node", "depth", "path")
+        .as[(Long, Long, Int, Seq[Long])].collect().toSeq.sortBy(key)
+      assert(got == expected, s"edges=$edges")
+    }
+  }
+
   /** Blocks that each (re)bind `v` through one of the executor's bind
     * paths, over the reference friend-graph fixture (`name` is @lang,
     * and 0xdae/0xdaf carry several name variants).
