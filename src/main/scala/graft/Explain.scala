@@ -7,16 +7,27 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan inspector: for each named query, the formatted physical plan and
   * what building the frame and collecting its full result cost — Spark
   * jobs, Janino compiles (Spark's CodegenMetrics) and wall time — so a
   * read bound by job scheduling or code generation shows without a probe
-  * program. A first line says whether the store is small enough for DQL
-  * JSON reads to run interpreted (see [[graft.exec.DqlExecutor.ReadMode]]).
+  * program. The build also lists the shape of every plan it executed
+  * (a JSON read runs all its plans while building and returns a local
+  * frame, whose own plan shows none of them), so a plan that grows with
+  * the query's depth shows too. A first line says whether the store is
+  * small enough for DQL JSON reads to run interpreted (see
+  * [[graft.exec.DqlExecutor.ReadMode]]).
   * Usage: runMain graft.Explain <sfDir> [queryName...]
   */
-object Explain {
+object Explain extends AdaptiveSparkPlanHelper {
 
   /** The Spark jobs started, the classes compiled and the wall time of
     * one piece of work.
@@ -57,6 +68,57 @@ object Explain {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The shape of one executed plan, AQE's final plan with its query
+    * stages and subqueries: physical nodes (AQE's wrappers not counted),
+    * broadcast and shuffle exchanges, reused exchanges and LeftAnti joins.
+    */
+  final case class PlanShape(action: String, nodes: Int, broadcasts: Int,
+      shuffles: Int, reused: Int, leftAnti: Int) {
+    override def toString: String =
+      s"$action: $nodes nodes, $broadcasts broadcast + $shuffles shuffle " +
+        s"exchanges, $reused reused, $leftAnti LeftAnti joins"
+  }
+
+  private def planShape(action: String, plan: SparkPlan): PlanShape = {
+    val nodes = collectWithSubqueries(plan) {
+      case n if !n.isInstanceOf[AdaptiveSparkPlanExec] &&
+        !n.isInstanceOf[QueryStageExec] => n
+    }
+    PlanShape(action, nodes.size,
+      nodes.count(_.isInstanceOf[BroadcastExchangeLike]),
+      nodes.count(_.isInstanceOf[ShuffleExchangeLike]),
+      nodes.count(_.isInstanceOf[ReusedExchangeExec]),
+      nodes.count {
+        case j: BaseJoinExec => j.joinType == LeftAnti
+        case _ => false
+      })
+  }
+
+  /** Run `body` and return the shapes of the query executions it ran
+    * (collects, counts, writes), in the order they finished.
+    */
+  def executions[T](spark: SparkSession)(body: => T): (T, Seq[PlanShape]) = {
+    val marker = s"graft-executions-${java.util.UUID.randomUUID}"
+    val shapes = new ConcurrentLinkedQueue[PlanShape]()
+    @volatile var done = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq(marker)) done = true
+        else shapes.add(planShape(action, qe.executedPlan))
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      // listener events arrive asynchronously but in order: once the
+      // marker execution is seen, so are all of body's
+      spark.range(1).select(lit(1).as(marker)).collect()
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!done && System.nanoTime < deadline) Thread.sleep(5)
+      (out, shapes.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q1_agg")
@@ -65,10 +127,12 @@ object Explain {
     println(s"read mode: ${graft.exec.DqlExecutor.ReadMode(graft.core.TripleStore(spark, sfDir))}")
     names.foreach { n =>
       println(s"===== $n =====")
-      val (df, build) = measure(spark)(SparkEntry.queries(n)(spark, sfDir))
+      val ((df, build), plans) =
+        executions(spark)(measure(spark)(SparkEntry.queries(n)(spark, sfDir)))
       df.explain("formatted")
       val (rows, collect) = measure(spark)(df.collect().length)
       println(s"build:   $build")
+      plans.zipWithIndex.foreach { case (p, i) => println(s"  plan ${i + 1} $p") }
       println(s"collect: $collect, $rows rows")
     }
     spark.stop()

@@ -702,6 +702,24 @@ final class DqlExecutor(ts: GraphStore) {
     else b0
   }
 
+  /** `f as var(func: ...)`: the block's root uid set becomes uid var f
+    * (reference block-level var assignment, query/query.go fillVars);
+    * the block's own order/pagination restricts the bound set
+    * (TestGeneratorMultiRootVarOrderOffset). `frontier` is the block's
+    * filtered seed.
+    */
+  private def bindBlockVar(b: QueryBlock, frontier: DataFrame): Unit =
+    b.blockVar.foreach { v =>
+      // unique: seedUids' contract (distinct or provably unique seed);
+      // filters and orderAndPage only drop/order rows, never fan them
+      bindVar(v,
+        if (b.order.nonEmpty || b.page.first.isDefined ||
+            b.page.offset.isDefined || b.page.after.isDefined)
+          orderAndPage(frontier, "uid", b.order, b.page)
+        else frontier,
+        uniqueUid = true)
+    }
+
   private def flatBlock(b0: QueryBlock): DataFrame = {
     validateSels(b0.selections)
     reflexChain = if (b0.ignoreReflex) Some(Nil) else None
@@ -729,20 +747,7 @@ final class DqlExecutor(ts: GraphStore) {
           col("value").as(s"__seedval_${b.func.pred.drop(4)}"))
       else seedUids(b.func)
     b.filter.foreach { f => frontier = applyFilter(frontier, "uid", f) }
-    // `f as var(func: ...)`: the block's root uid set becomes uid var f
-    // (reference block-level var assignment, query/query.go fillVars);
-    // the block's own order/pagination restricts the bound set
-    // (TestGeneratorMultiRootVarOrderOffset)
-    b.blockVar.foreach { v =>
-      // unique: seedUids' contract (distinct or provably unique seed);
-      // filters and orderAndPage only drop/order rows, never fan them
-      bindVar(v,
-        if (b.order.nonEmpty || b.page.first.isDefined ||
-            b.page.offset.isDefined || b.page.after.isDefined)
-          orderAndPage(frontier, "uid", b.order, b.page)
-        else frontier,
-        uniqueUid = true)
-    }
+    bindBlockVar(b, frontier)
 
     b.recurse match {
       case Some(r) =>
@@ -2753,15 +2758,22 @@ final class DqlExecutor(ts: GraphStore) {
         val a = orderAttr(o.pred).select(col("subject").as(s"__ws$i"), col("value").as(s"__wv$i"))
         cur = cur.join(a, qcol(name) === col(s"__ws$i"), "left").drop(s"__ws$i")
         if (o.desc) col(s"__wv$i").desc_nulls_last else col(s"__wv$i").asc_nulls_last
-      } ++ facetOrd :+ qcol(name).asc
+      } ++ facetOrd :+ qcol(name).asc_nulls_last
+      // a parent uid repeats once per path to it (two roots sharing a
+      // friend, or a fanned sibling edge), and every copy pages the same
+      // children: the reference pages each parent uid's uidMatrix row
+      // once. dense_rank gives a child one rank across all the copies,
+      // where row_number would count its copies as further children.
       val w = Window.partitionBy(qcol(uidCol)).orderBy(ordCols: _*)
-      cur = cur.withColumn("__rn", row_number().over(w))
+      cur = cur.withColumn("__rn", dense_rank().over(w))
       if (repageAfterChildren) {
         // page filter applied after the child subtree prunes (below)
       } else if (sel.page.first.exists(_ < 0)) {
-        // negative first: keep the LAST |f| children per parent — a count
-        // over the same window partition (no extra shuffle)
-        val cnt = count(lit(1)).over(Window.partitionBy(qcol(uidCol)))
+        // negative first: keep the LAST |f| children per parent — the
+        // highest child rank over the same window partition (no extra
+        // shuffle; a null child ranks last and is no child)
+        val cnt = max(when(qcol(name).isNotNull, col("__rn")))
+          .over(Window.partitionBy(qcol(uidCol)))
         cur = cur.withColumn("__cn", cnt)
           .filter(qcol(name).isNull ||
             col("__rn") > col("__cn") + sel.page.first.get)
@@ -2771,13 +2783,22 @@ final class DqlExecutor(ts: GraphStore) {
         val hi = sel.page.first.map(f => lo + f).getOrElse(Int.MaxValue)
         cur = cur.filter(qcol(name).isNull || (col("__rn") > lo && col("__rn") <= hi))
       }
-      if (!cascade && !repageAfterChildren &&
-          (sel.page.offset.isDefined || sel.page.first.isDefined)) {
-        // a parent whose children ALL fall outside the page still
-        // renders, children omitted (reference
-        // TestToFastJSONFirstOffsetOutOfBound)
-        val lost = df.join(cur.select(qcol(uidCol)).distinct(),
-          Seq(uidCol), "left_anti")
+      // A parent whose children ALL fall outside the page still renders,
+      // children omitted (reference TestToFastJSONFirstOffsetOutOfBound).
+      // Without cascade the edge join is a left join, so every parent
+      // row reaches the page with a child rank from 1 or a null child,
+      // and the filter above keeps every null child, rank 1 when
+      // offset = 0 and first > 0 (or absent), and the top rank when
+      // first < 0. A parent can lose all its rows only to first: 0 or
+      // to an offset >= its child count; only then is the lost set
+      // planned, since the anti-join re-embeds the level's input plan.
+      val pageCanEmpty = sel.page.first.contains(0) ||
+        (sel.page.offset.exists(_ > 0) && !sel.page.first.exists(_ < 0))
+      if (!cascade && !repageAfterChildren && pageCanEmpty) {
+        // a null parent (no edge one level up) is never lost: its one
+        // row keeps its null child
+        val lost = df.filter(qcol(uidCol).isNotNull)
+          .join(cur.select(qcol(uidCol)).distinct(), Seq(uidCol), "left_anti")
         cur = cur.unionByName(lost, allowMissingColumns = true)
       }
       cur = cur.drop(sel.order.indices.map(i => s"__wv$i"): _*)
@@ -3545,47 +3566,51 @@ final class DqlExecutor(ts: GraphStore) {
   def rdfAll(query: String): String = {
     val q = Parser.parse(query)
     val sb = new StringBuilder
-    q.blocks.filter(_.name != "var").foreach { b =>
-      if (b.normalize)
-        throw new IllegalArgumentException(
-          "normalize directive is not supported in the rdf output format")
-      if (b.ignoreReflex)
-        throw new IllegalArgumentException(
-          "ignorereflex directive is not supported in the rdf output format")
-      if (b.groupby.nonEmpty)
-        throw new IllegalArgumentException(
-          "groupby is not supported in rdf output format")
-      // selection-level rejections surface before any evaluation (the
-      // reference validates the whole subgraph first)
-      def validateRdf(ss: Seq[Selection]): Unit = ss.foreach { s =>
-        if (s.isCount && s.pred == "uid")
+    q.blocks.foreach {
+      // a var block renders nothing; it binds its vars for the blocks
+      // after it, as in jsonAllAst
+      case b if b.name == "var" => flatBlock(b)
+      case b =>
+        if (b.normalize)
           throw new IllegalArgumentException(
-            "uid count is not supported in the rdf output format")
-        if (s.checkPwd.isDefined)
+            "normalize directive is not supported in the rdf output format")
+        if (b.ignoreReflex)
           throw new IllegalArgumentException(
-            "chkpwd function is not supported in the rdf output format")
-        if (s.facetFetch || s.facetKeys.nonEmpty)
-          throw new IllegalArgumentException(
-            "facets are not supported in the rdf output format")
-        if (s.groupby.nonEmpty)
+            "ignorereflex directive is not supported in the rdf output format")
+        if (b.groupby.nonEmpty)
           throw new IllegalArgumentException(
             "groupby is not supported in rdf output format")
-        validateRdf(s.children)
-      }
-      validateRdf(b.selections)
-      if (b.shortest.isEmpty) {
-        var frontier = seedUids(b.func)
-        b.filter.foreach(f => frontier = applyFilter(frontier, "uid", f))
-        val ordered0 = orderAndPage(frontier, "uid", b.order, b.page)
-        val ordered =
-          if (b.order.isEmpty) ordered0.withColumn("__r", col("uid"))
-          else ordered0.withColumn("__r", monotonically_increasing_id())
-        b.recurse match {
-          case Some(r) =>
-            rdfRecurse(sb, ordered, b.selections, r)
-          case None => rdfWalk(sb, ordered, b.selections)
+        // selection-level rejections surface before any evaluation (the
+        // reference validates the whole subgraph first)
+        def validateRdf(ss: Seq[Selection]): Unit = ss.foreach { s =>
+          if (s.isCount && s.pred == "uid")
+            throw new IllegalArgumentException(
+              "uid count is not supported in the rdf output format")
+          if (s.checkPwd.isDefined)
+            throw new IllegalArgumentException(
+              "chkpwd function is not supported in the rdf output format")
+          if (s.facetFetch || s.facetKeys.nonEmpty)
+            throw new IllegalArgumentException(
+              "facets are not supported in the rdf output format")
+          if (s.groupby.nonEmpty)
+            throw new IllegalArgumentException(
+              "groupby is not supported in rdf output format")
+          validateRdf(s.children)
         }
-      }
+        validateRdf(b.selections)
+        if (b.shortest.isEmpty) {
+          var frontier = seedUids(b.func)
+          b.filter.foreach(f => frontier = applyFilter(frontier, "uid", f))
+          val ordered0 = orderAndPage(frontier, "uid", b.order, b.page)
+          val ordered =
+            if (b.order.isEmpty) ordered0.withColumn("__r", col("uid"))
+            else ordered0.withColumn("__r", monotonically_increasing_id())
+          b.recurse match {
+            case Some(r) =>
+              rdfRecurse(sb, ordered, b.selections, r)
+            case None => rdfWalk(sb, ordered, b.selections)
+          }
+        }
     }
     sb.result()
   }
@@ -3841,6 +3866,7 @@ final class DqlExecutor(ts: GraphStore) {
       b.selections.exists(s => s.pred == "uid" && !s.isCount)
     var frontier = seedUids(b.func)
     b.filter.foreach { f => frontier = applyFilter(frontier, "uid", f) }
+    bindBlockVar(b, frontier)
     val t = recurseTemplate(frontier, b.selections, r,
       frontier.select(col("uid").as("start")))()
     val (preds, scalars) = (t.edges, t.leaves)

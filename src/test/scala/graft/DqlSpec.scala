@@ -578,6 +578,23 @@ class DqlSpec extends AnyFunSuite {
     }
   }
 
+  test("a paged nested read plans no anti-join and reuses no exchange") {
+    def plans(placed: String) = Explain.executions(spark)(dql(
+      s"""{ q(func: uid(${CB + 1}, ${CB + 2}, ${CB + 4})) {
+         |    name
+         |    placed $placed {
+         |      orderstatus
+         |      has_line (first: 2) { returnflag } } } }""".stripMargin))._2
+    // dql_json_deep's shape: no page can empty a parent, so no level
+    // re-plans its input to restore one
+    val deep = plans("(orderdesc: totalprice, first: 2)")
+    assert(deep.nonEmpty)
+    assert(deep.forall(p => p.leftAnti == 0 && p.reused == 0), deep.mkString("\n"))
+    // an offset can empty a parent, which the anti-join restores
+    val offset = plans("(first: 1, offset: 1)")
+    assert(offset.exists(_.leftAnti > 0), offset.mkString("\n"))
+  }
+
   test("a @recurse read's collect starts no Spark job") {
     val (rows, cost) = callerCollect(dql(
       """{ q(func: le(acctbal, -800)) @recurse(depth: 3) {

@@ -321,6 +321,13 @@ class GoldenFixtureSpec extends AnyFunSuite {
     }
   }
 
+  test("a named @recurse block binds its own block var to its roots") {
+    val me = "me(func: uid(a)) { name }"
+    val recursed = meBlock(s"{ a as r(func: uid(0x01)) @recurse(depth: 2) { friend name } $me }")
+    assert(recursed == Seq("""{"name":"Michonne"}"""))
+    assert(recursed == meBlock(s"{ a as r(func: uid(0x01)) { friend { name } } $me }"))
+  }
+
   test("a var @recurse block rejects a nested template and a repeated expand() predicate") {
     def err(query: String): String = {
       val json = intercept[IllegalArgumentException](
@@ -6333,6 +6340,13 @@ class GoldenFixtureSpec extends AnyFunSuite {
       new DqlExecutor(store).rdfAll(query)
     }
     assert(thrown.getMessage.contains(msg), thrown.getMessage)
+  }
+
+  test("RDF output evaluates var blocks, so a later block reads their vars") {
+    val query = "{ var(func: uid(0x01)) { a as friend } me(func: uid(a)) { name } }"
+    rdfGolden(query,
+      "<0x17> <name> \"Rick Grimes\" .\n<0x18> <name> \"Glenn Rhee\" .\n" +
+        "<0x19> <name> \"Daryl Dixon\" .\n<0x1f> <name> \"Andrea\" .\n")
   }
 
   test("golden: TestRDFResult (rdf_result_test.go)") {

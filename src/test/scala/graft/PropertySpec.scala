@@ -1,12 +1,16 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.{SchemaRegistry, TripleFrameStore}
 import graft.dql.Parser
 import graft.exec.DqlExecutor
 import graft.operators.{Recurse, ShortestPath}
+import graft.sources.RdfSource
 
 /** Property tests against in-memory reference implementations
   * (SURVEY §5 adopted plan item 3: set algebra / traversal vs oracles
@@ -167,6 +171,72 @@ class PropertySpec extends AnyFunSuite {
       assert(got.distinct == got, s"duplicate uid after:\n${seq.mkString("\n")}")
       assert(got.nonEmpty && got == uidsOf(Seq(last)),
         s"rebind sequence differs from its last bind:\n${seq.mkString("\n")}")
+    }
+  }
+
+  /** A `friend` graph over nodes 0-7 (uids 0x1-0x8), each node named. */
+  private def friendStore(edges: Seq[(Long, Long)]): TripleFrameStore = {
+    val (preds, types) = SchemaRegistry.parseAlter("name: string .\nfriend: [uid] .")
+    val reg = new SchemaRegistry(preds.map(p => p.name -> p).toMap,
+      types.map(t => t.name -> t).toMap)
+    def u(n: Long) = s"<0x${(n + 1).toHexString}>"
+    val lines = (0L to 7L).map(n => s"""${u(n)} <name> "n$n" .""") ++
+      edges.map { case (a, b) => s"${u(a)} <friend> ${u(b)} ." }
+    new TripleFrameStore(spark, reg, RdfSource.parse(lines.toDF("line")).localCheckpoint(),
+      Map.empty, materialize = false)
+  }
+
+  // each child page and its slice of one parent's uid-sorted children
+  // (reference applyOrderAndPagination, query/query.go:2511)
+  private val childPages: Seq[(String, Seq[Long] => Seq[Long])] = Seq(
+    "" -> (cs => cs),
+    "(first: 2)" -> (_.take(2)),
+    "(first: 1)" -> (_.take(1)),
+    "(first: 0)" -> (_ => Nil),
+    "(first: -2)" -> (_.takeRight(2)),
+    "(offset: 0)" -> (cs => cs),
+    "(offset: 1)" -> (_.drop(1)),
+    "(offset: 9)" -> (_ => Nil),
+    "(first: 2, offset: 1)" -> (_.slice(1, 3)),
+    "(first: 1, offset: 2)" -> (_.slice(2, 3)),
+    "(after: 0x4)" -> (_.filter(_ > 4)),
+    "(first: 1, after: 0x3)" -> (_.filter(_ > 3).take(1)))
+
+  test("nested child paging equals per-parent slices of uid-sorted children (12 random graphs)") {
+    val json = new ObjectMapper()
+    val graphs = samples(graphGen, 12)
+    val outDegrees = graphs.flatMap(es => (0L to 7L).map(n => es.count(_._1 == n)))
+    assert(outDegrees.contains(0) && outDegrees.contains(1) && outDegrees.exists(_ >= 3))
+    for ((edges, g) <- graphs.zipWithIndex; k <- 0 until 2) {
+      // the outer page walks every option; the inner one is drawn
+      val (p1, slice1) = childPages((2 * g + k) % childPages.size)
+      val (p2, slice2) = Gen.oneOf(childPages)
+        .apply(Gen.Parameters.default, Seed(100L + 2 * g + k)).get
+      val kids = edges.groupBy(_._1).view
+        .mapValues(_.map(_._2 + 1).sorted).toMap.withDefaultValue(Nil)
+      // a node renders its uid and name always, and its edge key only
+      // when its page holds a child
+      def node(uid: Long, pages: Seq[Seq[Long] => Seq[Long]]): ObjectNode = {
+        val o = json.createObjectNode()
+          .put("uid", s"0x${uid.toHexString}").put("name", s"n${uid - 1}")
+        pages.headOption.foreach { page =>
+          val cs = page(kids(uid - 1))
+          if (cs.nonEmpty) {
+            val a = o.putArray("friend")
+            cs.foreach(c => a.add(node(c, pages.tail)))
+          }
+        }
+        o
+      }
+      val q = s"{ q(func: uid(${(1 to 8).map(i => s"0x$i").mkString(", ")})) " +
+        s"{ name friend $p1 { name friend $p2 { name } } } }"
+      val got = new DqlExecutor(friendStore(edges)).jsonAllAst(Parser.parse(q))
+        .select("uid", "json").as[(Long, String)].collect().sortBy(_._1).toSeq
+      val expected = (1L to 8L).map(u => (u, node(u, Seq(slice1, slice2))))
+      assert(got.map(_._1) == expected.map(_._1), s"$q\nedges=$edges")
+      got.zip(expected).foreach { case ((u, j), (_, e)) =>
+        assert(json.readTree(j) == e, s"uid $u of $q\nedges=$edges\ngot $j\nexpected $e")
+      }
     }
   }
 
