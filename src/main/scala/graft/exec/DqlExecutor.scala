@@ -10,7 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
   Descending, InterpretedOrdering, NullsFirst, NullsLast, SortOrder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType,
+  StructField, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{GraphStore, SessionConf}
@@ -91,26 +92,16 @@ final class DqlExecutor(ts: GraphStore) {
     scala.collection.mutable.LinkedHashMap.empty[String, Binding]
 
   /** A var's flat column in the block frame that bound it: the column
-    * holding the value, the uid column of the level that bound it,
-    * whether the column is a PER-UID CONSTANT of that frame, and the
-    * block (a [[flatBlock]] sequence number) it was bound in. The column
-    * is LIVE while `block` is the current block — parent-level binds
-    * stay visible inside child projections (the column rides the flat
-    * join); an entry left by an earlier block is stale. Level-based
-    * aggregation (reference query/query.go:1042 evalLevelAgg) and
-    * in-place math reads use these.
+    * holding the value, the uid column of the level that bound it, and
+    * whether the column is a PER-UID CONSTANT of that frame. The map
+    * holds the CURRENT block's binds only ([[flatBlock]] clears it):
+    * parent-level binds stay visible inside child projections (the
+    * column rides the flat join), while a var of an earlier block is
+    * read through its [[Binding]]. Level-based aggregation (reference
+    * query/query.go:1042 evalLevelAgg) and in-place math reads use these.
     */
-  private case class VarCol(column: String, uidCol: String,
-      uidConst: Boolean, block: Int)
+  private case class VarCol(column: String, uidCol: String, uidConst: Boolean)
   private val varCols = scala.collection.mutable.Map.empty[String, VarCol]
-  private var blockSeq = 0
-
-  /** @ignorereflex ancestor chain: when Some, each traversal level
-    * filters child uids against every ancestor uid column of the row —
-    * the reference's per-path reflexive exclusion (query1 TestReflexive:
-    * Rick's friend list under Michonne omits Michonne).
-    */
-  private var reflexChain: Option[List[String]] = None
 
   /** Duplicate output keys at one selection level are a repeated
     * subgraph (reference TestMultipleSamePredicateInBlockFail1-3,
@@ -225,8 +216,6 @@ final class DqlExecutor(ts: GraphStore) {
           case o => throw new IllegalArgumentException(s"bad root math fn $o")
         }
     }
-    val session = ts.spark
-    import session.implicits._
     b.selections.map { sel =>
       if (sel.aggOp.isDefined && sel.valRef.isDefined) {
         val vf = vars.getOrElse(sel.valRef.get,
@@ -320,8 +309,6 @@ final class DqlExecutor(ts: GraphStore) {
 
   private def emptyBlock(b: QueryBlock): DataFrame = {
     emptyBlockObjs(b) // side effect: scalar var binds
-    val session = ts.spark
-    import session.implicits._
     Seq.empty[Long].toDF("uid")
   }
 
@@ -431,10 +418,11 @@ final class DqlExecutor(ts: GraphStore) {
       }
     }
 
-  /** A `@recurse` template selection that walks an edge; every other
+  /** A selection that walks an edge: a uid predicate, forward or
+    * reverse, that is not counted. In a `@recurse` template every other
     * known selection is a per-level leaf.
     */
-  private def recurseEdge(s: Selection): Boolean =
+  private def isEdge(s: Selection): Boolean =
     !s.isCount && (schema.isUidPredicate(s.pred) || s.reverse)
 
   /** A resolved `@recurse` template: its known selections in query
@@ -443,11 +431,11 @@ final class DqlExecutor(ts: GraphStore) {
     */
   private final class RecurseTemplate(val sels: Seq[Selection],
       val tree: Option[DataFrame]) {
-    def edges: Seq[Selection] = sels.filter(recurseEdge)
+    def edges: Seq[Selection] = sels.filter(isEdge)
     /** The scalar leaves of the flat and JSON outputs (count leaves
       * render in RDF only).
       */
-    def leaves: Seq[Selection] = sels.filterNot(s => recurseEdge(s) || s.isCount)
+    def leaves: Seq[Selection] = sels.filterNot(s => isEdge(s) || s.isCount)
   }
 
   /** The `@recurse` template builder of the flat, JSON and RDF outputs:
@@ -486,7 +474,7 @@ final class DqlExecutor(ts: GraphStore) {
     val sels = all.filter(s => s.pred != "uid" &&
       (s.isCount || schema.predicates.contains(s.pred)))
     val tagged = sels.zipWithIndex.collect {
-      case (s, i) if recurseEdge(s) => s -> tag(s, i) }
+      case (s, i) if isEdge(s) => s -> tag(s, i) }
     val tree =
       if (tagged.isEmpty || hops == 0) None
       else {
@@ -515,7 +503,7 @@ final class DqlExecutor(ts: GraphStore) {
         s.varName.foreach { v =>
           val i = sels.indexOf(s)
           if (s.pred == "uid") bindVar(v, allNodes, uniqueUid = true)
-          else if (i >= 0 && recurseEdge(s))
+          else if (i >= 0 && isEdge(s))
             bindVar(v, tree.fold(allNodes.limit(0)) { t =>
                 t.filter(col("pred") === tag(s, i))
                   .select(col("node").as("uid")).distinct() },
@@ -690,16 +678,35 @@ final class DqlExecutor(ts: GraphStore) {
   private def rewriteBlock(b: QueryBlock): QueryBlock = {
     val b0 =
       if (b.recurse.isEmpty && hasExpand(b.selections))
-        b.copy(selections = rewriteExpands({
-          var f = seedUids(b.func)
-          b.filter.foreach { fl => f = applyFilter(f, "uid", fl) }
-          f
-        }, b.selections))
+        b.copy(selections = rewriteExpands(rootFrontier(b), b.selections))
       else b
     if (b0.selections.exists(sx => sx.langChain == Seq("*") ||
         sx.children.nonEmpty))
       b0.copy(selections = expandStarSels(b0.selections))
     else b0
+  }
+
+  /** The block's root uid set before its order and page: the root
+    * function's seed (`seed` when given), then the block's filter. Every
+    * output — flat, JSON and RDF — starts from it.
+    */
+  private def rootFrontier(b: QueryBlock,
+      seed: Option[DataFrame] = None): DataFrame =
+    b.filter.foldLeft(seed.getOrElse(seedUids(b.func)))(applyFilter(_, "uid", _))
+
+  /** A `@recurse` block's roots: the root frontier in the block's order
+    * and page — the reference runs ProcessGraph on the root before it
+    * expands (query/recurse.go:19 expandRecurse).
+    */
+  private def recurseRoots(frontier: DataFrame, b: QueryBlock): DataFrame =
+    orderAndPage(frontier, "uid", b.order, b.page)
+
+  /** The uids of `roots` (a [[recurseRoots]] frame) in output order: the
+    * block's order, else uid order. One collect.
+    */
+  private def rootOrder(roots: DataFrame, b: QueryBlock): Seq[Long] = {
+    val us = roots.select(col("uid")).collect().toSeq.map(_.getLong(0))
+    if (b.order.isEmpty) us.sorted else us
   }
 
   /** `f as var(func: ...)`: the block's root uid set becomes uid var f
@@ -720,12 +727,15 @@ final class DqlExecutor(ts: GraphStore) {
         uniqueUid = true)
     }
 
-  private def flatBlock(b0: QueryBlock): DataFrame = {
+  /** Evaluate one block to its flat frame. `childRanks` keeps each
+    * traversal's per-parent child order as `<edge column>__rn`, which
+    * the JSON and RDF renderers order child arrays and edge lines by.
+    */
+  private def flatBlock(b0: QueryBlock, childRanks: Boolean = false): DataFrame = {
     validateSels(b0.selections)
-    reflexChain = if (b0.ignoreReflex) Some(Nil) else None
     if (b0.func.name == "empty") return emptyBlock(b0)
     val b = rewriteBlock(b0)
-    blockSeq += 1
+    varCols.clear()
     b.shortest.foreach { sa => return shortestBlock(b, sa) }
     // val-seeded val-ordered root (`func: ge(val(v), x), orderdesc:
     // val(v)`): the seed scan of the var map already carries the sort
@@ -738,15 +748,14 @@ final class DqlExecutor(ts: GraphStore) {
       b.blockVar.isEmpty && b.func.pred.startsWith("val:") &&
       b.order.size == 1 && b.order.head.pred == b.func.pred &&
       !b.selections.exists(_.groupby.nonEmpty)
-    var frontier =
+    val frontier = rootFrontier(b,
       if (preOrderedVal)
         // __ov0 is consumed (and dropped) by orderAndPage; the
         // __seedval_ rider survives pagination so a `val(v)` selection
         // of the SAME var reads it in place (project drops it after)
-        valSeedRows(b.func).select(col("uid"), col("value").as("__ov0"),
-          col("value").as(s"__seedval_${b.func.pred.drop(4)}"))
-      else seedUids(b.func)
-    b.filter.foreach { f => frontier = applyFilter(frontier, "uid", f) }
+        Some(valSeedRows(b.func).select(col("uid"), col("value").as("__ov0"),
+          col("value").as(s"__seedval_${b.func.pred.drop(4)}")))
+      else None)
     bindBlockVar(b, frontier)
 
     b.recurse match {
@@ -757,10 +766,11 @@ final class DqlExecutor(ts: GraphStore) {
         // the full child template each level, query/recurse.go:19
         // expandRecurse — `{ name friend }` under @recurse returns names
         // at every depth, not bare uids).
-        lazy val seeds = frontier.select(col("uid").as("start"))
-        val t = recurseTemplate(frontier, b.selections, r, seeds)()
+        val rootUids = recurseRoots(frontier, b)
+        lazy val seeds = rootUids.select(col("uid").as("start"))
+        val t = recurseTemplate(rootUids, b.selections, r, seeds)()
         // depth 0 = the template applied to the root itself
-        lazy val roots = frontier.select(col("uid").as("start"),
+        lazy val roots = rootUids.select(col("uid").as("start"),
           col("uid").as("node"), lit(0).as("depth"))
         // the flat contract: one row per (start, node) at its first-reach
         // depth, seeds excluded (re-rendered occurrences of seen nodes
@@ -845,6 +855,7 @@ final class DqlExecutor(ts: GraphStore) {
           case _ => Set.empty
         }
         val projected0 = project(paged, "uid", b.selections, fullCascade, "",
+          childRanks, if (b.ignoreReflex) Some(Nil) else None,
           detached = b.name == "var" && !b.cascade,
           cascadeFields = cFields, rootType = bareTypeRoot,
           frontierTypes = rootFrontierTypes,
@@ -962,8 +973,6 @@ final class DqlExecutor(ts: GraphStore) {
       // edge (reference TestShortestPathWithDepth depth_0 subcases)
       case (Some(f), Some(t)) if sa.depth > 0 => (f, t)
       case _ =>
-        val session = ts.spark
-        import session.implicits._
         b.blockVar.foreach(v => bindVar(v,
           Seq.empty[Long].toDF("uid"), uniqueUid = false))
         return Seq.empty[(Int, Double, String)].toDF("rank", "dist", "path")
@@ -1156,8 +1165,6 @@ final class DqlExecutor(ts: GraphStore) {
         require(a.matches("(0x[0-9a-fA-F]+|\\d+)"),
           s"""Value "$a" in uid_in is not a number""")
       }
-      val session = ts.spark
-      import session.implicits._
       val sets = varArgs.map(a =>
           vars(a.stripPrefix("\u0000uid:")).frame.select(col("uid"))) ++
         (if (litArgs.nonEmpty) Seq(litArgs.map(parseUid).toDF("uid")) else Nil)
@@ -1965,9 +1972,17 @@ final class DqlExecutor(ts: GraphStore) {
     * no order/page/cascade restriction) — the shared-rebind snapshot
     * then serves the uid var too, saving the var's own checkpoint
     * execution of the seed plan.
+    *
+    * `childRanks` keeps every traversal's child rank column (see
+    * [[flatBlock]]). `reflex` is the @ignorereflex ancestor chain: when
+    * Some, each traversal level filters child uids against every
+    * ancestor uid column of the row — the reference's per-path reflexive
+    * exclusion (query1 TestReflexive: Rick's friend list under Michonne
+    * omits Michonne).
     */
   private def project(df: DataFrame, uidCol: String, sels: Seq[Selection],
-      cascade: Boolean, prefix: String, detached: Boolean = false,
+      cascade: Boolean, prefix: String, childRanks: Boolean,
+      reflex: Option[List[String]], detached: Boolean = false,
       cascadeFields: Seq[String] = Nil,
       rootType: Option[String] = None,
       frontierTypes: Set[String] = Set.empty,
@@ -2026,7 +2041,7 @@ final class DqlExecutor(ts: GraphStore) {
       bindVar(v, if (dedup) mk(cur).dropDuplicates("uid") else mk(cur),
         uniqueUid = true)
       sharedRebinds += (v -> mk)
-      varCols(v) = VarCol(c, uidCol, uidConst = true, blockSeq)
+      varCols(v) = VarCol(c, uidCol, uidConst = true)
     }
     // tablet-group fetch: sibling plain-scalar selections whose
     // predicates co-locate in one source table join ONCE through the
@@ -2100,7 +2115,7 @@ final class DqlExecutor(ts: GraphStore) {
           // (uid, value) map back on: a 3-var chain over lineitem then
           // runs as ONE projection pass, no self-joins (each skipped
           // join was a full shuffle of the block's rows)
-          varCols.get(r).filter(_.block == blockSeq) match {
+          varCols.get(r) match {
             // a same-level read on a FANNED frame must go through the
             // var's dedup'd (uid, value) snapshot UNLESS the column is a
             // per-uid constant (uidConst — every bindColumn bind): then
@@ -2109,7 +2124,7 @@ final class DqlExecutor(ts: GraphStore) {
             // the var's own checkpoint execution mid-pass (measured:
             // dql_level_agg ran its mid-block plan once per fanned math
             // ref).
-            case Some(VarCol(cname, ucol, uidConst, _)) if
+            case Some(VarCol(cname, ucol, uidConst)) if
                 base.columns.contains(cname) && ucol == uidCol &&
                 (!fanned || uidConst) &&
                 !cname.startsWith("__fvv_") =>
@@ -2117,7 +2132,7 @@ final class DqlExecutor(ts: GraphStore) {
               // MAP is the in-edge sum, so they always join the map)
               base = base.withColumn(s"__m_$r", qcol(cname))
               uidKeyed += s"__m_$r"
-            case Some(VarCol(cname, ucol, _, _)) if
+            case Some(VarCol(cname, ucol, _)) if
                 base.columns.contains(cname) && ucol != uidCol =>
               // cross-level read: transform the var to THIS level's uid
               // space by summing along distinct tree paths from the
@@ -2189,7 +2204,7 @@ final class DqlExecutor(ts: GraphStore) {
         // (parent, child) pair first so sibling-cartesian row
         // duplication cannot inflate sums.
         import org.apache.spark.sql.types.DecimalType
-        val VarCol(srcCol, childKey, _, _) = varCols(sel.valRef.get)
+        val VarCol(srcCol, childKey, _) = varCols(sel.valRef.get)
         // aggregating a var bound by a SIBLING at this same level is an
         // error — the aggregate must sit one level above the binding
         // (reference TestMultiLevelAgg1Error)
@@ -2337,7 +2352,7 @@ final class DqlExecutor(ts: GraphStore) {
         sel.varName.foreach { v =>
           bindVar(v, cur.select(qcol(uidCol).as("uid"), qcol(name).as("value")),
             uniqueUid = false)
-          varCols(v) = VarCol(name, uidCol, uidConst = false, blockSeq)
+          varCols(v) = VarCol(name, uidCol, uidConst = false)
         }
         // the frame just went empty: earlier live-column binds must NOT
         // be rebound from it
@@ -2414,14 +2429,14 @@ final class DqlExecutor(ts: GraphStore) {
         if (detached && !cascade && sel.groupby.isEmpty && !neededHere &&
             !readsOuter) {
           val sub = traverse(cur.select(qcol(uidCol)).distinct(), uidCol,
-            sel, name, cascade, detached, cascadeFields)
+            sel, name, cascade, childRanks, reflex, detached, cascadeFields)
           sel.varName.foreach { v =>
             bindVar(v, sub.select(qcol(name).as("uid"))
               .filter(col("uid").isNotNull).distinct(), uniqueUid = true)
           }
         } else {
-          cur = traverse(cur, uidCol, sel, name, cascade, detached,
-            cascadeFields)
+          cur = traverse(cur, uidCol, sel, name, cascade, childRanks, reflex,
+            detached, cascadeFields)
           fanned = true
           // uid variable: the traversal's target frontier (f as friend)
           sel.varName.foreach { v =>
@@ -2659,8 +2674,9 @@ final class DqlExecutor(ts: GraphStore) {
     * query/query.go:2511).
     */
   private def traverse(df: DataFrame, uidCol: String, sel: Selection,
-      name: String, cascade: Boolean, detached: Boolean = false,
-      cascadeFields: Seq[String] = Nil): DataFrame = {
+      name: String, cascade: Boolean, childRanks: Boolean,
+      reflex: Option[List[String]], detached: Boolean,
+      cascadeFields: Seq[String]): DataFrame = {
     val joinType = if (cascade) "inner" else "left"
     val src = if (sel.reverse) ts.reverseEdge(sel.pred) else ts.edge(sel.pred)
     val needMap = sel.facetFetch || sel.facetKeys.nonEmpty ||
@@ -2693,7 +2709,7 @@ final class DqlExecutor(ts: GraphStore) {
     // global). NULL the child rather than drop the row: a parent whose
     // only children are ancestors still renders, nested list omitted
     // (Rick stays under Michonne even though his one friend IS Michonne)
-    reflexChain.foreach { chain =>
+    reflex.foreach { chain =>
       val anc = chain :+ uidCol
       val excluded = anc.map(a => qcol(name) <=> qcol(a)).reduce(_ || _)
       cur = cur.withColumn(name,
@@ -2735,7 +2751,7 @@ final class DqlExecutor(ts: GraphStore) {
       sel.children.nonEmpty &&
       (sel.page.offset.isDefined || sel.page.first.exists(_ >= 0))
     val needWindow = sel.order.nonEmpty || sel.facetOrder.nonEmpty ||
-      sel.page.first.isDefined || sel.page.offset.isDefined || keepChildRank
+      sel.page.first.isDefined || sel.page.offset.isDefined || childRanks
     if (needWindow) {
       // @facets(orderasc: k1, orderdesc: k2) sorts the adjacency by the
       // edge facets in key order (reference sortAndPaginateUsingFacet,
@@ -2804,7 +2820,7 @@ final class DqlExecutor(ts: GraphStore) {
       cur = cur.drop(sel.order.indices.map(i => s"__wv$i"): _*)
       // JSON rendering keeps the traversal order so child arrays come out
       // in requested order (reference outputnode preserves uidMatrix order)
-      cur = if (keepChildRank || repageAfterChildren)
+      cur = if (childRanks || repageAfterChildren)
         cur.withColumnRenamed("__rn", s"${name}__rn")
       else cur.drop("__rn")
     }
@@ -2849,7 +2865,7 @@ final class DqlExecutor(ts: GraphStore) {
             .groupBy(col("uid")).agg(sum(col("value")).as("value"))
         else src.select(col("uid"), col("value")).dropDuplicates("uid"),
         uniqueUid = false)
-      varCols(v) = VarCol(keep, name, uidConst = false, blockSeq)
+      varCols(v) = VarCol(keep, name, uidConst = false)
     }
     cur = cur.drop(needFt.map(k => s"__ft_$k"): _*)
     // bind the target frontier EARLY so a deeper selection of THIS
@@ -2870,18 +2886,15 @@ final class DqlExecutor(ts: GraphStore) {
       // (systest TestCascadeParams "cascade at root and parameterized at
       // lower level": friends under a root @cascade render without the
       // unlisted age); __all__ spells the full form.
-      val savedChain = reflexChain
-      reflexChain = reflexChain.map(_ :+ uidCol)
       // frontier identity across the hop: reverse edges land on the
       // edge's owner types, forward edges on the store's pinned target
       // types (empty = unknown)
       val childTypes =
         if (sel.reverse) ownerTypes(sel.pred)
         else ts.edgeTargetTypes(sel.pred)
-      val sub0 = try project(cur, name, sel.children,
-          subFull, s"${name}_", detached, cascadeFields = effFields,
-          frontierTypes = childTypes)
-        finally reflexChain = savedChain
+      val sub0 = project(cur, name, sel.children, subFull, s"${name}_",
+        childRanks, reflex.map(_ :+ uidCol), detached,
+        cascadeFields = effFields, frontierTypes = childTypes)
       // pruning at THIS level: the LISTED fields that this level
       // actually queries must be present on the edge target. An
       // UNLISTED queried field is not required; a listed-but-unqueried
@@ -2933,7 +2946,7 @@ final class DqlExecutor(ts: GraphStore) {
       cur = cur.withColumn("__rr", dense_rank().over(w2))
         .filter(qcol(s"${name}__rn").isNull ||
           (col("__rr") > lo && col("__rr") <= hi)).drop("__rr")
-      if (!keepChildRank) cur = cur.drop(s"${name}__rn")
+      if (!childRanks) cur = cur.drop(s"${name}__rn")
     }
     cur
   }
@@ -3417,11 +3430,6 @@ final class DqlExecutor(ts: GraphStore) {
 
   // ---- nested JSON output (reference outputnode.go ToJson shape) ----
 
-  /** When true, traverse() keeps per-parent child order as `<name>__rn`
-    * so JSON child arrays preserve the requested traversal order.
-    */
-  private var keepChildRank = false
-
   /** uid rendered the reference way: "0x" + lowercase hex
     * (outputnode.go writes uids as hex strings).
     */
@@ -3549,233 +3557,197 @@ final class DqlExecutor(ts: GraphStore) {
 
   // ---- RDF output format (reference query/outputrdf.go) ----
 
-  /** Query result as N-Triple lines in the reference's emission order:
-    * per level, each selection in declaration order emits one GROUP of
-    * lines — scalars for every frontier node, `count(pred)` with
-    * zero-fill, then edge triples followed by the child level's groups
-    * (reference outputrdf.go walks subgraphs the same way); `@recurse`
-    * blocks re-apply their one-level template per depth ([[rdfRecurse]]).
-    * Directives the reference rejects in RDF (@normalize, @groupby,
-    * count(uid), @ignorereflex, checkpwd, facet fetches —
-    * outputrdf.go validateSubGraphForRDF) throw here too, with the
-    * reference's exact messages.
-    *
-    * Returns lines in order; the final concat is driver-side exactly
-    * like the reference's ToRDF marshals one buffer.
+  /** Query result as N-Triple lines, the reference's ToRDF
+    * (query/outputrdf.go:28): each block is evaluated once, then the
+    * driver writes its lines. A plain block renders the [[flatBlock]]
+    * frame [[jsonBlock]] renders ([[rdfBlock]]); a `@recurse` block its
+    * walk with one global seen set ([[rdfRecurse]]). Per level, each
+    * selection in declaration order emits one GROUP of lines: scalars
+    * for every frontier node, `count(pred)` with zero-fill, or edge
+    * triples followed by the child level's groups. What the reference
+    * rejects in RDF (outputrdf.go validateSubGraphForRDF) throws before
+    * the block runs, with its messages. A var block only binds its vars.
+    * Runs in the store's read mode ([[readScoped]]).
     */
   def rdfAll(query: String): String = {
     val q = Parser.parse(query)
-    val sb = new StringBuilder
-    q.blocks.foreach {
-      // a var block renders nothing; it binds its vars for the blocks
-      // after it, as in jsonAllAst
-      case b if b.name == "var" => flatBlock(b)
-      case b =>
-        if (b.normalize)
-          throw new IllegalArgumentException(
-            "normalize directive is not supported in the rdf output format")
-        if (b.ignoreReflex)
-          throw new IllegalArgumentException(
-            "ignorereflex directive is not supported in the rdf output format")
-        if (b.groupby.nonEmpty)
-          throw new IllegalArgumentException(
-            "groupby is not supported in rdf output format")
-        // selection-level rejections surface before any evaluation (the
-        // reference validates the whole subgraph first)
-        def validateRdf(ss: Seq[Selection]): Unit = ss.foreach { s =>
-          if (s.isCount && s.pred == "uid")
-            throw new IllegalArgumentException(
-              "uid count is not supported in the rdf output format")
-          if (s.checkPwd.isDefined)
-            throw new IllegalArgumentException(
-              "chkpwd function is not supported in the rdf output format")
-          if (s.facetFetch || s.facetKeys.nonEmpty)
-            throw new IllegalArgumentException(
-              "facets are not supported in the rdf output format")
-          if (s.groupby.nonEmpty)
-            throw new IllegalArgumentException(
-              "groupby is not supported in rdf output format")
-          validateRdf(s.children)
-        }
-        validateRdf(b.selections)
-        if (b.shortest.isEmpty) {
-          var frontier = seedUids(b.func)
-          b.filter.foreach(f => frontier = applyFilter(frontier, "uid", f))
-          val ordered0 = orderAndPage(frontier, "uid", b.order, b.page)
-          val ordered =
-            if (b.order.isEmpty) ordered0.withColumn("__r", col("uid"))
-            else ordered0.withColumn("__r", monotonically_increasing_id())
-          b.recurse match {
-            case Some(r) =>
-              rdfRecurse(sb, ordered, b.selections, r)
-            case None => rdfWalk(sb, ordered, b.selections)
-          }
-        }
+    readScoped {
+      val sb = new StringBuilder
+      q.blocks.foreach {
+        case b if b.name == "var" => flatBlock(b)
+        case b =>
+          validateRdf(b)
+          if (b.recurse.isDefined) rdfRecurse(sb, b)
+          else if (b.shortest.isEmpty) rdfBlock(sb, b)
+      }
+      sb.result()
     }
-    sb.result()
   }
 
-  private def rdfHex(c: Column): Column =
-    concat(lit("<0x"), lower(conv(c.cast("string"), 10, 16)), lit(">"))
-
-  private def rdfEmit(sb: StringBuilder, df: DataFrame): Unit =
-    df.orderBy(col("__o1").asc, col("__o2").asc)
-      .select(col("line")).collect()
-      .foreach(r => sb.append(r.getString(0)).append('\n'))
-
-  /** One group of scalar-leaf lines for a frontier (columns uid, __r). */
-  private def rdfScalarRows(frontier: DataFrame, s: Selection): DataFrame = {
-    // geo values have no N-Triple object form (reference
-    // query/outputrdf.go:189 getObjectVal, types.GeoID case)
-    if (schema.predicates.get(s.pred).exists(_.dgraphType == "geo"))
-      throw new IllegalArgumentException(
-        "Geo id is not supported in rdf output")
-    val rows0 = attrLeaf(s)
-    val valueC =
-      if (rows0.columns.contains("display")) col("display")
-      else col("value").cast("string")
-    val esc = regexp_replace(regexp_replace(valueC,
-      lit("\\\\"), lit("\\\\\\\\")), lit("\""), lit("\\\\\""))
-    frontier.join(
-      rows0.select(col("subject").as("__as"), esc.as("__v")),
-      col("uid") === col("__as"))
-      .select(col("__r").as("__o1"), lit(0L).as("__o2"),
-        concat(rdfHex(col("uid")), lit(s" <${s.pred}> \""),
-          col("__v"), lit("\" .")).as("line"))
+  private def validateRdf(b: QueryBlock): Unit = {
+    def reject(bad: Boolean, msg: String): Unit =
+      if (bad) throw new IllegalArgumentException(msg)
+    reject(b.normalize, "normalize directive is not supported in the rdf output format")
+    reject(b.ignoreReflex, "ignorereflex directive is not supported in the rdf output format")
+    reject(b.groupby.nonEmpty, "groupby is not supported in rdf output format")
+    def validate(ss: Seq[Selection]): Unit = ss.foreach { s =>
+      reject(s.isCount && s.pred == "uid", "uid count is not supported in the rdf output format")
+      reject(s.checkPwd.isDefined, "chkpwd function is not supported in the rdf output format")
+      reject(s.facetFetch || s.facetKeys.nonEmpty,
+        "facets are not supported in the rdf output format")
+      reject(s.groupby.nonEmpty, "groupby is not supported in rdf output format")
+      validate(s.children)
+    }
+    validate(b.selections)
   }
 
-  /** `count(pred)` lines with zero-fill (TestRDFPredicateCount). */
-  private def rdfCountRows(frontier: DataFrame, s: Selection): DataFrame = {
-    val cnts = countEdge(s.pred).groupBy(col("subject"))
-      .agg(count(lit(1)).as("__c"))
-    frontier.join(cnts.withColumnRenamed("subject", "__cs"),
-        col("uid") === col("__cs"), "left")
-      .select(col("__r").as("__o1"), lit(0L).as("__o2"),
-        concat(rdfHex(col("uid")),
-          lit(s" <count(${s.pred})> \""),
-          coalesce(col("__c"), lit(0L)).cast("string"),
-          lit("\" .")).as("line"))
+  /** One N-Triple line into `sb`: `<subject> <pred> object .` */
+  private def rdfLine(sb: StringBuilder, subject: Long, s: Selection,
+      obj: String): Unit =
+    sb.append('<').append(hexS(subject)).append("> <").append(jsonKey(s))
+      .append("> ").append(obj).append(" .\n")
+
+  /** Selection `s`'s value `v` as an N-Triple literal. Geo values have no
+    * literal form (reference outputrdf.go:189 getObjectVal, GeoID case).
+    */
+  private def rdfLiteral(s: Selection, v: String): String = {
+    if (!s.isCount && schema.predicates.get(s.pred).exists(_.dgraphType == "geo"))
+      throw new IllegalArgumentException("Geo id is not supported in rdf output")
+    "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  }
+
+  /** [[collectFlat]]'s RDF encoder: a value as its literal's string, a
+    * list as its values' strings, a datetime as JSON writes it.
+    */
+  private def rdfValue(c: Column, t: DataType): Column = t match {
+    case _: ArrayType => c.cast(ArrayType(StringType))
+    case TimestampType => date_format(c, jsonOpts("timestampFormat"))
+    case _ => c.cast(StringType)
+  }
+
+  /** N-Triples of a plain block. Each frontier node's scalar reads its
+    * first non-null flat value, as the JSON object does; an edge writes
+    * one line per (parent, child) pair in the parent's child rank, and
+    * the child level's frontier is the distinct children in uid order.
+    * A braceless uid selection (`f as friend`) writes nothing, as it
+    * renders nothing in JSON.
+    */
+  private def rdfBlock(sb: StringBuilder, b0: QueryBlock): Unit = {
+    val b = rewriteBlock(b0)
+    // no selections, or a whole-block aggregation (one row, no uid
+    // column): there is no node to write a triple about
+    if (b.selections.isEmpty || b.selections.exists(s =>
+        s.aggOp.isDefined && !s.valRef.exists(bindsVar(b.selections, _)))) {
+      flatBlock(b)
+      return
+    }
+    val fr = collectFlat(b, flatBlock(b, childRanks = true), rdfValue)
+    import fr.{ix, rows, uidOf}
+    def strings(v: Any): Seq[String] = v match {
+      case null => Nil
+      case xs: scala.collection.Seq[_] => xs.collect { case x: String => x }.toSeq
+      case x => Seq(x.toString)
+    }
+    def level(frontier: Seq[Long], uidCol: String, sels: Seq[Selection],
+        pfx: String): Unit = {
+      val byUid = rows.filter(uidOf(_, uidCol).isDefined).groupBy(uidOf(_, uidCol).get)
+      sels.foreach { s =>
+        val c = pfx + s.outName
+        if (s.pred == "uid") {
+          // `uid` writes no triple (TestRDFIgnoreUid)
+        } else if (fr.has(c) && isEdge(s) && s.children.nonEmpty) {
+          val pairs = frontier.flatMap { p =>
+            byUid(p).flatMap(r => uidOf(r, c).map(k =>
+                (uidOf(r, c + "__rn").getOrElse(Long.MaxValue), k)))
+              .distinct.sorted.map(p -> _._2)
+          }
+          pairs.foreach { case (p, k) => rdfLine(sb, p, s, s"<${hexS(k)}>") }
+          level(pairs.map(_._2).distinct.sorted, c, s.children, c + "_")
+        } else if (fr.has(c) && !isEdge(s))
+          frontier.foreach { u =>
+            strings(byUid(u).iterator.map(_.get(ix(c))).find(_ != null).orNull)
+              .foreach(v => rdfLine(sb, u, s, rdfLiteral(s, v)))
+          }
+      }
+    }
+    val roots = fr.inRootOrder(grouped(rows)(_.getLong(ix("uid"))))(_._2.head)
+    level(roots.map(_._1), "uid", b.selections, "")
   }
 
   /** RDF for `@recurse` blocks (reference outputrdf.go castToRDF over
-    * the expandRecurse subgraph chain, query/rdf_result_test.go
-    * TestRDFRecurse): the one-level template re-applies per level, and
-    * the reference's depth-first walk over that chain IS level order —
-    * each level emits the frontier's scalar (and count) groups in
-    * template order, then each uid predicate's edge triples, then
-    * descends. Terminal-level edges don't render in the reference
-    * (rdfForSubgraph's `len(sg.Children) > 0` guard: the deepest
-    * processed subgraphs never get children attached), which in hop
-    * terms means edges emit for tree levels 1..hops and scalars for
-    * every visited frontier (value subgraphs carry no children, so the
-    * guard never applies to them; the depth-limited walk never
-    * processes the level past the cap, which is exactly why
-    * depth-1 recurse emits no edges at all — TestRDFRecurse).
-    *
-    * Emission order is the reference's depth-first template walk: each
-    * template field in declaration order; a uid predicate emits its
-    * edge group and then the WHOLE next level nested at its position,
-    * before the template's later fields. Branch frontiers follow each
-    * uid predicate's own targets (expandChildren links children to the
-    * parent sg's DestUIDs); the expansion itself uses the reference's
-    * merged frontier with ONE global edge-level seen set across all
-    * roots and predicates ([[graft.operators.Recurse.expandGlobal]]).
+    * the expandRecurse subgraph chain, TestRDFRecurse), in the
+    * reference's depth-first walk over that chain: each template field in
+    * declaration order; a leaf emits its group for the frontier, a uid
+    * predicate its edges and then the WHOLE next level, over its own
+    * targets, before the later fields. Edges emit for tree levels
+    * 1..hops only — the reference never attaches children to the deepest
+    * processed level (rdfForSubgraph's `len(sg.Children) > 0` guard), so
+    * depth-1 recurse emits no edges at all. The walk is the reference's
+    * merged frontier with ONE global edge-level seen set across all roots
+    * and predicates ([[graft.operators.Recurse.expandGlobal]]). The roots,
+    * the walk and every reached node's leaves are collected once each.
     */
-  private def rdfRecurse(sb: StringBuilder, roots: DataFrame,
-      sels0: Seq[Selection], r: RecurseArgs): Unit = {
+  private def rdfRecurse(sb: StringBuilder, b: QueryBlock): Unit = {
+    val r = b.recurse.get
+    val frontier = rootFrontier(b)
+    bindBlockVar(b, frontier)
+    val roots = recurseRoots(frontier, b)
     val cap = math.min(recurseHops(r), 50)
     // `uid` emits no triple (TestRDFIgnoreUid); unknown preds emit
     // nothing; counts render per level like any other leaf group. Edges
     // are tagged by template position: one selection, one branch.
-    val t = recurseTemplate(roots, sels0, r, roots.select(col("uid").as("node")),
+    val t = recurseTemplate(roots, b.selections, r, roots.select(col("uid").as("node")),
         (_, i) => i.toString) { (starts, edges) =>
-      Recurse.expandGlobal(starts, edges, cap, r.loop).localCheckpoint()
+      Recurse.expandGlobal(starts, edges, cap, r.loop).localCheckpoint(false)
     }
-    def visit(frontier: DataFrame, lvl: Int): Unit = t.sels.zipWithIndex.foreach {
-      case (s, _) if !recurseEdge(s) =>
-        rdfEmit(sb,
-          if (s.isCount) rdfCountRows(frontier, s)
-          else rdfScalarRows(frontier, s))
-      case (s, i) if t.tree.isDefined && lvl < cap =>
-        // this branch's edges: the merged tree's rows at the next
-        // level, restricted to parents in THIS frontier and this pred
-        val br = t.tree.get
-          .filter(col("depth") === lvl + 1 && col("pred") === i.toString)
-          .join(frontier.select(col("uid").as("__p")),
-            col("parent") === col("__p"))
-          .select(col("parent"), col("node"))
-        // the RDF format is a driver-side marshal (reference ToRDF
-        // writes one buffer) — collect the branch's edge pairs once for
-        // both the lines and the emptiness check
-        val pairs = br.orderBy(col("parent"), col("node")).collect()
-        pairs.foreach { r =>
-          sb.append("<0x").append(java.lang.Long.toHexString(r.getLong(0)))
-            .append(s"> <${if (s.reverse) "~" else ""}${s.pred}> <0x")
-            .append(java.lang.Long.toHexString(r.getLong(1))).append("> .\n")
+    val rootUids = rootOrder(roots, b)
+    val tree = t.tree.fold(Seq.empty[Row])(_.select(col("depth").cast("int"),
+      col("pred").cast("int"), col("parent"), col("node")).collect().toSeq)
+    // (depth, template position, parent) → children in uid order
+    val kids = tree.groupBy(e => (e.getInt(0), e.getInt(1), e.getLong(2)))
+      .map { case (k, es) => k -> es.map(_.getLong(3)).distinct.sorted }
+    // every reached node's leaf values: (template position, node) → values
+    val leafSels = t.sels.zipWithIndex.filterNot(x => isEdge(x._1))
+    val nodes = (rootUids ++ tree.map(_.getLong(3))).distinct
+    val values: Map[(Int, Long), Seq[String]] =
+      if (leafSels.isEmpty || nodes.isEmpty) Map.empty
+      else {
+        val nodeDf = session.createDataFrame(nodes.map(Row(_)).asJava,
+          StructType(Seq(StructField("subject", LongType))))
+        leafSels.map { case (s, i) =>
+          val rows =
+            if (s.isCount)
+              countEdge(if (s.reverse) s"~${s.pred}" else s.pred)
+                .groupBy(col("subject")).agg(count(lit(1)).cast("string").as("v"))
+            else {
+              val rows0 = attrLeaf(s)
+              rows0.select(col("subject"),
+                (if (rows0.columns.contains("display")) col("display")
+                 else col("value").cast("string")).as("v"))
+            }
+          rows.select(lit(i).as("sel"), col("subject"), col("v"))
+        }.reduce(_ unionByName _)
+          .join(broadcast(nodeDf), Seq("subject"), "left_semi")
+          .select(col("sel"), col("subject"), col("v")).collect().toSeq
+          .groupBy(v => (v.getInt(0), v.getLong(1)))
+          .map { case (k, vs) => k -> vs.flatMap(v => Option(v.getString(2))).sorted }
+      }
+    def visit(frontier: Seq[Long], lvl: Int): Unit = t.sels.zipWithIndex.foreach {
+      case (s, i) if !isEdge(s) =>
+        frontier.foreach { u =>
+          values.getOrElse((i, u), if (s.isCount) Seq("0") else Nil)
+            .foreach(v => rdfLine(sb, u, s, rdfLiteral(s, v)))
         }
-        if (pairs.nonEmpty)
-          visit(br.select(col("node").as("uid")).distinct()
-            .withColumn("__r", col("uid")), lvl + 1)
+      case (s, i) if lvl < cap =>
+        // this branch's edges: the walk's edges at the next level from
+        // parents in THIS frontier along this predicate
+        val pairs = frontier.flatMap(p => kids.getOrElse((lvl + 1, i, p), Nil).map(p -> _))
+        pairs.foreach { case (p, k) => rdfLine(sb, p, s, s"<${hexS(k)}>") }
+        if (pairs.nonEmpty) visit(pairs.map(_._2).distinct.sorted, lvl + 1)
       case _ => // depth cap reached: the level past the cap is never
                 // processed, so this uid predicate emits nothing
     }
-    visit(roots, 0)
-  }
-
-  private def rdfWalk(sb: StringBuilder, frontier: DataFrame,
-      sels: Seq[Selection]): Unit = {
-    def emit(df: DataFrame): Unit = rdfEmit(sb, df)
-    sels.foreach { s =>
-      if (s.isCount && s.pred == "uid")
-        throw new IllegalArgumentException(
-          "uid count is not supported in the rdf output format")
-      if (s.checkPwd.isDefined)
-        throw new IllegalArgumentException(
-          "chkpwd function is not supported in the rdf output format")
-      if (s.facetFetch || s.facetKeys.nonEmpty)
-        throw new IllegalArgumentException(
-          "facets are not supported in the rdf output format")
-      if (s.groupby.nonEmpty)
-        throw new IllegalArgumentException(
-          "groupby is not supported in rdf output format")
-      if (s.pred == "uid" && !s.isCount) {
-        // `uid` emits no triple (TestRDFIgnoreUid)
-      } else if (s.isCount) {
-        // count(pred) with zero-fill (TestRDFPredicateCount: Daryl "0")
-        emit(rdfCountRows(frontier, s))
-      } else if (schema.predicates.contains(s.pred) &&
-          (schema.isUidPredicate(s.pred) || s.reverse)) {
-        val e0 = if (s.reverse) ts.reverseEdge(s.pred) else ts.edge(s.pred)
-        val e1 = s.filter.map(f => applyFilter(e0, "object", f)).getOrElse(e0)
-        var edges = frontier.join(
-          e1.select(col("subject").as("__es"), col("object").as("__eo")),
-          col("uid") === col("__es"))
-        // per-parent child order (TestDateRDF: edges follow orderdesc)
-        val childOrd: Column = s.order.headOption match {
-          case Some(o) if !o.pred.startsWith("val:") =>
-            val a = orderAttr(o.pred)
-              .select(col("subject").as("__ws"), col("value").as("__wv"))
-            edges = edges.join(a, col("__eo") === col("__ws"), "left")
-              .drop("__ws")
-            // epoch/numeric rank; desc negates, nulls last via max fill
-            val v = col("__wv").cast("double")
-            val k = if (o.desc) -v else v
-            coalesce(k, lit(Double.MaxValue))
-          case _ => col("__eo").cast("double")
-        }
-        val lines = edges.select(col("__r").as("__o1"),
-          childOrd.as("__o2"),
-          concat(rdfHex(col("uid")), lit(s" <${if (s.reverse) "~" else ""}${s.pred}> "),
-            rdfHex(col("__eo")), lit(" .")).as("line"),
-          col("__eo"))
-        emit(lines.drop("__eo"))
-        val childFrontier = lines.select(col("__eo").as("uid")).distinct()
-          .withColumn("__r", col("uid"))
-        if (s.children.nonEmpty) rdfWalk(sb, childFrontier, s.children)
-      } else if (schema.predicates.contains(s.pred)) {
-        emit(rdfScalarRows(frontier, s))
-      } // unknown predicates emit nothing
-    }
+    visit(rootUids, 0)
   }
 
   /** schema(pred:)/schema(type:) introspection (reference
@@ -3824,13 +3796,10 @@ final class DqlExecutor(ts: GraphStore) {
     * `includeUid = false` renders GraphQL-shaped objects (no implicit
     * uid key — the GraphQL layer only emits requested fields, reference
     * graphql/resolve/resolver.go completion).
-    *
-    * Over a small store ([[DqlExecutor.ReadMode]]) the whole read —
-    * build-time jobs included — runs interpreted: a read over kilobytes
-    * costs less to evaluate than to compile.
+    * Runs in the store's read mode ([[readScoped]]).
     */
-  def jsonAllAst(query: DqlQuery, includeUid: Boolean = true): DataFrame = {
-    def run(): DataFrame = {
+  def jsonAllAst(query: DqlQuery, includeUid: Boolean = true): DataFrame =
+    readScoped {
       val blocks = query.blocks.flatMap { b =>
         if (b.func.name == "schema") Some(b.name -> schemaJson(b))
         else if (b.name == "var") { flatBlock(b); None }
@@ -3844,10 +3813,15 @@ final class DqlExecutor(ts: GraphStore) {
         StructField("block", StringType), StructField("uid", LongType),
         StructField("json", StringType))))
     }
+
+  /** `read` in this store's [[DqlExecutor.ReadMode]]: interpreted over a
+    * small store — build-time jobs included — since a read over
+    * kilobytes costs less to evaluate than to compile.
+    */
+  private def readScoped[T](read: => T): T =
     if (DqlExecutor.ReadMode(ts).interpreted)
-      SessionConf.scoped(session, DqlExecutor.Interpreted: _*)(run())
-    else run()
-  }
+      SessionConf.scoped(session, DqlExecutor.Interpreted: _*)(read)
+    else read
 
   /** Nested JSON for @recurse blocks: the reference re-applies the child
     * template per level and renders the reached TREE (query/recurse.go:19
@@ -3864,15 +3838,15 @@ final class DqlExecutor(ts: GraphStore) {
     // the nameless friend then renders as a bare {"uid": ...})
     val includeUid = includeUid0 ||
       b.selections.exists(s => s.pred == "uid" && !s.isCount)
-    var frontier = seedUids(b.func)
-    b.filter.foreach { f => frontier = applyFilter(frontier, "uid", f) }
+    val frontier = rootFrontier(b)
     bindBlockVar(b, frontier)
-    val t = recurseTemplate(frontier, b.selections, r,
-      frontier.select(col("uid").as("start")))()
+    val rootUids = recurseRoots(frontier, b)
+    val t = recurseTemplate(rootUids, b.selections, r,
+      rootUids.select(col("uid").as("start")))()
     val (preds, scalars) = (t.edges, t.leaves)
     // every occurrence: the roots at depth 0 (no parent edge), then the
     // tree, each with the scalar leaves of its node
-    var occ = t.tree.foldLeft(frontier.select(col("uid").as("start"),
+    var occ = t.tree.foldLeft(rootUids.select(col("uid").as("start"),
         lit(null).cast("long").as("parent"), lit(null).cast("string").as("pred"),
         col("uid").as("node"), lit(0).as("depth"))) { (roots, tree) =>
       roots.unionByName(tree.select(col("start"), col("parent"), col("pred"),
@@ -4004,7 +3978,11 @@ final class DqlExecutor(ts: GraphStore) {
             p -> ys.sorted(siblingOrder).map(_._2).mkString(",") }
         }
     }
-    val roots = byDepth.getOrElse(0, Nil).sortBy(_.getLong(3)).flatMap { row =>
+    // roots in the block's order (uid order without one)
+    val rootRank: Long => Long =
+      if (b.order.isEmpty) (u: Long) => u
+      else rootOrder(rootUids, b).zipWithIndex.map { case (u, i) => u -> i.toLong }.toMap
+    val roots = byDepth.getOrElse(0, Nil).sortBy(row => rootRank(row.getLong(3))).flatMap { row =>
       val u = row.getLong(3)
       render(row, kids.getOrElse((u, u), Map.empty)).map(u -> _)
     }
@@ -4081,8 +4059,7 @@ final class DqlExecutor(ts: GraphStore) {
     * entirely (TestGroupByRootEmpty renders `{"data":{}}`).
     */
   private def rootGroupbyJson(b: QueryBlock): DataFrame = {
-    var frontier = seedUids(b.func)
-    b.filter.foreach { f => frontier = applyFilter(frontier, "uid", f) }
+    val frontier = rootFrontier(b)
     groupbyGroups(frontier.select(col("uid").as("__t")), b.groupby,
         b.selections) match {
       case None =>
@@ -4108,6 +4085,80 @@ final class DqlExecutor(ts: GraphStore) {
             geoSplice(to_json(element_at(col("__gb"), 1), jsonOpts),
               b.groupby.map(_.pred)).as("json"))
     }
+  }
+
+  /** The uid chain below `sels` in a flat frame holding the columns
+    * `has` accepts: each traversed edge's column, parents before children.
+    */
+  private def edgeColumns(has: String => Boolean, sels: Seq[Selection],
+      pfx: String): Seq[String] =
+    sels.filter(isEdge).flatMap { c =>
+      val ec = pfx + c.outName
+      (if (has(ec)) Seq(ec) else Nil) ++ edgeColumns(has, c.children, ec + "_")
+    }
+
+  /** A block's flat frame as [[collectFlat]] collected it. */
+  private final class FlatRows(val columns: Seq[String], val rows: Seq[Row],
+      sortKeys: Seq[SortKey], keySchema: StructType) {
+    val ix: Map[String, Int] = columns.zipWithIndex.toMap
+    def has(c: String): Boolean = ix.contains(c)
+    def uidOf(r: Row, c: String): Option[Long] =
+      ix.get(c).filterNot(r.isNullAt).map(r.getLong)
+
+    /** `xs` in the block's root order; `row` is a flat row of x's root. */
+    def inRootOrder[A](xs: Seq[A])(row: A => Row): Seq[A] =
+      if (sortKeys.isEmpty) xs.sortBy(row(_).getLong(ix("uid")))
+      else {
+        val toKey = CatalystTypeConverters.createToCatalystConverter(keySchema)
+        val ord = new InterpretedOrdering(sortKeys.zipWithIndex.map { case (k, i) =>
+          SortOrder(BoundReference(i, keySchema(i).dataType, nullable = true),
+            if (k.desc) Descending else Ascending,
+            if (k.nullsFirst) NullsFirst else NullsLast, Seq.empty) })
+        xs.map(x => x -> toKey(Row.fromSeq(sortKeys.indices.map(i =>
+            row(x).get(ix(s"__o$i"))))).asInstanceOf[InternalRow])
+          .sortBy(_._2)(ord).map(_._1)
+      }
+  }
+
+  /** The one Spark action of a rendered block: collect its flat frame
+    * `flatDf`, which is RESULT-scale (root pagination already applied),
+    * with uid-chain and rank columns as longs and every other column
+    * through `encode` (column, type); nesting happens on the driver. The
+    * frame's AQE query stages are its jobs: they convert the
+    * frontier⋈tablet joins to broadcasts and coalesce the exchanges, and
+    * static planning of the same frame measured slower (r17: fewer jobs,
+    * wall time up ~0.3 s on dql_json_deep).
+    *
+    * Root order: the block's requested order, else the route order a
+    * shortest-path variable carries (TestShortestPathRev), else uid. The
+    * sort keys are orderAndPage's own (same joins, null rules and
+    * collations), collected as `__o<i>` and compared on the driver with
+    * Spark's ordering ([[FlatRows.inRootOrder]]).
+    */
+  private def collectFlat(b: QueryBlock, flatDf0: DataFrame,
+      encode: (Column, DataType) => Column): FlatRows = {
+    // datetime-instant riders never render
+    val flatDf = flatDf0.drop(
+      flatDf0.columns.filter(_.endsWith("__dtv")).toSeq: _*)
+    val (sortable, sortKeys) =
+      if (b.normalize) (flatDf, Nil)
+      else if (b.order.nonEmpty) {
+        val (df, keyCols) = withSortKeys(flatDf, "uid", b.order)
+        (df, keyCols(false))
+      } else if (b.func.name == "uid" && b.func.args.size == 1)
+        vars.get(b.func.args.head).map(_.frame).filter(_.columns.contains("__ord"))
+          .map(v => (flatDf.join(v.select(col("uid"), col("__ord")), Seq("uid"), "left"),
+            Seq(SortKey(col("__ord"), false), SortKey(col("uid"), false))))
+          .getOrElse((flatDf, Nil))
+      else (flatDf, Nil)
+    val keyCols = ("uid" +: edgeColumns(flatDf.columns.contains(_), b.selections, "")).toSet ++
+      flatDf.columns.filter(_.endsWith("__rn"))
+    val collected = sortable.select(flatDf.schema.fields.toSeq.map { f =>
+        if (keyCols(f.name)) qcol(f.name).cast("long").as(f.name)
+        else encode(qcol(f.name), f.dataType).as(f.name)
+      } ++ sortKeys.zipWithIndex.map { case (k, i) => k.value.as(s"__o$i") }: _*)
+    new FlatRows(collected.columns.toSeq, collected.collect().toSeq, sortKeys,
+      StructType(sortKeys.indices.map(i => collected.schema(s"__o$i"))))
   }
 
   /** Render one block as (uid, json) rows in output order: one JSON
@@ -4169,79 +4220,31 @@ final class DqlExecutor(ts: GraphStore) {
         .select(posexplode(array(objs: _*)).as(Seq("__i", "json")))
         .select((lit(Long.MinValue) + col("__i")).as("uid"), col("json")))
     }
-    keepChildRank = true
-    val flatDf0 = try flatBlock(b2) finally { keepChildRank = false }
-    // datetime-instant riders never render
-    val flatDf = flatDf0.drop(
-      flatDf0.columns.filter(_.endsWith("__dtv")).toSeq: _*)
-    // counts are scalar leaves even when they count a (reverse) uid pred
-    def isChild(s: Selection) =
-      !s.isCount && (schema.isUidPredicate(s.pred) || s.reverse)
+    val flatDf = flatBlock(b2, childRanks = true)
+    def countObjs(n: Long): Seq[(Long, String)] =
+      countSels.map(c => (Long.MinValue, jsonObj(Seq(c.alias.getOrElse("count") -> n.toString))))
+    // a block whose every selection is count(uid) renders the counts
+    // alone (TestCountAtRoot)
+    if (!b.normalize && b2.selections.isEmpty && gbSels.isEmpty)
+      return countObjs(flatDf.agg(countDistinct(col("uid"))).head().getLong(0))
+    val fr = collectFlat(b, flatDf, (c, _) => jsonValue(c))
+    import fr.{has, ix, rows, uidOf}
     // a uid-pred selection with NO children (pure var binding, `B as
     // friend`) renders nothing — the reference requires a CHILD BLOCK
     // for an edge to appear: a braceless uid leaf binds vars/orders but
     // never renders, even with facet clauses (TestFacetsAlias2's me2
     // renders []; TestUseVarsMultiCascade1's inner `B as friend`)
     def renders(s: Selection) = s.children.nonEmpty
-    // the uid chain below `sels`: each traversed edge's column, parents
-    // before children
-    def edgeCols(sels: Seq[Selection], pfx: String): Seq[String] =
-      sels.filter(isChild).flatMap { c =>
-        val ec = pfx + c.outName
-        (if (flatDf.columns.contains(ec)) Seq(ec) else Nil) ++
-          edgeCols(c.children, ec + "_")
-      }
     // (flat column, key) of every ALIASED leaf below `sels` — what a
     // @normalize object carries
     def aliasedCols(sels: Seq[Selection], pfx: String): Seq[(String, String)] =
       sels.flatMap { s =>
         val own =
-          if (s.alias.isDefined && !isChild(s) &&
-              flatDf.columns.contains(pfx + s.outName))
+          if (s.alias.isDefined && !isEdge(s) && has(pfx + s.outName))
             Seq((pfx + s.outName, s.outName))
           else Nil
         own ++ aliasedCols(s.children, pfx + s.outName + "_")
       }
-    def countObjs(n: Long): Seq[(Long, String)] =
-      countSels.map(c => (Long.MinValue, jsonObj(Seq(c.alias.getOrElse("count") -> n.toString))))
-    // root order: the block's requested order, else the route order a
-    // shortest-path variable carries (TestShortestPathRev), else uid.
-    // The sort keys are orderAndPage's own (same joins, null rules and
-    // collations), evaluated in the collected projection and compared
-    // on the driver with Spark's ordering
-    val (sortable, sortKeys) =
-      if (b.normalize) (flatDf, Nil)
-      else if (b.order.nonEmpty) {
-        val (df, keyCols) = withSortKeys(flatDf, "uid", b.order)
-        (df, keyCols(false))
-      } else if (b.func.name == "uid" && b.func.args.size == 1)
-        vars.get(b.func.args.head).map(_.frame).filter(_.columns.contains("__ord"))
-          .map(v => (flatDf.join(v.select(col("uid"), col("__ord")), Seq("uid"), "left"),
-            Seq(SortKey(col("__ord"), false), SortKey(col("uid"), false))))
-          .getOrElse((flatDf, Nil))
-      else (flatDf, Nil)
-    // a block whose every selection is count(uid) renders the counts
-    // alone (TestCountAtRoot)
-    if (!b.normalize && b2.selections.isEmpty && gbSels.isEmpty)
-      return countObjs(flatDf.agg(countDistinct(col("uid"))).head().getLong(0))
-    // The one Spark action of the block: collect the flat frame, which is
-    // RESULT-scale (root pagination already applied), with uid-chain and
-    // rank columns as longs and every other column as its rendered JSON
-    // value; nesting happens on the driver. The frame's AQE query stages
-    // are its jobs: they convert the frontier⋈tablet joins to broadcasts
-    // and coalesce the exchanges, and static planning of the same frame
-    // measured slower (r17: fewer jobs, wall time up ~0.3 s on
-    // dql_json_deep).
-    val keyCols = ("uid" +: edgeCols(b.selections, "")).toSet ++
-      flatDf.columns.filter(_.endsWith("__rn"))
-    val collected = sortable.select(flatDf.columns.toSeq.map { c =>
-        if (keyCols(c)) qcol(c).cast("long").as(c) else jsonValue(qcol(c)).as(c)
-      } ++ sortKeys.zipWithIndex.map { case (k, i) => k.value.as(s"__o$i") }: _*)
-    val rows = collected.collect().toSeq
-    val ix = collected.columns.zipWithIndex.toMap
-    def has(c: String) = ix.contains(c)
-    def uidOf(r: Row, c: String): Option[Long] =
-      ix.get(c).filterNot(r.isNullAt).map(r.getLong)
     def valOf(r: Row, c: String): String = ix.get(c).map(r.getString).orNull
     def firstVal(rs: Seq[Row], c: String): String =
       rs.iterator.map(valOf(_, c)).find(_ != null).orNull
@@ -4249,8 +4252,8 @@ final class DqlExecutor(ts: GraphStore) {
     // `<pfx>name__fv_origin` → field "name|origin"; @facets(o: origin)
     // renders the bare alias, TestFacetsAlias)
     def fvCols(sels: Seq[Selection], pfx: String): Seq[(String, String)] =
-      sels.filterNot(isChild).flatMap { s =>
-        collected.columns.toSeq.filter(_.startsWith(s"$pfx${s.outName}__fv_")).map { cn =>
+      sels.filterNot(isEdge).flatMap { s =>
+        fr.columns.filter(_.startsWith(s"$pfx${s.outName}__fv_")).map { cn =>
           val k = cn.stripPrefix(s"$pfx${s.outName}__fv_")
           cn -> s.facetAliases.getOrElse(k, s"${jsonKey(s)}|$k")
         }
@@ -4258,7 +4261,7 @@ final class DqlExecutor(ts: GraphStore) {
     // edge facets of child selection `s` (flat `<pfx>f_since`, pfx
     // ending in the edge's column) → field "<outName>|since" or its alias
     def edgeFacetCols(s: Selection, pfx: String): Seq[(String, String)] =
-      collected.columns.toSeq.filter(_.startsWith(s"${pfx}f_")).map { cn =>
+      fr.columns.filter(_.startsWith(s"${pfx}f_")).map { cn =>
         val k = cn.stripPrefix(s"${pfx}f_")
         cn -> s.facetAliases.getOrElse(k, s"${s.outName}|$k")
       }
@@ -4267,7 +4270,7 @@ final class DqlExecutor(ts: GraphStore) {
     // (TestNormalizeDirective: the nameless friend generates no result
     // paths)
     def pathKept(r: Row, sels: Seq[Selection], pfx: String): Boolean =
-      sels.filter(isChild).forall { c =>
+      sels.filter(isEdge).forall { c =>
         val ec = pfx + c.outName
         val sub = aliasedCols(c.children, ec + "_")
         (!has(ec) || sub.isEmpty || uidOf(r, ec).isEmpty ||
@@ -4293,13 +4296,13 @@ final class DqlExecutor(ts: GraphStore) {
       def facetFlat(sels: Seq[Selection], pfx: String): Seq[(String, String)] =
         sels.flatMap { s =>
           val own =
-            if (isChild(s)) edgeFacetCols(s, pfx + s.outName + "_")
+            if (isEdge(s)) edgeFacetCols(s, pfx + s.outName + "_")
             else fvCols(Seq(s), pfx)
           own ++ facetFlat(s.children, pfx + s.outName + "_")
         }
       val fields = aliasedCols(b.selections, "") ++ facetFlat(b.selections, "")
       return byChain(rows.filter(pathKept(_, b.selections, "")),
-          "uid" +: edgeCols(b.selections, ""), Long.MinValue)
+          "uid" +: edgeColumns(has, b.selections, ""), Long.MinValue)
         .map(r => (r.getLong(ix("uid")), jsonObj(fields.map { case (c, k) => k -> valOf(r, c) })))
     }
 
@@ -4322,7 +4325,7 @@ final class DqlExecutor(ts: GraphStore) {
         // TestNormalizeDirectiveSubQueryLevel1/2, ListAndNonListChild*;
         // inner @normalize markers add nothing)
         val aliased = aliasedCols(s.children, pfx)
-        val chain = colName +: edgeCols(s.children, pfx)
+        val chain = colName +: edgeColumns(has, s.children, pfx)
         val paths = grouped(kids.flatMap(_._2))(r => chain.map(uidOf(r, _)))
           .map { case (_, ps) => ps.head }
           .filter(r => aliased.exists(a => valOf(r, a._1) != null) &&
@@ -4332,9 +4335,9 @@ final class DqlExecutor(ts: GraphStore) {
             .map(r => jsonObj(aliased.map { case (c, a) => a -> valOf(r, c) }))
             .mkString("[", ",", "]")
       }
-      val scalarKids = s.children.filterNot(isChild)
+      val scalarKids = s.children.filterNot(isEdge)
       val facetCols = edgeFacetCols(s, pfx) ++ fvCols(s.children, pfx)
-      val grand = s.children.filter(c => isChild(c) && renders(c))
+      val grand = s.children.filter(c => isEdge(c) && renders(c))
       val countKids = s.children.filter(c => c.isCount && c.pred == "uid")
       val hasValues = scalarKids.exists(c => has(pfx + c.outName)) ||
         grand.nonEmpty || countKids.nonEmpty
@@ -4350,8 +4353,8 @@ final class DqlExecutor(ts: GraphStore) {
       val rankCol = s"${colName}__rn"
       val objs = kids.flatMap { case (u, g) =>
         val values = s.children.flatMap { c =>
-          if (c.isCount && c.pred == "uid" || isChild(c) && !renders(c)) Nil
-          else if (isChild(c)) Seq(jsonKey(c) -> childJson(g, c, pfx + c.outName))
+          if (c.isCount && c.pred == "uid" || isEdge(c) && !renders(c)) Nil
+          else if (isEdge(c)) Seq(jsonKey(c) -> childJson(g, c, pfx + c.outName))
           else if (has(pfx + c.outName)) Seq(jsonKey(c) -> firstVal(g, pfx + c.outName))
           else Nil
         }
@@ -4405,8 +4408,8 @@ final class DqlExecutor(ts: GraphStore) {
     // on the first selection sharing its key.
     val rootSels = b2.selections.filter(_.pred != "uid")
     var fields: Seq[(String, (Long, Seq[Row]) => String)] = rootSels.flatMap { s =>
-      if (s.groupby.nonEmpty || (isChild(s) && !renders(s))) Nil
-      else if (isChild(s)) Seq(jsonKey(s) -> ((_: Long, g: Seq[Row]) => childJson(g, s, s.outName)))
+      if (s.groupby.nonEmpty || (isEdge(s) && !renders(s))) Nil
+      else if (isEdge(s)) Seq(jsonKey(s) -> ((_: Long, g: Seq[Row]) => childJson(g, s, s.outName)))
       else Seq(jsonKey(s) -> ((_: Long, g: Seq[Row]) => firstVal(g, s.outName)))
     }
     gbJson.foreach { case (gs, byUid) =>
@@ -4435,19 +4438,7 @@ final class DqlExecutor(ts: GraphStore) {
         Some((u, g.head, if (dupKeys) mergeDupKeys(j) else j))
       }
     }
-    val ordered =
-      if (sortKeys.isEmpty) objs.sortBy(_._1)
-      else {
-        val keyFields = sortKeys.indices.map(i => collected.schema(s"__o$i"))
-        val toKey = CatalystTypeConverters.createToCatalystConverter(StructType(keyFields))
-        val ord = new InterpretedOrdering(sortKeys.zipWithIndex.map { case (k, i) =>
-          SortOrder(BoundReference(i, keyFields(i).dataType, nullable = true),
-            if (k.desc) Descending else Ascending,
-            if (k.nullsFirst) NullsFirst else NullsLast, Seq.empty) })
-        objs.map(o => o -> toKey(Row.fromSeq(sortKeys.indices.map(i =>
-            o._2.get(ix(s"__o$i"))))).asInstanceOf[InternalRow])
-          .sortBy(_._2)(ord).map(_._1)
-      }
+    val ordered = fr.inRootOrder(objs)(_._2)
     // count(uid) at root: one {"count": n} object PER count entry (alias
     // honored), FIRST in the block array (reference TestCountAtRoot3;
     // TestCountUIDWithMultipleCountAndAlias — each aliased count is its
@@ -4467,7 +4458,12 @@ object DqlExecutor {
   /** Session settings that evaluate a query without generated code:
     * no whole-stage codegen, and interpreted projections, predicates
     * and orderings in place of Janino-compiled ones. Spark implements
-    * every expression both ways, so results do not change.
+    * every expression both ways, so results do not change. Two Spark
+    * operators still compile a class each, once per JVM, whatever the
+    * factory mode: `TakeOrderedAndProjectExec` (a sort with a limit,
+    * e.g. a paged root) builds a `LazilyGeneratedOrdering`, and
+    * `HashAggregateExec` off whole-stage codegen joins its result rows
+    * with `GenerateUnsafeRowJoiner`.
     */
   val Interpreted: Seq[(String, String)] = Seq(
     "spark.sql.codegen.wholeStage" -> "false",
@@ -4484,17 +4480,17 @@ object DqlExecutor {
     */
   val InterpretedMaxBytes: Long = 4L << 20
 
-  /** How JSON reads over a store of `storeBytes` run: interpreted up to
-    * [[InterpretedMaxBytes]], since compiling and JIT-warming a plan
-    * costs more than evaluating it over that little data (adaptive
-    * execution, Kohn, Leis & Neumann, ICDE 2018); compiled above it or
-    * when the size is unknown.
+  /** How JSON and RDF reads over a store of `storeBytes` run:
+    * interpreted up to [[InterpretedMaxBytes]], since compiling and
+    * JIT-warming a plan costs more than evaluating it over that little
+    * data (adaptive execution, Kohn, Leis & Neumann, ICDE 2018); compiled
+    * above it or when the size is unknown.
     */
   final case class ReadMode(storeBytes: Option[Long]) {
     def interpreted: Boolean = storeBytes.exists(_ <= InterpretedMaxBytes)
     override def toString: String =
       s"store ${storeBytes.fold("unknown")(b => s"$b bytes")}, " +
-        s"interpreted up to $InterpretedMaxBytes bytes: DQL JSON reads run " +
+        s"interpreted up to $InterpretedMaxBytes bytes: DQL JSON and RDF reads run " +
         (if (interpreted) "interpreted" else "compiled")
   }
 

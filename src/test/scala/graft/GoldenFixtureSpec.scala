@@ -6496,6 +6496,145 @@ class GoldenFixtureSpec extends AnyFunSuite {
         "<0x1f> <film.film.initial_release_date> \"1801-01-15T00:00:00Z\" .\n")
   }
 
+  // ---- RDF renders the evaluation JSON renders ----
+  // Each expected text is the JSON result of the same query written as
+  // triples: values per node, and every (parent, child) edge of a
+  // rendered child selection — including a value-less child such as
+  // 0x65, whose edge the reference writes (TestRDFPredicateCount).
+
+  test("RDF child first: pages each parent's children, as JSON does") {
+    // JSON: {"name":"Michonne","friend":[{"name":"Rick Grimes"}]}
+    rdfGolden("{ me(func: uid(0x01)) { name friend (first: 1) { name } } }",
+      "<0x1> <name> \"Michonne\" .\n<0x1> <friend> <0x17> .\n" +
+        "<0x17> <name> \"Rick Grimes\" .\n")
+  }
+
+  test("RDF child offset: skips each parent's first children, as JSON does") {
+    // JSON: {"name":"Michonne","friend":[{"name":"Andrea"}]}; the page
+    // is 0x1f and the nameless 0x65
+    rdfGolden("{ me(func: uid(0x01)) { name friend (offset: 3) { name } } }",
+      "<0x1> <name> \"Michonne\" .\n<0x1> <friend> <0x1f> .\n" +
+        "<0x1> <friend> <0x65> .\n<0x1f> <name> \"Andrea\" .\n")
+  }
+
+  test("RDF expand(_all_): writes the type's predicates, as JSON does") {
+    // JSON: {"alive":true,"gender":"male","name":"Rick Grimes"}
+    rdfGolden("{ me(func: uid(0x17)) { expand(_all_) } }",
+      "<0x17> <alive> \"true\" .\n<0x17> <gender> \"male\" .\n" +
+        "<0x17> <name> \"Rick Grimes\" .\n")
+  }
+
+  test("RDF @cascade: prunes a child missing a field, as JSON does") {
+    // JSON keeps Michonne's four named friends with an age (0x65 has no
+    // name) and Rick's one friend
+    rdfGolden("{ me(func: uid(0x01, 0x17)) @cascade { name friend { name age } } }",
+      "<0x1> <name> \"Michonne\" .\n<0x17> <name> \"Rick Grimes\" .\n" +
+        "<0x1> <friend> <0x17> .\n<0x1> <friend> <0x18> .\n" +
+        "<0x1> <friend> <0x19> .\n<0x1> <friend> <0x1f> .\n" +
+        "<0x17> <friend> <0x1> .\n" +
+        "<0x1> <name> \"Michonne\" .\n<0x17> <name> \"Rick Grimes\" .\n" +
+        "<0x18> <name> \"Glenn Rhee\" .\n<0x19> <name> \"Daryl Dixon\" .\n" +
+        "<0x1f> <name> \"Andrea\" .\n" +
+        "<0x1> <age> \"38\" .\n<0x17> <age> \"15\" .\n<0x18> <age> \"15\" .\n" +
+        "<0x19> <age> \"17\" .\n<0x1f> <age> \"19\" .\n")
+  }
+
+  test("RDF uid var of a result block: a later block reads it, as in JSON") {
+    // JSON: me renders no key (a braceless edge renders nothing), you
+    // renders the five friends, four of them named
+    rdfGolden("{ me(func: uid(0x01)) { f as friend } you(func: uid(f)) { name } }",
+      "<0x17> <name> \"Rick Grimes\" .\n<0x18> <name> \"Glenn Rhee\" .\n" +
+        "<0x19> <name> \"Daryl Dixon\" .\n<0x1f> <name> \"Andrea\" .\n")
+  }
+
+  test("RDF val() of a var block's value var: writes it per child, as JSON does") {
+    // JSON: {"friend":[{"x":15},{"x":15},{"x":17},{"x":19}]}
+    rdfGolden("""{ var(func: uid(0x01)) { friend { a as age } }
+        |  me(func: uid(0x01)) { friend { x: val(a) } } }""".stripMargin,
+      "<0x1> <friend> <0x17> .\n<0x1> <friend> <0x18> .\n" +
+        "<0x1> <friend> <0x19> .\n<0x1> <friend> <0x1f> .\n" +
+        "<0x1> <friend> <0x65> .\n" +
+        "<0x17> <x> \"15\" .\n<0x18> <x> \"15\" .\n" +
+        "<0x19> <x> \"17\" .\n<0x1f> <x> \"19\" .\n")
+  }
+
+  test("golden: @recurse root first: pages the roots (recurse.go ProcessGraph)") {
+    // the reference runs ProcessGraph on the root before it expands, so
+    // the root's first: applies; the nameless 0x65 renders nothing
+    checkGolden(
+      """{ me(func: anyofterms(name, "Michonne Rick Daryl"), first: 1)
+        |    @recurse(depth: 2) { name friend } }""".stripMargin,
+      """{"data": {"me":[{"name":"Michonne","friend":[{"name":"Rick Grimes"},
+        |{"name":"Glenn Rhee"},{"name":"Daryl Dixon"},{"name":"Andrea"}]}]}}"""
+        .stripMargin)
+  }
+
+  test("RDF @recurse root first: pages the roots, as JSON does") {
+    rdfGolden(
+      """{ me(func: anyofterms(name, "Michonne Rick Daryl"), first: 1)
+        |    @recurse(depth: 2) { name friend } }""".stripMargin,
+      "<0x1> <name> \"Michonne\" .\n" +
+        "<0x1> <friend> <0x17> .\n<0x1> <friend> <0x18> .\n" +
+        "<0x1> <friend> <0x19> .\n<0x1> <friend> <0x1f> .\n" +
+        "<0x1> <friend> <0x65> .\n" +
+        "<0x17> <name> \"Rick Grimes\" .\n<0x18> <name> \"Glenn Rhee\" .\n" +
+        "<0x19> <name> \"Daryl Dixon\" .\n<0x1f> <name> \"Andrea\" .\n")
+  }
+
+  test("RDF reads run at most half the Spark jobs of a per-selection walk") {
+    // the bounds are half of what each read ran when RDF walked every
+    // level and selection with its own Spark actions (23/25/32/21)
+    val sc = spark.sparkContext
+    def jobs(q: String): Int = {
+      new DqlExecutor(store).rdfAll(q) // first read builds cached artifacts
+      val group = s"rdf-jobs-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, "rdf job budget")
+      try new DqlExecutor(store).rdfAll(q)
+      finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    Seq(
+      """{ me(func:anyofterms(name, "Michonne Rick Daryl")) {
+        |    name count(friend) friend { name } } }""".stripMargin -> 23,
+      """{ me(func: uid(0x01)) { name gender
+        |    friend(orderdesc: film.film.initial_release_date) {
+        |      name film.film.initial_release_date } } }""".stripMargin -> 25,
+      """{ me(func: uid(1)) { name
+        |    friend @filter(ge(age, 15) AND lt(age, 19)) { name age } } }""".stripMargin -> 32,
+      """{ me(func: anyofterms(name, "Michonne Rick Daryl")) @recurse(depth: 2) {
+        |    name friend } }""".stripMargin -> 21
+    ).foreach { case (q, before) =>
+      val n = jobs(q)
+      assert(n <= before / 2, s"$n jobs (budget ${before / 2}) for $q")
+    }
+  }
+
+  test("an earlier block's value var is read through its binding, not as a column") {
+    // the math/level-aggregation column map holds this block's binds
+    // only: `a` of the var block is no column of `me`, so an unrelated
+    // root `age` cannot stand in for it, and the aggregate (which needs
+    // a sibling that binds `a`) renders nothing either way
+    checkGolden(
+      """{ var(func: uid(0x17, 0x18)) { a as age }
+        |  me(func: uid(0x01)) { friend { s: sum(val(a)) } } }""".stripMargin,
+      """{"data": {"me":[]}}""")
+    checkGolden(
+      """{ var(func: uid(0x17, 0x18)) { a as age }
+        |  me(func: uid(0x01)) { age friend { s: sum(val(a)) } } }""".stripMargin,
+      """{"data": {"me":[{"age":38}]}}""")
+    // bound one level below a friend edge in an earlier block, var or
+    // named: not a sibling of this block's aggregate, so no level error
+    checkGolden(
+      """{ var(func: uid(0x01)) { friend { a as age } }
+        |  me(func: uid(0x17)) { friend { s: sum(val(a)) } } }""".stripMargin,
+      """{"data": {"me":[]}}""")
+    checkGolden(
+      """{ q(func: uid(0x01)) { friend { a as age } }
+        |  me(func: uid(0x17)) { friend { s: sum(val(a)) } } }""".stripMargin,
+      """{"data": {"q":[{"friend":[{"age":15},{"age":15},{"age":17},{"age":19}]}],
+        |"me":[]}}""".stripMargin)
+  }
+
   test("golden: TestAggregateEmpty4 (query1_test.go)") {
     // similar_to over an unknown predicate yields the empty set
     checkGolden(

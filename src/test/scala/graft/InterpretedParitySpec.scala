@@ -94,6 +94,34 @@ class InterpretedParitySpec extends AnyFunSuite {
   fixtureQueries.foreach { case (name, q) =>
     test(s"interpreted == compiled: $name") { dql(fixture, q) }
   }
+
+  private val rdfQueries = Seq(
+    """{ me(func:anyofterms(name, "Michonne Rick Daryl")) {
+      |    name count(friend) friend { name } } }""".stripMargin,
+    """{ me(func: uid(0x01)) { name gender
+      |    friend(orderdesc: film.film.initial_release_date) {
+      |      name film.film.initial_release_date } } }""".stripMargin,
+    """{ me(func: anyofterms(name, "Michonne Rick Daryl")) @recurse(depth: 3) {
+      |    name friend } }""".stripMargin)
+
+  test("interpreted == compiled: RDF reads") {
+    rdfQueries.foreach { q =>
+      val interpreted = new DqlExecutor(fixture).rdfAll(q)
+      assert(interpreted.nonEmpty)
+      assert(interpreted == new DqlExecutor(new InterpretedParity.Unsized(fixture)).rdfAll(q))
+    }
+  }
+
+  test("a repeated interpreted RDF read compiles no class") {
+    // Spark compiles some classes even with codegen off (see
+    // DqlExecutor.Interpreted); each is compiled once per JVM
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    assert(DqlExecutor.ReadMode(fixture).interpreted)
+    rdfQueries.foreach(new DqlExecutor(fixture).rdfAll(_))
+    val before = METRIC_COMPILATION_TIME.getCount
+    rdfQueries.foreach(new DqlExecutor(fixture).rdfAll(_))
+    assert(METRIC_COMPILATION_TIME.getCount == before)
+  }
 }
 
 object InterpretedParity extends org.scalatest.Assertions {

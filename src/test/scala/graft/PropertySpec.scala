@@ -203,6 +203,7 @@ class PropertySpec extends AnyFunSuite {
     "(first: 1, after: 0x3)" -> (_.filter(_ > 3).take(1)))
 
   test("nested child paging equals per-parent slices of uid-sorted children (12 random graphs)") {
+    // each graph renders as JSON and as RDF
     val json = new ObjectMapper()
     val graphs = samples(graphGen, 12)
     val outDegrees = graphs.flatMap(es => (0L to 7L).map(n => es.count(_._1 == n)))
@@ -228,15 +229,29 @@ class PropertySpec extends AnyFunSuite {
         }
         o
       }
+      // the same read as N-Triples: per level the frontier's names, then
+      // each parent's paged edges, then the child level over the distinct
+      // children in uid order
+      def hex(u: Long) = s"<0x${u.toHexString}>"
+      def triples(frontier: Seq[Long], pages: Seq[Seq[Long] => Seq[Long]]): Seq[String] =
+        frontier.map(u => s"""${hex(u)} <name> "n${u - 1}" .""") ++
+          pages.headOption.toSeq.flatMap { page =>
+            val pairs = frontier.flatMap(p => page(kids(p - 1)).map(p -> _))
+            pairs.map { case (p, c) => s"${hex(p)} <friend> ${hex(c)} ." } ++
+              triples(pairs.map(_._2).distinct.sorted, pages.tail)
+          }
       val q = s"{ q(func: uid(${(1 to 8).map(i => s"0x$i").mkString(", ")})) " +
         s"{ name friend $p1 { name friend $p2 { name } } } }"
-      val got = new DqlExecutor(friendStore(edges)).jsonAllAst(Parser.parse(q))
+      val store = friendStore(edges)
+      val got = new DqlExecutor(store).jsonAllAst(Parser.parse(q))
         .select("uid", "json").as[(Long, String)].collect().sortBy(_._1).toSeq
       val expected = (1L to 8L).map(u => (u, node(u, Seq(slice1, slice2))))
       assert(got.map(_._1) == expected.map(_._1), s"$q\nedges=$edges")
       got.zip(expected).foreach { case ((u, j), (_, e)) =>
         assert(json.readTree(j) == e, s"uid $u of $q\nedges=$edges\ngot $j\nexpected $e")
       }
+      val rdf = triples(1L to 8L, Seq(slice1, slice2)).map(_ + "\n").mkString
+      assert(new DqlExecutor(store).rdfAll(q) == rdf, s"$q\nedges=$edges")
     }
   }
 
