@@ -8,6 +8,15 @@ import org.apache.spark.sql.functions._
 /** The canonical graph view: typed attribute tables + an edge table,
   * derived lazily from the relational parquet tables.
   *
+  * What the store holds is declared ONCE, in [[sources]]: one entry per
+  * source table with its node type, subject uid and the attribute and
+  * edge rows each of its rows carries (the reference's bulk loader turns
+  * each input row into N-Quads once, dgraph/cmd/bulk/mapper.go, and
+  * builds every posting list from that one stream). Every view below —
+  * the edge union, the typed attribute tablets, `nodeTypes`, the backup
+  * melt, the wide registry and the edge/facet metadata — is derived from
+  * that list, so no two of them can disagree on a predicate.
+  *
   * The reference stores one posting list per (predicate, subject) key and
   * shards predicates to server groups ("tablets",
   * /root/reference/worker/groups.go:218 BelongsTo). The Spark analogue of a
@@ -24,9 +33,12 @@ import org.apache.spark.sql.functions._
   */
 final class TripleStore(val spark: SparkSession, val sfDir: String)
     extends GraphStore {
+  import TripleStore._
   import Uids._
 
   private def t(name: String): DataFrame = Tables.load(spark, sfDir, name)
+
+  val schema: SchemaRegistry = SchemaRegistry.tpch
 
   /** lineitem has no unique natural key in this dataset ((orderkey,
     * linenumber) repeats), so line uids are assigned by a deterministic
@@ -57,18 +69,121 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
     spark.read.parquet(dir)
   }
 
-  /** The source tables' bytes. Reads only file listings, so the lazy
-    * layouts (`line`, `edgesStored`, `attrStringStored`) are still
+  /** The TPC-H graph: every source table the store reads and the rows it
+    * turns each of its rows into. An attribute's value is its SOURCE
+    * column; [[typed]] casts it by the predicate's schema type. Frames
+    * are thunks, so declaring reads nothing and writes no layout.
+    */
+  private[graft] val sources: Seq[Source] = {
+    val region = lit(Region) + col("r_regionkey").cast("long")
+    val nation = lit(Nation) + col("n_nationkey").cast("long")
+    val customer = lit(Customer) + col("c_custkey")
+    val supplier = lit(Supplier) + col("s_suppkey")
+    val order = lit(Order) + col("o_orderkey")
+    val lineUid = col("line_uid")
+    val orderdate = date_format(col("o_orderdate"), "yyyy-MM-dd")
+    Seq(
+      Source("region", () => t("region"), "Region", region, Seq(
+        Attr("name", col("r_name")))),
+      Source("nation", () => t("nation"), "Nation", nation, Seq(
+        Attr("name", col("n_name")),
+        Edge("in_region", nation,
+          lit(Region) + col("n_regionkey").cast("long"), "Region"))),
+      Source("customer", () => t("customer"), "Customer", customer, Seq(
+        Attr("name", col("c_name")),
+        Attr("mktsegment", col("c_mktsegment")),
+        Attr("acctbal", col("c_acctbal")),
+        Edge("located_in", customer,
+          lit(Nation) + col("c_nationkey").cast("long"), "Nation"))),
+      Source("supplier", () => t("supplier"), "Supplier", supplier, Seq(
+        Attr("name", col("s_name")),
+        Attr("acctbal", col("s_acctbal")),
+        Edge("located_in", supplier,
+          lit(Nation) + col("s_nationkey").cast("long"), "Nation"))),
+      Source("part", () => t("part"), "Part", lit(Part) + col("p_partkey"), Seq(
+        Attr("name", col("p_name")),
+        Attr("brand", col("p_brand")),
+        Attr("ptype", col("p_type")),
+        Attr("size", col("p_size")),
+        Attr("retailprice", col("p_retailprice")))),
+      Source("orders", () => t("orders"), "Order", order, Seq(
+        Attr("orderstatus", col("o_orderstatus")),
+        Attr("orderpriority", col("o_orderpriority")),
+        Attr("totalprice", col("o_totalprice")),
+        Attr("orderdate", col("o_orderdate")),
+        // o_orderkey is the table's key: each order has one inbound edge
+        Edge("placed", lit(Customer) + col("o_custkey"), order, "Order",
+          objectsUnique = true, facets = Seq(
+            Facet("orderdate", "string", orderdate, orderdate),
+            Facet("totalprice", "double",
+              col("o_totalprice").cast("decimal(18,2)").cast("string"),
+              col("o_totalprice").cast("double")))))),
+      Source("lineitem", () => line, "Lineitem", lineUid, Seq(
+        Attr("returnflag", col("l_returnflag")),
+        Attr("linestatus", col("l_linestatus")),
+        Attr("quantity", col("l_quantity")),
+        Attr("extendedprice", col("l_extendedprice")),
+        Attr("discount", col("l_discount")),
+        Attr("shipdate", col("l_shipdate")),
+        // line_uid is the layout's own unique subject
+        Edge("has_line", lit(Order) + col("l_orderkey"), lineUid, "Lineitem", objectsUnique = true, facets = Seq(
+            // the typed column stays the RAW double source column (no
+            // cast-to-long): a cast above the scan would block comparison
+            // pushdown, and the integral TPC-H quantities make double vs
+            // long comparisons identical (the literal widens to double)
+            Facet("quantity", "long",
+              col("l_quantity").cast("long").cast("string"), col("l_quantity")),
+            Facet("discount", "double",
+              col("l_discount").cast("decimal(6,2)").cast("string"),
+              col("l_discount")))),
+        Edge("of_part", lineUid, lit(Part) + col("l_partkey"), "Part"),
+        Edge("by_supplier", lineUid, lit(Supplier) + col("l_suppkey"),
+          "Supplier"))),
+      Source("documents", () => t("documents"), "Document",
+        lit(Document) + col("doc_id"), Seq(
+          // documents.text carries a lang tag (reference @lang predicates,
+          // posting/list.go:2067 ValueFor preference chains)
+          Attr("text", col("text"), lang = Some(col("lang"))),
+          Attr("source", col("source")),
+          Attr("n_chars", col("n_chars")))),
+      // vector attribute for similar_to (reference float32vector,
+      // types/scalar_types.go:60)
+      Source("embeddings", () => t("embeddings"), "Embedding",
+        lit(Embedding) + col("vec_id"), Seq(
+          Attr("embedding", col("embedding")))))
+  }
+
+  private val edgeRows: Map[String, Seq[Edge]] =
+    sources.flatMap(_.edges).groupBy(_.pred)
+
+  /** The one cast rule from a predicate's schema type to its tablet's
+    * value type. Tablets, wide frames and backup strings all cast
+    * through it, so their values agree bit for bit.
+    */
+  private def valueType(p: String): String = schema.pred(p).dgraphType match {
+    case "int" => "long"
+    case "float" => "double"
+    case "datetime" => "timestamp"
+    case "float32vector" => "array<float>"
+    case _ => "string"
+  }
+
+  private def typed(p: String, value: Column): Column = value.cast(valueType(p))
+
+  /** The declared source tables' bytes. Reads only file listings, so the
+    * lazy layouts (`line`, `edgesStored`, `attrStringStored`) are still
     * written by the first read that needs them. A table that cannot be
     * listed makes the size unknown.
     */
   override lazy val estimatedBytes: Option[Long] =
-    scala.util.Try(Tables.names.map(Tables.sizeInBytes(spark, sfDir, _)).sum).toOption
+    scala.util.Try(sources.map(s => Tables.sizeInBytes(spark, sfDir, s.table)).sum)
+      .toOption
 
   // ---- edge table: subject, predicate, object, facets ----
 
-  /** All uid→uid edges. Facet values are strings formatted identically to
-    * the DuckDB oracle (decimal casts, ISO dates).
+  /** All uid→uid edges, one branch per declared edge row. Facet values
+    * are strings formatted identically to the DuckDB oracle (decimal
+    * casts, ISO dates).
     *
     * Besides the string map (for @facets fetch/output), every branch also
     * carries TYPED facet columns `_ft_<key>` (null outside the owning
@@ -79,71 +194,20 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
     * lineitem row first (the r2 dql_facets_filter regression).
     */
   lazy val edges: DataFrame = {
-    // _ft_quantity stays the RAW double source column (no cast-to-long):
-    // a cast above the scan would block comparison pushdown, and the
-    // integral TPC-H quantities make double vs long comparisons identical
-    // (the comparison literal widens to double)
-    val nullFt = Seq(
-      lit(null).cast("string").as("_ft_orderdate"),
-      lit(null).cast("double").as("_ft_totalprice"),
-      lit(null).cast("double").as("_ft_quantity"),
-      lit(null).cast("double").as("_ft_discount"))
-    def ft(orderdate: Column = lit(null).cast("string"),
-        totalprice: Column = lit(null).cast("double"),
-        quantity: Column = lit(null).cast("double"),
-        discount: Column = lit(null).cast("double")): Seq[Column] = Seq(
-      orderdate.as("_ft_orderdate"), totalprice.as("_ft_totalprice"),
-      quantity.as("_ft_quantity"), discount.as("_ft_discount"))
-
-    val custNation = t("customer").select(Seq(
-      (lit(Customer) + col("c_custkey")).as("subject"),
-      lit("located_in").as("predicate"),
-      (lit(Nation) + col("c_nationkey").cast("long")).as("object"),
-      map().cast("map<string,string>").as("facets")) ++ nullFt: _*)
-    val suppNation = t("supplier").select(Seq(
-      (lit(Supplier) + col("s_suppkey")).as("subject"),
-      lit("located_in").as("predicate"),
-      (lit(Nation) + col("s_nationkey").cast("long")).as("object"),
-      map().cast("map<string,string>").as("facets")) ++ nullFt: _*)
-    val nationRegion = t("nation").select(Seq(
-      (lit(Nation) + col("n_nationkey").cast("long")).as("subject"),
-      lit("in_region").as("predicate"),
-      (lit(Region) + col("n_regionkey").cast("long")).as("object"),
-      map().cast("map<string,string>").as("facets")) ++ nullFt: _*)
-    val placed = t("orders").select(Seq(
-      (lit(Customer) + col("o_custkey")).as("subject"),
-      lit("placed").as("predicate"),
-      (lit(Order) + col("o_orderkey")).as("object"),
-      map(
-        lit("orderdate"), date_format(col("o_orderdate"), "yyyy-MM-dd"),
-        lit("totalprice"), col("o_totalprice").cast("decimal(18,2)").cast("string")
-      ).as("facets")) ++ ft(
-        orderdate = date_format(col("o_orderdate"), "yyyy-MM-dd"),
-        totalprice = col("o_totalprice").cast("double")): _*)
-    val hasLine = line.select(Seq(
-      (lit(Order) + col("l_orderkey")).as("subject"),
-      lit("has_line").as("predicate"),
-      col("line_uid").as("object"),
-      map(
-        lit("quantity"), col("l_quantity").cast("long").cast("string"),
-        lit("discount"), col("l_discount").cast("decimal(6,2)").cast("string")
-      ).as("facets")) ++ ft(
-        quantity = col("l_quantity"),
-        discount = col("l_discount")): _*)
-    val ofPart = line.select(Seq(
-      col("line_uid").as("subject"),
-      lit("of_part").as("predicate"),
-      (lit(Part) + col("l_partkey")).as("object"),
-      map().cast("map<string,string>").as("facets")) ++ nullFt: _*)
-    val bySupplier = line.select(Seq(
-      col("line_uid").as("subject"),
-      lit("by_supplier").as("predicate"),
-      (lit(Supplier) + col("l_suppkey")).as("object"),
-      map().cast("map<string,string>").as("facets")) ++ nullFt: _*)
-
-    custNation.unionByName(suppNation).unionByName(nationRegion)
-      .unionByName(placed).unionByName(hasLine)
-      .unionByName(ofPart).unionByName(bySupplier)
+    val branches = for (s <- sources if s.edges.nonEmpty; df = s.frame();
+        e <- s.edges) yield {
+      val facetMap =
+        if (e.facets.isEmpty) map().cast("map<string,string>")
+        else map(e.facets.flatMap(f => Seq(lit(f.key), f.str)): _*)
+      df.select(Seq(e.subject.as("subject"), lit(e.pred).as("predicate"),
+        e.obj.as("object"), facetMap.as("facets")) ++
+        e.facets.map(f => f.typed.as(s"_ft_${f.key}")): _*)
+    }
+    // a branch without a facet gets that facet's column as a typed null
+    val ftCols = sources.flatMap(_.edges).flatMap(_.facets).map(f => s"_ft_${f.key}")
+    branches.reduce(_.unionByName(_, allowMissingColumns = true))
+      .select((Seq("subject", "predicate", "object", "facets") ++ ftCols.distinct)
+        .map(col): _*)
   }
 
   /** The edge union materialized once per session as a predicate-
@@ -173,116 +237,56 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
 
   // ---- typed attribute tables: subject, predicate, value [, lang] ----
 
-  private def sAttr(df: DataFrame, subj: Column, pred: String, value: Column,
-      lang: Column = lit(null).cast("string")): DataFrame =
-    df.select(subj.as("subject"), lit(pred).as("predicate"),
-      value.cast("string").as("value"), lang.as("lang"))
-
-  lazy val attrString: DataFrame = {
-    val c = t("customer"); val n = t("nation"); val r = t("region")
-    val s = t("supplier"); val p = t("part"); val o = t("orders")
-    val l = line; val d = t("documents")
-    val lineSubj = col("line_uid")
-    Seq(
-      sAttr(c, lit(Customer) + col("c_custkey"), "name", col("c_name")),
-      sAttr(c, lit(Customer) + col("c_custkey"), "mktsegment", col("c_mktsegment")),
-      sAttr(n, lit(Nation) + col("n_nationkey").cast("long"), "name", col("n_name")),
-      sAttr(r, lit(Region) + col("r_regionkey").cast("long"), "name", col("r_name")),
-      sAttr(s, lit(Supplier) + col("s_suppkey"), "name", col("s_name")),
-      sAttr(p, lit(Part) + col("p_partkey"), "name", col("p_name")),
-      sAttr(p, lit(Part) + col("p_partkey"), "brand", col("p_brand")),
-      sAttr(p, lit(Part) + col("p_partkey"), "ptype", col("p_type")),
-      sAttr(o, lit(Order) + col("o_orderkey"), "orderstatus", col("o_orderstatus")),
-      sAttr(o, lit(Order) + col("o_orderkey"), "orderpriority", col("o_orderpriority")),
-      sAttr(l, lineSubj, "returnflag", col("l_returnflag")),
-      sAttr(l, lineSubj, "linestatus", col("l_linestatus")),
-      // documents.text carries a lang tag (reference @lang predicates,
-      // posting/list.go:2067 ValueFor preference chains)
-      sAttr(d, lit(Document) + col("doc_id"), "text", col("text"), col("lang")),
-      sAttr(d, lit(Document) + col("doc_id"), "source", col("source"))
-    ).reduce(_ unionByName _)
+  /** Every declared attribute row whose tablet value type is `vt`, one
+    * union branch per row: subject, predicate, value cast by [[typed]],
+    * and for string tablets a `lang` column. A direct source-type cast
+    * (no string round-trip: `cast(cast(x AS string) AS long)` cannot be
+    * unwrapped by Catalyst) lets numeric and datetime range predicates
+    * land on the parquet scan. Built once per value type.
+    */
+  private def tablet(vt: String): DataFrame = derived(("TripleStore.tablet", vt)) {
+    val branches = sources.flatMap { s =>
+      val attrs = s.attrs.filter(a => valueType(a.pred) == vt)
+      // one load per table: each load infers the parquet schema
+      lazy val df = s.frame()
+      attrs.map { a =>
+        val cols = Seq(s.subject.as("subject"), lit(a.pred).as("predicate"),
+          typed(a.pred, a.value).as("value"))
+        df.select((if (vt == "string")
+            cols :+ a.lang.getOrElse(lit(null).cast("string")).as("lang")
+          else cols): _*)
+      }
+    }
+    branches.reduce(_ unionByName _)
   }
 
-  /** The string-attr union MATERIALIZED once per session as a predicate-
+  /** The string tablet MATERIALIZED once per session as a predicate-
     * partitioned parquet layout — the reference's tablet files on disk
     * (worker/groups.go:218 shards one tablet per predicate). The lazy
-    * `attrString` union is the right shape for single-predicate reads
-    * (branch pruning kills every other scan), but consumers that read
-    * MANY predicates per invocation (mutation merges over the whole
-    * store, RDF export) re-execute all 14 branch scans each run; this
-    * pays the scan once and every later read is a single pruned
-    * directory scan. At cluster scale this IS the bulk-load output —
-    * one partitioned table, predicate pruning server-side.
+    * union is the right shape for single-predicate reads (branch
+    * pruning kills every other scan), but consumers that read MANY
+    * predicates per invocation (mutation merges over the whole store,
+    * RDF export) re-execute all 14 branch scans each run; this pays the
+    * scan once and every later read is a single pruned directory scan.
+    * At cluster scale this IS the bulk-load output — one partitioned
+    * table, predicate pruning server-side.
     */
   lazy val attrStringStored: DataFrame = {
     val dir = new java.io.File(
       s"target/graft-derived/attrs_${new java.io.File(sfDir).getName}" +
         s"_${Scratch.tag(spark)}").getAbsolutePath
-    attrString.write.mode("overwrite").partitionBy("predicate").parquet(dir)
+    tablet("string").write.mode("overwrite").partitionBy("predicate").parquet(dir)
     spark.read.parquet(dir)
       .select(col("subject"), col("predicate").cast("string").as("predicate"),
         col("value"), col("lang"))
   }
 
-  // Typed attribute rows WITHOUT sAttr's generic string round-trip:
-  // `cast(cast(x AS string) AS long/double/timestamp)` cannot be
-  // unwrapped by Catalyst, so every DQL numeric/datetime root filter
-  // stopped at IsNotNull in PushedFilters and scanned all row groups.
-  // A direct source-type cast unwraps and the range predicates land on
-  // the parquet scan — at 100 TB that is the difference between a
-  // pruned index walk and a full pass over the tablet.
-  private def tAttr(df: DataFrame, subj: Column, pred: String,
-      value: Column, typ: String): DataFrame =
-    df.select(subj.as("subject"), lit(pred).as("predicate"),
-      value.cast(typ).as("value"))
-
-  lazy val attrLong: DataFrame = {
-    val p = t("part"); val d = t("documents")
-    tAttr(p, lit(Part) + col("p_partkey"), "size", col("p_size"), "long")
-      .unionByName(
-        tAttr(d, lit(Document) + col("doc_id"), "n_chars", col("n_chars"), "long"))
-  }
-
-  lazy val attrDouble: DataFrame = {
-    val c = t("customer"); val s = t("supplier"); val p = t("part")
-    val o = t("orders"); val l = line
-    val lineSubj = col("line_uid")
-    Seq(
-      tAttr(c, lit(Customer) + col("c_custkey"), "acctbal", col("c_acctbal"), "double"),
-      tAttr(s, lit(Supplier) + col("s_suppkey"), "acctbal", col("s_acctbal"), "double"),
-      tAttr(p, lit(Part) + col("p_partkey"), "retailprice", col("p_retailprice"), "double"),
-      tAttr(o, lit(Order) + col("o_orderkey"), "totalprice", col("o_totalprice"), "double"),
-      tAttr(l, lineSubj, "quantity", col("l_quantity"), "double"),
-      tAttr(l, lineSubj, "extendedprice", col("l_extendedprice"), "double"),
-      tAttr(l, lineSubj, "discount", col("l_discount"), "double")
-    ).reduce(_ unionByName _)
-  }
-
-  lazy val attrTs: DataFrame = {
-    val o = t("orders"); val l = line
-    val lineSubj = col("line_uid")
-    tAttr(o, lit(Order) + col("o_orderkey"), "orderdate",
-        col("o_orderdate"), "timestamp")
-      .unionByName(tAttr(l, lineSubj, "shipdate", col("l_shipdate"),
-        "timestamp"))
-  }
-
-  /** dgraph.type attribute (reference type() root fn, dql/parser.go:1704). */
-  lazy val nodeTypes: DataFrame = {
-    def tt(df: DataFrame, subj: Column, ty: String) =
-      df.select(subj.as("subject"), lit(ty).as("typeName"))
-    Seq(
-      tt(t("region"), lit(Region) + col("r_regionkey").cast("long"), "Region"),
-      tt(t("nation"), lit(Nation) + col("n_nationkey").cast("long"), "Nation"),
-      tt(t("customer"), lit(Customer) + col("c_custkey"), "Customer"),
-      tt(t("supplier"), lit(Supplier) + col("s_suppkey"), "Supplier"),
-      tt(t("part"), lit(Part) + col("p_partkey"), "Part"),
-      tt(t("orders"), lit(Order) + col("o_orderkey"), "Order"),
-      tt(line, col("line_uid"), "Lineitem"),
-      tt(t("documents"), lit(Document) + col("doc_id"), "Document"),
-      tt(t("embeddings"), lit(Embedding) + col("vec_id"), "Embedding")
-    ).reduce(_ unionByName _)
-  }
+  /** dgraph.type attribute (reference type() root fn, dql/parser.go:1704):
+    * one row per source row, typed by its table.
+    */
+  lazy val nodeTypes: DataFrame = sources.map { s =>
+    s.frame().select(s.subject.as("subject"), lit(s.nodeType).as("typeName"))
+  }.reduce(_ unionByName _)
 
   /** Store-optimized backup frame (see [[GraphStore.backupTriples]]):
     * ONE scan per source table emits every backup row the table owns —
@@ -292,121 +296,49 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
     * branches + 9 type branches), and the backup write's wall-clock is
     * dominated by those plan units (codegen compilation cold, stage
     * scheduling hot), not by bytes — melting gets it to 9 leaves.
-    * Value/facet strings replicate the exact cast chains of the tablet
-    * views (sAttr casts to string, the typed table casts back, Backup
-    * casts to string again); BackupSpec asserts row parity with the
-    * generic path at sf0.001.
+    * A value string is the tablet's typed value cast to string, and a
+    * facet string is `k=v` joined by `, ` in declared order, as
+    * Backup.genericTripleFrame formats them; BackupSpec asserts row
+    * parity with the generic path at sf0.001.
     */
   override def backupTriples(only: Set[String]): Option[DataFrame] = {
     def keep(name: String) = only.isEmpty || only(name)
-    val nullC = lit(null).cast("long")
     val nullS = lit(null).cast("string")
-    // one output row spec: (predicate, subject, objectUid, value, lang, facets)
-    case class R(pred: String, subject: Column, objectUid: Column = nullC,
-        value: Column = nullS, lang: Column = nullS, facets: Column = nullS)
-    def melt(df: DataFrame, rows: Seq[R]): Option[DataFrame] = {
-      val kept = rows.filter(r => keep(r.pred))
-      if (kept.isEmpty) None
-      else Some(df.select(explode(array(kept.map { r =>
-        struct(r.subject.cast("long").as("subject"),
-          lit(r.pred).as("predicate"),
-          r.objectUid.cast("long").as("objectUid"),
-          r.value.cast("string").as("value"),
-          r.lang.cast("string").as("lang"),
-          r.facets.cast("string").as("facets"))
-      }: _*)).as("t")).select(col("t.*")))
+    def row(pred: String, subject: Column, objectUid: Column = lit(null),
+        value: Column = nullS, lang: Column = nullS,
+        facets: Column = nullS): Column =
+      struct(subject.cast("long").as("subject"), lit(pred).as("predicate"),
+        objectUid.cast("long").as("objectUid"), value.cast("string").as("value"),
+        lang.cast("string").as("lang"), facets.cast("string").as("facets"))
+    val branches = sources.flatMap { s =>
+      val rows = s.rows.collect {
+        case a: Attr if keep(a.pred) &&
+            graft.operators.Backup.backsUpValues(schema.pred(a.pred)) =>
+          row(a.pred, s.subject, value = typed(a.pred, a.value),
+            lang = a.lang.getOrElse(nullS))
+        case e: Edge if keep(e.pred) =>
+          row(e.pred, e.subject, objectUid = e.obj, facets =
+            if (e.facets.isEmpty) nullS
+            else concat(e.facets.zipWithIndex.flatMap { case (f, i) =>
+              Seq(lit((if (i == 0) "" else ", ") + s"${f.key}="), f.str)
+            }: _*))
+      } ++ (if (keep("dgraph.type"))
+              Seq(row("dgraph.type", s.subject, value = lit(s.nodeType)))
+            else Nil)
+      if (rows.isEmpty) None
+      else Some(s.frame().select(explode(array(rows: _*)).as("t")).select(col("t.*")))
     }
-    def str(c: Column) = c.cast("string")
-    // attrDouble chain: src.cast(string).cast(double) then Backup .cast(string)
-    def dbl(c: Column) = c.cast("string").cast("double").cast("string")
-    // attrLong chain: src.cast(long).cast(string).cast(long) → string
-    def lng(c: Column) = c.cast("long").cast("string")
-    // attrTs chain: src.cast(string).cast(timestamp) → string
-    def ts(c: Column) = c.cast("string").cast("timestamp").cast("string")
-    val placedFacets = concat(
-      lit("orderdate="), date_format(col("o_orderdate"), "yyyy-MM-dd"),
-      lit(", totalprice="), col("o_totalprice").cast("decimal(18,2)").cast("string"))
-    val hasLineFacets = concat(
-      lit("quantity="), col("l_quantity").cast("long").cast("string"),
-      lit(", discount="), col("l_discount").cast("decimal(6,2)").cast("string"))
-    val branches = Seq(
-      melt(t("region"), Seq(
-        R("name", lit(Region) + col("r_regionkey").cast("long"), value = str(col("r_name"))),
-        R("dgraph.type", lit(Region) + col("r_regionkey").cast("long"), value = lit("Region")))),
-      melt(t("nation"), Seq(
-        R("name", lit(Nation) + col("n_nationkey").cast("long"), value = str(col("n_name"))),
-        R("in_region", lit(Nation) + col("n_nationkey").cast("long"),
-          objectUid = lit(Region) + col("n_regionkey").cast("long")),
-        R("dgraph.type", lit(Nation) + col("n_nationkey").cast("long"), value = lit("Nation")))),
-      melt(t("customer"), Seq(
-        R("name", lit(Customer) + col("c_custkey"), value = str(col("c_name"))),
-        R("mktsegment", lit(Customer) + col("c_custkey"), value = str(col("c_mktsegment"))),
-        R("acctbal", lit(Customer) + col("c_custkey"), value = dbl(col("c_acctbal"))),
-        R("located_in", lit(Customer) + col("c_custkey"),
-          objectUid = lit(Nation) + col("c_nationkey").cast("long")),
-        R("dgraph.type", lit(Customer) + col("c_custkey"), value = lit("Customer")))),
-      melt(t("supplier"), Seq(
-        R("name", lit(Supplier) + col("s_suppkey"), value = str(col("s_name"))),
-        R("acctbal", lit(Supplier) + col("s_suppkey"), value = dbl(col("s_acctbal"))),
-        R("located_in", lit(Supplier) + col("s_suppkey"),
-          objectUid = lit(Nation) + col("s_nationkey").cast("long")),
-        R("dgraph.type", lit(Supplier) + col("s_suppkey"), value = lit("Supplier")))),
-      melt(t("part"), Seq(
-        R("name", lit(Part) + col("p_partkey"), value = str(col("p_name"))),
-        R("brand", lit(Part) + col("p_partkey"), value = str(col("p_brand"))),
-        R("ptype", lit(Part) + col("p_partkey"), value = str(col("p_type"))),
-        R("size", lit(Part) + col("p_partkey"), value = lng(col("p_size"))),
-        R("retailprice", lit(Part) + col("p_partkey"), value = dbl(col("p_retailprice"))),
-        R("dgraph.type", lit(Part) + col("p_partkey"), value = lit("Part")))),
-      melt(t("orders"), Seq(
-        R("orderstatus", lit(Order) + col("o_orderkey"), value = str(col("o_orderstatus"))),
-        R("orderpriority", lit(Order) + col("o_orderkey"), value = str(col("o_orderpriority"))),
-        R("totalprice", lit(Order) + col("o_orderkey"), value = dbl(col("o_totalprice"))),
-        R("orderdate", lit(Order) + col("o_orderkey"), value = ts(col("o_orderdate"))),
-        R("placed", lit(Customer) + col("o_custkey"),
-          objectUid = lit(Order) + col("o_orderkey"), facets = placedFacets),
-        R("dgraph.type", lit(Order) + col("o_orderkey"), value = lit("Order")))),
-      melt(line, Seq(
-        R("returnflag", col("line_uid"), value = str(col("l_returnflag"))),
-        R("linestatus", col("line_uid"), value = str(col("l_linestatus"))),
-        R("quantity", col("line_uid"), value = dbl(col("l_quantity"))),
-        R("extendedprice", col("line_uid"), value = dbl(col("l_extendedprice"))),
-        R("discount", col("line_uid"), value = dbl(col("l_discount"))),
-        R("shipdate", col("line_uid"), value = ts(col("l_shipdate"))),
-        R("has_line", lit(Order) + col("l_orderkey"),
-          objectUid = col("line_uid"), facets = hasLineFacets),
-        R("of_part", col("line_uid"), objectUid = lit(Part) + col("l_partkey")),
-        R("by_supplier", col("line_uid"), objectUid = lit(Supplier) + col("l_suppkey")),
-        R("dgraph.type", col("line_uid"), value = lit("Lineitem")))),
-      melt(t("documents"), Seq(
-        R("text", lit(Document) + col("doc_id"), value = str(col("text")), lang = col("lang")),
-        R("source", lit(Document) + col("doc_id"), value = str(col("source"))),
-        R("n_chars", lit(Document) + col("doc_id"), value = lng(col("n_chars"))),
-        R("dgraph.type", lit(Document) + col("doc_id"), value = lit("Document")))),
-      melt(t("embeddings"), Seq(
-        R("dgraph.type", lit(Embedding) + col("vec_id"), value = lit("Embedding"))))
-    ).flatten
     if (branches.isEmpty) None else Some(branches.reduce(_ unionByName _))
   }
-
-  /** Vector attribute for similar_to (reference float32vector,
-    * types/scalar_types.go:60).
-    */
-  lazy val attrVector: DataFrame =
-    t("embeddings").select(
-      (lit(Embedding) + col("vec_id")).as("subject"),
-      lit("embedding").as("predicate"),
-      col("embedding").as("value"))
 
   /** Facet keys and their value types per edge predicate (reference
     * facet metadata, types/facets/facet_types.go:21). Facet values live
     * as strings in the edge map; these types drive comparisons/ordering.
     */
-  val facetKeys: Map[String, Seq[(String, String)]] = Map(
-    "placed" -> Seq("orderdate" -> "string", "totalprice" -> "double"),
-    "has_line" -> Seq("quantity" -> "long", "discount" -> "double"))
-
-  val schema: SchemaRegistry = SchemaRegistry.tpch
+  val facetKeys: Map[String, Seq[(String, String)]] =
+    edgeRows.collect { case (p, es) if es.exists(_.facets.nonEmpty) =>
+      p -> es.flatMap(_.facets).map(f => f.key -> f.typ)
+    }
 
   /** Typed attribute view for one predicate (the "tablet"). String
     * tablets read the session-materialized partitioned layout — a
@@ -417,61 +349,32 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
     * parquet types).
     */
   def attr(predicate: String): DataFrame = {
-    val table = schema.pred(predicate).dgraphType match {
-      case "string" | "default" => attrStringStored
-      case "int" => attrLong
-      case "float" => attrDouble
-      case "datetime" => attrTs
-      case "float32vector" => attrVector
-      case other => throw new IllegalArgumentException(
-        s"no attribute table for type $other (predicate $predicate)")
+    if (schema.isUidPredicate(predicate))
+      throw new IllegalArgumentException(
+        s"no attribute table for type uid (predicate $predicate)")
+    val table = valueType(predicate) match {
+      case "string" => attrStringStored
+      case vt => tablet(vt)
     }
     table.filter(col("predicate") === predicate)
   }
 
   /** Every entity table's wide-readable scalar predicates: (typeName,
-    * source frame, subject uid, (pred, SOURCE column) pairs). Excludes
-    * lang-tagged (`text`) predicates — those genuinely need the
-    * per-predicate path (untagged-only rule, per-tag display riders);
-    * datetime rides wide since r17 (the tablet is the same
-    * cast-to-timestamp of the same source column). Column casts are
-    * applied by [[attrWide]] from the registry's own dgraph type, so
-    * the wide value is bit-identical to the melted tablet's.
+    * source frame, subject uid, (pred, SOURCE column) pairs) — the
+    * table's untagged attribute rows of schema type string, int, float
+    * or datetime. Lang-tagged (`text`) predicates genuinely need the
+    * per-predicate path (untagged-only rule, per-tag display riders).
+    * Column casts are applied by [[attrWide]] through [[typed]], so the
+    * wide value is bit-identical to the melted tablet's.
     */
   private[graft] def wideRegistry: Seq[(String, () => DataFrame, Column,
-      Seq[(String, Column)])] = Seq(
-    ("Region", () => t("region"), lit(Region) + col("r_regionkey").cast("long"),
-      Seq("name" -> col("r_name"))),
-    ("Nation", () => t("nation"), lit(Nation) + col("n_nationkey").cast("long"),
-      Seq("name" -> col("n_name"))),
-    ("Customer", () => t("customer"), lit(Customer) + col("c_custkey"),
-      Seq("name" -> col("c_name"),
-        "mktsegment" -> col("c_mktsegment"),
-        "acctbal" -> col("c_acctbal"))),
-    ("Supplier", () => t("supplier"), lit(Supplier) + col("s_suppkey"),
-      Seq("name" -> col("s_name"),
-        "acctbal" -> col("s_acctbal"))),
-    ("Part", () => t("part"), lit(Part) + col("p_partkey"),
-      Seq("name" -> col("p_name"),
-        "brand" -> col("p_brand"),
-        "ptype" -> col("p_type"),
-        "size" -> col("p_size"),
-        "retailprice" -> col("p_retailprice"))),
-    ("Order", () => t("orders"), lit(Order) + col("o_orderkey"),
-      Seq("orderstatus" -> col("o_orderstatus"),
-        "orderpriority" -> col("o_orderpriority"),
-        "totalprice" -> col("o_totalprice"),
-        "orderdate" -> col("o_orderdate"))),
-    ("Lineitem", () => line, col("line_uid"),
-      Seq("returnflag" -> col("l_returnflag"),
-        "linestatus" -> col("l_linestatus"),
-        "quantity" -> col("l_quantity"),
-        "extendedprice" -> col("l_extendedprice"),
-        "discount" -> col("l_discount"),
-        "shipdate" -> col("l_shipdate"))),
-    ("Document", () => t("documents"), lit(Document) + col("doc_id"),
-      Seq("source" -> col("source"),
-        "n_chars" -> col("n_chars"))))
+      Seq[(String, Column)])] =
+    sources.map { s =>
+      (s.nodeType, s.frame, s.subject, s.attrs.collect {
+        case a if a.lang.isEmpty && Set("string", "int", "float", "datetime")(
+            schema.pred(a.pred).dgraphType) => a.pred -> a.value
+      })
+    }.filter(_._4.nonEmpty)
 
   /** Tablet-group reads (see [[GraphStore.attrWide]]): sibling scalar
     * attributes fetch as column-pruned scans of their entities' source
@@ -504,12 +407,6 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
     */
   override def attrWide(preds: Seq[String],
       frontierTypes: Set[String] = Set.empty): Seq[GraphStore.WideGroup] = {
-    def sqlType(p: String): String = schema.pred(p).dgraphType match {
-      case "int" => "long"
-      case "float" => "double"
-      case "datetime" => "timestamp"
-      case _ => "string"
-    }
     val avail =
       if (frontierTypes.isEmpty) wideRegistry
       else wideRegistry.filter { case (ty, _, _, _) => frontierTypes(ty) }
@@ -557,10 +454,7 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
         val frames = ms.map { case (_, df, subj, cols) =>
           val byPred = cols.toMap
           df().select(subj.as("subject") +: groupPreds.map { p =>
-            byPred.get(p)
-              .map(_.cast(sqlType(p)))
-              .getOrElse(lit(null).cast(sqlType(p)))
-              .as(s"__ma_$p")
+            typed(p, byPred.getOrElse(p, lit(null))).as(s"__ma_$p")
           }: _*)
         }
         Some(GraphStore.WideGroup(frames.reduce(_ unionByName _), groupPreds,
@@ -569,30 +463,20 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
     }
   }
 
-  /** Target node types of a uid edge — load-layout metadata (each edge
-    * branch of [[edges]] constructs its objects inside exactly one uid
-    * band). Lets the executor carry frontier identity across a
-    * traversal hop so [[attrWide]] can prune its union.
+  /** Target node types of a uid edge — load-layout metadata (each
+    * declared edge row constructs its objects inside one uid band). Lets
+    * the executor carry frontier identity across a traversal hop so
+    * [[attrWide]] can prune its union.
     */
   override def edgeTargetTypes(predicate: String): Set[String] =
-    predicate match {
-      case "located_in" => Set("Nation")
-      case "in_region" => Set("Region")
-      case "placed" => Set("Order")
-      case "has_line" => Set("Lineitem")
-      case "of_part" => Set("Part")
-      case "by_supplier" => Set("Supplier")
-      case _ => Set.empty
-    }
+    edgeRows.getOrElse(predicate, Nil).map(_.target).toSet
 
-  /** `placed` objects derive 1:1 from orders rows (o_orderkey is the
-    * table's key) and `has_line` objects are the line_uid layout's own
-    * unique subject — each target has exactly one inbound edge, so a
-    * dedup over the objects is an identity (StoreInvariantSpec pins
-    * this against the data).
+  /** True when every declared row of the edge has unique objects (each
+    * target has exactly one inbound edge), so a dedup over the objects is
+    * an identity (StoreInvariantSpec pins this against the data).
     */
   override def edgeObjectsUnique(predicate: String): Boolean =
-    predicate == "placed" || predicate == "has_line"
+    edgeRows.get(predicate).exists(_.forall(_.objectsUnique))
 
   /** Every melted scalar tablet emits exactly one row per source-table
     * row, and each source table is keyed by its subject uid — so any
@@ -605,6 +489,36 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
 }
 
 object TripleStore {
+
+  /** One source table of the store: its frame, the node type and subject
+    * uid of each of its rows, and the [[Row]]s each of them carries.
+    */
+  final case class Source(table: String, frame: () => DataFrame,
+      nodeType: String, subject: Column, rows: Seq[Row]) {
+    def attrs: Seq[Attr] = rows.collect { case a: Attr => a }
+    def edges: Seq[Edge] = rows.collect { case e: Edge => e }
+  }
+
+  sealed trait Row { def pred: String }
+
+  /** A scalar attribute of the table's subject: its SOURCE column and,
+    * for a lang-tagged predicate, the column holding the tag.
+    */
+  final case class Attr(pred: String, value: Column,
+      lang: Option[Column] = None) extends Row
+
+  /** A uid edge. `objectsUnique`: no object has a second inbound edge of
+    * this predicate.
+    */
+  final case class Edge(pred: String, subject: Column, obj: Column,
+      target: String, objectsUnique: Boolean = false,
+      facets: Seq[Facet] = Nil) extends Row
+
+  /** An edge facet: its `facetKeys` type, the string in the edge's facet
+    * map, and the typed `_ft_<key>` column facet filters compare.
+    */
+  final case class Facet(key: String, typ: String, str: Column, typed: Column)
+
   private val cache = TrieMap.empty[(SparkSession, String), TripleStore]
   def apply(spark: SparkSession, sfDir: String): TripleStore =
     cache.getOrElseUpdate((spark, sfDir), new TripleStore(spark, sfDir))

@@ -368,6 +368,16 @@ final class DqlExecutor(ts: GraphStore) {
   private def recurseHops(r: RecurseArgs): Int =
     if (r.depth == Int.MaxValue) r.depth else math.max(0, r.depth - 1)
 
+  /** The node types of a uid frontier, sorted — what `expand(_all_)`
+    * expands. A metadata-sized collect.
+    */
+  private def typesOf(frontier: DataFrame): Seq[String] =
+    ts.nodeTypes.join(
+        frontier.select(col("uid").as("subject")).distinct(),
+        Seq("subject"), "left_semi")
+      .select("typeName").distinct()
+      .collect().map(_.getString(0)).sorted.toSeq
+
   /** expand(_all_)/expand(Type) inside a @recurse template: substitute
     * the type's predicates — uid preds drive the expansion, scalars
     * become per-level leaves (reference TestRecurseExpand walks the
@@ -383,12 +393,6 @@ final class DqlExecutor(ts: GraphStore) {
       if (!s.pred.startsWith("expand(")) Seq(s)
       else {
         val arg = s.pred.stripPrefix("expand(").stripSuffix(")")
-        def typesOf(df: DataFrame): Seq[String] =
-          ts.nodeTypes.join(
-              df.select(col("uid").as("subject")).distinct(),
-              Seq("subject"), "left_semi")
-            .select("typeName").distinct()
-            .collect().map(_.getString(0)).sorted.toSeq
         val typeNames =
           if (arg == "_all_") {
             var types = typesOf(frontier)
@@ -568,11 +572,7 @@ final class DqlExecutor(ts: GraphStore) {
           else None
         val typeNames =
           if (predNames.isDefined) Nil
-          else if (arg == "_all_")
-            ts.nodeTypes.join(
-                frontier.select(col("uid").as("subject")).distinct(),
-                Seq("subject"), "left_semi")
-              .select("typeName").distinct().as[String].collect().sorted.toSeq
+          else if (arg == "_all_") typesOf(frontier)
           // expand(T1, T2): union of the named types' predicates
           // (reference TestTypeExpandMultipleExplicitTypes)
           else arg.split(",").map(_.trim).toSeq
@@ -1039,45 +1039,24 @@ final class DqlExecutor(ts: GraphStore) {
     v.filter(cmp)
   }
 
-  /** Root functions whose non-val-arg seed routes EXCLUSIVELY through
-    * [[attrWhere]] — a pure filter over one attrRows slice, no index
-    * explode, no edge read. attrWhere's postcondition (documented there)
-    * makes every such seed unique per subject no matter which
-    * untaggedDefault the function passes: it either reads a provably
-    * subject-unique slice or dedups internally. has() keeps the same
-    * unique-or-distinct contract inline in its own seed branch.
-    * Count/geo/uid_in/similar_to seeds build from edge or top-k frames
-    * and stay out.
+  /** The root function's uid set, unique per uid: every [[seed0]]
+    * branch dedups its own output or is unique by construction.
     */
-  private val attrWhereSeeds = Set("eq", "le", "lt", "ge", "gt", "between",
-    "anyofterms", "allofterms", "anyoftext", "alloftext", "has",
-    "regexp", "match", "ngram", "anyof", "allof")
-
-  /** Seeds whose uid column is unique by construction (uid() unions
-    * distinct; nodeTypes is one row per (subject, type); value vars are
-    * per-uid maps; count seeds are groupBy outputs; attrWhere-routed
-    * value filters are subject-unique by attrWhere's postcondition) —
-    * root executors skip their dedup exchange for these. Every other
-    * seed can emit one row per matching VALUE or EDGE and still needs it.
-    */
-  private def uniqueSeed(fn: FuncCall): Boolean =
-    fn.name == "uid" || fn.name == "type" || fn.name.endsWith("_count") ||
-      fn.pred.startsWith("val:") ||
-      (attrWhereSeeds(fn.name) && !fn.args.exists(_.startsWith("\u0000")) && {
-        val base = langSplit(fn.pred)._1
-        schema.predicates.contains(base) && !schema.isUidPredicate(base)
-      })
-
   private def seedUids(fn: FuncCall): DataFrame = {
     validateRootFn(fn)
-    val s = seed(fn).select(col("uid"))
-    if (uniqueSeed(fn)) s else s.distinct()
+    seed(fn).select(col("uid"))
   }
 
   /** Root/filter function → DataFrame of matching subjects (col "uid").
     * The reference's index-scan dispatch (worker/task.go:210); here every
     * "index" is a filtered attribute/edge view that Catalyst pushes into
     * the parquet scan.
+    *
+    * Every branch returns each uid at most once: it dedups its own rows,
+    * or they are unique by construction (uid() over one unique var;
+    * nodeTypes is one row per (subject, type); value vars are per-uid
+    * maps; count seeds are groupBy outputs; [[attrWhere]] is unique by
+    * its postcondition), so a root seed needs no dedup of its own.
     */
   private def seed(fn: FuncCall): DataFrame = {
     // `uid` is not an attribute — every non-uid() function rejects it
@@ -1475,7 +1454,7 @@ final class DqlExecutor(ts: GraphStore) {
           opts.get("distance_threshold").foreach(t =>
             res = res.filter(col("__d") <= lit(t.toDouble)))
           return res.orderBy(col("__d").asc, col("uid").asc)
-            .select(col("uid"))
+            .select(col("uid")).distinct()
         }
         val qcolv = array(qvec.map(lit): _*)
         val v = col("value").cast("array<double>")
@@ -1508,7 +1487,7 @@ final class DqlExecutor(ts: GraphStore) {
           opts.get("distance_threshold").foreach(t =>
             scored = scored.filter(col("__d") <= lit(t.toDouble)))
         scored.orderBy(col("__d").asc, col("uid").asc).limit(k)
-          .select(col("uid"))
+          .select(col("uid")).distinct()
       }
     case "near" | "within" | "contains" | "intersects" =>
       // geo generators over GeoJSON-valued predicates (reference
@@ -1671,8 +1650,7 @@ final class DqlExecutor(ts: GraphStore) {
 
   /** POSTCONDITION: the returned frame is unique per subject — either
     * the slice is provably subject-unique (dedup skipped as an identity)
-    * or the dedup runs here. [[uniqueSeed]]'s outer-dedup skip for the
-    * [[attrWhereSeeds]] functions relies on this being unconditional.
+    * or the dedup runs here.
     */
   private def attrWhere(pred: String, cond: Column => Column,
       untaggedDefault: Boolean = false): DataFrame = {
@@ -2482,23 +2460,10 @@ final class DqlExecutor(ts: GraphStore) {
         // pred@en:fr:. — resolve the preference chain per subject
         // (reference ValueForTag, posting/list.go:2094: listed langs in
         // order, '.' = untagged, '*' = any value). A chain of exactly
-        // `@*` is ExpandAll (query/query.go:945): EVERY variant comes
-        // back, keyed `pred@tag` per tag and plain `pred` for untagged
-        // (outputnode.go:1560 fieldNameWithTag) — one column per tag.
+        // `@*` never reaches here: rewriteBlock's expandStarSels has
+        // already split it into one concrete selection per tag.
         val a =
-          if (sel.langChain == Seq("*") && base.columns.contains("lang")) {
-            // tag inventory is schema-scale metadata (a handful of langs
-            // per predicate), not data-scale — safe to collect
-            val tags = base.select(col("lang")).distinct().collect()
-              .map(r => Option(r.getString(0))).sortBy(_.getOrElse("")).toSeq
-            val aggs = tags.map {
-              case None => max(when(col("lang").isNull, col("value"))).as(name)
-              case Some(t) =>
-                max(when(col("lang") === t, col("value"))).as(s"$name@$t")
-            }
-            base.groupBy(col("subject")).agg(aggs.head, aggs.tail: _*)
-              .withColumnRenamed("subject", "__as")
-          } else if (sel.langChain.nonEmpty && base.columns.contains("lang")) {
+          if (sel.langChain.nonEmpty && base.columns.contains("lang")) {
             val prefs = sel.langChain.map {
               case "*" => min(col("value"))
               // '.' prefers the untagged value, falling back to ANY
@@ -4476,7 +4441,10 @@ object DqlExecutor {
     * compiles at every size, and from the second run on it is faster
     * over a 1.9 MB store, even over 3.2 MB, and slower over 8 MB
     * (+4%) and 17.5 MB. The cutoff lies between the largest even size
-    * and the smallest slower one.
+    * and the smallest slower one. Those sizes summed every input table,
+    * `events` too, which no store view reads; the store's size now
+    * counts only the tables it reads (1.65 MB at sf0.01, 15.5 MB at
+    * sf0.1), and each tier keeps its read mode.
     */
   val InterpretedMaxBytes: Long = 4L << 20
 

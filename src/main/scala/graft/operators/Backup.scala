@@ -41,6 +41,15 @@ object Backup {
       only: Set[String] = Set.empty): DataFrame =
     store.backupTriples(only).getOrElse(genericTripleFrame(store, only))
 
+  /** Whether a predicate's values are rows of the triples frame. Uid
+    * predicates back up as edges; vectors and password hashes are
+    * excluded: at scale each backs up as its own typed parquet (an
+    * ARRAY<FLOAT> column has no faithful string round-trip through the
+    * generic triples frame).
+    */
+  private[graft] def backsUpValues(p: PredicateSchema): Boolean =
+    !Set("uid", "float32vector", "password").contains(p.dgraphType)
+
   private[graft] def genericTripleFrame(store: GraphStore,
       only: Set[String] = Set.empty): DataFrame = {
     // `only` selects predicates for a SELECTIVE backup (reference
@@ -48,12 +57,8 @@ object Backup {
     // makes the restore side prune the same way). Branch-level pruning:
     // unselected tablets never even reach the plan.
     def keep(name: String) = only.isEmpty || only(name)
-    // vectors and password hashes are excluded: at scale each backs up
-    // as its own typed parquet (an ARRAY<FLOAT> column has no faithful
-    // string round-trip through the generic triples frame)
     val attrPreds = store.schema.predicates.values.toSeq.sortBy(_.name)
-      .filter(p => !Set("uid", "float32vector", "password").contains(p.dgraphType))
-      .filter(p => keep(p.name))
+      .filter(p => backsUpValues(p) && keep(p.name))
     val attrs = attrPreds.flatMap { p =>
       // unmaterialized predicates may not exist in a given store; skip
       scala.util.Try {

@@ -6609,6 +6609,25 @@ class GoldenFixtureSpec extends AnyFunSuite {
     }
   }
 
+  test("expand(_all_) on one node runs within its measured job budget") {
+    // 25 jobs on the second read, JSON and RDF alike: 3 collect the
+    // frontier's types, 2 the lang tags of `name@*`, and 20 run the
+    // block's one plan (11 broadcast + 8 shuffle exchanges)
+    val sc = spark.sparkContext
+    val q = "{ me(func: uid(0x17)) { expand(_all_) } }"
+    def jobs(read: => Any): Int = {
+      read // first read builds cached artifacts
+      val group = s"expand-jobs-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, "expand job budget")
+      try read
+      finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val json = jobs(new DqlExecutor(store).jsonAll(q).collect())
+    val rdf = jobs(new DqlExecutor(store).rdfAll(q))
+    assert(json <= 25 && rdf <= 25, s"jobs: json $json, rdf $rdf (budget 25)")
+  }
+
   test("an earlier block's value var is read through its binding, not as a column") {
     // the math/level-aggregation column map holds this block's binds
     // only: `a` of the var block is no column of `me`, so an unrelated

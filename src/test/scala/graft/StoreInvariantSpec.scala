@@ -40,6 +40,26 @@ final class StoreInvariantSpec extends AnyFunSuite {
           "silently pruned out of the wide union (false typed nulls)")
   }
 
+  test("schema and store agree on every (type, predicate) pair") {
+    // edges, `text` and `embedding` included: every predicate's subjects,
+    // typed through nodeTypes, must be exactly the schema's owner types
+    val rows = ts.schema.predicates.keys.toSeq.sorted.map { p =>
+      val tablet = if (ts.schema.isUidPredicate(p)) ts.edge(p) else ts.attr(p)
+      tablet.select(col("subject"), lit(p).as("predicate"))
+    }.reduce(_ unionByName _).distinct()
+    val orphan = rows.join(ts.nodeTypes, Seq("subject"), "left_anti").count()
+    assert(orphan == 0, s"$orphan (subject, predicate) rows in no type band")
+    val data = rows.join(ts.nodeTypes, "subject")
+      .select(col("typeName"), col("predicate")).distinct()
+      .collect().map(r => r.getString(0) -> r.getString(1)).toSet
+    val declared = ts.schema.types.values
+      .flatMap(t => t.predicates.map(t.name -> _)).toSet
+    assert((declared -- data).isEmpty,
+      s"declared by the schema, absent from the store: ${declared -- data}")
+    assert((data -- declared).isEmpty,
+      s"in the store, undeclared by the schema: ${data -- declared}")
+  }
+
   test("edgeTargetTypes matches the actual object uid bands of edges") {
     val edgePreds = ts.edges.select(col("predicate")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
