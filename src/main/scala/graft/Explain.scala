@@ -98,13 +98,22 @@ object Explain extends AdaptiveSparkPlanHelper {
     * (collects, counts, writes), in the order they finished.
     */
   def executions[T](spark: SparkSession)(body: => T): (T, Seq[PlanShape]) = {
+    val (out, qes) = queryExecutions(spark)(body)
+    (out, qes.map { case (action, qe) => planShape(action, qe.executedPlan) })
+  }
+
+  /** Run `body` and return the query executions it ran, each with its
+    * action, in the order they finished.
+    */
+  def queryExecutions[T](spark: SparkSession)(body: => T)
+      : (T, Seq[(String, QueryExecution)]) = {
     val marker = s"graft-executions-${java.util.UUID.randomUUID}"
-    val shapes = new ConcurrentLinkedQueue[PlanShape]()
+    val seen = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     @volatile var done = false
     val listener = new QueryExecutionListener {
       override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
         if (qe.analyzed.output.map(_.name) == Seq(marker)) done = true
-        else shapes.add(planShape(action, qe.executedPlan))
+        else seen.add((action, qe))
       override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
@@ -115,7 +124,7 @@ object Explain extends AdaptiveSparkPlanHelper {
       spark.range(1).select(lit(1).as(marker)).collect()
       val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
       while (!done && System.nanoTime < deadline) Thread.sleep(5)
-      (out, shapes.asScala.toSeq)
+      (out, seen.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }
 

@@ -45,10 +45,5 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  /** Materialize the edge table of one predicate, bucketed by subject. */
-  def materializeEdges(ts: GraphStore, predicate: String, table: String,
-      buckets: Int): Unit =
-    writeBucketed(ts.edge(predicate), table, buckets)
-
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 }

@@ -1,5 +1,8 @@
 package graft.core
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables
@@ -13,13 +16,54 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** A loaded table and the file listing it was read from. */
+  private final case class Loaded(files: Seq[(String, Long, Long)], frame: DataFrame)
+
+  private val loaded = TrieMap.empty[(SparkSession, String), Loaded]
+  private val setUp = TrieMap.empty[SparkSession, Unit]
+
+  /** The session's frame of table `name`. Each `spark.read.parquet`
+    * runs a Spark job to infer the parquet schema, so a table is read
+    * once per session and the frame reused while its file listing (each
+    * file's name, size and modification time) is unchanged; a rewritten
+    * table is read again, never served stale. A table that cannot be
+    * listed is read as asked, uncached, so Spark reports the error.
+    */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // events.parquet carries TIMESTAMP(NANOS), which Spark 4 refuses by
-    // default — read nanos as long, then convert to a (µs-truncated)
-    // timestamp, matching DuckDB's own ns→µs truncation on read.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.plans.GraftOptimizations.install(spark)
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    setUp.getOrElseUpdate(spark, {
+      // events.parquet carries TIMESTAMP(NANOS), which Spark 4 refuses by
+      // default — read nanos as long, then convert to a (µs-truncated)
+      // timestamp, matching DuckDB's own ns→µs truncation on read.
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      graft.plans.GraftOptimizations.install(spark)
+    })
+    val path = s"$sfDir/$name.parquet"
+    val hPath = new Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = (spark, fs.makeQualified(hPath).toString)
+    scala.util.Try(listing(fs, hPath)).toOption match {
+      case None => read(spark, path, name)
+      case Some(files) =>
+        loaded.get(key).filter(_.files == files).map(_.frame).getOrElse {
+          val frame = read(spark, path, name)
+          loaded.put(key, Loaded(files, frame))
+          frame
+        }
+    }
+  }
+
+  private def listing(fs: FileSystem, dir: Path): Seq[(String, Long, Long)] = {
+    val it = fs.listFiles(dir, true)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out.result().sorted
+  }
+
+  private def read(spark: SparkSession, path: String, name: String): DataFrame = {
+    val df = spark.read.parquet(path)
     if (name == "events") {
       // normalize `ts` to TIMESTAMP (LTZ, session tz = UTC): the older
       // generator wrote TIMESTAMP(NANOS) (read as long above, truncate
@@ -45,16 +89,4 @@ object Tables {
   def sizeInBytes(spark: SparkSession, sfDir: String, name: String): Long =
     spark.read.schema("size_probe LONG").parquet(s"$sfDir/$name.parquet")
       .queryExecution.analyzed.stats.sizeInBytes.toLong
-
-  /** Register all tables as temp views (idempotent) and return the session.
-    * Used by SQL-shaped entry points; view name == parquet file stem, which
-    * is also what the driver's DuckDB oracle uses.
-    */
-  def registerViews(spark: SparkSession, sfDir: String): Unit = synchronized {
-    val marker = s"graft.views.${sfDir.hashCode}"
-    if (spark.conf.getOption(marker).isEmpty) {
-      names.foreach { n => load(spark, sfDir, n).createOrReplaceTempView(n) }
-      spark.conf.set(marker, "1")
-    }
-  }
 }

@@ -246,13 +246,10 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
     */
   private def tablet(vt: String): DataFrame = derived(("TripleStore.tablet", vt)) {
     val branches = sources.flatMap { s =>
-      val attrs = s.attrs.filter(a => valueType(a.pred) == vt)
-      // one load per table: each load infers the parquet schema
-      lazy val df = s.frame()
-      attrs.map { a =>
+      s.attrs.filter(a => valueType(a.pred) == vt).map { a =>
         val cols = Seq(s.subject.as("subject"), lit(a.pred).as("predicate"),
           typed(a.pred, a.value).as("value"))
-        df.select((if (vt == "string")
+        s.frame().select((if (vt == "string")
             cols :+ a.lang.getOrElse(lit(null).cast("string")).as("lang")
           else cols): _*)
       }

@@ -1,5 +1,10 @@
 package graft.core
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions
+
+import graft.functions.Lowercase
+
 /** Global UID space for the derived triple store.
   *
   * The reference identifies every node by a uint64 uid allocated by Zero
@@ -25,4 +30,13 @@ object Uids {
 
   def lineUid(orderkey: Long, linenumber: Int): Long =
     Line + orderkey * 10L + linenumber
+
+  /** A uid column as lowercase hex without the `0x` prefix, as
+    * `java.lang.Long.toHexString` renders a collected uid: a negative
+    * value in two's complement, null for null. That is what
+    * `lower(conv(x, 10, 16))` renders, without Spark's `lower()` (see
+    * [[graft.functions.Lowercase]]), except for `Long.MinValue`, whose
+    * magnitude overflows `conv` into the hex of -1.
+    */
+  def hex(uid: Column): Column = Lowercase(functions.hex(uid.cast("long")))
 }

@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType,
   StructField, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{GraphStore, SessionConf}
+import graft.core.{GraphStore, SessionConf, Uids}
 import graft.dql._
+import graft.functions.Lowercase
 import graft.operators.Recurse
 
 /** DQL block executor: AST → DataFrame plan over the TripleStore.
@@ -1215,7 +1216,7 @@ final class DqlExecutor(ts: GraphStore) {
       if (tokens(fn.args.head).isEmpty)
         attrWhere(fn.pred, v => v === "", untaggedDefault = true)
       else
-        attrWhere(fn.pred, v => arrays_overlap(split(lower(v), " "),
+        attrWhere(fn.pred, v => arrays_overlap(split(Lowercase(v), " "),
           array(tokens(fn.args.head).map(lit(_)): _*)),
           untaggedDefault = true)
     case "allofterms" =>
@@ -1223,7 +1224,7 @@ final class DqlExecutor(ts: GraphStore) {
         attrWhere(fn.pred, v => v === "", untaggedDefault = true)
       else
         attrWhere(fn.pred, v => forall(array(tokens(fn.args.head).map(lit(_)): _*),
-          t => array_contains(split(lower(v), " "), t)),
+          t => array_contains(split(Lowercase(v), " "), t)),
           untaggedDefault = true)
     case "regexp" =>
       // both lexed literals and $variable-substituted patterns arrive as
@@ -1668,7 +1669,7 @@ final class DqlExecutor(ts: GraphStore) {
   }
 
   private def tokens(s: String): Seq[String] =
-    s.toLowerCase.split("\\s+").toSeq.filter(_.nonEmpty)
+    Lowercase(s).split("\\s+").toSeq.filter(_.nonEmpty)
 
   private def parseUid(s: String): Long =
     if (s.startsWith("0x")) java.lang.Long.parseLong(s.drop(2), 16) else s.toLong
@@ -3399,7 +3400,7 @@ final class DqlExecutor(ts: GraphStore) {
     * (outputnode.go writes uids as hex strings).
     */
   private def hexUid(c: Column): Column =
-    concat(lit("0x"), lower(conv(c.cast("string"), 10, 16)))
+    concat(lit("0x"), Uids.hex(c))
 
   /** hexUid of a collected uid. */
   private def hexS(u: Long): String = "0x" + java.lang.Long.toHexString(u)

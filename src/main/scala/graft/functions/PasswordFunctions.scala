@@ -32,12 +32,4 @@ object PasswordFunctions {
     */
   val bcryptSalt = udf((seed: String, cost: Int) =>
     Bcrypt.saltFromSeed(seed, cost))
-
-  /** hash = sha256(salt ":" sha256(salt ":" password)) — two rounds. */
-  def legacyPasswordHash(salt: Column, password: Column): Column =
-    sha2(concat(salt, lit(":"), sha2(concat(salt, lit(":"), password), 256)), 256)
-
-  /** legacy checkpwd(storedHash, salt, candidate). */
-  def legacyCheckpwd(storedHash: Column, salt: Column, candidate: Column): Column =
-    storedHash === legacyPasswordHash(salt, candidate)
 }

@@ -49,36 +49,6 @@ object TextFunctions {
     */
   def bandKey(sigs: Seq[Column]): Column = md5(concat_ws("|", sigs: _*))
 
-  /** First 16 bits of md5(word) as a long in [0, 65535]. */
-  def h16(w: Column): Column = conv(substring(md5(w), 1, 4), 16, 10).cast("long")
-
-  /** Per-word 16-bit hashes for a document (materialize this column once,
-    * then fold bits over it — Catalyst does no CSE across the 16 bit
-    * expressions, so inlining would recompute every md5 16×).
-    */
-  def wordHashes16(ws: Column): Column = transform(array_distinct(ws), w => h16(w))
-
-  /** 16-bit SimHash from a precomputed wordHashes16 column. ONE fold
-    * over the array accumulating all 16 bit-scores at once (an
-    * `aggregate` with an array accumulator and a finish lambda that
-    * assembles the signature) — still interpreted (HOFs are
-    * CodegenFallback) but a single pass, not 16. At corpus scale prefer
-    * the explode + conditional-SUM shape in
-    * [[graft.operators.Dedup.simhash]], which whole-stage-codegens.
-    */
-  def simhashFromHashes(hs: Column): Column =
-    aggregate(hs, array_repeat(lit(0L), 16),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(15)),
-        (a, b) => a + (call_function("shiftright", h, b.cast("int")) % 2) * 2 - 1),
-      acc => (0 until 16).map(b =>
-        when(element_at(acc, b + 1) > 0, lit(1L << b)).otherwise(lit(0L)))
-        .reduce(_ + _))
-
-  /** 16-bit SimHash over the distinct words of a document (convenience;
-    * prefer materializing wordHashes16 when computing at scale).
-    */
-  def simhash16(ws: Column): Column = simhashFromHashes(wordHashes16(ws))
-
   /** Hamming distance between two small-int hashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
@@ -138,7 +108,7 @@ object TextFunctions {
     */
   def ftStems(text: Column): Column =
     array_distinct(transform(
-      filter(split(lower(text), " "), w => !w.isin(enStops.map(lit(_)): _*)),
+      filter(split(Lowercase(text), " "), w => !w.isin(enStops.map(lit(_)): _*)),
       w => regexp_replace(w, ftStemRe, "")))
 
   /** Driver-side stems of a literal query string (the reference also
@@ -146,7 +116,7 @@ object TextFunctions {
     * to mirror ftStems.
     */
   def ftStemsLit(q: String): Seq[String] =
-    q.toLowerCase.split("\\s+").filter(w => w.nonEmpty && !enStops.contains(w))
+    Lowercase(q).split("\\s+").filter(w => w.nonEmpty && !enStops.contains(w))
       .map(_.replaceAll(ftStemRe, "")).distinct.toSeq
 
   // ---- word n-gram index (reference NGramTokenizer, tok/tok.go:442) ----
@@ -156,7 +126,7 @@ object TextFunctions {
     */
   def ftStemsSeq(text: Column): Column =
     transform(
-      filter(split(lower(text), " "),
+      filter(split(Lowercase(text), " "),
         w => w =!= "" && !w.isin(enStops.map(lit(_)): _*)),
       w => regexp_replace(w, ftStemRe, ""))
 
@@ -181,7 +151,7 @@ object TextFunctions {
     * → no grams → matches nothing.
     */
   def ngramQueryLit(q: String): Seq[String] = {
-    val toks = q.toLowerCase.split("\\s+")
+    val toks = Lowercase(q).split("\\s+")
       .filter(w => w.nonEmpty && !enStops.contains(w))
       .map(_.replaceAll(ftStemRe, "")).toSeq
     val g = math.min(3, toks.length)

@@ -37,9 +37,9 @@ object TokenizerRegistry {
   register(new Tokenizer {
     val name = "term"
     def tokens(v: Column): Column =
-      array_distinct(filter(split(lower(v), "\\s+"), w => w =!= ""))
+      array_distinct(filter(split(Lowercase(v), "\\s+"), w => w =!= ""))
     def tokensLit(q: String): Seq[String] =
-      q.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.toSeq
+      Lowercase(q).split("\\s+").filter(_.nonEmpty).distinct.toSeq
   })
 
   register(new Tokenizer {
@@ -56,9 +56,9 @@ object TokenizerRegistry {
     val name = "prefix4"
     def tokens(v: Column): Column =
       array_distinct(transform(
-        filter(split(lower(v), "\\s+"), w => w =!= ""),
+        filter(split(Lowercase(v), "\\s+"), w => w =!= ""),
         w => substring(w, 1, 4)))
     def tokensLit(q: String): Seq[String] =
-      q.toLowerCase.split("\\s+").filter(_.nonEmpty).map(_.take(4)).distinct.toSeq
+      Lowercase(q).split("\\s+").filter(_.nonEmpty).map(_.take(4)).distinct.toSeq
   })
 }

@@ -68,7 +68,6 @@ final class GqlSchema(val types: Map[String, SdlType],
     val customDql: Map[String, CustomDql] = Map.empty) {
   def typ(n: String): SdlType = types.getOrElse(n,
     throw new IllegalArgumentException(s"unknown GraphQL type: $n"))
-  def isObjectType(n: String): Boolean = types.contains(n)
 
   /** Concrete types implementing interface `i` (reference
     * graphql/schema/gqlschema.go: an interface's query field matches

@@ -86,14 +86,6 @@ object Dedup {
     sh.groupBy(col("id")).agg(sigCols.head, sigCols.tail: _*)
   }
 
-  /** LSH candidate pairs: documents sharing at least one band key.
-    * bands × rows must equal the signature count k. Returns
-    * (a, b, n_shared_bands) with a < b.
-    */
-  def minhashCandidates(df: DataFrame, id: Column, text: Column,
-      bands: Int = 4, rows: Int = 2, shingleN: Int = 3): DataFrame =
-    candidatesFromSets(shingleSets(df, id, text, shingleN), bands, rows)
-
   /** LSH bucket rows (id, band, key) from a pre-built [[shingleSets]]
     * frame — the banding layer shared by the batch candidate join and
     * the streaming band-state dedup.
@@ -307,14 +299,6 @@ object Dedup {
     cross.unionByName(intra)
   }
 
-  /** Wide-signature SimHash near-dup pairs — [[simhashPairs]] with the
-    * 120-bit layout end-to-end. Returns (a, b, dist), a < b.
-    */
-  def simhashPairsWide(df: DataFrame, id: Column, text: Column,
-      maxDist: Int = 4): DataFrame =
-    hashPairsWide(simhashWideFromSums(simhashBitSumsWide(df, id, text)),
-      maxDist)
-
   /** Pigeonhole hamming pair join over ANY (id, simhash) bit-signature
     * frame — the banding core shared by text SimHash and image aHash
     * ([[imageNearDupPairs]]): signatures within maxDist share at least
@@ -456,15 +440,6 @@ object Dedup {
       .map { case (id, c) => (id, c) }
       .toDF("id", "cluster")
   }
-
-  /** Exact n-gram Jaccard for given candidate pairs (a, b): explode the
-    * distinct shingle sets, count shared shingles per pair, derive
-    * |union| = |A| + |B| - |inter|. Returns (a, b, inter, un, jaccard).
-    */
-  def ngramJaccard(df: DataFrame, id: Column, text: Column,
-      candidates: DataFrame, shingleN: Int = 3): DataFrame =
-    jaccardFromSets(
-      shingleSets(df, id, text, shingleN).localCheckpoint(), candidates)
 
   /** Jaccard verification from a pre-built (ideally already materialized)
     * [[shingleSets]] frame — pass the SAME frame the LSH candidates came

@@ -39,10 +39,15 @@ object RegexpPrefixToStartsWith extends Rule[LogicalPlan] {
 }
 
 object GraftOptimizations {
-  /** Idempotently register graft's optimizer rules on a session. */
+  /** Idempotently register graft's optimizer rule and planner strategy
+    * ([[SmallSort]]) on a session.
+    */
   def install(spark: SparkSession): Unit = synchronized {
     val cur = spark.experimental.extraOptimizations
     if (!cur.contains(RegexpPrefixToStartsWith))
       spark.experimental.extraOptimizations = cur :+ RegexpPrefixToStartsWith
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.contains(SmallSort))
+      spark.experimental.extraStrategies = strategies :+ SmallSort
   }
 }

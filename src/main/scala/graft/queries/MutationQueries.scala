@@ -245,8 +245,7 @@ object MutationQueries {
         .join(kids, col("o_orderkey") === col("l_orderkey"), "left")
         .select(col("o_orderkey").as("id"),
           to_json(struct(
-            concat(lit("0x"), lower(conv((lit(OB) + col("o_orderkey")).cast("string"),
-              10, 16))).as("uid"),
+            concat(lit("0x"), Uids.hex(lit(OB) + col("o_orderkey"))).as("uid"),
             col("o_orderstatus").as("orderstatus"),
             col("has_line"))).as("js"))
       graft.operators.JsonNquads.parse(docs, "id", "js")
@@ -281,7 +280,7 @@ object MutationQueries {
     "stream_ingest_nquads" -> ((s, d) => {
       val c = t(s, d, "customer")
       def nq(uidC: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column) =
-        concat(lit("<0x"), lower(hex(uidC)), lit("> <cname> \""), v, lit("\" ."))
+        concat(lit("<0x"), Uids.hex(uidC), lit("> <cname> \""), v, lit("\" ."))
       val base = Q.scratchDir("graft-ingest_", s, d)
       // N-Quad feed written once per session (gate scaffolding)
       val inDir = Q.cachedInputDir("ingestin_", s, d) { p =>

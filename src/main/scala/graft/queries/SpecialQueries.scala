@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{TripleStore, Uids}
 import graft.functions.GeoFunctions._
+import graft.functions.Lowercase
 import graft.functions.PasswordFunctions._
 import Q._
 
@@ -330,7 +331,7 @@ object SpecialQueries {
     "fulltext_anyoftext" -> ((s, d) => {
       val qStems = "filters merges sorting".split(" ").map(stemS).distinct
       val docStems = array_distinct(transform(
-        filter(split(lower(col("text")), " "), w => !w.isin(ftStops.map(lit(_)): _*)),
+        filter(split(Lowercase(col("text")), " "), w => !w.isin(ftStops.map(lit(_)): _*)),
         w => stem(w)))
       t(s, d, "documents")
         .filter(arrays_overlap(docStems, array(qStems.map(lit(_)): _*)))
@@ -340,7 +341,7 @@ object SpecialQueries {
     "fulltext_alloftext" -> ((s, d) => {
       val qStems = "filters merges sorting".split(" ").map(stemS).distinct
       val docStems = array_distinct(transform(
-        filter(split(lower(col("text")), " "), w => !w.isin(ftStops.map(lit(_)): _*)),
+        filter(split(Lowercase(col("text")), " "), w => !w.isin(ftStops.map(lit(_)): _*)),
         w => stem(w)))
       t(s, d, "documents")
         .filter(forall(array(qStems.map(lit(_)): _*),

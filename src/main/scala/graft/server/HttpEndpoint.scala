@@ -7,7 +7,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.{Acl, GraphStore, SchemaRegistry, TripleFrameStore}
+import graft.core.{Acl, GraphStore, SchemaRegistry, TripleFrameStore, Uids}
 import graft.dql.Parser
 import graft.exec.DqlExecutor
 import graft.graphql.{GqlSchema, GqlParser, GVal, GStr, GNum, GBool, GList, GObj, GraphQLEngine, SdlParser}
@@ -846,8 +846,6 @@ final class HttpEndpoint(
     */
   private[server] def exportStore(dest: String, format: String): Seq[String] = {
     import org.apache.spark.sql.functions._
-    def hexS(c: org.apache.spark.sql.Column) =
-      lower(conv(c.cast("string"), 10, 16))
     val attrs = triples.filter(col("objectUid").isNull)
       .select(col("subject"), col("predicate"), col("value"), col("lang"))
     val edges = triples.filter(col("objectUid").isNotNull)
@@ -860,8 +858,8 @@ final class HttpEndpoint(
               concat(lit(" ("), col("facets"), lit(")"))).otherwise(lit(""))
           else lit("")
         val eLines = edges.select(concat(
-          lit("<0x"), hexS(col("subject")), lit("> <"), col("predicate"),
-          lit("> <0x"), hexS(col("objectUid")), lit(">"),
+          lit("<0x"), Uids.hex(col("subject")), lit("> <"), col("predicate"),
+          lit("> <0x"), Uids.hex(col("objectUid")), lit(">"),
           facetSuffix, lit(" .")).as("line"))
         aLines.unionByName(eLines)
       case "json" =>
@@ -874,12 +872,12 @@ final class HttpEndpoint(
           when(col("lang").isNotNull, concat(lit("@"), col("lang")))
             .otherwise(lit("")))
         val aLines = attrs.select(concat(
-          lit("""{"uid":"0x"""), hexS(col("subject")), lit("\","),
+          lit("""{"uid":"0x"""), Uids.hex(col("subject")), lit("\","),
           substring(to_json(map(aKey, col("value"))), 2, 1 << 24))
           .as("line"))
         val eLines = edges.select(concat(
-          lit("""{"uid":"0x"""), hexS(col("subject")), lit("\",\""),
-          col("predicate"), lit("""":[{"uid":"0x"""), hexS(col("objectUid")),
+          lit("""{"uid":"0x"""), Uids.hex(col("subject")), lit("\",\""),
+          col("predicate"), lit("""":[{"uid":"0x"""), Uids.hex(col("objectUid")),
           lit("\"}]}")).as("line"))
         aLines.unionByName(eLines)
     }
@@ -981,16 +979,6 @@ final class HttpEndpoint(
         .localCheckpoint())
     }
   }
-
-  /** Current triples frame (tests + snapshotting). */
-  def currentTriples: DataFrame = triples
-
-  /** GraphQL engine over the CURRENT committed frame + SDL — the hook
-    * the websocket subscription transport ([[WsSubscriptions]]) polls:
-    * a mutation swaps the frame, so each poll constructs a fresh engine
-    * and observes the swap.
-    */
-  def graphQLEngine: GraphQLEngine = new GraphQLEngine(store, gqlSchema)
 
   // ---- helpers ----
 

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Uids
+
 /** RDF N-Quad source/sink (reference chunker/rdf_parser.go:75 ParseRDF,
   * export worker/export.go:131).
   *
@@ -31,7 +33,7 @@ object RdfSource {
     "^(?:<0x([0-9a-f]+)>|_:([A-Za-z0-9_.-]+)) <([^>]+)> \"((?:[^\"\\\\]|\\\\.)*)\"(?:@([a-zA-Z.*]+))? \\.$"
 
   private def hexUid(c: Column): Column =
-    concat(lit("<0x"), lower(conv(c.cast("string"), 10, 16)), lit(">"))
+    concat(lit("<0x"), Uids.hex(c), lit(">"))
 
   /** Attribute triples (subject, predicate, value[, lang]) → N-Quad lines. */
   def formatAttrs(attrs: DataFrame): DataFrame = {
