@@ -8,7 +8,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -70,13 +70,17 @@ object Explain extends AdaptiveSparkPlanHelper {
 
   /** The shape of one executed plan, AQE's final plan with its query
     * stages and subqueries: physical nodes (AQE's wrappers not counted),
-    * broadcast and shuffle exchanges, reused exchanges and LeftAnti joins.
+    * broadcast and shuffle exchanges, reused exchanges, LeftAnti joins,
+    * and where its leaves read from: parquet file scans
+    * (`FileSourceScanExec`) and in-memory scans of checkpointed frames
+    * (`RDDScanExec`).
     */
   final case class PlanShape(action: String, nodes: Int, broadcasts: Int,
-      shuffles: Int, reused: Int, leftAnti: Int) {
+      shuffles: Int, reused: Int, leftAnti: Int, fileScans: Int, memoryScans: Int) {
     override def toString: String =
       s"$action: $nodes nodes, $broadcasts broadcast + $shuffles shuffle " +
-        s"exchanges, $reused reused, $leftAnti LeftAnti joins"
+        s"exchanges, $reused reused, $leftAnti LeftAnti joins, " +
+        s"$fileScans file + $memoryScans in-memory scans"
   }
 
   private def planShape(action: String, plan: SparkPlan): PlanShape = {
@@ -91,7 +95,9 @@ object Explain extends AdaptiveSparkPlanHelper {
       nodes.count {
         case j: BaseJoinExec => j.joinType == LeftAnti
         case _ => false
-      })
+      },
+      nodes.count(_.isInstanceOf[FileSourceScanExec]),
+      nodes.count(_.isInstanceOf[RDDScanExec]))
   }
 
   /** Run `body` and return the shapes of the query executions it ran

@@ -2,7 +2,7 @@ package graft
 
 /** Timing inspector (like Explain): run named queries N times each and
   * print per-iteration wall times, separating first-touch
-  * materialization (derived parquet, checkpoints) from steady-state
+  * materialization (store slices, checkpoints) from steady-state
   * cost. Each rep produces the query's FULL result through a `noop`
   * write, so Catalyst cannot prune projections or sorts the way a
   * `count()` lets it. Usage: runMain graft.Time <sfDir> <reps> [names...]

@@ -52,14 +52,17 @@ object Tables {
     }
   }
 
+  /** Every file under `dir` as (path, length, modification time). Lists
+    * with `listStatus`: `listFiles` builds a `LocatedFileStatus` per
+    * file, which without Hadoop's native IO starts an `ls -ld` process
+    * for each file's permissions.
+    */
   private def listing(fs: FileSystem, dir: Path): Seq[(String, Long, Long)] = {
-    val it = fs.listFiles(dir, true)
-    val out = Seq.newBuilder[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    def walk(p: Path): Seq[(String, Long, Long)] = fs.listStatus(p).toSeq.flatMap { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
     }
-    out.result().sorted
+    walk(dir).sorted
   }
 
   private def read(spark: SparkSession, path: String, name: String): DataFrame = {

@@ -20,12 +20,16 @@ import org.apache.spark.sql.functions._
   * The reference stores one posting list per (predicate, subject) key and
   * shards predicates to server groups ("tablets",
   * /root/reference/worker/groups.go:218 BelongsTo). The Spark analogue of a
-  * tablet is a *per-predicate view*: `edges`/`attrs` are unions of
-  * branches each carrying a literal `predicate` column, so a filter
-  * `predicate === "placed"` constant-folds every other branch to an empty
-  * relation and Catalyst prunes those parquet scans entirely. At 100 TB
-  * each branch would be its own partitioned table; the query-side shape is
-  * identical, and no shuffle is introduced by the union.
+  * tablet is a *per-predicate view*: `edges` and the typed tablets are
+  * unions of branches each carrying a literal `predicate` column, so a
+  * filter `predicate === "placed"` constant-folds every other branch to
+  * an empty relation. Reads are served from one in-memory slice per
+  * (kind, predicate) cut from those unions ([[edge]], [[attr]],
+  * [[nodeTypes]]), built lazily once per session; `edgesStored` and
+  * `attrStringStored` are unions of the slices in the same literal-
+  * column shape. At 100 TB each branch would be its own partitioned
+  * table; the query-side shape is identical, and no shuffle is
+  * introduced by the union.
   *
   * UID scheme: see [[Uids]]. Facets (edge metadata, reference
   * types/facets/facet_types.go:21) ride along as a MAP column on the edge
@@ -45,6 +49,11 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
     * row_number *within each order* over the full column tuple — a
     * partitioned (distributed) window, not a global sort. Mirrored
     * verbatim in the DuckDB oracles (Q.lineUidSql).
+    *
+    * The window's shuffle is paid once per session: the uid window,
+    * pruned to the columns the lineitem rows read, is a lazy local
+    * checkpoint that the first job reading it materializes, and every
+    * lineitem view reads it back from memory.
     */
   private lazy val line: DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -52,21 +61,13 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
       col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
       col("l_extendedprice"), col("l_quantity"), col("l_discount"),
       col("l_tax"), col("l_returnflag"), col("l_linestatus"), col("l_shipdate"))
-    val withUid = t("lineitem").withColumn("line_uid",
-      lit(Line) + col("l_orderkey") * 100 + row_number().over(w).cast("long"))
-    // uid assignment is a LOAD-time job, not a query-time one: the window
-    // shuffle is paid once by materializing lineitem+line_uid to a derived
-    // parquet table, and every lineitem tablet view then reads it back
-    // COLUMN-PRUNED (a full-width in-memory cache here forced each of the
-    // seven line-backed views to scan all 17 columns). At cluster scale
-    // this is the bulk-load layout step (core/Bucketing) against the real
-    // catalog; the derived file is per-(session, sfDir) and rewritten on
-    // first access in each JVM so it can never go stale.
-    val dir = new java.io.File(
-      s"target/graft-derived/line_uid_${new java.io.File(sfDir).getName}" +
-        s"_${Scratch.tag(spark)}").getAbsolutePath
-    withUid.write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
+    t("lineitem").select(
+      (lit(Line) + col("l_orderkey") * 100 + row_number().over(w).cast("long"))
+        .as("line_uid") +:
+      Seq("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
+        "l_extendedprice", "l_discount", "l_returnflag", "l_linestatus",
+        "l_shipdate").map(col): _*)
+      .localCheckpoint(eager = false)
   }
 
   /** The TPC-H graph: every source table the store reads and the rows it
@@ -128,8 +129,7 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
         // line_uid is the layout's own unique subject
         Edge("has_line", lit(Order) + col("l_orderkey"), lineUid, "Lineitem", objectsUnique = true, facets = Seq(
             // the typed column stays the RAW double source column (no
-            // cast-to-long): a cast above the scan would block comparison
-            // pushdown, and the integral TPC-H quantities make double vs
+            // cast-to-long): the integral TPC-H quantities make double vs
             // long comparisons identical (the literal widens to double)
             Facet("quantity", "long",
               col("l_quantity").cast("long").cast("string"), col("l_quantity")),
@@ -156,6 +156,10 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
   private val edgeRows: Map[String, Seq[Edge]] =
     sources.flatMap(_.edges).groupBy(_.pred)
 
+  /** The declared edge and attribute predicates, in declaration order. */
+  private val edgePreds: Seq[String] = sources.flatMap(_.edges).map(_.pred).distinct
+  private val attrPreds: Seq[String] = sources.flatMap(_.attrs).map(_.pred).distinct
+
   /** The one cast rule from a predicate's schema type to its tablet's
     * value type. Tablets, wide frames and backup strings all cast
     * through it, so their values agree bit for bit.
@@ -170,10 +174,9 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
 
   private def typed(p: String, value: Column): Column = value.cast(valueType(p))
 
-  /** The declared source tables' bytes. Reads only file listings, so the
-    * lazy layouts (`line`, `edgesStored`, `attrStringStored`) are still
-    * written by the first read that needs them. A table that cannot be
-    * listed makes the size unknown.
+  /** The declared source tables' bytes. Reads only file listings, so no
+    * slice (and not `line`) is planned or materialized by asking. A
+    * table that cannot be listed makes the size unknown.
     */
   override lazy val estimatedBytes: Option[Long] =
     scala.util.Try(sources.map(s => Tables.sizeInBytes(spark, sfDir, s.table)).sum)
@@ -188,10 +191,9 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
     * Besides the string map (for @facets fetch/output), every branch also
     * carries TYPED facet columns `_ft_<key>` (null outside the owning
     * predicate). Facet filters and orderings read these instead of
-    * `element_at(map)` so the comparison lands on a plain source column
-    * and Catalyst pushes it into the parquet scan — with the map a
-    * `quantity > 45` filter had to build the facet map for every
-    * lineitem row first (the r2 dql_facets_filter regression).
+    * `element_at(map)`, so a `quantity > 45` filter compares a plain
+    * column instead of looking a string up in every row's facet map
+    * (the r2 dql_facets_filter regression).
     */
   lazy val edges: DataFrame = {
     val branches = for (s <- sources if s.edges.nonEmpty; df = s.frame();
@@ -210,41 +212,49 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
         .map(col): _*)
   }
 
-  /** The edge union materialized once per session as a predicate-
-    * partitioned layout — the edge half of the bulk-load tablet shape
-    * (see [[attrStringStored]]). Typed `_ft_*` facet columns are plain
-    * parquet columns in the file, so facet range predicates (`quantity
-    * > 45`) push down to the stored scan exactly as they did to the
-    * source scan, and `predicate === p` prunes to one directory.
+  /** A lazy local checkpoint of `rows`, built once per store and key
+    * (kind, predicate or table): the first job that reads the slice
+    * materializes it, every later read serves it from memory (spilling
+    * to disk under pressure, `localCheckpoint`'s MEMORY_AND_DISK). The
+    * reference reads hot posting lists from memory the same way
+    * (worker/task.go's cache, posting/lists.go).
     */
-  lazy val edgesStored: DataFrame = {
-    val dir = new java.io.File(
-      s"target/graft-derived/edges_${new java.io.File(sfDir).getName}" +
-        s"_${Scratch.tag(spark)}").getAbsolutePath
-    edges.write.mode("overwrite").partitionBy("predicate").parquet(dir)
-    // restore the canonical column order (the partition column reads
-    // back last) and the declared string type
-    val back = spark.read.parquet(dir)
-      .withColumn("predicate", col("predicate").cast("string"))
-    back.select(edges.columns.map(col).toIndexedSeq: _*)
+  private def slice(kind: String, key: String)(rows: => DataFrame): DataFrame =
+    derived(("TripleStore.slice", kind, key))(rows.localCheckpoint(eager = false))
+
+  /** A new frame over predicate `p`'s slice of `union`: the slice holds
+    * every column but `predicate`, which comes back as a literal, so a
+    * `predicate === p` filter over a union of these views folds to the
+    * one branch it names.
+    */
+  private def view(kind: String, union: DataFrame, p: String): DataFrame = {
+    val rows = slice(kind, p)(union.filter(col("predicate") === p).drop("predicate"))
+    rows.select(col("subject") +: lit(p).as("predicate") +:
+      rows.columns.toSeq.filter(_ != "subject").map(col): _*)
   }
 
-  /** Edge tablet reads come from the stored layout: one pruned
-    * directory scan instead of a constant-folded 7-branch union.
+  /** The edge union as its per-predicate slices, in `edges`' columns.
+    * Its `count()` materializes every edge slice.
+    */
+  lazy val edgesStored: DataFrame =
+    edgePreds.map(edge).reduce(_ unionByName _)
+
+  /** Edge tablet reads come from the predicate's in-memory slice. A
+    * predicate the store does not declare reads the (empty) union, so a
+    * query naming one adds no slice to the session.
     */
   override def edge(predicate: String): DataFrame =
-    edgesStored.filter(col("predicate") === predicate)
+    if (edgeRows.contains(predicate)) view("edge", edges, predicate)
+    else edges.filter(col("predicate") === predicate)
 
   // ---- typed attribute tables: subject, predicate, value [, lang] ----
 
   /** Every declared attribute row whose tablet value type is `vt`, one
     * union branch per row: subject, predicate, value cast by [[typed]],
-    * and for string tablets a `lang` column. A direct source-type cast
-    * (no string round-trip: `cast(cast(x AS string) AS long)` cannot be
-    * unwrapped by Catalyst) lets numeric and datetime range predicates
-    * land on the parquet scan. Built once per value type.
+    * and for string tablets a `lang` column. The source of the per-
+    * predicate attribute slices ([[attr]]); built once per value type.
     */
-  private def tablet(vt: String): DataFrame = derived(("TripleStore.tablet", vt)) {
+  private[graft] def tablet(vt: String): DataFrame = derived(("TripleStore.tablet", vt)) {
     val branches = sources.flatMap { s =>
       s.attrs.filter(a => valueType(a.pred) == vt).map { a =>
         val cols = Seq(s.subject.as("subject"), lit(a.pred).as("predicate"),
@@ -257,32 +267,20 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
     branches.reduce(_ unionByName _)
   }
 
-  /** The string tablet MATERIALIZED once per session as a predicate-
-    * partitioned parquet layout — the reference's tablet files on disk
-    * (worker/groups.go:218 shards one tablet per predicate). The lazy
-    * union is the right shape for single-predicate reads (branch
-    * pruning kills every other scan), but consumers that read MANY
-    * predicates per invocation (mutation merges over the whole store,
-    * RDF export) re-execute all 14 branch scans each run; this pays the
-    * scan once and every later read is a single pruned directory scan.
-    * At cluster scale this IS the bulk-load output — one partitioned
-    * table, predicate pruning server-side.
+  /** The string tablet as its per-predicate slices. Consumers that read
+    * many string predicates at once (mutation merges, RDF export) read
+    * this union; its `count()` materializes every string slice.
     */
-  lazy val attrStringStored: DataFrame = {
-    val dir = new java.io.File(
-      s"target/graft-derived/attrs_${new java.io.File(sfDir).getName}" +
-        s"_${Scratch.tag(spark)}").getAbsolutePath
-    tablet("string").write.mode("overwrite").partitionBy("predicate").parquet(dir)
-    spark.read.parquet(dir)
-      .select(col("subject"), col("predicate").cast("string").as("predicate"),
-        col("value"), col("lang"))
-  }
+  lazy val attrStringStored: DataFrame =
+    attrPreds.filter(valueType(_) == "string").map(attr).reduce(_ unionByName _)
 
   /** dgraph.type attribute (reference type() root fn, dql/parser.go:1704):
-    * one row per source row, typed by its table.
+    * one row per source row, typed by its table — a slice of each
+    * table's subjects with its type name as a literal.
     */
   lazy val nodeTypes: DataFrame = sources.map { s =>
-    s.frame().select(s.subject.as("subject"), lit(s.nodeType).as("typeName"))
+    slice("subjects", s.table)(s.frame().select(s.subject.as("subject")))
+      .select(col("subject"), lit(s.nodeType).as("typeName"))
   }.reduce(_ unionByName _)
 
   /** Store-optimized backup frame (see [[GraphStore.backupTriples]]):
@@ -337,23 +335,19 @@ final class TripleStore(val spark: SparkSession, val sfDir: String)
       p -> es.flatMap(_.facets).map(f => f.key -> f.typ)
     }
 
-  /** Typed attribute view for one predicate (the "tablet"). String
-    * tablets read the session-materialized partitioned layout — a
-    * single partition-pruned directory scan per predicate instead of a
-    * constant-folded 14-branch union (same plan property, fewer leaf
-    * scans and scheduler tasks; the typed numeric views stay
-    * source-backed so their range predicates push down as native
-    * parquet types).
+  /** Typed attribute view for one predicate (the "tablet"), read from
+    * the predicate's in-memory slice whatever its value type. A range
+    * filter on a numeric or datetime value therefore filters rows in
+    * memory, not parquet row groups. A predicate no source declares
+    * reads the (empty) tablet of its value type and adds no slice.
     */
   def attr(predicate: String): DataFrame = {
     if (schema.isUidPredicate(predicate))
       throw new IllegalArgumentException(
         s"no attribute table for type uid (predicate $predicate)")
-    val table = valueType(predicate) match {
-      case "string" => attrStringStored
-      case vt => tablet(vt)
-    }
-    table.filter(col("predicate") === predicate)
+    val union = tablet(valueType(predicate))
+    if (attrPreds.contains(predicate)) view("attr", union, predicate)
+    else union.filter(col("predicate") === predicate)
   }
 
   /** Every entity table's wide-readable scalar predicates: (typeName,

@@ -221,11 +221,6 @@ final class GraphQLEngine(ts: GraphStore, schema: GqlSchema = SdlParser.tpch,
       case _ => Auth.claimsFromJwt(token)
     }
 
-  /** [[json]] authenticated by a raw JWT instead of pre-parsed claims. */
-  def jsonWithToken(query: String, token: String,
-      variables: Map[String, GVal] = Map.empty): DataFrame =
-    json(query, variables, claimsFor(token))
-
   /** Open a poll-based subscription (reference graphql/subscription/):
     * validates the `subscription { ... }` document against the schema's
     * @withSubscription types; the returned handle re-executes on

@@ -100,10 +100,6 @@ object Q {
     // session start and only read after. Per-invocation scratch
     // (backup/index/stream dirs, bucketed tables) is consumed within
     // its gate, so the 30-min default is safely past any invocation.
-    // SESSION-LIVED layouts (graft-derived children) are read for the
-    // whole session — they get a much longer 12 h tier so a long-lived
-    // server/shell sharing the repo isn't pulled out from under.
-    val sessionMs = math.max(maxAgeMs, 12 * 60 * 60 * 1000L)
     def rm(x: java.io.File): Unit = {
       Option(x.listFiles).foreach(_.foreach(rm))
       x.delete(); ()
@@ -112,24 +108,15 @@ object Q {
     // use no matter how old — mtime is written once at creation and
     // reads never refresh it, so age alone would pull live dirs out
     // from under a long-running sibling JVM (server, >30-min bench)
-    def sweep(parent: java.io.File, prefix: String, ageMs: Long): Unit = {
-      val cutoff = System.currentTimeMillis() - ageMs
+    val cutoff = System.currentTimeMillis() - maxAgeMs
+    def sweep(parent: java.io.File, prefix: String): Unit =
       Option(parent.listFiles).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith(prefix)
           && f.lastModified < cutoff
           && !graft.core.Scratch.ownerAlive(f.getName))
         .foreach(rm)
-    }
-    // graft-derived is a long-lived PARENT of per-session layouts —
-    // sweep its children on the session tier, never the parent itself
-    sweep(new java.io.File("target/graft-derived"), "", sessionMs)
-    val shortCutoff = System.currentTimeMillis() - maxAgeMs
-    Option(new java.io.File("target").listFiles).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("graft-")
-        && f.getName != "graft-derived" && f.lastModified < shortCutoff
-        && !graft.core.Scratch.ownerAlive(f.getName))
-      .foreach(rm)
-    sweep(new java.io.File("spark-warehouse"), "g_", maxAgeMs)
+    sweep(new java.io.File("target"), "graft-")
+    sweep(new java.io.File("spark-warehouse"), "g_")
   }
 
   /** Deterministic average: exact decimal sum divided as double/double. */

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MapType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.TripleStore
@@ -157,6 +159,71 @@ final class StoreInvariantSpec extends AnyFunSuite {
       assert(bad == 0, s"edge '$pred' facet '$k': $bad values do not " +
         "round-trip decimal(18,2) — the gates' cast chain would lose them")
     }
+  }
+
+  /** Row multisets equal both ways; a facet map compares as its sorted
+    * entries (set operations take no map column).
+    */
+  private def assertSameRows(a: DataFrame, b: DataFrame, what: String): Unit = {
+    def norm(df: DataFrame) = df.select(df.columns.sorted.toIndexedSeq.map(c =>
+      if (df.schema(c).dataType.isInstanceOf[MapType])
+        sort_array(map_entries(col(c))).as(c)
+      else col(c)): _*)
+    val (x, y) = (norm(a), norm(b))
+    assert(x.columns.toSeq == y.columns.toSeq, s"$what: columns")
+    assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty,
+      s"$what: slice and union view differ")
+  }
+
+  test("every edge, attribute and node-type slice equals its lazy union view") {
+    val edgePreds = ts.edges.select(col("predicate")).distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
+    assert(edgePreds.nonEmpty)
+    for (p <- edgePreds)
+      assertSameRows(ts.edge(p), ts.edges.filter(col("predicate") === p), s"edge '$p'")
+    val attrPreds = ts.sources.flatMap(_.attrs).map(_.pred).distinct
+    for (p <- attrPreds) {
+      val union = Seq("string", "long", "double", "timestamp", "array<float>")
+        .map(ts.tablet).find(_.filter(col("predicate") === p).limit(1).count() > 0)
+      assert(union.nonEmpty, s"attr '$p' is in no typed tablet")
+      assertSameRows(ts.attr(p), union.get.filter(col("predicate") === p), s"attr '$p'")
+    }
+    val types = ts.sources.map { s =>
+      s.frame().select(s.subject.as("subject"), lit(s.nodeType).as("typeName"))
+    }.reduce(_ unionByName _)
+    assertSameRows(ts.nodeTypes, types, "nodeTypes")
+  }
+
+  test("edgesStored equals edges, attrStringStored equals the string tablet") {
+    assertSameRows(ts.edgesStored, ts.edges, "edgesStored")
+    assert(ts.edgesStored.columns.toSeq == ts.edges.columns.toSeq)
+    assertSameRows(ts.attrStringStored, ts.tablet("string"), "attrStringStored")
+  }
+
+  test("a second graph read plans no parquet file scan") {
+    // the four JSON read gates perfbench's graph_query workload runs
+    for (gate <- Seq("dql_json_deep", "dql_json_nested", "dql_recurse_json", "graphql_json")) {
+      SparkEntry.queries(gate)(spark, sf).collect()
+      val plans = Explain.executions(spark)(SparkEntry.queries(gate)(spark, sf).collect())._2
+      assert(plans.nonEmpty, gate)
+      assert(plans.forall(_.fileScans == 0), s"$gate:\n${plans.mkString("\n")}")
+      assert(plans.map(_.memoryScans).sum > 0, s"$gate:\n${plans.mkString("\n")}")
+    }
+  }
+
+  test("a TripleStore read writes nothing under target/graft-derived") {
+    val dir = new java.io.File("target/graft-derived")
+    // an overwritten layout keeps its name, so look at modification times
+    val start = System.currentTimeMillis() - 1000
+    // a private store, so every slice and `line` are built by this read
+    val store = new TripleStore(spark, sf)
+    new graft.exec.DqlExecutor(store).jsonAll(
+      """{ q(func: uid(0x2ba7def3001)) { name placed { has_line { quantity } } } }""").collect()
+    store.edgesStored.count()
+    store.attrStringStored.count()
+    store.nodeTypes.count()
+    val written = Option(dir.listFiles).getOrElse(Array.empty).filter(_.lastModified >= start)
+    assert(written.isEmpty, s"written: ${written.map(_.getName).mkString(", ")}")
   }
 
   test("derived: one build per key, separate builds per key, nested builds") {
